@@ -70,172 +70,23 @@ object Bench {
     * run" from "typical run" so a round-over-round delta can be told
     * apart from host noise (VERDICT r5 item 6).
     *
-    * `shortKeys` — RETIRED r17 (the driver could not match compacted
-    * keys back to query names; see [[stdoutLine]]). The machinery and
-    * its specs stay because the r13-r16 driver captures carry these
-    * keys and tools/bench_diff.py expands them when diffing those
-    * vintages. Original rationale (r7, extended late-r7 when
-    * the 97-query roster left <15 chars of headroom): on the stdout line
-    * ONLY, (1) the per-query object renders under `"q"` instead of
-    * `"queries"`, (2) every query key drops the uniform `q_` prefix, and
-    * (3) the nine high-population family prefixes abbreviate through
-    * [[famAbbrev]] (`agg_sum` → `a_sum`, `multimodal_pixels` →
-    * `m_pixels`). Mapping back is mechanical and collision-free: restore
-    * the family via the inverse map (no original first-underscore
-    * component is a single letter), then prepend `"q_"`. The SIDECAR
-    * (bench_out.json) keeps FULL names and the `"queries"` key — any
-    * per-query tooling (tools/bench_diff.py included) reads the sidecar;
-    * the stdout line exists for the driver's log-tail capture. "partial"
-    * and "failed" stay always-present (r6 ADVICE: omitted keys NPE a
-    * presence-asserting parser).
+    * Keys are the full `q_*` query names under `"queries"`; "partial" and
+    * "failed" stay always-present (r6 ADVICE: omitted keys NPE a
+    * presence-asserting parser). Strings that can come from outside the
+    * roster (the sf dir, the sidecar path) are JSON-escaped.
     */
-  private[graft] val famAbbrev = Map(
-    "agg" -> "a", "dedup" -> "d", "filter" -> "f", "multimodal" -> "m",
-    "sample" -> "p", "sim" -> "s", "stream" -> "w", "text" -> "t",
-    "tpch" -> "h", "tier" -> "i",
-    // late-r7 extension (the audio lane left 11 chars of tail-window
-    // headroom): every remaining multi-member or long family. Same
-    // inverse rule — no original first component is 1 char (spec-checked)
-    "sessionize" -> "z", "delete" -> "e", "store" -> "o", "index" -> "x",
-    "ingest" -> "g", "layout" -> "l", "approx" -> "b", "window" -> "u",
-    "moving" -> "n", "pivot" -> "c", "ntile" -> "k", "vec" -> "v",
-    "ts" -> "y", "range" -> "r", "join" -> "j")
-
-  /** r8 automation (r7 VERDICT item 7): the static map above is a SEED —
-    * every family in the actual roster that it doesn't cover gets a free
-    * single character assigned here, deterministically (descending family
-    * population, then name; prefer the family's own letters, then any
-    * unused letter/digit), so a growing roster never again needs the map
-    * hand-extended to stay inside the tail window. The inverse stays
-    * mechanical and collision-free by construction: an abbrev char is
-    * never a character that is itself a roster family name, and never
-    * shadows a bare (underscore-free) query name.
-    */
-  private[graft] def abbrevFor(names: Seq[String]): Map[String, String] = {
-    val bares = names.map(_.stripPrefix("q_"))
-    val fams = bares.filter(_.contains('_'))
-      .groupBy(_.takeWhile(_ != '_')).view.mapValues(_.size).toMap
-    val used = scala.collection.mutable.Set[String]() ++
-      famAbbrev.values ++ bares.filterNot(_.contains('_'))
-    val out = scala.collection.mutable.Map[String, String]() ++ famAbbrev
-    // 'q' is never assigned: "q_foo" would read as a full query name to
-    // anyone pattern-matching the stripped "q_" prefix
-    fams.keys.toSeq.filterNot(out.contains).filter(_.length > 1)
-      .sortBy(f => (-fams(f), f))
-      .foreach { f =>
-        (f + "abcdefghijklmnopqrstuvwxyz0123456789").filterNot(_ == 'q').map(_.toString)
-          .find(c => !used(c) && !fams.contains(c))
-          .foreach { c => out(f) = c; used += c }
-      }
-    out.toMap
-  }
-  /** r13 trim (the 142-query roster dropped the middle tier below its 85%
-    * detail floor): rendered short keys with the SUFFIX truncated to its
-    * shortest ≥`minLen`-char collision-free prefix over the whole roster
-    * (`d_containment` → `d_cont`; already-short keys untouched; a
-    * collision group extends together until distinct, so the map is
-    * deterministic and injective for any roster). Returns full name →
-    * rendered key. Applied by [[stdoutLine]] only when the uncompacted
-    * line overflows the budget — the sidecar always keeps full names.
-    */
-  private[graft] def compactKeys(names: Seq[String],
-                                 abbrev: Map[String, String],
-                                 minLen: Int = 2,
-                                 minBare: Int = 4,
-                                 sep: String = "_"): Map[String, String] = {
-    def rendered(n: String): (String, String) = { // (prefix, suffix)
-      val bare = n.stripPrefix("q_")
-      val cut = bare.indexOf('_')
-      if (cut < 0) (bare, "")
-      else (abbrev.get(bare.substring(0, cut)).fold(bare.substring(0, cut))(identity),
-        bare.substring(cut + 1))
-    }
-    val parts = names.map(n => n -> rendered(n)).toMap
-    // every colliding group extends its members' truncation one char at a
-    // time until all keys differ; terminates because the UNtruncated short
-    // keys are distinct (spec-gated round-trip property). r14 trim: bare
-    // single-word names ("decontaminate") truncate too, to a ≥minBare
-    // collision-free prefix — the 152-query roster pushed the compacted
-    // line one entry past the budget, and the long tail was exactly those
-    // family-less names (cross-round key matching canonically uses the
-    // sidecar's FULL names, so the render may shorten; bench_diff.py
-    // reads bench_out.json when driver-capture keys don't expand).
-    val lens = scala.collection.mutable.Map(
-      names.map(n => n -> (if (parts(n)._2.isEmpty) minBare else minLen)): _*)
-    def keyOf(n: String): String = parts(n) match {
-      case (p, "") => p.take(lens(n))
-      // a truncation landing on '_' would render a dangling separator;
-      // the fused tier (sep="") drops INTERNAL suffix underscores too —
-      // injectivity is re-proven over whatever this renders
-      case (p, s) =>
-        val cut = s.take(lens(n)).reverse.dropWhile(_ == '_').reverse
-        p + sep + (if (sep.isEmpty) cut.replace("_", "") else cut)
-    }
-    def fullLen(n: String): Int = parts(n) match {
-      case (p, "") => p.length
-      case (_, s) => s.length
-    }
-    var changed = true
-    while (changed) {
-      changed = false
-      names.groupBy(keyOf).values.filter(_.size > 1).foreach { grp =>
-        grp.foreach { n =>
-          if (lens(n) < fullLen(n)) { lens(n) += 1; changed = true }
-        }
-      }
-    }
-    // a group can exit the loop still colliding (every member's suffix
-    // fully extended, or the trailing-underscore trim re-merged two fully
-    // extended keys) — duplicate JSON keys on the stdout line would make
-    // the driver's parse keep only one. Such groups fall back to their
-    // UNtruncated short keys, which the spec-gated round-trip property
-    // guarantees distinct; the require turns any violation into a loud
-    // failure instead of a silently dropped query.
-    val out = scala.collection.mutable.Map(names.map(n => n -> keyOf(n)): _*)
-    out.groupBy(_._2).values.filter(_.size > 1).foreach { grp =>
-      grp.keys.foreach { n =>
-        out(n) = parts(n) match {
-          case (p, "") => p
-          case (p, s) => p + sep + s
-        }
-      }
-    }
-    require(out.values.toSet.size == names.distinct.size,
-      s"compactKeys failed to render injective keys for ${names.size} queries")
-    out.toMap
-  }
-
   private[graft] def formatLine(ts: Seq[(String, Double)], failed: Seq[String],
                                 sfDir: String, partial: Boolean,
                                 dp: Int = 1,
                                 medians: Option[Map[String, Double]] = None,
-                                shortKeys: Boolean = false,
                                 overflow: Int = 0,
                                 totalOverride: Option[Double] = None,
-                                abbrevOverride: Option[Map[String, String]] = None,
-                                keyOverride: Option[Map[String, String]] = None,
                                 calibration: Option[(Double, Double, Int)] = None,
                                 sidecar: Option[String] = None): String = {
-    // abbrevOverride: the middle tier prints a SUBSET of the roster, and
-    // auto-assignment is population-ordered — recomputing it over the
-    // subset could assign different chars than the full roster (breaking
-    // cross-round key matching in tools/bench_diff.py), so stdoutLine
-    // computes the assignment ONCE over the full roster and passes it in
-    val abbrev = abbrevOverride.getOrElse(
-      if (shortKeys) abbrevFor(ts.map(_._1) ++ failed) else famAbbrev)
-    def key(n: String): String = if (!shortKeys) n else
-      keyOverride.flatMap(_.get(n)).getOrElse {
-        val bare = n.stripPrefix("q_")
-        val cut = bare.indexOf('_')
-        if (cut < 0) bare
-        else abbrev.get(bare.substring(0, cut))
-          .fold(bare)(_ + bare.substring(cut))
-      }
-    val qKey = if (shortKeys) "q" else "queries"
-    val qs = ts.map { case (k, v) => "\"" + key(k) + "\":" + fmt(v, dp) }
+    val qs = ts.map { case (k, v) => "\"" + k + "\":" + fmt(v, dp) }
       .mkString("{", ",", "}")
     val med = medians.fold("") { m =>
-      ts.map { case (k, _) => "\"" + key(k) + "\":" + fmt(m.getOrElse(k, 0.0), dp) }
+      ts.map { case (k, _) => "\"" + k + "\":" + fmt(m.getOrElse(k, 0.0), dp) }
         .mkString(",\"queries_median\":{", ",", "}")
     }
     val total = fmt(totalOverride.getOrElse(ts.map(_._2).sum), 2)
@@ -254,11 +105,15 @@ object Bench {
     // the sidecar path on the line (VERDICT r16 item 1 fix-note): any
     // reader of the stdout line can find the full-roster 2dp + medians
     // artifact without knowing the SPARK_GRAFT_BENCH_OUT convention
-    val side = sidecar.fold("")(p => s""","sidecar":"$p"""")
+    val side = sidecar.fold("")(p => s""","sidecar":${jsonStr(p)}""")
     val pf = s""","partial":$partial""" +
-      failed.map("\"" + key(_) + "\"").mkString(""","failed":[""", ",", "]")
-    s"""{"metric":"total","value":$total,"unit":"sec","$qKey":$qs$ovf$med$cal$side,"sf":"$sfDir"$pf}"""
+      failed.map("\"" + _ + "\"").mkString(""","failed":[""", ",", "]")
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$ovf$med$cal$side,"sf":${jsonStr(sfDir)}$pf}"""
   }
+
+  private def jsonStr(s: String): String =
+    "\"" + new String(com.fasterxml.jackson.core.io.JsonStringEncoder.getInstance
+      .quoteAsString(s)) + "\""
 
   /** The stdout emission with the budget guard.
     *
@@ -276,9 +131,7 @@ object Bench {
     * FULL roster total. An elided 0.1-0.2s query is 1-2 tail-window
     * quantization units of information; an unmatchable key is a lost
     * round of per-query evidence. The sidecar (its path now printed ON
-    * the line) keeps the full roster at 2dp plus medians; the retired
-    * compact-key tiers below stay only for r13-r16 artifact archaeology
-    * (tools/bench_diff.py's expansion map reads those vintages).
+    * the line) keeps the full roster at 2dp plus medians.
     */
   private[graft] val stdoutBudget = 1895
   private[graft] def stdoutLine(snap: Seq[(String, Double)], failed: Seq[String],
@@ -305,11 +158,11 @@ object Bench {
       val pf = s""","partial":$partial""" +
         failed.map("\"" + _ + "\"").mkString(""","failed":[""", ",", "]")
       val fb = s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec","queries":{},""" +
-        s""""q_overflow":${snap.size},"sf":"$sfBase"$pf}"""
+        s""""q_overflow":${snap.size},"sf":${jsonStr(sfBase)}$pf}"""
       // a huge failed list could overflow even the fallback: count instead
       if (fb.length <= stdoutBudget) fb
       else s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec","queries":{},""" +
-        s""""q_overflow":${snap.size},"sf":"$sfBase","partial":$partial,""" +
+        s""""q_overflow":${snap.size},"sf":${jsonStr(sfBase)},"partial":$partial,""" +
         s""""failed":[],"failed_count":${failed.size}}"""
     }
   }

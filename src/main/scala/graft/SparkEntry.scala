@@ -123,16 +123,6 @@ object SparkEntry {
       })
     }
 
-  /** Build-once-per-process dual-tier stores (M1-M3/I2, TieredStore).
-    * Scenario "sorted": disk = everything at-or-before SINCE, memory = the
-    * newer tail arriving in time order (seq = ts_us) — the buffer is sorted
-    * and beyond the disk bound, so reads qualify for the M1/M2 paths and
-    * nothing mutates. Scenario "overlap": a 1-in-7 rid sample buffered in
-    * rid order — its timestamps straddle the whole disk range, so the first
-    * read takes the M3 forced-flush path; later reads see the post-flush
-    * disk-only store (same rows either way). Store builds and the one-time
-    * flush are warmup cost, like ttStores.
-    */
   /** Build-once-per-process END-TO-END reference lifecycle store
     * (VERDICT r7 item 2): canonical events — deduped to unique
     * (series, ts_us) so last-n reads are independent of the content-derived
@@ -217,10 +207,11 @@ object SparkEntry {
   // independent fixtures stage concurrently — and the intentional nested
   // call (sitemapFixture's build invokes hostsFixture) needs no monitor
   // reentrancy, it is just a second putIfAbsent on a different key. A
-  // failed build removes its future so a later call can retry.
+  // failed build removes its future so a later call can retry, and every
+  // caller sees the build's own exception, not the future's wrapper.
   private val fixtureDirs = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.concurrent.CompletableFuture[String]]()
-  private def stagedFixture(tag: String, s: SparkSession, d: String)
+  private[graft] def stagedFixture(tag: String, s: SparkSession, d: String)
                            (build: => DataFrame): DataFrame = {
     val key = s"$tag#$d"
     val mine = new java.util.concurrent.CompletableFuture[String]()
@@ -237,7 +228,10 @@ object SparkEntry {
         mine
       case prior => prior
     }
-    s.read.parquet(fut.join())
+    val dir = try fut.join() catch {
+      case e: java.util.concurrent.CompletionException if e.getCause != null => throw e.getCause
+    }
+    s.read.parquet(dir)
   }
 
   private def videoFixture(s: SparkSession, d: String): DataFrame =
@@ -480,6 +474,15 @@ object SparkEntry {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
+  /** Build-once-per-process dual-tier stores (M1-M3/I2, TieredStore).
+    * Scenario "sorted": disk = everything at-or-before SINCE, memory = the
+    * newer tail — the buffer lies beyond the disk bound, so reads qualify
+    * for the M1/M2 paths and nothing mutates. Scenario "overlap": a 1-in-7
+    * rid sample buffered — its timestamps straddle the whole disk range,
+    * so the first read takes the M3 forced-flush path; later reads see the
+    * post-flush disk-only store (same rows either way). Store builds and
+    * the one-time flush are warmup cost, like ttStores.
+    */
   private val tierStores = scala.collection.concurrent.TrieMap.empty[String, TieredStore]
   private def tierStore(s: SparkSession, d: String, scenario: String): TieredStore =
     tierStores.synchronized {
@@ -493,14 +496,10 @@ object SparkEntry {
         val evd = ev(s, d)
         if (scenario == "sorted" || scenario == "bucketed") {
           st.appendDisk(evd.filter(col("ts_us") <= SINCE))
-          st.appendMemory(
-            evd.filter(col("ts_us") > SINCE).withColumn(TieredStore.SEQ, col("ts_us")),
-            TieredStore.SEQ)
+          st.appendMemory(evd.filter(col("ts_us") > SINCE))
         } else {
           st.appendDisk(evd.filter(col("rid") % 7 =!= 0))
-          st.appendMemory(
-            evd.filter(col("rid") % 7 === 0).withColumn(TieredStore.SEQ, col("rid")),
-            TieredStore.SEQ)
+          st.appendMemory(evd.filter(col("rid") % 7 === 0))
         }
         st
       })

@@ -4,7 +4,6 @@ import graft.functions.Tags
 import graft.operators.{TimeSeries => TS}
 import graft.sources.JsonIngest
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** The reference's query surface IS its URL path (SURVEY.md: "the query
   * plan is the URL path"). This interpreter maps a nibbledb route string to
@@ -97,7 +96,6 @@ object Router {
     */
   def runPost(store: graft.sources.TieredStore, route: String, body: String,
               ingestTimeUs: Long = 0L, spillThreshold: Long = 20000L): DataFrame = {
-    import graft.sources.TieredStore
     val parts = route.stripPrefix("/").stripSuffix("/").split('/').toList
     val id = parts match {
       case "ts" :: i :: Nil if i.nonEmpty => i
@@ -113,8 +111,7 @@ object Router {
       .cache()
     try {
       val r = JsonIngest.ingest(wire, ingestTimeUs)
-      val good = r.good.withColumn(TieredStore.SEQ, col("rid"))
-      store.ingest(good, TieredStore.SEQ, spillThreshold)
+      store.ingest(r.good, spillThreshold)
       // counts AFTER the ingest moved the rows; the returned frame is a
       // local literal, so releasing the wire cache cannot invalidate it
       Seq((r.good.count(), r.bad.count())).toDF("ingested", "quarantined")

@@ -5,10 +5,8 @@ import graft.model.Canon
 import graft.model.Canon._
 import graft.operators.{TimeSeries => TS}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CheckpointBridge
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** M1-M3 + I2: the dual-tier store — an in-memory arrival buffer layered
   * over a [[VersionedStore]] manifest-chain disk tier, replicating the
@@ -17,25 +15,25 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *
   * The reference keeps a per-series FIFO of not-yet-spilled points and
   * answers reads by one of three paths:
-  *  - **M1 fast path**: when the buffer is internally time-sorted AND lies
-  *    entirely beyond the disk tier's cached bound, a `last n` that the
-  *    buffer can satisfy alone never touches disk (`timeseries.re:363-382`);
+  *  - **M1 fast path**: when the buffer lies entirely beyond the disk
+  *    tier's cached bound, a `last n` that the buffer can satisfy alone
+  *    never touches disk (`timeseries.re:363-382`);
   *  - **M2 memory-then-disk**: same qualification but the buffer is short
   *    of `n` — take all of memory, fill the leftover from disk
   *    (`timeseries.re:384-434`);
-  *  - **M3 forced flush**: the buffer overlaps the disk range (out-of-order
+  *  - **M3 forced flush**: the buffer overlaps the disk range (late
   *    arrivals) — flush it to disk first, then read disk only
   *    (`timeseries.re:357-361`).
   *
   * Spark-first mapping: the memory tier is an eagerly LOCAL-CHECKPOINTED
-  * DataFrame carrying an arrival-sequence column. Every buffer mutation
+  * DataFrame in the canonical schema. Every buffer mutation
   * swaps in a fresh checkpoint, which (a) materializes the new content
   * immediately (decoupling it from non-replayable foreachBatch sources),
   * and (b) truncates the plan to one `LogicalRDD` leaf — plan depth and
   * block count stay CONSTANT over an unbounded micro-batch stream instead
   * of growing one union/filter layer per batch. Qualification is ONE
-  * distributed aggregate over the buffer (a per-series lag(1) monotonicity
-  * count + min-ts vs the disk upper bound); the M2 merge is `union` + the
+  * distributed aggregate over the buffer (per-series count + min ts, the
+  * min checked against the disk upper bound); the M2 merge is `union` + the
   * same `WindowGroupLimit` top-n every flat read uses — Catalyst, not
   * hand-merging.
   *
@@ -89,7 +87,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * (`min(buffer ts) > disk max ts`): at a shared timestamp the
   * (ts desc, rid desc) order can rank a disk row above a buffered one, so a
   * tie must not qualify for the memory-only path — it degrades to the
-  * merge/flush paths, never to a wrong answer.
+  * merge/flush paths, never to a wrong answer. (3) No arrival-order check:
+  * the reference takes the FIFO tail unsorted, so it needs the buffer
+  * ascending in arrival order; every read here sorts by (ts desc, rid
+  * desc), so arrival order cannot change an answer and the time bound
+  * alone picks the path.
   *
   * Mutations are serialized on the store instance — the concurrency model
   * the reference enforces globally (`src/main.re:225-227`) — and each
@@ -123,7 +125,7 @@ final class TieredStore(spark: SparkSession, val root: String,
                         val electBucketsAt: Int = TieredStore.BucketLayoutThreshold) {
   import TieredStore._
 
-  @volatile private var mem: DataFrame = emptyMem(spark)
+  @volatile private var mem: DataFrame = emptyCanon(spark)
   @volatile private var memEmpty = true
   /** Superseded buffer checkpoints, oldest first; see the snapshot
     * contract in the class doc. */
@@ -233,7 +235,7 @@ final class TieredStore(spark: SparkSession, val root: String,
     // ALWAYS retire the superseded frame: a drained buffer's empty
     // checkpoint is still a checkpoint (skipping it when memEmpty leaked
     // one persisted-RDD registration per drain cycle); releasing the
-    // pristine initial emptyMem frame is a harmless no-op (its RDD was
+    // pristine initial emptyCanon frame is a harmless no-op (its RDD was
     // never persisted).
     retiredFrames.enqueue(old)
     while (retiredFrames.size > RetireDepth)
@@ -248,12 +250,10 @@ final class TieredStore(spark: SparkSession, val root: String,
     if (bounds.nonEmpty) { appendStore(slice); applyBounds(bounds); maybeElect() }
   }
 
-  /** Buffer points in the memory tier. `seqCol` is the arrival order —
-    * the FIFO position in the reference's membuf (`src/membufq.re:9`).
-    */
-  def appendMemory(df: DataFrame, seqCol: String): Unit = this.synchronized {
-    val slice = df.select(col(SERIES), col(TS_US), col(TAG), col(VALUE),
-      col(RID), col(seqCol).cast(LongType).as(SEQ))
+  /** Buffer points in the memory tier (the reference's membuf,
+    * `src/membufq.re:9`). */
+  def appendMemory(df: DataFrame): Unit = this.synchronized {
+    val slice = canonSel(df)
     swapMem(if (memEmpty) slice else mem.unionByName(slice))
     memEmpty = false
   }
@@ -275,20 +275,19 @@ final class TieredStore(spark: SparkSession, val root: String,
     */
   def sync(): Unit = this.synchronized {
     if (!memEmpty) {
-      val moving = canonSel(mem)
-      val bounds = collectBounds(moving)
-      if (bounds.nonEmpty) { appendStore(moving); applyBounds(bounds); maybeElect() }
-      swapMem(emptyMem(spark))
+      val bounds = collectBounds(mem)
+      if (bounds.nonEmpty) { appendStore(mem); applyBounds(bounds); maybeElect() }
+      swapMem(emptyCanon(spark))
       memEmpty = true
     }
   }
 
   private def flushLocked(ids: Seq[String]): Unit = if (!memEmpty) {
-    val moving = canonSel(mem.filter(col(SERIES).isin(ids: _*)))
+    val moving = mem.filter(col(SERIES).isin(ids: _*))
     val bounds = collectBounds(moving)
     if (bounds.nonEmpty) { appendStore(moving); applyBounds(bounds); maybeElect() }
     swapMem(mem.filter(!col(SERIES).isin(ids: _*)))
-    if (mem.isEmpty) { swapMem(emptyMem(spark)); memEmpty = true }
+    if (mem.isEmpty) { swapMem(emptyCanon(spark)); memEmpty = true }
   }
 
   /** Per-series (min, max) ts of a slice — bounded by series cardinality,
@@ -334,25 +333,19 @@ final class TieredStore(spark: SparkSession, val root: String,
       case _ => emptyCanon(spark)
     }
 
-  private def memCanon(ids: Seq[String]): DataFrame =
-    canonSel(TS.selectSeries(mem, ids))
+  private case class MemStat(count: Long, minTs: Long)
 
-  private case class MemStat(count: Long, minTs: Long, sorted: Boolean)
-
-  /** One aggregate over the (bounded) buffer: per-series count, min ts and
-    * arrival-order monotonicity — the distributed `is_ascending`
-    * (`src/membufq.re:17-28`).
+  /** One aggregate over the (bounded) buffer: per-series count and min ts,
+    * the inputs of the membuf's `is_ascending` (`src/membufq.re:17-28`)
+    * that matter once reads sort (class doc, divergence 3).
     */
   private def memStats(ids: Seq[String]): Map[String, MemStat] = {
     if (memEmpty) return Map.empty
-    val w = Window.partitionBy(SERIES).orderBy(col(SEQ))
     TS.selectSeries(mem, ids)
-      .withColumn("__prev_ts", lag(col(TS_US), 1).over(w))
       .groupBy(SERIES)
-      .agg(count(lit(1)).as("cnt"), min(TS_US).as("min_ts"),
-        sum(when(col("__prev_ts") > col(TS_US), 1L).otherwise(0L)).as("viol"))
+      .agg(count(lit(1)).as("cnt"), min(TS_US).as("min_ts"))
       .collect() // bounded by the queried series count
-      .map(r => r.getString(0) -> MemStat(r.getLong(1), r.getLong(2), r.getLong(3) == 0L))
+      .map(r => r.getString(0) -> MemStat(r.getLong(1), r.getLong(2)))
       .toMap
   }
 
@@ -369,7 +362,7 @@ final class TieredStore(spark: SparkSession, val root: String,
     }
 
   /** Q1 `last n` through the tier decision (`timeseries.re:357-382`):
-    * per queried series — M1 memory-only when the sorted-and-beyond buffer
+    * per queried series — M1 memory-only when the beyond-disk buffer
     * holds ≥ n points, M2 memory∪disk top-n when it qualifies but is short,
     * M3 flush-then-disk when it overlaps the disk range. The three branches
     * union into one declarative plan; a query whose every series takes M1
@@ -378,17 +371,16 @@ final class TieredStore(spark: SparkSession, val root: String,
   def readLast(ids: Seq[String], n: Int): DataFrame = this.synchronized {
     require(ids.nonEmpty, "tiered readLast needs explicit series ids")
     val stats = memStats(ids)
-    val qualified = ids.filter(s =>
-      stats.get(s).forall(st => st.sorted && beyondDisk(s, st)))
+    val qualified = ids.filter(s => stats.get(s).forall(beyondDisk(s, _)))
     val fast = qualified.filter(s => stats.get(s).exists(_.count >= n))
     val merge = qualified.diff(fast)
     val toFlush = ids.diff(qualified)
     if (toFlush.nonEmpty) flushLocked(toFlush)
     val branches = Seq(
-      if (fast.isEmpty) None else Some(TS.readLast(memCanon(fast), fast, n)),
+      if (fast.isEmpty) None else Some(TS.readLast(mem, fast, n)),
       if (merge.isEmpty) None
       else {
-        val memSide = if (memEmpty) emptyCanon(spark) else memCanon(merge)
+        val memSide = if (memEmpty) emptyCanon(spark) else TS.selectSeries(mem, merge)
         Some(TS.readLast(memSide.unionByName(disk(merge)), merge, n))
       },
       if (toFlush.isEmpty) None else Some(TS.readLast(disk(toFlush), toFlush, n))
@@ -516,7 +508,7 @@ final class TieredStore(spark: SparkSession, val root: String,
     * class contract.
     */
   def snapshot: DataFrame = this.synchronized {
-    val m = if (memEmpty) emptyCanon(spark) else canonSel(mem)
+    val m = if (memEmpty) emptyCanon(spark) else mem
     if (!diskHasData) m
     else m.unionByName(readStore)
   }
@@ -542,9 +534,9 @@ final class TieredStore(spark: SparkSession, val root: String,
     * check, batch-granular (a micro-batch is this design's arrival
     * unit), so a series' buffer holds < threshold + one batch.
     */
-  def ingest(batch: DataFrame, seqCol: String, spillThreshold: Long): Unit =
+  def ingest(batch: DataFrame, spillThreshold: Long): Unit =
     this.synchronized {
-      appendMemory(batch, seqCol)
+      appendMemory(batch)
       val full = mem.groupBy(SERIES).agg(count(lit(1)).as("n"))
         .filter(col("n") >= spillThreshold)
         .collect().map(_.getString(0)) // bounded: buffer size / threshold
@@ -557,7 +549,7 @@ final class TieredStore(spark: SparkSession, val root: String,
     * Snapshot semantics as [[snapshot]].
     */
   def lengthSplit(ids: Seq[String]): DataFrame = this.synchronized {
-    val m = (if (memEmpty) emptyCanon(spark) else memCanon(ids))
+    val m = (if (memEmpty) emptyCanon(spark) else TS.selectSeries(mem, ids))
       .groupBy(SERIES).agg(count(lit(1)).as("mem_len"))
     val d = disk(ids).groupBy(SERIES).agg(count(lit(1)).as("disk_len"))
     // full-outer of two series-cardinality aggregates — never a data join
@@ -571,9 +563,6 @@ final class TieredStore(spark: SparkSession, val root: String,
 }
 
 object TieredStore {
-  /** Arrival-sequence column of the memory tier (membuf FIFO position). */
-  val SEQ = "__seq"
-
   /** How many superseded buffer checkpoints stay alive after a mutation:
     * a returned frame remains a valid immutable snapshot for at least this
     * many subsequent mutations, then fails loudly if still unevaluated.
@@ -604,8 +593,4 @@ object TieredStore {
   private def emptyCanon(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       Canon.schema)
-
-  private def emptyMem(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Canon.schema.fields :+ StructField(SEQ, LongType)))
 }

@@ -53,9 +53,7 @@ object Ingest {
     * MEMORY BUFFER → per-series spill at `spillThreshold` points (the
     * `--shard-size` membuf discipline, reference `src/timeseries.re:158-168`)
     * — hot-tail reads against the store take the TieredStore fast paths
-    * between spills. Arrival sequence within a batch is the content-derived
-    * rid (stable across replays, so a checkpoint-recovered batch re-buffers
-    * identically); batches arrive in batchId order under the streaming
+    * between spills. Batches arrive in batchId order under the streaming
     * engine's serial foreachBatch contract.
     */
   def startTieredFileStream(spark: SparkSession, inDir: String,
@@ -63,7 +61,6 @@ object Ingest {
                             spillThreshold: Long,
                             trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
                             maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    import graft.sources.TieredStore
     val reader = maxFilesPerTrigger.foldLeft(spark.readStream)(
       (r, n) => r.option("maxFilesPerTrigger", n))
     val lines = reader.text(inDir)
@@ -75,8 +72,7 @@ object Ingest {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val r = JsonIngest.ingest(batch, ingestTimeUs = batchId)
-        store.ingest(r.good.withColumn(TieredStore.SEQ, col("rid")),
-          TieredStore.SEQ, spillThreshold)
+        store.ingest(r.good, spillThreshold)
         ()
       }
       .start()

@@ -44,8 +44,7 @@ object ManySeriesProbe {
         (lit(1700000000000000L) + col("id")).as(TS_US),
         lit(null).cast(tagType).as(TAG),
         (col("id") % 1000).cast("double").as(VALUE),
-        col("id").as(RID),
-        col("id").as(TieredStore.SEQ))
+        col("id").as(RID))
 
     println(s"[mseries] fixed buffer rows=$rows, readLast(4 ids, n=50) wall by series count:")
     val walls = Seq(1000L, 100000L, 1000000L).map { n =>
@@ -55,7 +54,7 @@ object ManySeriesProbe {
       val st = new TieredStore(spark,
         java.nio.file.Files.createTempDirectory("mseries").toString,
         electBucketsAt = Int.MaxValue)
-      st.appendMemory(buffer(n), TieredStore.SEQ)
+      st.appendMemory(buffer(n))
       val ids = Seq("s0", "s1", "s2", "s3")
       st.readLast(ids, 50).count() // warm the plan shape
       val t0 = System.nanoTime()
@@ -103,7 +102,7 @@ object ManySeriesProbe {
       val bst = new TieredStore(spark,
         java.nio.file.Files.createTempDirectory("mseries_bucket").toString,
         seriesBuckets = Some(64))
-      bst.appendMemory(buffer(bSeries), TieredStore.SEQ)
+      bst.appendMemory(buffer(bSeries))
       val t = System.nanoTime()
       bst.sync()
       val syncWall = (System.nanoTime() - t) / 1e9
@@ -147,9 +146,7 @@ object ManySeriesProbe {
           (lit(1700000001500000L) + col("id")).as(TS_US),
           lit(null).cast(tagType).as(TAG),
           (col("id") % 1000).cast("double").as(VALUE),
-          (col("id") + 2000000L).as(RID),
-          col("id").as(TieredStore.SEQ)),
-        TieredStore.SEQ)
+          (col("id") + 2000000L).as(RID)))
       bst.sync()
       val postCount2 = bst.snapshot.count()
       val fBefore = files(bst.root)

@@ -432,13 +432,12 @@ object ScaleProbe {
       import graft.sources.TieredStore
       val maxTs = ev10.agg(max("ts_us")).head().getLong(0)
       val buf = ev1.withColumn("ts_us", col("ts_us") + lit(maxTs + 1L))
-        .withColumn(TieredStore.SEQ, col("ts_us"))
       val ids = Seq("click", "error", "purchase", "signup", "view")
       def mkStore(disk: DataFrame): TieredStore = {
         val st = new TieredStore(spark,
           java.nio.file.Files.createTempDirectory("graft_tierprobe").toString)
         st.appendDisk(disk)
-        st.appendMemory(buf, TieredStore.SEQ)
+        st.appendMemory(buf)
         st
       }
       val t1 = mkStore(ev1)

@@ -30,46 +30,6 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(n.get("failed").get(0).asText == "q_bad")
   }
 
-  // The shortKeys/compactKeys tiers were RETIRED from the live stdout
-  // line in r17 (the driver can't match compacted keys to query names —
-  // VERDICT r16 item 2); the machinery and these gates stay because the
-  // r13-r16 driver captures carry these keys and tools/bench_diff.py
-  // expands them when diffing those vintages.
-  test("shortKeys (retired r13-r16 rendering): q_ stripped, families abbreviated, object renamed to q") {
-    val line = Bench.formatLine(
-      Seq("q_agg_sum" -> 0.3, "q_b" -> 1.0, "q_ts_delta" -> 0.1,
-        "q_first_n" -> 0.1, "q_sessionize" -> 0.2,
-        "q_multimodal_pixels" -> 0.2), Seq("q_text_bad"),
-      "sf0.1", partial = false, shortKeys = true)
-    val n = mapper.readTree(line)
-    assert(n.get("q").get("a_sum") != null) // agg -> a
-    assert(n.get("q").get("m_pixels") != null) // multimodal -> m
-    assert(n.get("q").get("y_delta") != null) // ts -> y (late-r7 extension)
-    // r8: an UNSEEDED family is auto-assigned a free char (never 'q' —
-    // that would read as a full query name) — see abbrevFor
-    val firstAbbrev = Bench.abbrevFor(Seq("q_agg_sum", "q_b", "q_ts_delta",
-      "q_first_n", "q_sessionize", "q_multimodal_pixels", "q_text_bad"))("first")
-    assert(firstAbbrev.length == 1 && firstAbbrev != "q")
-    assert(n.get("q").get(firstAbbrev + "_n") != null)
-    assert(n.get("q").get("first_n") == null)
-    assert(n.get("q").get("sessionize") != null) // no underscore: bare even when mapped
-    assert(n.get("q").get("b") != null) // no underscore: bare
-    assert(n.get("queries") == null && n.get("q").get("q_agg_sum") == null)
-    assert(n.get("failed").get(0).asText == "t_bad")
-    // the reverse mapping is collision-free: no SparkEntry query's bare
-    // first component is already a single abbrev letter
-    val inverse = Bench.famAbbrev.map(_.swap)
-    assert(inverse.size == Bench.famAbbrev.size)
-    Bench.benchQueryNames.foreach { q =>
-      val fam = q.stripPrefix("q_").takeWhile(_ != '_')
-      assert(!inverse.contains(fam), s"$q family '$fam' shadows an abbrev")
-    }
-    // the sidecar rendering (shortKeys default false) keeps full names
-    val side = mapper.readTree(Bench.formatLine(
-      Seq("q_agg_sum" -> 0.3), Nil, "sf", partial = false))
-    assert(side.get("queries").get("q_agg_sum") != null)
-  }
-
   test("sidecar rendering carries 2dp values and per-query medians") {
     val line = Bench.formatLine(
       Seq("q_a" -> 0.123456789, "q_b" -> 1.0),
@@ -81,6 +41,16 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(med.size == 2)
     assert(math.abs(med.get("q_a").asDouble - 0.26) < 1e-12)
     assert(math.abs(med.get("q_b").asDouble - 1.5) < 1e-12)
+  }
+
+  test("a sidecar path with quotes and backslashes still parses") {
+    val path = """/data/bench "quoted"/back\slash.json"""
+    val line = Bench.formatLine(Seq("q_a" -> 1.0), Nil, "sf", partial = false,
+      sidecar = Some(path))
+    assert(mapper.readTree(line).get("sidecar").asText == path)
+    val stdout = Bench.stdoutLine(Seq("q_a" -> 1.0), Nil, "sf", partial = false,
+      sidecar = Some(path))
+    assert(mapper.readTree(stdout).get("sidecar").asText == path)
   }
 
   test("partial flag and failure list are always present (parser-safe)") {
@@ -139,80 +109,6 @@ class BenchFormatSpec extends AnyFunSuite {
       .updated(roster.size - 1, roster.last._1 -> 9.9), Nil, "sf0.1",
       partial = false, calibration = Some((12.34, 12.89, 32)))
     assert(mapper.readTree(hot).get("queries").get(roster.last._1) != null)
-  }
-
-  test("auto-abbrev: unseeded families get free single chars, inverse stays collision-free") {
-    val names = Bench.benchQueryNames ++ Seq(
-      "q_quorum_vote", "q_quorum_merge", "q_zebra_stripe", "q_zebra_cross")
-    val m = Bench.abbrevFor(names)
-    // seeded entries are untouched (r7 key stability)
-    Bench.famAbbrev.foreach { case (k, v) => assert(m(k) == v) }
-    // the new families got 1-char keys not used by any other family
-    assert(m("quorum").length == 1 && m("zebra").length == 1)
-    assert(m.values.toSeq.distinct.size == m.values.size, "abbrev collision")
-    // no abbrev char is itself a roster family or bare query name
-    val fams = names.map(_.stripPrefix("q_")).filter(_.contains('_'))
-      .map(_.takeWhile(_ != '_')).toSet
-    val bare = names.map(_.stripPrefix("q_")).filterNot(_.contains('_')).toSet
-    m.values.foreach { c => assert(!fams(c) && !bare(c), s"abbrev '$c' shadows a name") }
-    // round trip: every short key maps back to exactly one full name
-    val inv = m.map(_.swap)
-    val shortToFull = names.map { n =>
-      val b = n.stripPrefix("q_"); val cut = b.indexOf('_')
-      val short = if (cut < 0) b
-        else m.get(b.substring(0, cut)).fold(b)(_ + b.substring(cut))
-      short -> n
-    }
-    assert(shortToFull.map(_._1).distinct.size == names.size, "short-key collision")
-    shortToFull.foreach { case (s, full) =>
-      val cut = s.indexOf('_')
-      val restored = if (cut < 0) "q_" + s
-        else "q_" + inv.get(s.substring(0, cut)).fold(s)(_ + s.substring(cut))
-      assert(restored == full, s"$s round-tripped to $restored not $full")
-    }
-  }
-
-  test("fused keys (r15 tier): separator gone, still injective and deterministic") {
-    val names = Bench.benchQueryNames
-    val abbrev = Bench.abbrevFor(names)
-    val m = Bench.compactKeys(names, abbrev, sep = "")
-    assert(m.size == names.size)
-    assert(m.values.toSeq.distinct.size == m.size, "fused key collision")
-    assert(Bench.compactKeys(names.reverse, abbrev, sep = "") == m)
-    // fused keys carry no separator and are strictly no longer than the
-    // underscore rendering of the same truncation
-    val underscored = Bench.compactKeys(names, abbrev)
-    names.foreach { n =>
-      assert(m(n).length <= underscored(n).length, s"${m(n)} vs ${underscored(n)}")
-    }
-  }
-
-  test("compacted suffix keys are injective, deterministic prefixes") {
-    val names = Bench.benchQueryNames
-    val abbrev = Bench.abbrevFor(names)
-    val m = Bench.compactKeys(names, abbrev)
-    assert(m.size == names.size)
-    assert(m.values.toSeq.distinct.size == m.size, "compacted key collision")
-    // recomputing yields the identical mapping (no iteration-order leak)
-    assert(Bench.compactKeys(names.reverse, abbrev) == m)
-    // every compacted key is the rendered short key truncated, never mangled
-    names.foreach { n =>
-      val bare = n.stripPrefix("q_")
-      val cut = bare.indexOf('_')
-      val fullShort = if (cut < 0) bare
-        else abbrev.get(bare.substring(0, cut)).fold(bare)(_ + bare.substring(cut))
-      assert(fullShort.startsWith(m(n)), s"${m(n)} is not a prefix of $fullShort")
-      val sc = m(n).indexOf('_')
-      // ≥3 truncated chars before the trailing-underscore strip, and the
-      // rendered key never dangles a separator
-      if (cut >= 0) assert(m(n).length - sc - 1 >= math.min(2, bare.length - cut - 1) &&
-        !m(n).endsWith("_"),
-        s"${m(n)} suffix under the floor or dangling an underscore")
-    }
-    // a forced collision group extends together until distinct
-    val clash = Seq("q_dedup_container_a", "q_dedup_container_b", "q_dedup_cont")
-    val cm = Bench.compactKeys(clash, Map("dedup" -> "d"))
-    assert(cm.values.toSeq.distinct.size == 3, cm.toString)
   }
 
   test("budget guard: an outgrown roster falls back to a minimal parseable line") {

@@ -82,9 +82,7 @@ class BucketedLayoutSpec extends SparkSuite {
     val st = new TieredStore(spark, root, seriesBuckets = Some(4))
     (0L until 8L).foreach(w => st.appendDisk(wave(w).toDF()))
     st.appendMemory( // a buffered tail that must survive compaction
-      Seq((Datapoint("s0", T0 + 900000L, Some(Seq(TagEntry("k", "1"))), 1.0, 99999L), 0L))
-        .toDF("d", TieredStore.SEQ).select(col("d.*"), col(TieredStore.SEQ)),
-      TieredStore.SEQ)
+      Seq(Datapoint("s0", T0 + 900000L, Some(Seq(TagEntry("k", "1"))), 1.0, 99999L)).toDF())
     val before = fp(st.snapshot)
     val filesBefore = parquetFiles(root)
     st.compactDisk()

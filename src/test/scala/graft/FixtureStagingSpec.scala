@@ -67,6 +67,19 @@ class FixtureStagingSpec extends SparkSuite {
     assert(canon(staged) == canon(fresh))
   }
 
+  test("a failed fixture build surfaces its own exception and retries on the next call") {
+    var builds = 0
+    def failing(): DataFrame = { builds += 1; throw new IllegalStateException("build failed") }
+    val e = intercept[IllegalStateException] {
+      SparkEntry.stagedFixture("spec_failing", spark, sf)(failing())
+    }
+    assert(e.getMessage == "build failed" && builds == 1)
+    intercept[IllegalStateException] {
+      SparkEntry.stagedFixture("spec_failing", spark, sf)(failing())
+    }
+    assert(builds == 2) // the failed future was dropped, so the build ran again
+  }
+
   test("the synthetic URL corpus yields zero null hosts at the BENCH scale factor") {
     // ADVICE r16: the staged hosts fixture filters host IS NOT NULL,
     // absent from the pre-r16 inline derivation — a no-op only while the

@@ -76,13 +76,10 @@ class RouterSpec extends SparkSuite {
 
   test("ctl/ts/sync against a live store flushes every buffered series") {
     import graft.sources.TieredStore
-    import org.apache.spark.sql.functions.col
     val st = new TieredStore(spark, tmpDir("routersync"))
     st.appendDisk(Seq(Datapoint("s1", 100L, None, 1.0, 1)).toDF())
     st.appendMemory(
-      Seq(Datapoint("s1", 900L, None, 2.0, 2), Datapoint("s2", 901L, None, 3.0, 3))
-        .toDF().withColumn(TieredStore.SEQ, col("rid")),
-      TieredStore.SEQ)
+      Seq(Datapoint("s1", 900L, None, 2.0, 2), Datapoint("s2", 901L, None, 3.0, 3)).toDF())
     assert(st.bufferedCount() == 2L)
     assert(Router.run(st, "ctl/ts/sync").head().getString(0) == "ok")
     assert(st.bufferedCount() == 0L)
@@ -126,9 +123,24 @@ class RouterSpec extends SparkSuite {
     intercept[IllegalArgumentException] { Router.runPost(st, "ts/a/b/c", "{}") }
   }
 
+  test("POST of an in-order array past the disk bound: last/n reads memory only") {
+    import graft.sources.TieredStore
+    val st = new TieredStore(spark, tmpDir("router_post_tail"))
+    st.appendDisk(Seq(Datapoint("h", 100L, None, 1.0, 1), Datapoint("h", 200L, None, 2.0, 2),
+      Datapoint("h", 300L, None, 3.0, 3)).toDF())
+    // ten points in time order; their content-hash rids are in no order
+    val body = (0 until 10).map(i => s"""{"timestamp": ${1000 + i}, "value": $i}""")
+      .mkString("[", ",", "]")
+    assert(Router.runPost(st, "ts/h", body).as[(Long, Long)].head() == ((10L, 0L)))
+    val q = Router.run(st, "ts/h/last/5")
+    val plan = q.queryExecution.executedPlan.toString
+    assert(!plan.contains("FileScan"), plan) // M1: the buffer alone answers
+    assert(q.select("ts_us").as[Long].collect().toSeq == (1009L to 1005L by -1L))
+    assert(Router.run(st, "ts/h/memory/length").as[Long].head() == 10L) // not flushed
+  }
+
   test("DELETE against a live store: buffer flush, shard rewrite, reads see it") {
     import graft.sources.TieredStore
-    import org.apache.spark.sql.functions.col
     val st = new TieredStore(spark, tmpDir("router_delete"))
     st.appendDisk(Seq(
       Datapoint("s1", 100L, tag("u" -> "3"), 1.0, 1),
@@ -138,8 +150,7 @@ class RouterSpec extends SparkSuite {
     // a buffered point inside the delete range: the reference flushes
     // membufs before touching shards (timeseries.re:295-303) — ours must
     // flush it and then delete it from the rewritten partition
-    st.appendMemory(Seq(Datapoint("s1", 400L, tag("u" -> "3"), 8.0, 5)).toDF()
-      .withColumn(TieredStore.SEQ, col("rid")), TieredStore.SEQ)
+    st.appendMemory(Seq(Datapoint("s1", 400L, tag("u" -> "3"), 8.0, 5)).toDF())
     assert(st.bufferedCount() == 1L)
     val ack = Router.runDelete(st, "ts/s1/range/100/400/filter/u/equals/3")
     assert(ack.select("deleted").as[Long].head() == 2L) // rid 1 (disk) + rid 5 (was buffered)
@@ -156,8 +167,7 @@ class RouterSpec extends SparkSuite {
     // disk bounds were recomputed from the rewritten partition: a fresh
     // buffered tail must still merge with the surviving disk row, never
     // shadow it (stale-absent bounds would elect a memory-only read)
-    st.appendMemory(Seq(Datapoint("s1", 350L, None, 9.0, 6)).toDF()
-      .withColumn(TieredStore.SEQ, col("rid")), TieredStore.SEQ)
+    st.appendMemory(Seq(Datapoint("s1", 350L, None, 9.0, 6)).toDF())
     assert(Router.run(st, "ts/s1/last/2").select("rid").as[Long].collect().toSet
       == Set(2L, 6L))
     // deleting a series' every point removes its partition entirely

@@ -146,10 +146,7 @@ class TieredStoreRecoverySpec extends SparkSuite {
     // buffer
     val reopened = new TieredStore(spark, root, maxTrackedSeries = 0)
     assert(reopened.lifecycleStats._2 == 0 && reopened.boundsOverflowed)
-    reopened.appendMemory(
-      Seq((dp("b", T0 + 50500L, 7777L), 0L)).toDF("d", TieredStore.SEQ)
-        .select(col("d.*"), col(TieredStore.SEQ)),
-      TieredStore.SEQ)
+    reopened.appendMemory(Seq(dp("b", T0 + 50500L, 7777L)).toDF())
     val last = reopened.readLast(Seq("b"), 1).select("rid").as[Long].collect()
     assert(last.toSeq == Seq(1099L), s"capped reopen mis-read: ${last.toSeq}")
     // the MIXED state (0 < cap < series count): exactly one series
@@ -161,10 +158,7 @@ class TieredStoreRecoverySpec extends SparkSuite {
     assert(mixed.lifecycleStats._2 == 1 && mixed.boundsOverflowed,
       s"mixed hydration state: ${mixed.lifecycleStats}")
     mixed.appendMemory(
-      Seq((dp("a", T0 + 50500L, 8888L), 0L), (dp("b", T0 + 50500L, 9999L), 1L))
-        .toDF("d", TieredStore.SEQ)
-        .select(col("d.*"), col(TieredStore.SEQ)),
-      TieredStore.SEQ)
+      Seq(dp("a", T0 + 50500L, 8888L), dp("b", T0 + 50500L, 9999L)).toDF())
     val lastA = mixed.readLast(Seq("a"), 1).select("rid").as[Long].collect()
     val lastB = mixed.readLast(Seq("b"), 1).select("rid").as[Long].collect()
     assert(lastA.toSeq == Seq(99L) && lastB.toSeq == Seq(1099L),
@@ -181,10 +175,7 @@ class TieredStoreRecoverySpec extends SparkSuite {
     // bounds: a buffer that OVERLAPS the reopened disk range must not
     // qualify for the memory-only path — last-1 of series a is the disk
     // tail (rid 99), not the older buffered point
-    reopened.appendMemory(
-      Seq((dp("a", T0 + 50500L, 7777L), 0L)).toDF("d", TieredStore.SEQ)
-        .select(col("d.*"), col(TieredStore.SEQ)),
-      TieredStore.SEQ)
+    reopened.appendMemory(Seq(dp("a", T0 + 50500L, 7777L)).toDF())
     val last = reopened.readLast(Seq("a"), 1).select("rid").as[Long].collect()
     assert(last.toSeq == Seq(99L),
       s"reopened store mis-qualified an overlapping buffer: got ${last.toSeq}")

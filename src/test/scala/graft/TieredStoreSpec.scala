@@ -16,18 +16,11 @@ class TieredStoreSpec extends SparkSuite {
   private def dp(s: String, ts: Long, rid: Long) =
     Datapoint(s, ts, Some(Seq(TagEntry("k", "1"))), rid.toDouble, rid)
 
-  /** Buffer frame arriving in the given row order (seq = position). */
-  private def arriving(rows: Seq[Datapoint]) =
-    rows.zipWithIndex.map { case (d, i) => (d, i.toLong) }
-      .toDF("d", TieredStore.SEQ)
-      .select(col("d.*"), col(TieredStore.SEQ))
-
   private def freshSorted(): TieredStore = {
     val st = new TieredStore(spark, tmpDir("tier"))
     st.appendDisk((0L until 100L).map(i => dp("a", T0 + i * 1000L, i)).toDF())
     st.appendMemory(
-      arriving((0L until 20L).map(i => dp("a", T0 + 1000000L + i * 1000L, 100 + i))),
-      TieredStore.SEQ)
+      (0L until 20L).map(i => dp("a", T0 + 1000000L + i * 1000L, 100 + i)).toDF())
     st
   }
 
@@ -56,9 +49,7 @@ class TieredStoreSpec extends SparkSuite {
     val st = new TieredStore(spark, tmpDir("tier"))
     st.appendDisk((0L until 100L by 2L).map(i => dp("a", T0 + i * 1000L, i)).toDF())
     // odd timestamps interleave INSIDE the disk range -> never qualifies
-    st.appendMemory(
-      arriving((1L until 100L by 2L).map(i => dp("a", T0 + i * 1000L, i))),
-      TieredStore.SEQ)
+    st.appendMemory((1L until 100L by 2L).map(i => dp("a", T0 + i * 1000L, i)).toDF())
     val before = st.lengthSplit(Seq("a")).head()
     assert(before.getLong(1) == 50L && before.getLong(2) == 50L)
     val rids = st.readLast(Seq("a"), 10).select("rid").as[Long].collect().toSeq
@@ -67,27 +58,27 @@ class TieredStoreSpec extends SparkSuite {
     assert(after.getLong(1) == 0L && after.getLong(2) == 100L) // buffer moved to disk
   }
 
-  test("an out-of-arrival-order buffer degrades to flush, never a wrong answer") {
+  test("an out-of-arrival-order buffer stays buffered, never a wrong answer") {
     val st = new TieredStore(spark, tmpDir("tier"))
     st.appendDisk((0L until 50L).map(i => dp("a", T0 + i * 1000L, i)).toDF())
-    // beyond the disk bound but arriving NEWEST-FIRST: is_ascending fails
-    st.appendMemory(
-      arriving((69L to 50L by -1L).map(i => dp("a", T0 + i * 1000L, i))),
-      TieredStore.SEQ)
+    // beyond the disk bound but arriving NEWEST-FIRST: the reference's
+    // is_ascending fails, but reads sort, so the time bound alone decides
+    st.appendMemory((69L to 50L by -1L).map(i => dp("a", T0 + i * 1000L, i)).toDF())
     val rids = st.readLast(Seq("a"), 25).select("rid").as[Long].collect().toSeq
-    assert(rids == (69L to 45L by -1L))
-    assert(st.lengthSplit(Seq("a")).head().getLong(1) == 0L)
+    assert(rids == (69L to 45L by -1L)) // M2: all 20 buffered + 5 from disk
+    assert(st.lengthSplit(Seq("a")).head().getLong(1) == 20L) // not flushed
+    val q = st.readLast(Seq("a"), 10)
+    assert(!q.queryExecution.executedPlan.toString.contains("FileScan")) // M1
+    assert(q.select("rid").as[Long].collect().toSeq == (69L to 60L by -1L))
   }
 
   test("tier decisions are per series; branches union into one result") {
     val st = new TieredStore(spark, tmpDir("tier"))
     st.appendDisk(((0L until 40L).map(i => dp("a", T0 + i * 1000L, i)) ++
       (0L until 40L).map(i => dp("b", T0 + i * 1000L, 1000 + i))).toDF())
-    // "a" buffers a sorted beyond-bound tail (fast), "b" buffers overlap (flush)
-    st.appendMemory(
-      arriving((0L until 10L).map(i => dp("a", T0 + 100000L + i * 1000L, 100 + i)) ++
-        (0L until 10L).map(i => dp("b", T0 + 5000L + i * 100L, 2000 + i))),
-      TieredStore.SEQ)
+    // "a" buffers a beyond-bound tail (fast), "b" buffers overlap (flush)
+    st.appendMemory(((0L until 10L).map(i => dp("a", T0 + 100000L + i * 1000L, 100 + i)) ++
+      (0L until 10L).map(i => dp("b", T0 + 5000L + i * 100L, 2000 + i))).toDF())
     val got = st.readLast(Seq("a", "b"), 5)
       .select("series", "rid").as[(String, Long)].collect().toSeq
     assert(got.filter(_._1 == "a").map(_._2) == (109L to 105L by -1L))
@@ -101,14 +92,14 @@ class TieredStoreSpec extends SparkSuite {
   test("S3 ingest spill policy: a series spills at the threshold, others stay buffered") {
     val st = new TieredStore(spark, tmpDir("tier"))
     // each batch: 4 points of "a", 1 of "b" (the per-series shard-size check)
-    def batch(i: Long) = arriving(
-      (0L until 4L).map(j => dp("a", T0 + (i * 4 + j) * 1000L, i * 4 + j)) :+
-        dp("b", T0 + i * 1000L, 1000 + i))
-    st.ingest(batch(0L), TieredStore.SEQ, spillThreshold = 10L)
+    def batch(i: Long) =
+      ((0L until 4L).map(j => dp("a", T0 + (i * 4 + j) * 1000L, i * 4 + j)) :+
+        dp("b", T0 + i * 1000L, 1000 + i)).toDF()
+    st.ingest(batch(0L), spillThreshold = 10L)
     assert(st.bufferedCount() == 5L) // both below threshold
-    st.ingest(batch(1L), TieredStore.SEQ, spillThreshold = 10L)
+    st.ingest(batch(1L), spillThreshold = 10L)
     assert(st.bufferedCount() == 10L)
-    st.ingest(batch(2L), TieredStore.SEQ, spillThreshold = 10L)
+    st.ingest(batch(2L), spillThreshold = 10L)
     assert(st.bufferedCount() == 3L) // a hit 12 >= 10 and spilled; b's 3 stay
     val split = st.lengthSplit(Seq("a", "b")).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
@@ -125,8 +116,7 @@ class TieredStoreSpec extends SparkSuite {
     val st = new TieredStore(spark, tmpDir("tier"))
     st.appendDisk(Seq(dp("a", T0, 5), dp("a", T0 - 1000L, 4)).toDF())
     st.appendMemory(
-      arriving(Seq(dp("a", T0, 1), dp("a", T0 + 1000L, 2), dp("a", T0 + 2000L, 3))),
-      TieredStore.SEQ)
+      Seq(dp("a", T0, 1), dp("a", T0 + 1000L, 2), dp("a", T0 + 2000L, 3)).toDF())
     val rids = st.readLast(Seq("a"), 3).select("rid").as[Long].collect().toSeq
     assert(rids == Seq(3L, 2L, 5L)) // at ts=T0 the disk rid 5 outranks mem rid 1
     // and the flat snapshot agrees (tier invisibility at the tie)
@@ -153,8 +143,7 @@ class TieredStoreSpec extends SparkSuite {
     val before = spark.sparkContext.getPersistentRDDs.size
     val st = new TieredStore(spark, tmpDir("tier"))
     (0L until 25L).foreach { i =>
-      st.ingest(arriving(Seq(dp("a", T0 + i * 1000L, i))), TieredStore.SEQ,
-        spillThreshold = 7L)
+      st.ingest(Seq(dp("a", T0 + i * 1000L, i)).toDF(), spillThreshold = 7L)
     }
     val (depth, _) = st.lifecycleStats
     assert(depth <= 3, s"buffer lineage grew with batch count: depth $depth")
@@ -172,15 +161,11 @@ class TieredStoreSpec extends SparkSuite {
     st.appendDisk(many.toDF())
     assert(st.lifecycleStats._2 == 4) // map capped, not grown
     // s09 is untracked; a beyond-bound buffer must NOT shortcut to M1
-    st.appendMemory(
-      arriving((5L until 8L).map(i => dp("s09", T0 + i * 1000L, 900L + i))),
-      TieredStore.SEQ)
+    st.appendMemory((5L until 8L).map(i => dp("s09", T0 + i * 1000L, 900L + i)).toDF())
     val rids = st.readLast(Seq("s09"), 5).select("rid").as[Long].collect().toSeq
     assert(rids == Seq(907L, 906L, 905L, 904L, 903L))
     // a TRACKED series still rides the fast path with no disk scan
-    st.appendMemory(
-      arriving((5L until 10L).map(i => dp("s00", T0 + i * 1000L, i))),
-      TieredStore.SEQ)
+    st.appendMemory((5L until 10L).map(i => dp("s00", T0 + i * 1000L, i)).toDF())
     val q = st.readLast(Seq("s00"), 3)
     assert(!q.queryExecution.executedPlan.toString.contains("FileScan"))
     assert(q.select("rid").as[Long].collect().toSeq == Seq(9L, 8L, 7L))
@@ -194,7 +179,7 @@ class TieredStoreSpec extends SparkSuite {
     val tail = dp("e00", T0 + 9000000L, 99999L) // buffered tail the
     // migration must leave untouched (it rewrites the DISK tier only)
     st.appendDisk(rows(0, 5).toDF()) // 5 series: under the threshold
-    st.appendMemory(arriving(Seq(tail)), TieredStore.SEQ)
+    st.appendMemory(Seq(tail).toDF())
     assert(st.layout.isEmpty && st.diskVersions.last.buckets.isEmpty)
     // crossing the threshold elects the bucketed layout INSIDE the same
     // mutation — no operator call changes, no reopen needed
@@ -226,8 +211,8 @@ class TieredStoreSpec extends SparkSuite {
     flat.appendDisk(rows.toDF())
     buck.appendDisk(rows.toDF())
     val tail = (0L until 10L).map(i => dp("s3", T0 + 10000000L + i * 1000L, 1000 + i))
-    flat.appendMemory(arriving(tail), TieredStore.SEQ)
-    buck.appendMemory(arriving(tail), TieredStore.SEQ)
+    flat.appendMemory(tail.toDF())
+    buck.appendMemory(tail.toDF())
     val allIds = (0 until 10).map(i => s"s$i")
     def dump(st: TieredStore, ids: Seq[String], n: Int) =
       st.readLast(ids, n).select("series", "ts_us", "rid")
