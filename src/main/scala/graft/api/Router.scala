@@ -102,20 +102,23 @@ object Router {
       case i :: Nil if i.nonEmpty => i
       case _ => throw new UnknownRouteException(route)
     }
-    val session = store.snapshot.sparkSession
+    val session = store.session
     import session.implicits._
-    // cache the exploded wire for the request's lifetime: ingest, the
-    // good count and the bad count all read it — uncached, the per-
-    // element JSONPath explode + parse would run three times
+    import org.apache.spark.sql.Observation
+    import org.apache.spark.sql.functions.{count, lit}
+    // the ack counts ride on the buffer checkpoint's own execution, which
+    // reads both observed frames; no job of this method's own computes
+    // them. One body is one partition: coalescing to it keeps the ingest's
+    // rid window free of a shuffle, which AQE would otherwise drop from
+    // the final plan when it comes out empty — observations and all.
+    val (seen, kept) = (Observation(), Observation())
     val wire = JsonIngest.explodeBatches(Seq((id, body)).toDF("series", "json"))
-      .cache()
-    try {
-      val r = JsonIngest.ingest(wire, ingestTimeUs)
-      store.ingest(r.good, spillThreshold)
-      // counts AFTER the ingest moved the rows; the returned frame is a
-      // local literal, so releasing the wire cache cannot invalidate it
-      Seq((r.good.count(), r.bad.count())).toDF("ingested", "quarantined")
-    } finally wire.unpersist(blocking = false)
+      .coalesce(1).observe(seen, count(lit(1)).as("n"))
+    val good = JsonIngest.ingest(wire, ingestTimeUs).good
+      .observe(kept, count(lit(1)).as("n"))
+    store.ingest(good, spillThreshold)
+    def n(o: Observation): Long = o.get("n").asInstanceOf[Long]
+    Seq((n(kept), n(seen) - n(kept))).toDF("ingested", "quarantined")
   }
 
   def run(df: DataFrame, route: String): DataFrame = {

@@ -91,9 +91,13 @@ object JsonIngest {
   /** S2: a wire payload may be ONE object or an ARRAY of objects — the
     * reference's batch POST (`src/main.re:60-67` dispatches `` `O`` vs
     * `` `A`` and validates each element). Splits array payloads into
-    * per-element rows; the element text is re-serialized by
-    * `get_json_object` (Jackson copies tokens in document order, so the
-    * key-ORDER-sensitive shape check still sees the wire order).
+    * per-element rows in a single linear pass: `from_json` with an
+    * `array<string>` schema parses the body once and re-serializes each
+    * element (Jackson copies tokens in document order, so the key-ORDER-
+    * sensitive shape check still sees the wire order). The element text is
+    * byte-identical to `get_json_object(json, '$[i]')`'s — which re-parsed
+    * the whole body per element, quadratic in the body — so rids derived
+    * from it are unchanged (`IngestShapesSpec` pins the equivalence).
     * Single-object (and unparseable) payloads pass through verbatim; an
     * empty array contributes nothing.
     *
@@ -105,14 +109,14 @@ object JsonIngest {
     * saner batch semantics.
     */
   def explodeBatches(wire: DataFrame): DataFrame = {
-    val nArr = json_array_length(col("json"))
-    val singles = wire.filter(nArr.isNull).select("series", "json")
-    val elems = wire.filter(nArr.isNotNull && nArr > 0)
-      .select(col("series"), col("json"),
-        explode(sequence(lit(0), nArr - 1)).as("__i"))
-      // dynamic JSONPath: per-element raw text, wire key order preserved
+    val isArr = json_array_length(col("json")).isNotNull
+    val singles = wire.filter(!isArr).select("series", "json")
+    val elems = wire.filter(isArr)
       .select(col("series"),
-        expr("get_json_object(json, concat('$[', __i, ']'))").as("json"))
+        explode(from_json(col("json"), ArrayType(StringType))).as("json"))
+      // a JSON `null` element parses to SQL NULL; the JSONPath form emitted
+      // its text, which the quarantine keeps
+      .select(col("series"), coalesce(col("json"), lit("null")).as("json"))
     singles.unionByName(elems)
   }
 

@@ -31,11 +31,11 @@ import org.apache.spark.sql.graft.CheckpointBridge
   * immediately (decoupling it from non-replayable foreachBatch sources),
   * and (b) truncates the plan to one `LogicalRDD` leaf — plan depth and
   * block count stay CONSTANT over an unbounded micro-batch stream instead
-  * of growing one union/filter layer per batch. Qualification is ONE
-  * distributed aggregate over the buffer (per-series count + min ts, the
-  * min checked against the disk upper bound); the M2 merge is `union` + the
-  * same `WindowGroupLimit` top-n every flat read uses — Catalyst, not
-  * hand-merging.
+  * of growing one union/filter layer per batch. Qualification reads the
+  * driver-side buffer stats (below) and runs no Spark job: a series whose
+  * buffered min ts lies beyond its disk upper bound qualifies. The M2
+  * merge is `union` + the same `WindowGroupLimit` top-n every flat read
+  * uses — Catalyst, not hand-merging.
   *
   * **Durability protocol (unified, r13)**: every disk-tier mutation —
   * spill, sync, direct append, delete, compaction — commits a version on
@@ -63,13 +63,17 @@ import org.apache.spark.sql.graft.CheckpointBridge
   * kept alive for [[TieredStore.RetireDepth]] further mutations, same
   * contract.
   *
-  * Driver-side state is the per-series disk bounds and qualification
-  * verdicts — the metadata the reference's membuf holds
-  * (`src/membufq.re:45-47`), bounded by series cardinality and CAPPED at
-  * `maxTrackedSeries` entries: a store pointed at more series than the cap
-  * stops tracking new bounds and conservatively degrades those series'
-  * reads to the always-correct merge/flush paths (reads stay flat, memory
-  * stays bounded, answers stay right).
+  * Driver-side state is the metadata the reference's membuf holds: per
+  * series, the disk tier's (min ts, max ts) — membufq's cached
+  * `disk_range` (`src/membufq.re:45-47`) — and the buffer's (count, min
+  * ts, max ts) — its cached queue length and range. ONE aggregate over
+  * each new buffer checkpoint refreshes the buffer stats; a flush or sync
+  * trims them exactly with no job. So the spill check, the `last n` tier
+  * decision, the flush bounds and [[bufferedCount]] read maps instead of
+  * running Spark jobs. Each map is bounded by series cardinality and
+  * CAPPED at `maxTrackedSeries` entries: past the cap a series is
+  * untracked, and its reads degrade to the always-correct merge/flush
+  * paths (reads stay flat, memory stays bounded, answers stay right).
   *
   * Scale notes (100 TB): the memory tier is an ingest BUFFER — bounded by
   * the spill threshold (reference `--shard-size`), not by corpus size; every
@@ -126,7 +130,13 @@ final class TieredStore(spark: SparkSession, val root: String,
   import TieredStore._
 
   @volatile private var mem: DataFrame = emptyCanon(spark)
-  @volatile private var memEmpty = true
+  /** Per-series (count, min ts, max ts) of the buffer: the membufq's
+    * cached queue length and range. Exact for every entry; capped at
+    * `maxTrackedSeries` like [[diskBounds]]. */
+  @volatile private var memStats = Map.empty[String, MemStat]
+  /** True while some buffered series has no [[memStats]] entry (dropped
+    * on the cap): an ABSENT entry then means "unknown", not "unbuffered". */
+  @volatile private var memOverflow = false
   /** Superseded buffer checkpoints, oldest first; see the snapshot
     * contract in the class doc. */
   private val retiredFrames = scala.collection.mutable.Queue.empty[DataFrame]
@@ -232,14 +242,46 @@ final class TieredStore(spark: SparkSession, val root: String,
   private def swapMem(plan: DataFrame): Unit = {
     val old = mem
     mem = plan.localCheckpoint(eager = true)
-    // ALWAYS retire the superseded frame: a drained buffer's empty
-    // checkpoint is still a checkpoint (skipping it when memEmpty leaked
-    // one persisted-RDD registration per drain cycle); releasing the
-    // pristine initial emptyCanon frame is a harmless no-op (its RDD was
-    // never persisted).
+    retire(old)
+  }
+
+  /** Drop the whole buffer: no checkpoint job, the empty frame is a
+    * literal. */
+  private def clearMem(): Unit = {
+    val old = mem
+    mem = emptyCanon(spark)
+    memStats = Map.empty
+    memOverflow = false
+    retire(old)
+  }
+
+  /** ALWAYS retire a superseded frame: a drained buffer's last checkpoint
+    * is still a checkpoint (skipping it leaked one persisted-RDD
+    * registration per drain cycle); releasing an emptyCanon literal is a
+    * harmless no-op (its RDD was never persisted). */
+  private def retire(old: DataFrame): Unit = {
     retiredFrames.enqueue(old)
     while (retiredFrames.size > RetireDepth)
       CheckpointBridge.releaseCheckpoint(retiredFrames.dequeue())
+  }
+
+  private def memEmpty: Boolean = memStats.isEmpty && !memOverflow
+
+  /** Refresh [[memStats]] from the current checkpoint: one aggregate over
+    * the bounded buffer, one row per buffered series. Series already
+    * tracked keep their slots; new ones fill the map up to the cap.
+    * Returns every row, tracked or not (the spill check needs them all).
+    */
+  private def refreshMemStats(): Seq[(String, MemStat)] = {
+    val all = mem.groupBy(SERIES)
+      .agg(count(lit(1)), min(TS_US), max(TS_US))
+      .collect()
+      .map(r => r.getString(0) -> MemStat(r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toSeq
+    val (kept, fresh) = all.partition { case (s, _) => memStats.contains(s) }
+    memStats = (kept ++ fresh.take(maxTrackedSeries - kept.size)).toMap
+    memOverflow = memStats.size < all.size
+    all
   }
 
   /** Direct-to-disk append (the batch ingest path). An empty frame is a
@@ -252,10 +294,12 @@ final class TieredStore(spark: SparkSession, val root: String,
 
   /** Buffer points in the memory tier (the reference's membuf,
     * `src/membufq.re:9`). */
-  def appendMemory(df: DataFrame): Unit = this.synchronized {
+  def appendMemory(df: DataFrame): Unit = this.synchronized { appendLocked(df) }
+
+  private def appendLocked(df: DataFrame): Seq[(String, MemStat)] = {
     val slice = canonSel(df)
     swapMem(if (memEmpty) slice else mem.unionByName(slice))
-    memEmpty = false
+    refreshMemStats()
   }
 
   /** M3 / S6: flush the named series' buffered points to the disk tier. */
@@ -270,36 +314,49 @@ final class TieredStore(spark: SparkSession, val root: String,
     * literals>)` filters is exactly the Catalyst plan-size pathology the
     * many-series probe exists to rule out (1M series → a
     * hundreds-of-MB expression tree pinning the driver). The whole
-    * buffer moves as one unfiltered write; the bounds update reuses the
-    * same aggregate that gates the (empty → no-commit) case.
+    * buffer moves as one unfiltered write; the bounds come from the
+    * buffer stats (an aggregate only past the cap).
     */
   def sync(): Unit = this.synchronized {
     if (!memEmpty) {
-      val bounds = collectBounds(mem)
+      val bounds = if (memOverflow) collectBounds(mem) else memBounds(memStats.keys)
       if (bounds.nonEmpty) { appendStore(mem); applyBounds(bounds); maybeElect() }
-      swapMem(emptyCanon(spark))
-      memEmpty = true
+      clearMem()
     }
   }
 
+  /** Move the named series' buffered points to disk. Series with nothing
+    * buffered cost nothing: no commit, no checkpoint. */
   private def flushLocked(ids: Seq[String]): Unit = if (!memEmpty) {
     val moving = mem.filter(col(SERIES).isin(ids: _*))
-    val bounds = collectBounds(moving)
-    if (bounds.nonEmpty) { appendStore(moving); applyBounds(bounds); maybeElect() }
-    swapMem(mem.filter(!col(SERIES).isin(ids: _*)))
-    if (mem.isEmpty) { swapMem(emptyCanon(spark)); memEmpty = true }
+    val bounds =
+      if (memOverflow && !ids.forall(memStats.contains)) collectBounds(moving)
+      else memBounds(ids)
+    if (bounds.nonEmpty) {
+      appendStore(moving); applyBounds(bounds); maybeElect()
+      memStats = memStats -- ids
+      if (memEmpty) clearMem()
+      else {
+        swapMem(mem.filter(!col(SERIES).isin(ids: _*)))
+        if (memOverflow && mem.isEmpty) clearMem()
+      }
+    }
   }
+
+  /** Buffered (series, min ts, max ts) of the tracked `ids`. */
+  private def memBounds(ids: Iterable[String]): Seq[(String, Long, Long)] =
+    ids.toSeq.distinct.flatMap(s => memStats.get(s).map(st => (s, st.minTs, st.maxTs)))
 
   /** Per-series (min, max) ts of a slice — bounded by series cardinality,
     * capped at maxTrackedSeries by [[applyBounds]]. Computed BEFORE the
     * disk commit so an all-empty slice commits nothing. */
-  private def collectBounds(slice: DataFrame): Array[org.apache.spark.sql.Row] =
-    slice.groupBy(SERIES).agg(min(TS_US).as("lo"), max(TS_US).as("hi")).collect()
+  private def collectBounds(slice: DataFrame): Seq[(String, Long, Long)] =
+    slice.groupBy(SERIES).agg(min(TS_US), max(TS_US)).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
 
-  private def applyBounds(rows: Array[org.apache.spark.sql.Row]): Unit = {
+  private def applyBounds(rows: Seq[(String, Long, Long)]): Unit = {
     if (rows.nonEmpty) diskNonEmpty = true
-    rows.foreach { r =>
-      val (s, lo, hi) = (r.getString(0), r.getLong(1), r.getLong(2))
+    rows.foreach { case (s, lo, hi) =>
       if (diskBounds.contains(s) || diskBounds.size < maxTrackedSeries)
         diskBounds.updateWith(s) {
           case Some((l, h)) => Some((math.min(l, lo), math.max(h, hi)))
@@ -333,22 +390,6 @@ final class TieredStore(spark: SparkSession, val root: String,
       case _ => emptyCanon(spark)
     }
 
-  private case class MemStat(count: Long, minTs: Long)
-
-  /** One aggregate over the (bounded) buffer: per-series count and min ts,
-    * the inputs of the membuf's `is_ascending` (`src/membufq.re:17-28`)
-    * that matter once reads sort (class doc, divergence 3).
-    */
-  private def memStats(ids: Seq[String]): Map[String, MemStat] = {
-    if (memEmpty) return Map.empty
-    TS.selectSeries(mem, ids)
-      .groupBy(SERIES)
-      .agg(count(lit(1)).as("cnt"), min(TS_US).as("min_ts"))
-      .collect() // bounded by the queried series count
-      .map(r => r.getString(0) -> MemStat(r.getLong(1), r.getLong(2)))
-      .toMap
-  }
-
   /** Buffer lies STRICTLY beyond everything on disk for this series. A tie
     * (buffer min ts == disk max ts) must NOT qualify: under (ts desc,
     * rid desc) a disk row at the shared timestamp can outrank a buffered
@@ -366,11 +407,14 @@ final class TieredStore(spark: SparkSession, val root: String,
     * holds ≥ n points, M2 memory∪disk top-n when it qualifies but is short,
     * M3 flush-then-disk when it overlaps the disk range. The three branches
     * union into one declarative plan; a query whose every series takes M1
-    * plans NO disk scan at all (asserted by `TieredStoreSpec`).
+    * plans NO disk scan at all (asserted by `TieredStoreSpec`). The
+    * decision reads the driver-side stats, so a read that flushes nothing
+    * runs no job until the frame is evaluated. An untracked series (past
+    * the cap) has no stats and takes the M2 merge, correct either way.
     */
   def readLast(ids: Seq[String], n: Int): DataFrame = this.synchronized {
     require(ids.nonEmpty, "tiered readLast needs explicit series ids")
-    val stats = memStats(ids)
+    val stats = memStats
     val qualified = ids.filter(s => stats.get(s).forall(beyondDisk(s, _)))
     val fast = qualified.filter(s => stats.get(s).exists(_.count >= n))
     val merge = qualified.diff(fast)
@@ -513,12 +557,21 @@ final class TieredStore(spark: SparkSession, val root: String,
     else m.unionByName(readStore)
   }
 
-  /** Number of buffered points (the membuf length, one job over the
-    * bounded buffer). */
-  def bufferedCount(): Long = if (memEmpty) 0L else mem.count()
+  /** Number of buffered points (the membuf length): a sum over the
+    * buffer stats, or one job over the bounded buffer past the cap. */
+  def bufferedCount(): Long =
+    if (memOverflow) mem.count() else memStats.valuesIterator.map(_.count).sum
 
   /** Whether any series' bounds were dropped on the cap (tests). */
   private[graft] def boundsOverflowed: Boolean = boundsOverflow
+
+  /** The current buffer checkpoint (tests). */
+  private[graft] def buffer: DataFrame = mem
+
+  /** The buffer stats as `series -> (count, min ts, max ts)`, and whether
+    * any buffered series is untracked (tests). */
+  private[graft] def memStatsView: (Map[String, (Long, Long, Long)], Boolean) =
+    (memStats.map { case (s, st) => s -> (st.count, st.minTs, st.maxTs) }, memOverflow)
 
   /** Buffer plan depth + tracked-bounds size, for lifecycle tests. */
   private[graft] def lifecycleStats: (Int, Int) =
@@ -536,11 +589,10 @@ final class TieredStore(spark: SparkSession, val root: String,
     */
   def ingest(batch: DataFrame, spillThreshold: Long): Unit =
     this.synchronized {
-      appendMemory(batch)
-      val full = mem.groupBy(SERIES).agg(count(lit(1)).as("n"))
-        .filter(col("n") >= spillThreshold)
-        .collect().map(_.getString(0)) // bounded: buffer size / threshold
-      if (full.nonEmpty) flushLocked(full.toSeq)
+      val full = appendLocked(batch).collect {
+        case (s, st) if st.count >= spillThreshold => s
+      }
+      if (full.nonEmpty) flushLocked(full)
     }
 
   /** I2: per-series memory/disk length split
@@ -589,6 +641,9 @@ object TieredStore {
     * stays row-group-sorted inside each bucket, so growth far past the
     * threshold still prunes well. */
   val ElectedBuckets = 64
+
+  /** One series' buffered length and time range. */
+  private final case class MemStat(count: Long, minTs: Long, maxTs: Long)
 
   private def emptyCanon(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],

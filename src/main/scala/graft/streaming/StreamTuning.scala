@@ -41,11 +41,17 @@ object StreamTuning {
   }
 
   /** Total size of the regular files directly under `dir` — the staged
-    * stream input directories are flat (no nested parquet dirs).
+    * stream input directories are flat (no nested parquet dirs). Listed
+    * through the Hadoop `FileSystem` of `dir`'s scheme with the session's
+    * Hadoop conf, so HDFS/S3/ABFS inputs size like local ones; a missing
+    * dir is 0 bytes.
     */
-  def inputBytes(dir: String): Long =
-    Option(new java.io.File(dir).listFiles())
-      .map(_.filter(_.isFile).map(_.length).sum).getOrElse(0L)
+  def inputBytes(s: SparkSession, dir: String): Long = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val fs = path.getFileSystem(s.sessionState.newHadoopConf())
+    try fs.listStatus(path).filter(_.isFile).map(_.getLen).sum
+    catch { case _: java.io.FileNotFoundException => 0L }
+  }
 
   /** A session for running ONE stream whose shuffle (= state store and
     * sink) partition count is derived from `inDir`'s volume. A fresh
@@ -57,7 +63,7 @@ object StreamTuning {
   def sessionFor(s: SparkSession, inDir: String): SparkSession = {
     val target = s.conf.getOption(TargetConf).map(_.toLong)
       .getOrElse(DefaultTargetBytes)
-    val parts = statePartitions(inputBytes(inDir), target)
+    val parts = statePartitions(inputBytes(s, inDir), target)
     val ss = s.newSession()
     graft.Graft.register(ss) // session-scoped functions + excluded rules
     ss.conf.set("spark.sql.shuffle.partitions", parts.toString)

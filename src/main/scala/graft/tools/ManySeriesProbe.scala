@@ -14,9 +14,12 @@ import org.apache.spark.sql.functions._
   * Two measurements:
   *  1. **read flatness**: a fixed 1M-row memory buffer spread over 1k /
   *     100k / 1M distinct series — `readLast` wall must track BUFFER
-  *     volume (constant here), not series cardinality. The memStats
-  *     aggregate and the WindowGroupLimit top-n both key on the queried
-  *     ids, so series count should be invisible.
+  *     volume (constant here), not series cardinality. The tier decision
+  *     reads the driver-side buffer stats for the queried ids and the
+  *     WindowGroupLimit top-n keys on them, so series count should be
+  *     invisible. The stats move the per-series cost to the write:
+  *     `appendMemory` collects one stats row per buffered series (1M rows
+  *     at 1M series), reported as `append_wall`.
   *  2. **cap engagement**: a disk tier of 5k series under a 1k-entry
   *     cap — the bounds map must stop at the cap, and a capped-out
   *     (untracked) series must still read CORRECTLY via the conservative
@@ -54,14 +57,16 @@ object ManySeriesProbe {
       val st = new TieredStore(spark,
         java.nio.file.Files.createTempDirectory("mseries").toString,
         electBucketsAt = Int.MaxValue)
+      val ta = System.nanoTime()
       st.appendMemory(buffer(n))
+      val appendWall = (System.nanoTime() - ta) / 1e9
       val ids = Seq("s0", "s1", "s2", "s3")
       st.readLast(ids, 50).count() // warm the plan shape
       val t0 = System.nanoTime()
       val cnt = st.readLast(ids, 50).count()
       val wall = (System.nanoTime() - t0) / 1e9
-      println(f"[mseries] series=$n%8d read_wall=$wall%6.2fs rows=$cnt " +
-        s"tracked_bounds=${st.lifecycleStats._2}")
+      println(f"[mseries] series=$n%8d append_wall=$appendWall%6.2fs read_wall=$wall%6.2fs " +
+        s"rows=$cnt tracked_bounds=${st.lifecycleStats._2}")
       val want = 4 * math.min(rows / n, 50L) // per-series rows shrink as n grows
       if (cnt != want) { println(s"[mseries] FAIL: expected $want rows, got $cnt"); failed = true }
       // sync() — the r8 flush-all path plans NO per-series isin (the old

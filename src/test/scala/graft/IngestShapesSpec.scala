@@ -1,6 +1,8 @@
 package graft
 
 import graft.sources.JsonIngest
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
 /** q_ingest_shapes: the S1/S2 wire-grammar query over the checked-in
   * fixture (src/main/resources/graft/ingest_wire.jsonl). The expected
@@ -30,6 +32,40 @@ class IngestShapesSpec extends SparkSuite {
       ("b", """{"timestamp":21,"value":2}"""),
       ("s", """{"value": 9}"""),
       ("g", """not json at all""")))
+  }
+
+  /** The per-element JSONPath form `explodeBatches` had before its linear
+    * rewrite: the reference its element text must equal byte for byte. */
+  private def explodeByJsonPath(wire: DataFrame): DataFrame = {
+    val nArr = json_array_length(col("json"))
+    val singles = wire.filter(nArr.isNull).select("series", "json")
+    val elems = wire.filter(nArr.isNotNull && nArr > 0)
+      .select(col("series"), col("json"), explode(sequence(lit(0), nArr - 1)).as("__i"))
+      .select(col("series"), expr("get_json_object(json, concat('$[', __i, ']'))").as("json"))
+    singles.unionByName(elems)
+  }
+
+  test("explodeBatches emits the same element text as the get_json_object form") {
+    val wire = Seq(
+      "num" -> ("[{\"value\": 1.50e3}, {\"value\": -0.0}, {\"value\": 1e400}, " +
+        "{\"value\": 12345678901234567890}]"),
+      "esc" -> ("[{\"tag\": [{\"n\\" + "u00e9\": \"a\\\"b\"}], \"value\": 1},\n\t{ \"value\" :  2 , " +
+        "\"timestamp\" : 3 } ]"),
+      "nest" -> "[{\"tag\": [{\"a\": \"1\"}, {\"b\": [\"x\", {\"c\": []}]}], \"value\": 1}]",
+      "nonobj" -> "[5, \"str\", null, [1, [2, 3]]]",
+      "empty" -> "[]",
+      "single" -> "{\"value\": 9}",
+      "bad" -> "not json [1, 2]"
+    ).toDF("series", "json")
+    def bySeries(df: DataFrame): Map[String, Seq[String]] =
+      df.as[(String, String)].collect().toSeq.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+    val got = bySeries(JsonIngest.explodeBatches(wire))
+    val want = bySeries(explodeByJsonPath(wire))
+    assert(got == want)
+    assert(got("num").size == 4 && got("nonobj").size == 4 && !got.contains("empty"))
+    // so every derived row, content-hash rid included, is unchanged
+    def rows(df: DataFrame) = JsonIngest.ingest(df, T0).good.collect().map(_.toString).sorted.toSeq
+    assert(rows(JsonIngest.explodeBatches(wire)) == rows(explodeByJsonPath(wire)))
   }
 
   test("tag grammar enforced at ingest: non-array / null / empty-object tags quarantine") {

@@ -139,6 +139,39 @@ class RouterSpec extends SparkSuite {
     assert(Router.run(st, "ts/h/memory/length").as[Long].head() == 10L) // not flushed
   }
 
+  test("POST acks: empty, all-invalid and spilling bodies; no job of the route's own") {
+    import graft.sources.TieredStore
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler}
+    import org.scalatest.concurrent.TimeLimits.failAfter
+    import org.scalatest.time.SpanSugar._
+    // the ack counts are observed metrics: were no action to run the
+    // observed plan, reading them would block, so each case is bounded
+    implicit val signaler: Signaler = ThreadSignaler
+    val st = new TieredStore(spark, tmpDir("router_post_ack"))
+    def post(body: String, spill: Long = 20000L): ((Long, Long), Seq[String]) =
+      failAfter(120.seconds) {
+        JobProbe.sites(spark) {
+          Router.runPost(st, "ts/p", body, spillThreshold = spill).as[(Long, Long)].head()
+        }
+      }
+    val (empty, s1) = post("[]")
+    assert(empty == ((0L, 0L)))
+    val (bad, s2) = post("""[{"nope": 1}, 5, "x", {"value": "42"}]""")
+    assert(bad == ((0L, 4L)))
+    assert(st.bufferedCount() == 0L)
+    // 8 points past a threshold of 5: acked in full, spilled to disk
+    val body = (0 until 8).map(i => s"""{"timestamp": ${100 + i}, "value": $i}""")
+      .mkString("[", ",", "]")
+    val (spilled, s3) = post(body, spill = 5L)
+    assert(spilled == ((8L, 0L)))
+    assert(Router.run(st, "ts/p/disk/length").as[Long].head() == 8L)
+    assert(Router.run(st, "ts/p/memory/length").as[Long].head() == 0L)
+    // the counts ride on the store's checkpoint: none of the jobs the
+    // route started (the ack frame's own `head` aside) is Router's
+    val routeSites = Seq(s1, s2, s3).flatten.filterNot(_.contains("RouterSpec.scala"))
+    assert(routeSites.nonEmpty && !routeSites.exists(_.contains("Router.scala")), routeSites)
+  }
+
   test("DELETE against a live store: buffer flush, shard rewrite, reads see it") {
     import graft.sources.TieredStore
     val st = new TieredStore(spark, tmpDir("router_delete"))

@@ -30,8 +30,23 @@ class StreamTuningSpec extends SparkSuite {
     java.nio.file.Files.write(java.nio.file.Paths.get(d, "b.parquet"),
       Array.fill[Byte](23)(1))
     java.nio.file.Files.createDirectory(java.nio.file.Paths.get(d, "sub"))
-    assert(StreamTuning.inputBytes(d) == 123L)
-    assert(StreamTuning.inputBytes(d + "/does-not-exist") == 0L)
+    assert(StreamTuning.inputBytes(spark, d) == 123L)
+    assert(StreamTuning.inputBytes(spark, d + "/does-not-exist") == 0L)
+  }
+
+  test("inputBytes lists a non-file: filesystem through the session's Hadoop conf") {
+    // java.io.File cannot see a `graftfs:` path: it read 0 bytes, which
+    // pinned every HDFS/S3-staged stream to one partition
+    val d = tmpDir("stream_tuning_fs_")
+    java.nio.file.Files.write(java.nio.file.Paths.get(d, "a.parquet"),
+      Array.fill[Byte](77)(1))
+    val impl = s"fs.${SchemeFs.Scheme}.impl"
+    spark.conf.set(impl, classOf[SchemeFs].getName)
+    spark.conf.set(s"$impl.disable.cache", "true")
+    try {
+      assert(StreamTuning.inputBytes(spark, s"${SchemeFs.Scheme}://$d") == 77L)
+      assert(StreamTuning.inputBytes(spark, s"${SchemeFs.Scheme}://$d/nope") == 0L)
+    } finally { spark.conf.unset(impl); spark.conf.unset(s"$impl.disable.cache") }
   }
 
   test("sessionFor derives shuffle partitions from the dir and isolates the caller") {
@@ -54,3 +69,12 @@ class StreamTuningSpec extends SparkSuite {
     } finally spark.conf.unset(StreamTuning.TargetConf)
   }
 }
+
+/** The local filesystem under a scheme of its own: a stand-in for a
+  * non-`file:` store (HDFS, S3) that only the Hadoop conf can resolve. */
+class SchemeFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create(s"${SchemeFs.Scheme}:///")
+  override def getScheme: String = SchemeFs.Scheme
+}
+
+object SchemeFs { val Scheme = "graftfs" }

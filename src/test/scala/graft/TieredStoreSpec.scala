@@ -169,6 +169,78 @@ class TieredStoreSpec extends SparkSuite {
     val q = st.readLast(Seq("s00"), 3)
     assert(!q.queryExecution.executedPlan.toString.contains("FileScan"))
     assert(q.select("rid").as[Long].collect().toSeq == Seq(9L, 8L, 7L))
+    // the buffer stats obey the same cap: seven buffered series, four
+    // tracked (s00 keeps its slot), the rest untracked
+    st.appendMemory((1 until 7).flatMap(s =>
+      (5L until 9L).map(i => dp(f"s$s%02d", T0 + i * 1000L, s * 100L + i))).toDF())
+    val (tracked, overflow) = st.memStatsView
+    assert(tracked.size == 4 && overflow && tracked.contains("s00"), tracked)
+    assert(st.bufferedCount() == st.buffer.count() && st.bufferedCount() == 5L + 6 * 4)
+    // past the cap a series takes the merge/flush paths: answers stay right
+    val ids = (0 until 7).map(s => f"s$s%02d")
+    val flat = graft.operators.TimeSeries.readLast(st.snapshot, ids, 6)
+      .select("series", "rid").as[(String, Long)].collect().toSet
+    assert(st.readLast(ids, 6).select("series", "rid").as[(String, Long)].collect().toSet == flat)
+    val untracked = ids.filterNot(tracked.contains)
+    st.flush(untracked.take(1))
+    assert(st.bufferedCount() == st.buffer.count())
+    st.sync()
+    assert(st.memStatsView == ((Map.empty, false)) && st.bufferedCount() == 0L)
+    assert(graft.operators.TimeSeries.readLast(st.snapshot, ids, 6)
+      .select("series", "rid").as[(String, Long)].collect().toSet == flat)
+  }
+
+  /** The buffer stats as a Spark aggregate over the buffer itself. */
+  private def sparkStats(st: TieredStore): Map[String, (Long, Long, Long)] =
+    st.buffer.groupBy("series").agg(count(lit(1)), min("ts_us"), max("ts_us"))
+      .as[(String, Long, Long, Long)].collect()
+      .map { case (s, n, lo, hi) => s -> ((n, lo, hi)) }.toMap
+
+  test("buffer stats stay exact over a seeded mutation mix; answers match flat reads") {
+    val rnd = new scala.util.Random(7301)
+    val st = new TieredStore(spark, tmpDir("tier_mix"))
+    val ids = Seq("a", "b", "c")
+    var live = Vector.empty[Datapoint]
+    var rid = 0L
+    // mostly newer than what came before, sometimes late (inside the disk
+    // range), so the mix takes the M1, M2 and M3 paths
+    def points(step: Int): Seq[Datapoint] = Seq.fill(1 + rnd.nextInt(6)) {
+      rid += 1
+      dp(ids(rnd.nextInt(ids.size)), T0 + (step * 4L + rnd.nextInt(12) - 6) * 1000L, rid)
+    }
+    def pick(): Seq[String] = rnd.shuffle(ids).take(1 + rnd.nextInt(ids.size))
+    def answer(df: org.apache.spark.sql.DataFrame) =
+      df.select("series", "ts_us", "rid").as[(String, Long, Long)].collect().toSeq.sorted
+    (0 until 24).foreach { step =>
+      val op = rnd.nextInt(5)
+      op match {
+        case 0 => val p = points(step); st.appendMemory(p.toDF()); live ++= p
+        case 1 => val p = points(step); st.ingest(p.toDF(), spillThreshold = 5L); live ++= p
+        case 2 => st.flush(pick())
+        case 3 => st.sync()
+        case 4 =>
+          val (ss, lo) = (pick(), T0 + (step * 4L - 8) * 1000L)
+          val hit = (d: Datapoint) => ss.contains(d.series) && d.ts_us >= lo && d.ts_us <= lo + 6000L
+          assert(st.delete(ss, lo, lo + 6000L) == live.count(hit), s"step $step")
+          live = live.filterNot(hit)
+      }
+      assert(st.memStatsView == ((sparkStats(st), false)), s"step $step op $op")
+      val (ss, n) = (pick(), 1 + rnd.nextInt(8))
+      assert(answer(st.readLast(ss, n)) ==
+        answer(graft.operators.TimeSeries.readLast(live.toDF(), ss, n)), s"step $step op $op")
+      assert(st.memStatsView == ((sparkStats(st), false)), s"step $step after readLast")
+      assert(st.bufferedCount() == st.buffer.count(), s"step $step")
+    }
+    assert(answer(st.snapshot) == answer(live.toDF()))
+  }
+
+  test("a read that needs no flush decides its tier path without a Spark job") {
+    val st = freshSorted() // 100 on disk, 20 buffered beyond the disk bound
+    val (frames, sites) = JobProbe.sites(spark) {
+      Seq(st.readLast(Seq("a"), 10), st.readLast(Seq("a"), 30), st.readLast(Seq("a", "zz"), 5))
+    }
+    assert(sites.isEmpty, sites)
+    assert(frames.map(_.count()) == Seq(10L, 30L, 5L))
   }
 
   test("automatic bucketed-layout election: crossing the threshold migrates live, content identical") {
