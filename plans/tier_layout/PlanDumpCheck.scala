@@ -1,0 +1,84 @@
+package graft
+
+import graft.model.Canon.{Datapoint, TagEntry}
+import graft.sources.TieredStore
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+
+/** Dumps the executed plans of `TieredStore`'s tier paths on both disk
+  * layouts — `readLast` on the M1, M2 and M3 paths, `lengthSplit`, every
+  * execution a `delete` runs (its affected-partition read included), and
+  * the reads and CDC after the delete's skip lines — normalized so two
+  * commits' dumps diff cleanly (expression ids, plan ids, temp roots and
+  * data-dir UUIDs masked). Not part of the test sources; run it from the
+  * repo root with
+  *
+  *   PLANDUMP_OUT=/path/plans.txt sbt \
+  *     'set Test / unmanagedSourceDirectories += file("plans/tier_layout")' \
+  *     "testOnly graft.PlanDumpCheck"
+  *
+  * `plans.txt` beside this file is its output; the parent commit of the
+  * layout refactor produced the identical file. */
+class PlanDumpCheck extends SparkSuite {
+  import spark.implicits._
+  private val T0 = 1704067200000000L
+  private def dp(s: String, ts: Long, rid: Long) =
+    Datapoint(s, ts, Some(Seq(TagEntry("k", "1"))), rid.toDouble, rid)
+
+  test("dump") {
+    val out = new StringBuilder
+    val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        captured.add(s"[$f]\n" + qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    var marker = 900000L
+    def during(name: String)(f: => Any): Unit = {
+      captured.clear()
+      f
+      marker += 1
+      spark.range(marker).count()
+      while (!captured.toArray.exists(_.toString.contains(s"Range (0, $marker"))) Thread.sleep(50)
+      val plans = captured.toArray.map(_.toString).filterNot(_.contains(s"Range (0, $marker"))
+      out ++= s"==== $name (${plans.length} executions)\n"
+      plans.foreach(p => out ++= p + "\n")
+    }
+    Seq(None, Some(4)).foreach { layout =>
+      val root = tmpDir("plandump")
+      val st = new TieredStore(spark, root, seriesBuckets = layout)
+      def plan(name: String, df: org.apache.spark.sql.DataFrame): Unit =
+        out ++= s"==== $layout $name\n" + df.queryExecution.executedPlan.toString + "\n"
+      st.appendDisk(Seq("a", "b", "c/d", "e").flatMap(s =>
+        (0L until 100L).map(i => dp(s, T0 + i * 1000L, s.hashCode.abs % 1000 * 1000L + i))).toDF())
+      st.appendMemory((0L until 20L).map(i => dp("a", T0 + 1000000L + i * 1000L, 500000L + i)).toDF())
+      st.appendMemory((0L until 5L).map(i => dp("b", T0 + 500L + i * 1000L, 600000L + i)).toDF())
+      plan("M1 readLast(a,10)", st.readLast(Seq("a"), 10))
+      plan("M2 readLast(a,30)", st.readLast(Seq("a"), 30))
+      plan("lengthSplit(a,b,c/d)", st.lengthSplit(Seq("a", "b", "c/d")))
+      var m3: org.apache.spark.sql.DataFrame = null
+      during(s"$layout M3 readLast(b,5) executions") { m3 = st.readLast(Seq("b"), 5) }
+      plan("M3 readLast(b,5)", m3)
+      val v0 = st.diskVersions.last.version
+      during(s"$layout delete(c/d, a)") { st.delete(Seq("c/d", "a"), T0 + 10000L, T0 + 2000000L) }
+      val v1 = st.diskVersions.last.version
+      plan("after delete readLast(c/d,a,e,5)", st.readLast(Seq("c/d", "a", "e"), 5))
+      plan("after delete lengthSplit", st.lengthSplit(Seq("a", "b", "c/d", "e")))
+      plan("diskChanges", st.diskChanges(v0, v1))
+      out ++= s"==== $layout answers\n" + st.snapshot.orderBy("series", "ts_us", "rid")
+        .collect().mkString("\n") + "\n"
+      val norm = out.toString.replace(root, "ROOT")
+      out.clear(); out ++= norm
+    }
+    spark.listenerManager.unregister(l)
+    val text = out.toString
+      .replaceAll("#\\d+L?", "#")
+      .replaceAll("plan_id=\\d+", "plan_id=")
+      // Spark truncates the path list at a length that moves with the temp
+      // root's name: keep the path count, mask the list
+      .replaceAll("InMemoryFileIndex\\((\\d+) paths\\)\\[file:[^ ]*,", "InMemoryFileIndex($1 paths)[ROOT/data/...],")
+      .replaceAll("(d\\d{8}-[a-z]+)-[0-9a-f]{8}", "$1-X")
+    java.nio.file.Files.write(java.nio.file.Paths.get(sys.env("PLANDUMP_OUT")), text.getBytes("UTF-8"))
+  }
+}

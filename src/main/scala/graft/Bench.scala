@@ -288,53 +288,54 @@ object Bench {
       import org.apache.spark.sql.functions._
       spark.sparkContext.setJobDescription(s"bench:scale-stage x$mult")
       val dir = java.nio.file.Files.createTempDirectory(s"bench_scale_x${mult}_")
-      // multi-part staging on purpose: a single coalesced file would be
-      // one scan task and serialize the very kernels this tier times
-      val parts = spark.sparkContext.defaultParallelism
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      (0 until mult).map(i =>
-          docs.withColumn("doc_id", col("doc_id") + lit(i.toLong * 10000000L)))
-        .reduce(_ unionByName _).repartition(parts)
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val ev = spark.read.parquet(s"$sfDir/events.parquet")
-      (0 until mult).map(i => ev
-          .withColumn("event_id", col("event_id") + lit(i.toLong * 1000000000L))
-          .withColumn("user_id", col("user_id") + lit(i.toLong * 1000000L)))
-        .reduce(_ unionByName _).repartition(parts)
-        .write.mode("overwrite").parquet(s"$dir/events.parquet")
-      val t0 = System.nanoTime()
-      val out = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-      val failedScale = scala.collection.mutable.ArrayBuffer.empty[String]
-      for (n <- scaleQueries if (System.nanoTime() - t0) / 1e9 < budgetSec)
-        CacheLedger.scoped {
-          spark.catalog.clearCache()
-          spark.sparkContext.setJobDescription(s"bench:scale:$n")
-          val q0 = System.nanoTime()
-          try {
-            val df = SparkEntry.queries(n)(spark, dir.toString)
-            if (noopSink) df.write.format("noop").mode("overwrite").save()
-            else df.count()
-            val t = (System.nanoTime() - q0) / 1e9
-            out += n -> t
-            System.err.println(f"[bench] scale x$mult $n%-24s $t%.2fs")
-          } catch { case e: Throwable =>
-            failedScale += n
-            System.err.println(s"[bench] scale $n failed: ${e.getMessage}")
+      try {
+        // multi-part staging on purpose: a single coalesced file would be
+        // one scan task and serialize the very kernels this tier times
+        val parts = spark.sparkContext.defaultParallelism
+        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+        (0 until mult).map(i =>
+            docs.withColumn("doc_id", col("doc_id") + lit(i.toLong * 10000000L)))
+          .reduce(_ unionByName _).repartition(parts)
+          .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        val ev = spark.read.parquet(s"$sfDir/events.parquet")
+        (0 until mult).map(i => ev
+            .withColumn("event_id", col("event_id") + lit(i.toLong * 1000000000L))
+            .withColumn("user_id", col("user_id") + lit(i.toLong * 1000000L)))
+          .reduce(_ unionByName _).repartition(parts)
+          .write.mode("overwrite").parquet(s"$dir/events.parquet")
+        val t0 = System.nanoTime()
+        val out = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
+        val failedScale = scala.collection.mutable.ArrayBuffer.empty[String]
+        for (n <- scaleQueries if (System.nanoTime() - t0) / 1e9 < budgetSec)
+          CacheLedger.scoped {
+            spark.catalog.clearCache()
+            spark.sparkContext.setJobDescription(s"bench:scale:$n")
+            val q0 = System.nanoTime()
+            try {
+              val df = SparkEntry.queries(n)(spark, dir.toString)
+              if (noopSink) df.write.format("noop").mode("overwrite").save()
+              else df.count()
+              val t = (System.nanoTime() - q0) / 1e9
+              out += n -> t
+              System.err.println(f"[bench] scale x$mult $n%-24s $t%.2fs")
+            } catch { case e: Throwable =>
+              failedScale += n
+              System.err.println(s"[bench] scale $n failed: ${e.getMessage}")
+            }
           }
+        if (out.nonEmpty) {
+          val qs = out.sortBy(_._1)
+            .map { case (k, v) => "\"" + k + "\":" + fmt(v, 2) }
+            .mkString("{", ",", "}")
+          val fl = failedScale.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+          println(s"""{"metric":"scale","value":${fmt(out.map(_._2).sum, 2)},""" +
+            s""""unit":"sec","queries":$qs,"mult":$mult,""" +
+            s""""skipped":${scaleQueries.size - out.size - failedScale.size},""" +
+            s""""failed":$fl,"sf":"${new java.io.File(sfDir).getName}x$mult"}""")
+          System.out.flush()
         }
-      if (out.nonEmpty) {
-        val qs = out.sortBy(_._1)
-          .map { case (k, v) => "\"" + k + "\":" + fmt(v, 2) }
-          .mkString("{", ",", "}")
-        val fl = failedScale.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-        println(s"""{"metric":"scale","value":${fmt(out.map(_._2).sum, 2)},""" +
-          s""""unit":"sec","queries":$qs,"mult":$mult,""" +
-          s""""skipped":${scaleQueries.size - out.size - failedScale.size},""" +
-          s""""failed":$fl,"sf":"${new java.io.File(sfDir).getName}x$mult"}""")
-        System.out.flush()
-      }
-      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     } catch { case e: Throwable =>
       // the tier is evidence, not the contract — never fail the bench
       System.err.println(s"[bench] scale tier skipped: ${e.getMessage}")

@@ -2309,7 +2309,8 @@ object SparkEntry {
            |  SELECT *,
            |    coalesce((ks = ['value'] OR ks = ['tag','value'] OR ks = ['timestamp','value'] OR ks = ['timestamp','tag','value'])
            |      AND json_type(j, '$$.value') IN ('DOUBLE','BIGINT','UBIGINT')
-           |      AND (NOT list_contains(ks, 'timestamp') OR json_type(j, '$$.timestamp') IN ('DOUBLE','BIGINT','UBIGINT'))
+           |      AND (NOT list_contains(ks, 'timestamp') OR (json_type(j, '$$.timestamp') IN ('DOUBLE','BIGINT','UBIGINT')
+           |        AND TRY_CAST(trunc(TRY_CAST(j->>'$$.timestamp' AS DOUBLE)) AS BIGINT) IS NOT NULL))
            |      AND (NOT list_contains(ks, 'tag') OR (json_type(j, '$$.tag') = 'ARRAY'
            |        AND len(list_filter(tags,
            |              e -> json_type(e) != 'OBJECT' OR len(json_keys(e)) = 0)) = 0)), false) AS ok

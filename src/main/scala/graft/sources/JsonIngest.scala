@@ -62,7 +62,10 @@ object JsonIngest {
   /** Shape check: the object's key list must equal one of the four accepted
     * shapes IN ORDER, and `value` (plus `timestamp` if present) must be a
     * JSON NUMBER token (not a numeric-looking string — see
-    * [[isNumberToken]]).
+    * [[isNumberToken]]). A `timestamp` must also fit the 64-bit µs range:
+    * `try_cast` to long is null exactly where [[ingest]]'s cast would
+    * throw `CAST_OVERFLOW`, so such an element quarantines instead of
+    * failing the whole batch.
     *
     * The tag grammar (array of non-empty objects, `src/shard.re:39-49`) is
     * enforced HERE, at ingest — a deliberate divergence from the reference,
@@ -78,7 +81,8 @@ object JsonIngest {
     val parsed = from_json(json, wireSchema)
     val valueOk = parsed.getField("value").isNotNull && isNumberToken(json, "$.value")
     val tsOk = !array_contains(keys, "timestamp") ||
-      (parsed.getField("timestamp").isNotNull && isNumberToken(json, "$.timestamp"))
+      (parsed.getField("timestamp").try_cast(LongType).isNotNull &&
+        isNumberToken(json, "$.timestamp"))
     val tagField = parsed.getField("tag")
     // when the `tag` key is present it must have parsed as an array whose
     // every element is a non-empty object (head-of-assoc-list must exist)

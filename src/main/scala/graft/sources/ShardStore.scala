@@ -1,8 +1,10 @@
 package graft.sources
 
 import graft.model.Canon._
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.{escapePathName, unescapePathName}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField}
 
 /** S3-S5: the storage layer — partitioned Parquet replacing the reference's
   * Irmin/Git shard store + interval index (SURVEY.md §1.3-1.4, §4).
@@ -25,6 +27,15 @@ import org.apache.spark.sql.functions._
   *    no driver-side index, append-only — late data just lands in its own
   *    (old-day) partition, giving the reference's unbounded lateness
   *    tolerance without rewrites.
+  *
+  * This object is the ONE owner of the on-disk layout: the flat and the
+  * bucketed partitioning below, the partition columns and their types,
+  * and the partition dir names — encoded the way Spark writes them
+  * (`escapePathName`), decoded by the inverse filter. Every other module
+  * ([[TieredStore]]'s pruned reads and deletes, [[VersionedStore]]'s skip
+  * lines and read schema) asks these functions, passing the layout as
+  * `Option[Int]` (None = flat `series=/day=`, Some(b) = `bucket=/day=`
+  * over b buckets).
   */
 object ShardStore {
 
@@ -116,22 +127,41 @@ object ShardStore {
       .mode(SaveMode.Append)
       .parquet(path)
 
-  /** Read a bucketed store in canonical form. */
-  def readBucketedStore(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-      .select(col(SERIES), col(TS_US), col(TAG), col(VALUE), col(RID))
+  /** Filter on the top-level partition column selecting every partition
+    * that holds `ids`: flat — the ids' own `series` partitions; bucketed —
+    * the ids' buckets whole (co-resident series included). */
+  def partitionsOf(ids: Seq[String], layout: Option[Int]): Column =
+    layout match {
+      case Some(b) => col(BUCKET).isin(ids.map(bucketOf(_, b)).distinct: _*)
+      case None    => col(SERIES).isin(ids: _*)
+    }
 
-  /** Series-pruned read of a bucketed store: the queried ids' bucket set
-    * prunes partitions, the series filter prunes row groups inside them.
-    */
-  def readBuckets(spark: SparkSession, path: String, ids: Seq[String],
-                  buckets: Int): DataFrame = {
-    val bs = ids.map(bucketOf(_, buckets)).distinct
-    spark.read.parquet(path)
-      .filter(col(BUCKET).isin(bs: _*))
-      .filter(col(SERIES).isin(ids: _*))
-      .select(col(SERIES), col(TS_US), col(TAG), col(VALUE), col(RID))
-  }
+  /** The top-level partition dir names holding `ids`, encoded the way
+    * Spark writes partition paths — the names a manifest `skip` line
+    * carries. [[partitionsNamed]] is the inverse. */
+  def partitionNames(ids: Seq[String], layout: Option[Int]): Seq[String] =
+    layout match {
+      case Some(b) => ids.map(x => s"$BUCKET=${bucketOf(x, b)}").distinct
+      case None    => ids.map(x => s"$SERIES=${escapePathName(x)}").distinct
+    }
+
+  /** Filter selecting the partitions named by top-level dir `names` (as
+    * [[partitionNames]] encodes them). It lands on the partition column,
+    * so Catalyst prunes at listing time: a name the data never held costs
+    * no IO. */
+  def partitionsNamed(names: Seq[String], layout: Option[Int]): Column =
+    layout match {
+      case Some(_) =>
+        col(BUCKET).isin(names.map(_.stripPrefix(BUCKET + "=").toLong): _*)
+      case None =>
+        col(SERIES).isin(names.map(n => unescapePathName(n.stripPrefix(SERIES + "="))): _*)
+    }
+
+  /** The layout's partition columns beyond the canonical schema, with
+    * their types (flat: `day`, whose `series` partition IS the canonical
+    * column; bucketed: `bucket`, `day`). */
+  def partitionFields(layout: Option[Int]): Seq[StructField] =
+    layout.map(_ => StructField(BUCKET, LongType)).toSeq :+ StructField(DAY, StringType)
 
   /** File-hygiene compaction (the overlap-merge analog, S4): rewrite the
     * store coalescing small files; correctness never depends on it.
@@ -151,7 +181,7 @@ object ShardStore {
     */
   def compactBucketed(spark: SparkSession, path: String, outPath: String,
                       buckets: Int): Unit =
-    appendBucketed(readBucketedStore(spark, path), outPath, buckets)
+    appendBucketed(read(spark, path), outPath, buckets)
 
   /** Production bucketed layout for id-keyed corpus tables (documents,
     * embeddings): hash-bucketed AND sorted on the join id, so every

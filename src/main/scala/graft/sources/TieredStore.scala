@@ -70,10 +70,13 @@ import org.apache.spark.sql.graft.CheckpointBridge
   * each new buffer checkpoint refreshes the buffer stats; a flush or sync
   * trims them exactly with no job. So the spill check, the `last n` tier
   * decision, the flush bounds and [[bufferedCount]] read maps instead of
-  * running Spark jobs. Each map is bounded by series cardinality and
-  * CAPPED at `maxTrackedSeries` entries: past the cap a series is
-  * untracked, and its reads degrade to the always-correct merge/flush
-  * paths (reads stay flat, memory stays bounded, answers stay right).
+  * running Spark jobs. The buffer stats are exact for every buffered
+  * series: the buffer is bounded by the spill threshold, and the refresh
+  * collects one row per buffered series anyway. Only the disk bounds are
+  * CAPPED, at `maxTrackedSeries` entries, because the disk tier has no
+  * size limit: past the cap a series' bounds are untracked, and its reads
+  * degrade to the always-correct merge/flush paths (reads stay flat,
+  * memory stays bounded, answers stay right).
   *
   * Scale notes (100 TB): the memory tier is an ingest BUFFER — bounded by
   * the spill threshold (reference `--shard-size`), not by corpus size; every
@@ -131,12 +134,9 @@ final class TieredStore(spark: SparkSession, val root: String,
 
   @volatile private var mem: DataFrame = emptyCanon(spark)
   /** Per-series (count, min ts, max ts) of the buffer: the membufq's
-    * cached queue length and range. Exact for every entry; capped at
-    * `maxTrackedSeries` like [[diskBounds]]. */
+    * cached queue length and range. One exact entry per buffered series;
+    * an absent series has nothing buffered. */
   @volatile private var memStats = Map.empty[String, MemStat]
-  /** True while some buffered series has no [[memStats]] entry (dropped
-    * on the cap): an ABSENT entry then means "unknown", not "unbuffered". */
-  @volatile private var memOverflow = false
   /** Superseded buffer checkpoints, oldest first; see the snapshot
     * contract in the class doc. */
   private val retiredFrames = scala.collection.mutable.Queue.empty[DataFrame]
@@ -147,7 +147,6 @@ final class TieredStore(spark: SparkSession, val root: String,
   /** True once any series' bounds were dropped on the cap: an ABSENT
     * bounds entry then means "unknown", not "no disk data". */
   @volatile private var boundsOverflow = false
-  @volatile private var diskNonEmpty = false
   /** Cached tip of the disk tier's manifest chain — refreshed after every
     * committed mutation, so reads plan without re-listing manifests. */
   @volatile private var tip: Option[VersionedStore.Commit] = None
@@ -199,7 +198,6 @@ final class TieredStore(spark: SparkSession, val root: String,
       .orderBy(SERIES)
       .limit(cap + 1)
       .collect()
-    if (rows.nonEmpty) diskNonEmpty = true
     rows.take(cap).foreach { r =>
       diskBounds.put(r.getString(0), (r.getLong(1), r.getLong(2)))
     }
@@ -216,14 +214,15 @@ final class TieredStore(spark: SparkSession, val root: String,
   }
 
   /** Automatic bucketed-layout election (see `electBucketsAt`): called at
-    * the end of every ingest-path mutation, under the store lock. One
+    * the end of every ingest-path mutation, right after its disk commit,
+    * under the store lock. One
     * [[VersionedStore.compactAs]] commit rewrites the live content
     * bucketed and flips the manifest layout marker; the superseded flat
     * history is expired (space reclaimed, same policy as [[compactDisk]]).
     * Reads before/after are property-identical — the layout is invisible
     * above the physical tier. */
   private def maybeElect(): Unit =
-    if (curLayout.isEmpty && diskHasData && diskBounds.size >= electBucketsAt) {
+    if (curLayout.isEmpty && diskBounds.size >= electBucketsAt) {
       VersionedStore.compactAs(spark, root, Some(ElectedBuckets))
       VersionedStore.expire(spark, root, keepLast = 1)
       curLayout = Some(ElectedBuckets)
@@ -251,7 +250,6 @@ final class TieredStore(spark: SparkSession, val root: String,
     val old = mem
     mem = emptyCanon(spark)
     memStats = Map.empty
-    memOverflow = false
     retire(old)
   }
 
@@ -265,24 +263,16 @@ final class TieredStore(spark: SparkSession, val root: String,
       CheckpointBridge.releaseCheckpoint(retiredFrames.dequeue())
   }
 
-  private def memEmpty: Boolean = memStats.isEmpty && !memOverflow
+  private def memEmpty: Boolean = memStats.isEmpty
 
   /** Refresh [[memStats]] from the current checkpoint: one aggregate over
-    * the bounded buffer, one row per buffered series. Series already
-    * tracked keep their slots; new ones fill the map up to the cap.
-    * Returns every row, tracked or not (the spill check needs them all).
-    */
-  private def refreshMemStats(): Seq[(String, MemStat)] = {
-    val all = mem.groupBy(SERIES)
+    * the bounded buffer, one row per buffered series. */
+  private def refreshMemStats(): Unit =
+    memStats = mem.groupBy(SERIES)
       .agg(count(lit(1)), min(TS_US), max(TS_US))
       .collect()
       .map(r => r.getString(0) -> MemStat(r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSeq
-    val (kept, fresh) = all.partition { case (s, _) => memStats.contains(s) }
-    memStats = (kept ++ fresh.take(maxTrackedSeries - kept.size)).toMap
-    memOverflow = memStats.size < all.size
-    all
-  }
+      .toMap
 
   /** Direct-to-disk append (the batch ingest path). An empty frame is a
     * no-op — no empty version bloating the chain. */
@@ -296,7 +286,7 @@ final class TieredStore(spark: SparkSession, val root: String,
     * `src/membufq.re:9`). */
   def appendMemory(df: DataFrame): Unit = this.synchronized { appendLocked(df) }
 
-  private def appendLocked(df: DataFrame): Seq[(String, MemStat)] = {
+  private def appendLocked(df: DataFrame): Unit = {
     val slice = canonSel(df)
     swapMem(if (memEmpty) slice else mem.unionByName(slice))
     refreshMemStats()
@@ -315,35 +305,28 @@ final class TieredStore(spark: SparkSession, val root: String,
     * many-series probe exists to rule out (1M series → a
     * hundreds-of-MB expression tree pinning the driver). The whole
     * buffer moves as one unfiltered write; the bounds come from the
-    * buffer stats (an aggregate only past the cap).
+    * buffer stats.
     */
   def sync(): Unit = this.synchronized {
     if (!memEmpty) {
-      val bounds = if (memOverflow) collectBounds(mem) else memBounds(memStats.keys)
-      if (bounds.nonEmpty) { appendStore(mem); applyBounds(bounds); maybeElect() }
+      appendStore(mem); applyBounds(memBounds(memStats.keys)); maybeElect()
       clearMem()
     }
   }
 
   /** Move the named series' buffered points to disk. Series with nothing
     * buffered cost nothing: no commit, no checkpoint. */
-  private def flushLocked(ids: Seq[String]): Unit = if (!memEmpty) {
-    val moving = mem.filter(col(SERIES).isin(ids: _*))
-    val bounds =
-      if (memOverflow && !ids.forall(memStats.contains)) collectBounds(moving)
-      else memBounds(ids)
+  private def flushLocked(ids: Seq[String]): Unit = {
+    val bounds = memBounds(ids)
     if (bounds.nonEmpty) {
-      appendStore(moving); applyBounds(bounds); maybeElect()
+      appendStore(mem.filter(col(SERIES).isin(ids: _*)))
+      applyBounds(bounds); maybeElect()
       memStats = memStats -- ids
-      if (memEmpty) clearMem()
-      else {
-        swapMem(mem.filter(!col(SERIES).isin(ids: _*)))
-        if (memOverflow && mem.isEmpty) clearMem()
-      }
+      if (memEmpty) clearMem() else swapMem(mem.filter(!col(SERIES).isin(ids: _*)))
     }
   }
 
-  /** Buffered (series, min ts, max ts) of the tracked `ids`. */
+  /** Buffered (series, min ts, max ts) of the buffered `ids`. */
   private def memBounds(ids: Iterable[String]): Seq[(String, Long, Long)] =
     ids.toSeq.distinct.flatMap(s => memStats.get(s).map(st => (s, st.minTs, st.maxTs)))
 
@@ -354,8 +337,7 @@ final class TieredStore(spark: SparkSession, val root: String,
     slice.groupBy(SERIES).agg(min(TS_US), max(TS_US)).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
 
-  private def applyBounds(rows: Seq[(String, Long, Long)]): Unit = {
-    if (rows.nonEmpty) diskNonEmpty = true
+  private def applyBounds(rows: Seq[(String, Long, Long)]): Unit =
     rows.foreach { case (s, lo, hi) =>
       if (diskBounds.contains(s) || diskBounds.size < maxTrackedSeries)
         diskBounds.updateWith(s) {
@@ -364,9 +346,6 @@ final class TieredStore(spark: SparkSession, val root: String,
         }
       else boundsOverflow = true // untracked: this series degrades to M2/M3
     }
-  }
-
-  private def diskHasData: Boolean = diskNonEmpty
 
   /** Pruned disk read: the prune runs on each RAW relation (partition
     * columns intact) so the series/bucket predicates land on PARTITION
@@ -378,17 +357,11 @@ final class TieredStore(spark: SparkSession, val root: String,
     else VersionedStore.rawGroups(spark, root, c)
       .map(r => canonSel(prune(r))).reduce(_ unionByName _)
 
+  /** The ids' disk rows: their partitions, then their series (in the
+    * flat layout the two filters are one, and Catalyst merges them). */
   private def disk(ids: Seq[String]): DataFrame =
-    (tip, diskHasData) match {
-      case (Some(c), true) => prunedCanon(c, curLayout match {
-        case Some(b) =>
-          val bs = ids.map(ShardStore.bucketOf(_, b)).distinct
-          raw => raw.filter(col(ShardStore.BUCKET).isin(bs: _*))
-            .filter(col(SERIES).isin(ids: _*))
-        case None => raw => raw.filter(col(SERIES).isin(ids: _*))
-      })
-      case _ => emptyCanon(spark)
-    }
+    tip.fold(emptyCanon(spark))(prunedCanon(_, raw =>
+      raw.filter(ShardStore.partitionsOf(ids, curLayout)).filter(col(SERIES).isin(ids: _*))))
 
   /** Buffer lies STRICTLY beyond everything on disk for this series. A tie
     * (buffer min ts == disk max ts) must NOT qualify: under (ts desc,
@@ -409,8 +382,9 @@ final class TieredStore(spark: SparkSession, val root: String,
     * union into one declarative plan; a query whose every series takes M1
     * plans NO disk scan at all (asserted by `TieredStoreSpec`). The
     * decision reads the driver-side stats, so a read that flushes nothing
-    * runs no job until the frame is evaluated. An untracked series (past
-    * the cap) has no stats and takes the M2 merge, correct either way.
+    * runs no job until the frame is evaluated. A series with no stats
+    * has nothing buffered: it takes the M2 merge, which finds no buffered
+    * rows and reads disk alone.
     */
   def readLast(ids: Seq[String], n: Int): DataFrame = this.synchronized {
     require(ids.nonEmpty, "tiered readLast needs explicit series ids")
@@ -468,8 +442,7 @@ final class TieredStore(spark: SparkSession, val root: String,
              pipe: Seq[Tags.Group] = Nil): Long = this.synchronized {
     require(ids.nonEmpty, "tiered delete needs explicit series ids")
     flushLocked(ids)
-    if (!diskHasData) return 0L
-    val c = tip.getOrElse(return 0L)
+    val c = tip.filter(_.dirs.nonEmpty).getOrElse(return 0L)
     val matched = coalesce(
       col(SERIES).isin(ids: _*) && col(TS_US).between(fromUs, toUs) &&
         (if (pipe.isEmpty) lit(true) else Tags.predicate(col(TAG), pipe)),
@@ -477,39 +450,17 @@ final class TieredStore(spark: SparkSession, val root: String,
     // rows of every partition the delete touches (see scaladoc): flat —
     // exactly the ids' series partitions; bucketed — the ids' buckets
     // whole, so co-resident series ride into the survivors dir
-    val affected = prunedCanon(c, curLayout match {
-      case Some(b) =>
-        val bs = ids.map(ShardStore.bucketOf(_, b)).distinct
-        raw => raw.filter(col(ShardStore.BUCKET).isin(bs: _*))
-      case None => raw => raw.filter(col(SERIES).isin(ids: _*))
-    })
+    val affected = prunedCanon(c, _.filter(ShardStore.partitionsOf(ids, curLayout)))
     val deleted = affected.filter(matched).count()
     if (deleted == 0L) return 0L
     VersionedStore.deletePartitions(affected.filter(!matched), root,
-      affectedPartitionNames(ids), c.version, curLayout)
+      ShardStore.partitionNames(ids, curLayout), c.version, curLayout)
     refreshTip()
-    diskNonEmpty = tip.exists(_.dirs.nonEmpty) // conservative: an
-    // all-partitions-skipped tip still plans a (cheap, empty) scan
     ids.foreach(diskBounds.remove)
-    if (diskHasData) applyBounds(collectBounds(disk(ids)))
+    // an all-partitions-skipped tip still plans a (cheap, empty) scan
+    if (tip.exists(_.dirs.nonEmpty)) applyBounds(collectBounds(disk(ids)))
     deleted
   }
-
-  /** Which top-level partition names a delete of `ids` excludes from the
-    * parent dirs. Flat layout: the ids' own `series=` partitions, ENCODED
-    * the way Spark writes partition paths (escapePathName) so the
-    * manifest skip lines match what [[VersionedStore.dirFrameRaw]]
-    * decodes. Bucketed: the ids' bucket partitions (plain integers, no
-    * escaping).
-    */
-  private def affectedPartitionNames(ids: Seq[String]): Seq[String] =
-    curLayout match {
-      case Some(b) =>
-        ids.map(x => s"${ShardStore.BUCKET}=${ShardStore.bucketOf(x, b)}").distinct
-      case None =>
-        import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
-        ids.map(x => s"$SERIES=${escapePathName(x)}").distinct
-    }
 
   /** The live disk tier's committed version chain — time travel + CDC,
     * free from the unified manifest protocol (VERDICT r11/r12 item 1).
@@ -538,7 +489,7 @@ final class TieredStore(spark: SparkSession, val root: String,
     * the ingest path.
     */
   def compactDisk(retainHistory: Boolean = false): Unit = this.synchronized {
-    if (!diskHasData) return
+    if (!tip.exists(_.dirs.nonEmpty)) return
     VersionedStore.compact(spark, root)
     if (!retainHistory) VersionedStore.expire(spark, root, keepLast = 1)
     refreshTip()
@@ -553,14 +504,13 @@ final class TieredStore(spark: SparkSession, val root: String,
     */
   def snapshot: DataFrame = this.synchronized {
     val m = if (memEmpty) emptyCanon(spark) else mem
-    if (!diskHasData) m
+    if (!tip.exists(_.dirs.nonEmpty)) m
     else m.unionByName(readStore)
   }
 
   /** Number of buffered points (the membuf length): a sum over the
-    * buffer stats, or one job over the bounded buffer past the cap. */
-  def bufferedCount(): Long =
-    if (memOverflow) mem.count() else memStats.valuesIterator.map(_.count).sum
+    * buffer stats, no job. */
+  def bufferedCount(): Long = memStats.valuesIterator.map(_.count).sum
 
   /** Whether any series' bounds were dropped on the cap (tests). */
   private[graft] def boundsOverflowed: Boolean = boundsOverflow
@@ -568,10 +518,9 @@ final class TieredStore(spark: SparkSession, val root: String,
   /** The current buffer checkpoint (tests). */
   private[graft] def buffer: DataFrame = mem
 
-  /** The buffer stats as `series -> (count, min ts, max ts)`, and whether
-    * any buffered series is untracked (tests). */
-  private[graft] def memStatsView: (Map[String, (Long, Long, Long)], Boolean) =
-    (memStats.map { case (s, st) => s -> (st.count, st.minTs, st.maxTs) }, memOverflow)
+  /** The buffer stats as `series -> (count, min ts, max ts)` (tests). */
+  private[graft] def memStatsView: Map[String, (Long, Long, Long)] =
+    memStats.map { case (s, st) => s -> (st.count, st.minTs, st.maxTs) }
 
   /** Buffer plan depth + tracked-bounds size, for lifecycle tests. */
   private[graft] def lifecycleStats: (Int, Int) =
@@ -589,10 +538,9 @@ final class TieredStore(spark: SparkSession, val root: String,
     */
   def ingest(batch: DataFrame, spillThreshold: Long): Unit =
     this.synchronized {
-      val full = appendLocked(batch).collect {
-        case (s, st) if st.count >= spillThreshold => s
-      }
-      if (full.nonEmpty) flushLocked(full)
+      appendLocked(batch)
+      val full = memStats.collect { case (s, st) if st.count >= spillThreshold => s }
+      if (full.nonEmpty) flushLocked(full.toSeq)
     }
 
   /** I2: per-series memory/disk length split

@@ -4,7 +4,7 @@ import graft.model.Canon._
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Versioned shard store with time travel — the reference's Git-backed
   * history (one Irmin commit per write, `/root/reference/src/shard.re:26-34`,
@@ -476,7 +476,8 @@ object VersionedStore {
         (from.dirs.filterNot(toDirs) ++ regressed)
           .map(d => dirFrameRaw(spark, root, from, d)) ++
         newlySkipped.map { case (d, ps) =>
-          keepPartitions(dirFrameRaw(spark, root, from, d), ps, from.buckets) }
+          dirFrameRaw(spark, root, from, d)
+            .filter(ShardStore.partitionsNamed(ps, from.buckets)) }
       val candIns = (to.dirs.filterNot(fromDirs) ++ regressed)
         .map(d => dirFrameRaw(spark, root, to, d))
       def side(parts: Seq[DataFrame]): DataFrame =
@@ -490,23 +491,6 @@ object VersionedStore {
       val deletes = a.join(b.select(col(RID)).hint("merge"), Seq(RID), "left_anti")
         .select(canon: _*).withColumn(CHANGE_TYPE, lit("delete"))
       inserts.unionByName(deletes)
-    }
-  }
-
-  /** Inverse of [[applySkips]]: ONLY the named top-level partitions of a
-    * raw dir frame — a partition-pruned read (the filter lands on the
-    * partition column), so naming a partition the dir never held costs
-    * zero IO. */
-  private def keepPartitions(base: DataFrame, parts: Seq[String],
-                             buckets: Option[Int]): DataFrame = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
-    buckets match {
-      case Some(_) =>
-        val ns = parts.map(_.stripPrefix(ShardStore.BUCKET + "=").toLong)
-        base.filter(col(ShardStore.BUCKET).isin(ns: _*))
-      case None =>
-        val vs = parts.map(p => unescapePathName(p.stripPrefix(SERIES + "=")))
-        base.filter(col(SERIES).isin(vs: _*))
     }
   }
 
@@ -574,14 +558,9 @@ object VersionedStore {
     * inference, and a numeric-looking series id can never infer to a
     * different partition type in different dirs.
     */
-  private def readSchema(buckets: Option[Int]): StructType = {
-    val phys = StructField(DIRCOL, StringType) +: (buckets match {
-      case Some(_) => Seq(StructField(ShardStore.BUCKET, LongType),
-        StructField("day", StringType))
-      case None => Seq(StructField("day", StringType))
-    })
-    StructType(schema.fields ++ phys)
-  }
+  private def readSchema(buckets: Option[Int]): StructType =
+    StructType(schema.fields ++
+      (StructField(DIRCOL, StringType) +: ShardStore.partitionFields(buckets)))
 
   /** One parquet relation over a set of same-commit data dirs: explicit
     * schema (no inference), `basePath = data/` so every dir is one
@@ -592,19 +571,10 @@ object VersionedStore {
       .schema(readSchema(buckets))
       .parquet(ds.map(d => dataPath(root, d)): _*)
 
+  /** A raw frame without the skipped top-level partitions `sk`. */
   private def applySkips(base: DataFrame, sk: Seq[String],
-                         buckets: Option[Int]): DataFrame = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
-    if (sk.isEmpty) base
-    else buckets match {
-      case Some(_) =>
-        val ns = sk.map(_.stripPrefix(ShardStore.BUCKET + "=").toLong)
-        base.filter(!col(ShardStore.BUCKET).isin(ns: _*))
-      case None =>
-        val vs = sk.map(p => unescapePathName(p.stripPrefix(SERIES + "=")))
-        base.filter(!col(SERIES).isin(vs: _*))
-    }
-  }
+                         buckets: Option[Int]): DataFrame =
+    if (sk.isEmpty) base else base.filter(!ShardStore.partitionsNamed(sk, buckets))
 
   /** One data dir of `c` with that dir's skips applied and the physical
     * partition columns still present (flat: `series`,`day`; bucketed:

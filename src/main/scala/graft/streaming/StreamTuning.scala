@@ -18,8 +18,9 @@ import org.apache.spark.sql.SparkSession
   * input.
   *
   * The derivation is volume-proportional — `ceil(inputBytes / target)`,
-  * at least 1 — so it is 1-2 partitions at bench scale and thousands at
-  * 100 TB: nothing here reads the core count, and a bigger corpus gets
+  * at least 1 — so it is 1-2 partitions at bench scale and 3,276,800 at
+  * 100 TB under the default target (32 GiB per partition gives 3,200):
+  * nothing here reads the core count, and a bigger corpus gets
   * MORE state partitions under the identical rule. `target` defaults to
   * 32 MiB of input per state partition (state for these queries is an
   * aggregation over the input, orders of magnitude smaller than the

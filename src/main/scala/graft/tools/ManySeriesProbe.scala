@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions._
   *     reads the driver-side buffer stats for the queried ids and the
   *     WindowGroupLimit top-n keys on them, so series count should be
   *     invisible. The stats move the per-series cost to the write:
-  *     `appendMemory` collects one stats row per buffered series (1M rows
-  *     at 1M series), reported as `append_wall`.
+  *     `appendMemory` collects one exact stats row per buffered series
+  *     (1M rows at 1M series; the buffer stats have no cap), reported as
+  *     `append_wall`, and `bufferedCount()` must sum them to the buffer.
   *  2. **cap engagement**: a disk tier of 5k series under a 1k-entry
   *     cap — the bounds map must stop at the cap, and a capped-out
   *     (untracked) series must still read CORRECTLY via the conservative
@@ -66,7 +67,11 @@ object ManySeriesProbe {
       val cnt = st.readLast(ids, 50).count()
       val wall = (System.nanoTime() - t0) / 1e9
       println(f"[mseries] series=$n%8d append_wall=$appendWall%6.2fs read_wall=$wall%6.2fs " +
-        s"rows=$cnt tracked_bounds=${st.lifecycleStats._2}")
+        s"rows=$cnt buffered=${st.bufferedCount()} tracked_bounds=${st.lifecycleStats._2}")
+      if (st.bufferedCount() != rows) {
+        println(s"[mseries] FAIL: buffer stats sum to ${st.bufferedCount()}, not $rows")
+        failed = true
+      }
       val want = 4 * math.min(rows / n, 50L) // per-series rows shrink as n grows
       if (cnt != want) { println(s"[mseries] FAIL: expected $want rows, got $cnt"); failed = true }
       // sync() — the r8 flush-all path plans NO per-series isin (the old

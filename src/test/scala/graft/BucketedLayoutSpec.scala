@@ -71,10 +71,10 @@ class BucketedLayoutSpec extends SparkSuite {
     // out-of-place: 8 append waves -> one compacted rewrite
     val p1 = tmpDir("bkt_compact_src")
     (0L until 8L).foreach(w => ShardStore.appendBucketed(wave(w).toDF(), p1, 4))
-    val want = fp(ShardStore.readBucketedStore(spark, p1))
+    val want = fp(ShardStore.read(spark, p1))
     val p2 = tmpDir("bkt_compact_out")
     ShardStore.compactBucketed(spark, p1, p2, 4)
-    assert(fp(ShardStore.readBucketedStore(spark, p2)) == want, "compaction changed content")
+    assert(fp(ShardStore.read(spark, p2)) == want, "compaction changed content")
     assert(parquetFiles(p2) < parquetFiles(p1),
       s"no coalescing: ${parquetFiles(p1)} -> ${parquetFiles(p2)}")
     // live in-place form through the marker-committed swap, memory intact

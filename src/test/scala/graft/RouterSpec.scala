@@ -172,6 +172,16 @@ class RouterSpec extends SparkSuite {
     assert(routeSites.nonEmpty && !routeSites.exists(_.contains("Router.scala")), routeSites)
   }
 
+  test("POST: a timestamp outside the 64-bit range quarantines its element, not the batch") {
+    import graft.sources.TieredStore
+    val st = new TieredStore(spark, tmpDir("router_post_ts_range"))
+    val body = Seq("12345678901234567890", "9.3e18", "-9.3e18", "1e400", "1704067200000000")
+      .map(t => s"""{"timestamp": $t, "value": 1}""").mkString("[", ",", "]")
+    assert(Router.runPost(st, "ts/r", body).as[(Long, Long)].head() == ((1L, 4L)))
+    assert(Router.run(st, "ts/r/last/5").select("ts_us").as[Long].collect().toSeq ==
+      Seq(1704067200000000L))
+  }
+
   test("DELETE against a live store: buffer flush, shard rewrite, reads see it") {
     import graft.sources.TieredStore
     val st = new TieredStore(spark, tmpDir("router_delete"))

@@ -1,8 +1,10 @@
 package graft
 
 import graft.model.Canon.{Datapoint, TagEntry}
+import graft.model.Canon
 import graft.operators.{TimeSeries => TS}
-import graft.sources.ShardStore
+import graft.sources.{ShardStore, TieredStore}
+import org.apache.spark.sql.types.StructType
 
 /** Storage layout: roundtrip fidelity + pruning actually reaching the scan.
   * The pruning assertions are the scale contract: at 100 TB the query must
@@ -62,6 +64,54 @@ class ShardStoreSpec extends SparkSuite {
     ShardStore.append(data.take(10).toDF(), p)
     ShardStore.append(data.take(10).toDF(), p)
     assert(ShardStore.read(spark, p).count() == 20)
+  }
+
+  test("partition names round-trip on both layouts: encoded = written dirs, decode selects them") {
+    // ids Spark must escape in a partition path, plus a non-ASCII one
+    val odd = Seq("a/b", "a=b", "100%", "{x}", "a:b", "\u00e9t\u00e9")
+    // the flat layout names a dir after the raw id: an id the JVM's
+    // file-name charset cannot encode (a non-UTF-8 locale) never reaches
+    // disk intact, so it joins the flat case only where it can
+    val fsCharset = java.nio.charset.Charset.forName(System.getProperty("sun.jnu.encoding"))
+    val neighbours = Seq("a", "b", "x", "100")
+    def rows(ids: Seq[String]) = ids.zipWithIndex.flatMap { case (s, i) =>
+      (0L until 3L).map(j =>
+        Datapoint(s, 1704067200000000L + j * DAY_US, None, j.toDouble, i * 10L + j))
+    }
+    Seq(None, Some(4)).foreach { layout =>
+      val ids = odd.filter(id => layout.nonEmpty || fsCharset.newEncoder().canEncode(id))
+      val all = ids ++ neighbours
+      val p = tmpDir("shardstore_names")
+      val df = rows(all).toDF()
+      layout.fold(ShardStore.append(df, p))(ShardStore.appendBucketed(df, p, _))
+      val dirs = new java.io.File(p).listFiles().filter(_.isDirectory).map(_.getName).toSet
+      assert(ShardStore.partitionNames(all, layout).toSet == dirs, s"$layout: $dirs")
+      val raw = spark.read
+        .schema(StructType(Canon.schema.fields ++ ShardStore.partitionFields(layout)))
+        .parquet(p)
+      def seriesOf(df: org.apache.spark.sql.DataFrame) =
+        df.select("series").distinct().as[String].collect().toSet
+      def decoded(xs: Seq[String]) = seriesOf(raw.filter(
+        ShardStore.partitionsNamed(ShardStore.partitionNames(xs, layout), layout)))
+      (ids.map(Seq(_)) :+ ids).foreach { xs =>
+        // decode(encode(xs)) is the forward filter's selection: flat —
+        // exactly the xs; bucketed — their buckets, co-resident ids too
+        val sel = decoded(xs)
+        assert(sel == seriesOf(raw.filter(ShardStore.partitionsOf(xs, layout))), s"$layout $xs")
+        assert(if (layout.isEmpty) sel == xs.toSet else xs.toSet.subsetOf(sel), s"$layout $xs")
+      }
+      // a live delete of each such id in turn spares its neighbours,
+      // co-resident series of a bucketed partition included
+      val st = new TieredStore(spark, tmpDir("shardstore_names_live"), seriesBuckets = layout)
+      st.appendDisk(df)
+      ids.indices.foreach { k =>
+        assert(st.delete(Seq(ids(k)), Long.MinValue, Long.MaxValue) == 3L, s"$layout ${ids(k)}")
+        val left = st.snapshot.select("series", "rid").as[(String, Long)].collect().toSet
+        val want = rows(all).filterNot(d => ids.take(k + 1).contains(d.series))
+          .map(d => (d.series, d.rid)).toSet
+        assert(left == want, s"$layout ${ids(k)}")
+      }
+    }
   }
 
   test("rewrite (delete path) drops matched rows from the store") {

@@ -169,23 +169,28 @@ class TieredStoreSpec extends SparkSuite {
     val q = st.readLast(Seq("s00"), 3)
     assert(!q.queryExecution.executedPlan.toString.contains("FileScan"))
     assert(q.select("rid").as[Long].collect().toSeq == Seq(9L, 8L, 7L))
-    // the buffer stats obey the same cap: seven buffered series, four
-    // tracked (s00 keeps its slot), the rest untracked
+    // the cap bounds the disk bounds only: all seven buffered series
+    // have exact buffer stats
     st.appendMemory((1 until 7).flatMap(s =>
       (5L until 9L).map(i => dp(f"s$s%02d", T0 + i * 1000L, s * 100L + i))).toDF())
-    val (tracked, overflow) = st.memStatsView
-    assert(tracked.size == 4 && overflow && tracked.contains("s00"), tracked)
-    assert(st.bufferedCount() == st.buffer.count() && st.bufferedCount() == 5L + 6 * 4)
-    // past the cap a series takes the merge/flush paths: answers stay right
     val ids = (0 until 7).map(s => f"s$s%02d")
+    assert(st.memStatsView == sparkStats(st) && st.memStatsView.keySet == ids.toSet,
+      st.memStatsView)
+    assert(st.bufferedCount() == st.buffer.count() && st.bufferedCount() == 5L + 6 * 4)
+    // past the disk-bounds cap a series takes the merge/flush paths:
+    // answers stay right
     val flat = graft.operators.TimeSeries.readLast(st.snapshot, ids, 6)
       .select("series", "rid").as[(String, Long)].collect().toSet
     assert(st.readLast(ids, 6).select("series", "rid").as[(String, Long)].collect().toSet == flat)
-    val untracked = ids.filterNot(tracked.contains)
-    st.flush(untracked.take(1))
-    assert(st.bufferedCount() == st.buffer.count())
+    // the read flushed the series with untracked disk bounds; s00 (read
+    // through M1 above) is tracked and still buffered
+    assert(st.memStatsView == sparkStats(st) && st.memStatsView.contains("s00"))
+    val buffered = st.bufferedCount()
+    st.flush(Seq("s00"))
+    assert(st.memStatsView == sparkStats(st) && !st.memStatsView.contains("s00"))
+    assert(st.bufferedCount() == st.buffer.count() && st.bufferedCount() == buffered - 5L)
     st.sync()
-    assert(st.memStatsView == ((Map.empty, false)) && st.bufferedCount() == 0L)
+    assert(st.memStatsView.isEmpty && st.bufferedCount() == 0L)
     assert(graft.operators.TimeSeries.readLast(st.snapshot, ids, 6)
       .select("series", "rid").as[(String, Long)].collect().toSet == flat)
   }
@@ -224,11 +229,11 @@ class TieredStoreSpec extends SparkSuite {
           assert(st.delete(ss, lo, lo + 6000L) == live.count(hit), s"step $step")
           live = live.filterNot(hit)
       }
-      assert(st.memStatsView == ((sparkStats(st), false)), s"step $step op $op")
+      assert(st.memStatsView == sparkStats(st), s"step $step op $op")
       val (ss, n) = (pick(), 1 + rnd.nextInt(8))
       assert(answer(st.readLast(ss, n)) ==
         answer(graft.operators.TimeSeries.readLast(live.toDF(), ss, n)), s"step $step op $op")
-      assert(st.memStatsView == ((sparkStats(st), false)), s"step $step after readLast")
+      assert(st.memStatsView == sparkStats(st), s"step $step after readLast")
       assert(st.bufferedCount() == st.buffer.count(), s"step $step")
     }
     assert(answer(st.snapshot) == answer(live.toDF()))
