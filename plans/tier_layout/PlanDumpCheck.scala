@@ -5,20 +5,21 @@ import graft.sources.TieredStore
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Dumps the executed plans of `TieredStore`'s tier paths on both disk
-  * layouts — `readLast` on the M1, M2 and M3 paths, `lengthSplit`, every
-  * execution a `delete` runs (its affected-partition read included), and
-  * the reads and CDC after the delete's skip lines — normalized so two
-  * commits' dumps diff cleanly (expression ids, plan ids, temp roots and
-  * data-dir UUIDs masked). Not part of the test sources; run it from the
-  * repo root with
+/** Dumps the executed plans of `TieredStore`'s tier paths on the
+  * `bucket=/day=` disk layout — `readLast` on the M1, M2 and M3 paths,
+  * `lengthSplit`, the series-scoped `snapshot(ids)` a router GET reads
+  * through, every execution a `delete` runs (its affected-partition read
+  * included), and the reads and CDC after the delete's skip lines —
+  * normalized so two commits' dumps diff cleanly (expression ids, plan
+  * ids, temp roots and data-dir UUIDs masked). Every plan that scans
+  * parquet for named series carries a `bucket IN` partition filter. Not
+  * part of the test sources; run it from the repo root with
   *
   *   PLANDUMP_OUT=/path/plans.txt sbt \
   *     'set Test / unmanagedSourceDirectories += file("plans/tier_layout")' \
   *     "testOnly graft.PlanDumpCheck"
   *
-  * `plans.txt` beside this file is its output; the parent commit of the
-  * layout refactor produced the identical file. */
+  * `plans.txt` beside this file is its output. */
 class PlanDumpCheck extends SparkSuite {
   import spark.implicits._
   private val T0 = 1704067200000000L
@@ -45,11 +46,11 @@ class PlanDumpCheck extends SparkSuite {
       out ++= s"==== $name (${plans.length} executions)\n"
       plans.foreach(p => out ++= p + "\n")
     }
-    Seq(None, Some(4)).foreach { layout =>
+    locally {
       val root = tmpDir("plandump")
-      val st = new TieredStore(spark, root, seriesBuckets = layout)
+      val st = new TieredStore(spark, root)
       def plan(name: String, df: org.apache.spark.sql.DataFrame): Unit =
-        out ++= s"==== $layout $name\n" + df.queryExecution.executedPlan.toString + "\n"
+        out ++= s"==== $name\n" + df.queryExecution.executedPlan.toString + "\n"
       st.appendDisk(Seq("a", "b", "c/d", "e").flatMap(s =>
         (0L until 100L).map(i => dp(s, T0 + i * 1000L, s.hashCode.abs % 1000 * 1000L + i))).toDF())
       st.appendMemory((0L until 20L).map(i => dp("a", T0 + 1000000L + i * 1000L, 500000L + i)).toDF())
@@ -57,16 +58,18 @@ class PlanDumpCheck extends SparkSuite {
       plan("M1 readLast(a,10)", st.readLast(Seq("a"), 10))
       plan("M2 readLast(a,30)", st.readLast(Seq("a"), 30))
       plan("lengthSplit(a,b,c/d)", st.lengthSplit(Seq("a", "b", "c/d")))
+      plan("GET a,e/since/0 (snapshot(a,e))", graft.api.Router.run(st, "a,e/since/0"))
+      plan("GET e/range/T0/T0+50000/count (snapshot(e))", graft.api.Router.run(st, s"e/range/$T0/${T0 + 50000L}/count"))
       var m3: org.apache.spark.sql.DataFrame = null
-      during(s"$layout M3 readLast(b,5) executions") { m3 = st.readLast(Seq("b"), 5) }
+      during("M3 readLast(b,5) executions") { m3 = st.readLast(Seq("b"), 5) }
       plan("M3 readLast(b,5)", m3)
       val v0 = st.diskVersions.last.version
-      during(s"$layout delete(c/d, a)") { st.delete(Seq("c/d", "a"), T0 + 10000L, T0 + 2000000L) }
+      during("delete(c/d, a)") { st.delete(Seq("c/d", "a"), T0 + 10000L, T0 + 2000000L) }
       val v1 = st.diskVersions.last.version
       plan("after delete readLast(c/d,a,e,5)", st.readLast(Seq("c/d", "a", "e"), 5))
       plan("after delete lengthSplit", st.lengthSplit(Seq("a", "b", "c/d", "e")))
       plan("diskChanges", st.diskChanges(v0, v1))
-      out ++= s"==== $layout answers\n" + st.snapshot.orderBy("series", "ts_us", "rid")
+      out ++= "==== answers\n" + st.snapshot.orderBy("series", "ts_us", "rid")
         .collect().mkString("\n") + "\n"
       val norm = out.toString.replace(root, "ROOT")
       out.clear(); out ++= norm

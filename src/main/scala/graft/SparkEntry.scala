@@ -489,12 +489,9 @@ object SparkEntry {
       tierStores.getOrElseUpdate(s"$d#$scenario", {
         val root = StreamScratch.dir(
           s"tier_${scenario}_" + Integer.toHexString(d.hashCode))
-        // "bucketed" = the "sorted" scenario on the high-cardinality
-        // bucket=/day= layout — same rows, same oracle, different files
-        val st = new TieredStore(s, root,
-          seriesBuckets = if (scenario == "bucketed") Some(16) else None)
+        val st = new TieredStore(s, root)
         val evd = ev(s, d)
-        if (scenario == "sorted" || scenario == "bucketed") {
+        if (scenario == "sorted") {
           st.appendDisk(evd.filter(col("ts_us") <= SINCE))
           st.appendMemory(evd.filter(col("ts_us") > SINCE))
         } else {
@@ -696,10 +693,6 @@ object SparkEntry {
       raw(tierStore(s, d, "overlap").readLast(IDS5, 25))),
     // q_tier_split: I2 memory/disk length split (timeseries.re:187-213)
     "q_tier_split" -> ((s, d) => tierStore(s, d, "sorted").lengthSplit(IDS5)),
-    // the bucketed high-cardinality layout (VERDICT r8 item 5) under the
-    // SAME oracle as q_tier_read — layout invisible to reads by contract
-    "q_tier_bucketed" -> ((s, d) =>
-      raw(tierStore(s, d, "bucketed").readLast(IDS5, 500))),
     // time travel over the LIVE store's disk tier (VERDICT r11/r12
     // item 1): the unified manifest protocol makes every tiered mutation
     // a version — append/append/delete = v1..v3, each read back exactly
@@ -2362,12 +2355,6 @@ object SparkEntry {
       // tier reads must equal the flat read — the memory/disk split is an
       // implementation detail the oracle cannot see
       "q_tier_read" ->
-        s"""$CANON_SQL SELECT $ROW FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY series ORDER BY ts_us DESC, rid DESC) AS rn
-           |  FROM c) t
-           |WHERE rn <= 500 ORDER BY ts_us DESC, rid DESC""".stripMargin,
-      // same rows through the bucketed layout — byte-identical oracle
-      "q_tier_bucketed" ->
         s"""$CANON_SQL SELECT $ROW FROM (
            |  SELECT *, row_number() OVER (PARTITION BY series ORDER BY ts_us DESC, rid DESC) AS rn
            |  FROM c) t

@@ -61,9 +61,11 @@ object Router {
   /** Route interpretation against a LIVE dual-tier store: the bare
     * last/latest routes take the tier-aware read (M1 can skip the disk
     * scan entirely); the I2 `memory/length` / `disk/length` routes
-    * (`src/main.re:184-185`) read the split; everything else runs over
-    * the memory∪disk snapshot — the tier seam is invisible either way
-    * (property-tested), so only the hot-tail paths need awareness.
+    * (`src/main.re:184-185`) read the split; every other series-scoped
+    * route runs over the ids' memory∪disk snapshot (disk pruned to their
+    * buckets), and names/info over the whole store's — the tier seam is
+    * invisible either way (property-tested), so only the hot-tail paths
+    * need awareness.
     */
   def run(store: graft.sources.TieredStore, route: String): DataFrame = {
     import org.apache.spark.sql.functions.{coalesce, lit, sum}
@@ -78,7 +80,9 @@ object Router {
       case ids :: "latest" :: Nil => store.readLast(ids.split(',').toSeq, 1)
       case ids :: "memory" :: "length" :: Nil => tierLength("mem_len", ids)
       case ids :: "disk" :: "length" :: Nil => tierLength("disk_len", ids)
-      case _ => run(store.snapshot, route)
+      case "info" :: _ => run(store.snapshot, route)
+      case ids :: _ :: _ => run(store.snapshot(ids.split(',').toSeq), route)
+      case _ => run(store.snapshot, route) // names, or an unknown route
     }
   }
 

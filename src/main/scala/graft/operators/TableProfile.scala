@@ -1,8 +1,10 @@
 package graft.operators
 
+import java.util.concurrent.{ExecutionException, FutureTask, TimeUnit}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.concurrent.duration.{DurationInt, FiniteDuration}
 
 /** Column-level data profiling — the `ANALYZE`-shaped corpus monitoring
   * report a pipeline runs on every new snapshot before trusting it:
@@ -28,6 +30,10 @@ import org.apache.spark.sql.types._
   * not injective for arrays/structs); pass `columns` to override.
   */
 object TableProfile {
+
+  /** How long [[profileDrift]] waits for its side b once side a is done:
+    * a bound on a hung side b, generous for profiles that take minutes. */
+  val SideWait: FiniteDuration = 1.hour
 
   /** The WIDE-TABLE tier: everything in ONE wide aggregate — nulls,
     * typed min/max AND HyperLogLog distinct estimates
@@ -126,6 +132,14 @@ object TableProfile {
     * become two wall-clock rounds. Results are unchanged (the sides
     * were always independent); r17 7-sample A/B: q_store_profile_drift
     * min 2.09 → 1.12 s, med 2.41 → 1.32 s.
+    *
+    * Side b runs on a thread of its own, started by the caller, so its
+    * jobs inherit the caller's Spark local properties — job group,
+    * description, scheduler pool — and stay attributed to the caller's
+    * query. They also carry a tag of their own: when side a throws, or
+    * side b outlives [[SideWait]] after side a finished, side b's jobs are
+    * cancelled (interrupting their tasks) and the call returns only once
+    * side b's thread has ended, so no orphaned job keeps running.
     */
   def profileDrift(a: DataFrame, b: DataFrame,
                    columns: Seq[String] = Nil): DataFrame = {
@@ -134,12 +148,24 @@ object TableProfile {
         col("n_rows").as(s"n_rows_$s"), col("n_nulls").as(s"n_nulls_$s"),
         col("n_distinct").as(s"n_distinct_$s"),
         col("min_val").as(s"min_$s"), col("max_val").as(s"max_$s"))
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val fb = Future(side(b, "b")) // b on a pool thread, a on the caller's
-    val sa = side(a, "a")
-    val sb = Await.result(fb, Duration.Inf)
+    val sc = a.sparkSession.sparkContext
+    val tag = s"graft-profile-drift-${java.util.UUID.randomUUID()}"
+    val fb = new FutureTask[DataFrame](() => {
+      sc.addJobTag(tag)
+      sc.setInterruptOnCancel(true)
+      side(b, "b")
+    })
+    val tb = new Thread(fb, "graft-profile-drift-b")
+    tb.setDaemon(true)
+    tb.start()
+    // cancel until the thread ends: a job side b starts after one cancel
+    // is caught by the next
+    def stopB(): Unit = while (tb.isAlive) { sc.cancelJobsWithTag(tag); tb.join(100) }
+    val sa = try side(a, "a") catch { case e: Throwable => stopB(); throw e }
+    val sb = try fb.get(SideWait.toMillis, TimeUnit.MILLISECONDS) catch {
+      case e: ExecutionException => throw e.getCause
+      case e: Throwable => stopB(); throw e
+    }
     sa.join(sb, Seq("column"), "full_outer")
       .withColumn("d_rows",
         coalesce(col("n_rows_b"), lit(0L)) - coalesce(col("n_rows_a"), lit(0L)))

@@ -186,8 +186,8 @@ object TimeSeries {
 
   /** I3 route `<ids>/index/length` (reference `src/main.re:186`,
     * `length_of_index`): the number of index entries covering the ids.
-    * Our shard is the (series, utc-day) ShardStore partition, so the
-    * index length is the count of distinct (series, day) shards.
+    * Our shard is a series' rows in one utc-day ShardStore partition, so
+    * the index length is the count of distinct (series, day) shards.
     */
   def indexLength(df: DataFrame, ids: Seq[String]): DataFrame =
     selectSeries(df, ids)

@@ -81,8 +81,10 @@ import org.apache.spark.sql.graft.CheckpointBridge
   * Scale notes (100 TB): the memory tier is an ingest BUFFER — bounded by
   * the spill threshold (reference `--shard-size`), not by corpus size; every
   * read-path aggregate runs over that bounded frame. The disk tier is the
-  * partitioned ShardStore layout under manifest versioning, whose
-  * series/day pruning does the heavy lifting; plan size is bounded by the
+  * [[ShardStore]] `bucket=/day=` layout under manifest versioning, whose
+  * bucket/day pruning does the heavy lifting — every series-scoped read
+  * ([[readLast]], [[lengthSplit]], `snapshot(ids)`) and [[delete]] prunes
+  * to the queried series' buckets; plan size is bounded by the
   * number of distinct skip sets (≈ deletes since the last compact), never
   * by spill count ([[VersionedStore.rawGroups]]). The M1 verdict's value
   * at scale is skipping the disk scan ENTIRELY for hot-tail reads (the
@@ -104,32 +106,9 @@ import org.apache.spark.sql.graft.CheckpointBridge
   * the reference enforces globally (`src/main.re:225-227`) — and each
   * lands at cached-tip + 1, so the manifest CAS additionally rejects any
   * out-of-band writer racing the same root.
-  *
-  * @param seriesBuckets the layout a NEW store is created with: None =
-  *   the reference-faithful `series=/day=` layout (one dir per series —
-  *   perfect pruning, right for the reference's handful-of-series
-  *   model); Some(b) = the bucketed high-cardinality layout
-  *   (`bucket=/day=`, series as an ordinary column). Reads are
-  *   layout-invisible (same rows, same order — property-tested). The
-  *   layout is per-COMMIT manifest state: on reopen the persisted
-  *   chain's tip is authoritative (a flat store may have been elected
-  *   bucketed since), and this argument only seeds creation.
-  * @param electBucketsAt automatic layout election (VERDICT r11/r12
-  *   item 4): once a FLAT store's tracked series cardinality reaches
-  *   this threshold, the next mutation migrates the disk tier to the
-  *   bucketed layout ([[TieredStore.ElectedBuckets]] buckets) via one
-  *   [[VersionedStore.compactAs]] commit + history expiry — past
-  *   roughly [[TieredStore.BucketLayoutThreshold]] series the flat
-  *   layout's per-series directory creation dominates sync cost
-  *   (ManySeriesProbe: ~36ms/series/sync flat vs seconds/5k bucketed),
-  *   and without election the store silently degrades. One-time cost =
-  *   one disk-tier rewrite, measured in SCALE.md. Set Int.MaxValue to
-  *   pin the flat layout forever.
   */
 final class TieredStore(spark: SparkSession, val root: String,
-                        val maxTrackedSeries: Int = TieredStore.DefaultMaxTrackedSeries,
-                        val seriesBuckets: Option[Int] = None,
-                        val electBucketsAt: Int = TieredStore.BucketLayoutThreshold) {
+                        val maxTrackedSeries: Int = TieredStore.DefaultMaxTrackedSeries) {
   import TieredStore._
 
   @volatile private var mem: DataFrame = emptyCanon(spark)
@@ -150,9 +129,6 @@ final class TieredStore(spark: SparkSession, val root: String,
   /** Cached tip of the disk tier's manifest chain — refreshed after every
     * committed mutation, so reads plan without re-listing manifests. */
   @volatile private var tip: Option[VersionedStore.Commit] = None
-  /** The disk tier's CURRENT physical layout — the tip manifest's, which
-    * [[maybeElect]] can move from flat to bucketed (see `electBucketsAt`). */
-  @volatile private var curLayout: Option[Int] = seriesBuckets
 
   // ---- open/reopen: collect any crashed writer's orphan data dirs, then
   // rebuild the reference's startup membuf metadata for a pre-existing
@@ -166,17 +142,10 @@ final class TieredStore(spark: SparkSession, val root: String,
   locally {
     refreshTip()
     tip.foreach { t =>
-      // the persisted chain is authoritative on reopen: a store created
-      // flat may have been elected bucketed since; the ctor arg only
-      // seeds NEW stores
-      curLayout = t.buckets
       VersionedStore.sweepOrphanData(spark, root)
       if (t.dirs.nonEmpty) hydrateBounds()
     }
   }
-
-  /** The disk tier's current physical layout (None = flat `series=/day=`). */
-  def layout: Option[Int] = curLayout
 
   private def refreshTip(): Unit =
     tip = VersionedStore.versions(spark, root).lastOption
@@ -207,27 +176,11 @@ final class TieredStore(spark: SparkSession, val root: String,
   private def canonSel(df: DataFrame): DataFrame =
     df.select(col(SERIES), col(TS_US), col(TAG), col(VALUE), col(RID))
 
-  /** Disk append as a manifest version (layout recorded per commit). */
+  /** Disk append as a manifest version. */
   private def appendStore(df: DataFrame): Unit = {
-    VersionedStore.append(df, root, curLayout)
+    VersionedStore.append(df, root)
     refreshTip()
   }
-
-  /** Automatic bucketed-layout election (see `electBucketsAt`): called at
-    * the end of every ingest-path mutation, right after its disk commit,
-    * under the store lock. One
-    * [[VersionedStore.compactAs]] commit rewrites the live content
-    * bucketed and flips the manifest layout marker; the superseded flat
-    * history is expired (space reclaimed, same policy as [[compactDisk]]).
-    * Reads before/after are property-identical — the layout is invisible
-    * above the physical tier. */
-  private def maybeElect(): Unit =
-    if (curLayout.isEmpty && diskBounds.size >= electBucketsAt) {
-      VersionedStore.compactAs(spark, root, Some(ElectedBuckets))
-      VersionedStore.expire(spark, root, keepLast = 1)
-      curLayout = Some(ElectedBuckets)
-      refreshTip()
-    }
 
   /** Whole disk tier at the cached tip, canonical form. */
   private def readStore: DataFrame =
@@ -279,7 +232,7 @@ final class TieredStore(spark: SparkSession, val root: String,
   def appendDisk(df: DataFrame): Unit = this.synchronized {
     val slice = canonSel(df)
     val bounds = collectBounds(slice)
-    if (bounds.nonEmpty) { appendStore(slice); applyBounds(bounds); maybeElect() }
+    if (bounds.nonEmpty) { appendStore(slice); applyBounds(bounds) }
   }
 
   /** Buffer points in the memory tier (the reference's membuf,
@@ -309,7 +262,7 @@ final class TieredStore(spark: SparkSession, val root: String,
     */
   def sync(): Unit = this.synchronized {
     if (!memEmpty) {
-      appendStore(mem); applyBounds(memBounds(memStats.keys)); maybeElect()
+      appendStore(mem); applyBounds(memBounds(memStats.keys))
       clearMem()
     }
   }
@@ -320,7 +273,7 @@ final class TieredStore(spark: SparkSession, val root: String,
     val bounds = memBounds(ids)
     if (bounds.nonEmpty) {
       appendStore(mem.filter(col(SERIES).isin(ids: _*)))
-      applyBounds(bounds); maybeElect()
+      applyBounds(bounds)
       memStats = memStats -- ids
       if (memEmpty) clearMem() else swapMem(mem.filter(!col(SERIES).isin(ids: _*)))
     }
@@ -348,20 +301,19 @@ final class TieredStore(spark: SparkSession, val root: String,
     }
 
   /** Pruned disk read: the prune runs on each RAW relation (partition
-    * columns intact) so the series/bucket predicates land on PARTITION
-    * columns and prune at listing time, before the canon projection
-    * drops them. */
+    * columns intact) so the bucket predicates land on PARTITION columns
+    * and prune at listing time, before the canon projection drops them. */
   private def prunedCanon(c: VersionedStore.Commit,
                           prune: DataFrame => DataFrame): DataFrame =
     if (c.dirs.isEmpty) emptyCanon(spark)
     else VersionedStore.rawGroups(spark, root, c)
       .map(r => canonSel(prune(r))).reduce(_ unionByName _)
 
-  /** The ids' disk rows: their partitions, then their series (in the
-    * flat layout the two filters are one, and Catalyst merges them). */
+  /** The ids' disk rows: their buckets (at the tip's bucket count), then
+    * their series. */
   private def disk(ids: Seq[String]): DataFrame =
-    tip.fold(emptyCanon(spark))(prunedCanon(_, raw =>
-      raw.filter(ShardStore.partitionsOf(ids, curLayout)).filter(col(SERIES).isin(ids: _*))))
+    tip.fold(emptyCanon(spark))(c => prunedCanon(c, raw =>
+      raw.filter(ShardStore.partitionsOf(ids, c.buckets)).filter(col(SERIES).isin(ids: _*))))
 
   /** Buffer lies STRICTLY beyond everything on disk for this series. A tie
     * (buffer min ts == disk max ts) must NOT qualify: under (ts desc,
@@ -424,10 +376,9 @@ final class TieredStore(spark: SparkSession, val root: String,
     * SURVEY §7.5 #6, shared with [[graft.operators.TimeSeries.deleteRange]].
     *
     * Physical shape ([[VersionedStore.deletePartitions]]): the rewrite
-    * unit is the PARTITION — the touched series' `series=` partitions in
-    * the flat layout, the touched buckets' `bucket=` partitions in the
-    * bucketed one (co-resident series in an affected bucket are carried
-    * through the survivors dir unchanged). Survivors are fully
+    * unit is the PARTITION — the touched series' `bucket=` partitions
+    * (co-resident series in an affected bucket are carried through the
+    * survivors dir unchanged). Survivors are fully
     * materialized in a fresh data dir BEFORE the manifest CAS publishes
     * the version — all-or-nothing, no crash window, no roll-forward.
     * Only affected partitions are ever read or rewritten; the rest of
@@ -447,14 +398,13 @@ final class TieredStore(spark: SparkSession, val root: String,
       col(SERIES).isin(ids: _*) && col(TS_US).between(fromUs, toUs) &&
         (if (pipe.isEmpty) lit(true) else Tags.predicate(col(TAG), pipe)),
       lit(false))
-    // rows of every partition the delete touches (see scaladoc): flat —
-    // exactly the ids' series partitions; bucketed — the ids' buckets
-    // whole, so co-resident series ride into the survivors dir
-    val affected = prunedCanon(c, _.filter(ShardStore.partitionsOf(ids, curLayout)))
+    // rows of every partition the delete touches (see scaladoc): the ids'
+    // buckets whole, so co-resident series ride into the survivors dir
+    val affected = prunedCanon(c, _.filter(ShardStore.partitionsOf(ids, c.buckets)))
     val deleted = affected.filter(matched).count()
     if (deleted == 0L) return 0L
     VersionedStore.deletePartitions(affected.filter(!matched), root,
-      ShardStore.partitionNames(ids, curLayout), c.version, curLayout)
+      ShardStore.partitionNames(ids, c.buckets), c.version)
     refreshTip()
     ids.foreach(diskBounds.remove)
     // an all-partitions-skipped tip still plans a (cheap, empty) scan
@@ -496,16 +446,32 @@ final class TieredStore(spark: SparkSession, val root: String,
   }
 
   /** The whole store as one canonical frame (memory ∪ disk) — the input
-    * for every route that has no tier-aware fast path (since/range/aggs:
-    * they read both tiers anyway, and Catalyst prunes the disk side).
-    * Built under the lock: the memory side is the current checkpoint, the
-    * disk side the cached tip's relations — an immutable snapshot per the
-    * class contract.
+    * for the routes that span every series (names, info). Built under the
+    * lock: the memory side is the current checkpoint, the disk side the
+    * cached tip's relations — an immutable snapshot per the class
+    * contract.
     */
   def snapshot: DataFrame = this.synchronized {
     val m = if (memEmpty) emptyCanon(spark) else mem
     if (!tip.exists(_.dirs.nonEmpty)) m
     else m.unionByName(readStore)
+  }
+
+  /** The `ids`' rows as one canonical frame (memory ∪ disk) — the input
+    * for every series-scoped route with no tier-aware fast path
+    * (since/range/first/earliest/length/index and the filters: they read
+    * both tiers anyway). The disk side prunes to the ids' buckets, which
+    * a filter over [[snapshot]] cannot: there `series` is an ordinary
+    * column, not a partition. No ids means every series, as in
+    * [[graft.operators.TimeSeries.selectSeries]]. Snapshot semantics as
+    * [[snapshot]].
+    */
+  def snapshot(ids: Seq[String]): DataFrame = this.synchronized {
+    if (ids.isEmpty) snapshot
+    else {
+      val m = if (memEmpty) emptyCanon(spark) else TS.selectSeries(mem, ids)
+      if (!tip.exists(_.dirs.nonEmpty)) m else m.unionByName(disk(ids))
+    }
   }
 
   /** Number of buffered points (the membuf length): a sum over the
@@ -569,26 +535,11 @@ object TieredStore {
     */
   val RetireDepth = 8
 
-  /** Rough series-cardinality point where the flat `series=/day=` layout's
-    * per-series directory creation starts to dominate write cost
-    * (ManySeriesProbe: ~36ms/series/sync on local disk); past it,
-    * construct the store with `seriesBuckets = Some(n)` (64-1024 buckets
-    * — enough write parallelism, bounded dir count).
-    */
-  val BucketLayoutThreshold = 512
-
   /** Cap on driver-tracked per-series disk bounds (the membuf metadata).
     * ~48 bytes/entry → a few tens of MB at the cap; beyond it new series
     * degrade to the merge/flush read paths instead of growing the map.
     */
   val DefaultMaxTrackedSeries: Int = 1 << 20
-
-  /** Bucket count an automatic election migrates to: enough write
-    * parallelism for the threshold cardinality, bounded dir count
-    * (buckets×days per write, independent of series count); series
-    * stays row-group-sorted inside each bucket, so growth far past the
-    * threshold still prunes well. */
-  val ElectedBuckets = 64
 
   /** One series' buffered length and time range. */
   private final case class MemStat(count: Long, minTs: Long, maxTs: Long)

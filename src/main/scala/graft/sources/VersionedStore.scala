@@ -47,8 +47,9 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * the history itself (the public VACUUM / expire-snapshots idea).
   *
   * The manifest format is deliberately line-oriented text (`op <op>`,
-  * optional `layout bucketed <n>`, one `dir <name>` per live directory,
-  * one `skip <dir>/<partition>` per excluded partition) — no JSON parser
+  * `layout bucketed <n>` — mandatory: the bucket count the version's dirs
+  * were written with —, one `dir <name>` per live directory, one
+  * `skip <dir>/<partition>` per excluded partition) — no JSON parser
   * in the commit path, trivially diffable, and versioned by file name
   * (`v%08d.txt`). Each manifest is SELF-CONTAINED (it names the full live
   * dir set, not a delta), so expiring old manifests never breaks newer
@@ -71,13 +72,12 @@ object VersionedStore {
     * the old dirs by name — the rest of the store is carried by
     * reference, so delete cost tracks the affected partitions' data, not
     * store size (the public Iceberg partition-overwrite idea, manifests
-    * staying KB-sized). `buckets` records the dirs' physical layout:
-    * None = `series=/day=`, Some(b) = [[ShardStore]]'s high-cardinality
-    * `bucket=/day=` layout with `series` as an ordinary column.
+    * staying KB-sized). `buckets` is the bucket count of the dirs'
+    * [[ShardStore]] `bucket=/day=` layout: a new chain takes
+    * [[ShardStore.Buckets]], and every later commit carries its parent's.
     */
   case class Commit(version: Int, op: String, dirs: Seq[String],
-                    skips: Seq[(String, String)] = Nil,
-                    buckets: Option[Int] = None) {
+                    skips: Seq[(String, String)], buckets: Int) {
     def skipsFor(dir: String): Seq[String] =
       skips.collect { case (d, p) if d == dir => p }
   }
@@ -141,14 +141,14 @@ object VersionedStore {
           lines.collectFirst { case l if l.startsWith("layout bucketed ") =>
             l.stripPrefix("layout bucketed ").trim }
             .map(s => s.toIntOption.filter(_ > 0)
-              .getOrElse(corrupt(s"bad layout line: 'layout bucketed $s'"))))
+              .getOrElse(corrupt(s"bad layout line: 'layout bucketed $s'")))
+            .getOrElse(corrupt("no 'layout bucketed' line")))
       }
   }
 
   private[graft] def commitAt(spark: SparkSession, root: String, v: Int,
                               op: String, dirs: Seq[String],
-                              skips: Seq[(String, String)] = Nil,
-                              buckets: Option[Int] = None): Int = {
+                              skips: Seq[(String, String)], buckets: Int): Int = {
     val fs = fsOf(spark, root)
     val mdir = new Path(root, MANIFESTS)
     fs.mkdirs(mdir)
@@ -160,7 +160,7 @@ object VersionedStore {
     // would read as an empty version — silent history corruption
     // (see DurableWrite)
     DurableWrite.write(fs, tmp,
-      (Seq(s"op $op") ++ buckets.map(b => s"layout bucketed $b") ++
+      (Seq(s"op $op", s"layout bucketed $buckets") ++
         dirs.map("dir " + _) ++
         skips.map { case (d, p) => s"skip $d/$p" } :+ s"txn $txn")
         .mkString("\n").getBytes("UTF-8"))
@@ -201,24 +201,21 @@ object VersionedStore {
       }
     }
 
-  /** Write `df` as a fresh immutable data dir for version `v` in the
-    * chain's physical layout ([[ShardStore]] does the actual write — one
-    * write path for versioned and tiered stores); returns the dir name,
+  /** Write `df` as a fresh immutable data dir for version `v` over
+    * `buckets` buckets ([[ShardStore]] does the actual write — one write
+    * path for versioned and tiered stores); returns the dir name,
     * or None when the frame was empty (an empty partitioned parquet write
     * emits no schema-bearing files, so an empty mutation commits a
     * manifest without a data dir — still a real version).
     */
   private def writeData(df: DataFrame, root: String, v: Int, op: String,
-                        layout: Option[Int]): Option[String] = {
+                        buckets: Int): Option[String] = {
     // the attempt-unique suffix keeps two writers staging the same version
     // from overwriting each other's data dir before the manifest CAS runs;
     // a losing attempt's dir is simply never referenced (orphaned)
     val name = f"d$v%08d-$op-${java.util.UUID.randomUUID().toString.take(8)}"
     val path = dataPath(root, name)
-    layout match {
-      case Some(b) => ShardStore.appendBucketed(df, path, b)
-      case None    => ShardStore.append(df, path)
-    }
+    ShardStore.append(df, path, buckets)
     val fs = fsOf(df.sparkSession, root)
     val it = fs.listFiles(new Path(path), true)
     var hasData = false
@@ -227,28 +224,26 @@ object VersionedStore {
     if (hasData) Some(name) else None
   }
 
-  private def requireLayout(tip: Option[Commit], layout: Option[Int],
-                            op: String): Unit =
-    tip.foreach(t => require(t.buckets == layout,
-      s"layout mismatch: the chain is at buckets=${t.buckets} but this " +
-      s"$op was asked for buckets=$layout — a store's layout is fixed at creation"))
+  /** The bucket count of a commit on `tip`: the tip's, or a new chain's. */
+  private def bucketsAfter(tip: Option[Commit]): Int =
+    tip.fold(ShardStore.Buckets)(_.buckets)
 
   /** Append canonical datapoints as a new version (delta write: only the
     * new rows touch disk). The manifest carries the parent's FULL
     * visibility state forward — dirs, their skip exclusions and the
-    * layout marker: dropping the skips here would silently resurrect
+    * bucket count: dropping the skips here would silently resurrect
     * partitions a prior delete excluded (ADVICE r12).
     */
-  def append(df: DataFrame, root: String, layout: Option[Int] = None): Int = {
+  def append(df: DataFrame, root: String): Int = {
     val spark = df.sparkSession
     // one chain snapshot feeds both the version number and the parent dir
     // set, so the manifest can never pair v with a different writer's tip
     val tip = versions(spark, root).lastOption
-    requireLayout(tip, layout, "append")
+    val buckets = bucketsAfter(tip)
     val v = tip.map(_.version).getOrElse(0) + 1
-    val d = writeData(df, root, v, "append", layout)
+    val d = writeData(df, root, v, "append", buckets)
     commitAt(spark, root, v, "append", tip.map(_.dirs).getOrElse(Seq.empty) ++ d,
-      skips = tip.map(_.skips).getOrElse(Nil), buckets = layout)
+      tip.map(_.skips).getOrElse(Nil), buckets)
   }
 
   /** D1 delete as a version: rewrite survivors into one fresh dir; the
@@ -267,76 +262,55 @@ object VersionedStore {
     * immediately beforehand under the same thread.
     */
   def deleteRewrite(survivors: DataFrame, root: String,
-                    expectedVersion: Option[Int] = None,
-                    layout: Option[Int] = None): Int = {
+                    expectedVersion: Option[Int] = None): Int = {
     val spark = survivors.sparkSession
     val tip = versions(spark, root).lastOption
-    requireLayout(tip, layout, "delete")
+    val buckets = bucketsAfter(tip)
     val v = expectedVersion.getOrElse(tip.map(_.version).getOrElse(0)) + 1
-    val d = writeData(survivors, root, v, "delete", layout)
-    commitAt(spark, root, v, "delete", d.toSeq, buckets = layout)
+    val d = writeData(survivors, root, v, "delete", buckets)
+    commitAt(spark, root, v, "delete", d.toSeq, Nil, buckets)
   }
 
   /** PARTITION-SCOPED delete commit (the Iceberg partition-overwrite idea,
     * and the unified replacement for [[TieredStore]]'s former in-place dir
     * swap): `survivors` — the affected partitions' rows that outlive the
     * delete — land in one fresh dir; every parent dir gets `skip` lines
-    * excluding the `affected` top-level partition names (`series=<esc>` /
-    * `bucket=<n>`); untouched partitions are carried by reference. Cost
+    * excluding the `affected` top-level partition names (`bucket=<n>`,
+    * [[ShardStore.partitionNames]] over the tip's bucket count); untouched
+    * partitions are carried by reference. Cost
     * tracks the affected partitions' data, never store size, and the
     * manifest CAS at `expectedVersion + 1` makes the whole mutation
     * all-or-nothing (see [[deleteRewrite]] for the snapshot discipline).
     */
   def deletePartitions(survivors: DataFrame, root: String,
-                       affected: Seq[String], expectedVersion: Int,
-                       layout: Option[Int] = None): Int = {
+                       affected: Seq[String], expectedVersion: Int): Int = {
     val spark = survivors.sparkSession
     val tip = versions(spark, root).find(_.version == expectedVersion)
       .getOrElse(throw new IllegalArgumentException(
         s"expected version $expectedVersion is not committed under $root"))
-    requireLayout(Some(tip), layout, "delete")
     val v = expectedVersion + 1
-    val d = writeData(survivors, root, v, "delete", layout)
+    val d = writeData(survivors, root, v, "delete", tip.buckets)
     // new skips: the affected partitions, excluded from every PARENT dir
     // (a skip on a dir that never held the partition filters nothing);
     // the survivors dir itself carries none, and the parent's own skips
     // ride along so earlier deletes stay deleted
     val skips = (tip.skips ++ tip.dirs.flatMap(dir => affected.map((dir, _)))).distinct
-    commitAt(spark, root, v, "delete", tip.dirs ++ d, skips, layout)
+    commitAt(spark, root, v, "delete", tip.dirs ++ d, skips, tip.buckets)
   }
 
   /** File-hygiene compaction as a version: collapse the live dir set to
-    * one, bit-identical content, history intact. One chain snapshot feeds
-    * BOTH the data read and the version number (the [[append]]
-    * discipline), so the committed content can never be a different
-    * writer's tip than the version claims. Layout-preserving: a bucketed
-    * chain compacts through the bucketed writer's (bucket, day)
-    * repartition; a flat chain coalesces per series.
+    * one, bit-identical content, history intact, through the writer's
+    * (bucket, day) repartition at the tip's bucket count. One chain
+    * snapshot feeds BOTH the data read and the version number (the
+    * [[append]] discipline), so the committed content can never be a
+    * different writer's tip than the version claims.
     */
   def compact(spark: SparkSession, root: String): Int = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions under $root")
-    compactAs(spark, root, vs.last.buckets)
-  }
-
-  /** Compaction INTO a target layout — the same single-dir rewrite, but
-    * the new dir (and the manifest's layout marker) take `targetBuckets`
-    * rather than the tip's. The layout is per-COMMIT manifest state, so
-    * earlier versions keep reading under their own layout: this is the
-    * live-store layout migration ([[TieredStore]]'s automatic bucketed
-    * election) expressed as one ordinary commit.
-    */
-  def compactAs(spark: SparkSession, root: String,
-                targetBuckets: Option[Int]): Int = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no committed versions under $root")
-    val tip = vs.last
-    val content = contentOf(spark, root, tip)
-    val d = writeData(
-      targetBuckets.fold(content.repartition(col(SERIES)))(_ => content),
-      root, tip.version + 1, "compact", targetBuckets)
-    commitAt(spark, root, tip.version + 1, "compact", d.toSeq,
-      buckets = targetBuckets)
+    val tip = versions(spark, root).lastOption
+      .getOrElse(throw new IllegalArgumentException(s"no committed versions under $root"))
+    val v = tip.version + 1
+    val d = writeData(contentOf(spark, root, tip), root, v, "compact", tip.buckets)
+    commitAt(spark, root, v, "compact", d.toSeq, Nil, tip.buckets)
   }
 
   /** Expire history (the public VACUUM / expire-snapshots idea): drop
@@ -477,7 +451,7 @@ object VersionedStore {
           .map(d => dirFrameRaw(spark, root, from, d)) ++
         newlySkipped.map { case (d, ps) =>
           dirFrameRaw(spark, root, from, d)
-            .filter(ShardStore.partitionsNamed(ps, from.buckets)) }
+            .filter(ShardStore.partitionsNamed(ps)) }
       val candIns = (to.dirs.filterNot(fromDirs) ++ regressed)
         .map(d => dirFrameRaw(spark, root, to, d))
       def side(parts: Seq[DataFrame]): DataFrame =
@@ -558,34 +532,32 @@ object VersionedStore {
     * inference, and a numeric-looking series id can never infer to a
     * different partition type in different dirs.
     */
-  private def readSchema(buckets: Option[Int]): StructType =
+  private val readSchema: StructType =
     StructType(schema.fields ++
-      (StructField(DIRCOL, StringType) +: ShardStore.partitionFields(buckets)))
+      (StructField(DIRCOL, StringType) +: ShardStore.partitionFields))
 
   /** One parquet relation over a set of same-commit data dirs: explicit
     * schema (no inference), `basePath = data/` so every dir is one
     * [[DIRCOL]] partition value of the SAME relation. */
   private def readDirs(spark: SparkSession, root: String,
-                       buckets: Option[Int], ds: Seq[String]): DataFrame =
+                       ds: Seq[String]): DataFrame =
     spark.read.option("basePath", s"$root/data")
-      .schema(readSchema(buckets))
+      .schema(readSchema)
       .parquet(ds.map(d => dataPath(root, d)): _*)
 
   /** A raw frame without the skipped top-level partitions `sk`. */
-  private def applySkips(base: DataFrame, sk: Seq[String],
-                         buckets: Option[Int]): DataFrame =
-    if (sk.isEmpty) base else base.filter(!ShardStore.partitionsNamed(sk, buckets))
+  private def applySkips(base: DataFrame, sk: Seq[String]): DataFrame =
+    if (sk.isEmpty) base else base.filter(!ShardStore.partitionsNamed(sk))
 
   /** One data dir of `c` with that dir's skips applied and the physical
-    * partition columns still present (flat: `series`,`day`; bucketed:
-    * `bucket`,`day` plus the ordinary `series` column). The skip filter
-    * lands on a PARTITION column either way, so Catalyst prunes the
+    * partition columns (`bucket`, `day`) still present. The skip filter
+    * lands on a PARTITION column, so Catalyst prunes the
     * excluded partitions at listing time — a skipped partition costs no
     * IO, exactly like a physically removed dir.
     */
   private[sources] def dirFrameRaw(spark: SparkSession, root: String,
                                    c: Commit, d: String): DataFrame =
-    applySkips(readDirs(spark, root, c.buckets, Seq(d)), c.skipsFor(d), c.buckets)
+    applySkips(readDirs(spark, root, Seq(d)), c.skipsFor(d))
 
   /** The skip-filtered RAW frames of one commit, partition columns intact.
     * Dirs sharing a skip set share ONE multi-path parquet relation under
@@ -600,7 +572,7 @@ object VersionedStore {
     c.dirs.groupBy(d => c.skipsFor(d).sorted).toSeq
       .map { case (sk, ds) => (sk, ds.sorted) }.sortBy(_._2.head)
       .map { case (sk, ds) =>
-        applySkips(readDirs(spark, root, c.buckets, ds), sk, c.buckets)
+        applySkips(readDirs(spark, root, ds), sk)
       }
 
   /** The canonical content of one commit: its dirs' skip-filtered union,

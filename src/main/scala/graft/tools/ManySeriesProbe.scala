@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * grows without bound nor slows reads when someone points the store at
   * millions of series.
   *
-  * Two measurements:
+  * Three measurements:
   *  1. **read flatness**: a fixed 1M-row memory buffer spread over 1k /
   *     100k / 1M distinct series — `readLast` wall must track BUFFER
   *     volume (constant here), not series cardinality. The tier decision
@@ -21,7 +21,10 @@ import org.apache.spark.sql.functions._
   *     `appendMemory` collects one exact stats row per buffered series
   *     (1M rows at 1M series; the buffer stats have no cap), reported as
   *     `append_wall`, and `bufferedCount()` must sum them to the buffer.
-  *  2. **cap engagement**: a disk tier of 5k series under a 1k-entry
+  *  2. **write cost at cardinality**: a 1k-series sync, then a 5k-series
+  *     sync, delete and compaction — the `bucket=/day=` layout creates at
+  *     most buckets × days dirs per write, whatever the series count.
+  *  3. **cap engagement**: a disk tier of 5k series under a 1k-entry
   *     cap — the bounds map must stop at the cap, and a capped-out
   *     (untracked) series must still read CORRECTLY via the conservative
   *     merge path (the class contract: degrade, never be wrong).
@@ -29,11 +32,6 @@ import org.apache.spark.sql.functions._
   * Run: sbt "runMain graft.tools.ManySeriesProbe"
   */
 object ManySeriesProbe {
-  private def diskRow(spark: org.apache.spark.sql.SparkSession,
-                      series: String, ts: Long, rid: Long) =
-    spark.range(1).select(lit(series).as(SERIES), lit(ts).as(TS_US),
-      lit(null).cast(tagType).as(TAG), lit(1.0d).as(VALUE), lit(rid).as(RID))
-
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
     val spark = graft.GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
@@ -52,12 +50,8 @@ object ManySeriesProbe {
 
     println(s"[mseries] fixed buffer rows=$rows, readLast(4 ids, n=50) wall by series count:")
     val walls = Seq(1000L, 100000L, 1000000L).map { n =>
-      // electBucketsAt pinned off: this probe MEASURES the flat layout's
-      // cost envelope (the number the election threshold is derived
-      // from); the production default would migrate at 512 series
       val st = new TieredStore(spark,
-        java.nio.file.Files.createTempDirectory("mseries").toString,
-        electBucketsAt = Int.MaxValue)
+        java.nio.file.Files.createTempDirectory("mseries").toString)
       val ta = System.nanoTime()
       st.appendMemory(buffer(n))
       val appendWall = (System.nanoTime() - ta) / 1e9
@@ -76,13 +70,10 @@ object ManySeriesProbe {
       if (cnt != want) { println(s"[mseries] FAIL: expected $want rows, got $cnt"); failed = true }
       // sync() — the r8 flush-all path plans NO per-series isin (the old
       // path collected every series name and built isin(<n literals>),
-      // the Catalyst plan-size pathology at high cardinality). The plan
-      // fix is cardinality-independent by construction; the WRITE cost
-      // is not — ShardStore's series=/day= layout creates one dir per
-      // series (36s for 1k dirs on this box), a documented store-layout
-      // bound outside the reference's handful-of-series envelope. So the
-      // full sync is measured at the realistic cardinality only; the
-      // 100k/1M rows above keep proving READS stay flat.
+      // the Catalyst plan-size pathology at high cardinality). Measured
+      // at 1k series here; the 5k-series section below measures the
+      // write cost at a higher cardinality, and the 100k/1M rows above
+      // keep proving READS stay flat.
       if (n == 1000L) {
         val t1 = System.nanoTime()
         st.sync()
@@ -104,25 +95,23 @@ object ManySeriesProbe {
       failed = true
     }
 
-    // bucketed layout (r8 VERDICT item 5): the same sync that costs
-    // O(series) directory creations flat costs O(buckets × days) bucketed
-    // — 5k series in one buffered wave must sync in seconds, not minutes
+    // write cost at cardinality: a sync creates O(buckets × days) dirs,
+    // not O(series) — 5k series in one buffered wave must sync in seconds
     {
       val bSeries = 5000L
       val bst = new TieredStore(spark,
-        java.nio.file.Files.createTempDirectory("mseries_bucket").toString,
-        seriesBuckets = Some(64))
+        java.nio.file.Files.createTempDirectory("mseries_bucket").toString)
       bst.appendMemory(buffer(bSeries))
       val t = System.nanoTime()
       bst.sync()
       val syncWall = (System.nanoTime() - t) / 1e9
       val s0 = bst.lengthSplit(Seq("s0")).select("disk_len").collect()(0).getLong(0)
-      println(f"[mseries] BUCKETED series=$bSeries%8d sync_wall=$syncWall%6.1fs " +
-        s"(s0 disk_len=$s0, 64 buckets)")
-      if (s0 != rows / bSeries) { println(s"[mseries] FAIL: bucketed sync lost rows"); failed = true }
+      println(f"[mseries] series=$bSeries%8d sync_wall=$syncWall%6.1fs " +
+        s"(s0 disk_len=$s0, ${graft.sources.ShardStore.Buckets} buckets)")
+      if (s0 != rows / bSeries) { println(s"[mseries] FAIL: sync lost rows"); failed = true }
       // target <5s; 10s guard absorbs host-noise windows (REGRESSIONS.md)
       if (syncWall > 10.0) {
-        println(f"[mseries] FAIL: bucketed 5k-series sync took $syncWall%.1fs (>10s)")
+        println(f"[mseries] FAIL: 5k-series sync took $syncWall%.1fs (>10s)")
         failed = true
       }
       // delete-rewrite at high cardinality (r10 item 6/7): a 10-series
@@ -136,10 +125,10 @@ object ManySeriesProbe {
       val ndel = bst.delete(delIds, 1700000000000000L, 1700000000500000L)
       val delWall = (System.nanoTime() - t2) / 1e9
       val postCount = bst.snapshot.count()
-      println(f"[mseries] BUCKETED delete(10 ids) wall=$delWall%6.1fs deleted=$ndel " +
+      println(f"[mseries] delete(10 ids) wall=$delWall%6.1fs deleted=$ndel " +
         s"(rows $preCount -> $postCount)")
       if (ndel == 0 || postCount != preCount - ndel) {
-        println("[mseries] FAIL: bucketed delete count mismatch"); failed = true
+        println("[mseries] FAIL: delete count mismatch"); failed = true
       }
       def files(p: String): Int = {
         def walk(f: java.io.File): Int =
@@ -163,7 +152,7 @@ object ManySeriesProbe {
       val t3 = System.nanoTime()
       bst.compactDisk()
       val cWall = (System.nanoTime() - t3) / 1e9
-      println(f"[mseries] BUCKETED compactDisk wall=$cWall%6.1fs files " +
+      println(f"[mseries] compactDisk wall=$cWall%6.1fs files " +
         s"$fBefore -> ${files(bst.root)}")
       if (bst.snapshot.count() != postCount2) {
         println("[mseries] FAIL: compaction changed row count"); failed = true
@@ -173,41 +162,10 @@ object ManySeriesProbe {
       }
     }
 
-    // automatic layout election cost (r13 VERDICT item 4): a flat store
-    // crossing the threshold pays ONE compactAs rewrite of its disk tier
-    // at the next mutation — measure that migration wall at 1k series so
-    // SCALE.md can state the one-time cost next to the per-sync savings
-    {
-      val eroot = java.nio.file.Files.createTempDirectory("mseries_elect").toString
-      val flat = new TieredStore(spark, eroot, electBucketsAt = Int.MaxValue)
-      flat.appendDisk(spark.range(10000).select(
-        concat(lit("s"), col("id") % 1000L).as(SERIES),
-        (lit(1700000000000000L) + col("id")).as(TS_US),
-        lit(null).cast(tagType).as(TAG),
-        (col("id") % 1000).cast("double").as(VALUE),
-        col("id").as(RID)))
-      val preCount = flat.snapshot.count()
-      // reopen at the production threshold: hydration tracks 1k bounds,
-      // the next (tiny) mutation triggers the election
-      val electing = new TieredStore(spark, eroot)
-      val t = System.nanoTime()
-      electing.appendDisk(diskRow(spark, "s0", 1700000009000000L, 999999L))
-      val eWall = (System.nanoTime() - t) / 1e9
-      println(f"[mseries] ELECTION 1k-series flat->bucketed migrate_wall=$eWall%6.1fs " +
-        s"(layout=${electing.layout})")
-      if (!electing.layout.contains(TieredStore.ElectedBuckets)) {
-        println("[mseries] FAIL: election did not fire"); failed = true
-      }
-      if (electing.snapshot.count() != preCount + 1) {
-        println("[mseries] FAIL: election lost rows"); failed = true
-      }
-    }
-
-    // cap engagement on the disk tier (flat pinned: the election at 512
-    // tracked series is measured above; here the cap itself is the test)
+    // cap engagement on the disk tier
     val capped = new TieredStore(spark,
       java.nio.file.Files.createTempDirectory("mseries_cap").toString,
-      maxTrackedSeries = 1000, electBucketsAt = Int.MaxValue)
+      maxTrackedSeries = 1000)
     val diskRows = spark.range(5000).select(
       concat(lit("d"), col("id")).as(SERIES),
       (lit(1700000000000000L) + col("id")).as(TS_US),

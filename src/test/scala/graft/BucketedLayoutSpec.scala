@@ -70,16 +70,16 @@ class BucketedLayoutSpec extends SparkSuite {
     import StoreTestUtil.{fp, parquetFiles}
     // out-of-place: 8 append waves -> one compacted rewrite
     val p1 = tmpDir("bkt_compact_src")
-    (0L until 8L).foreach(w => ShardStore.appendBucketed(wave(w).toDF(), p1, 4))
+    (0L until 8L).foreach(w => ShardStore.append(wave(w).toDF(), p1, 4))
     val want = fp(ShardStore.read(spark, p1))
     val p2 = tmpDir("bkt_compact_out")
-    ShardStore.compactBucketed(spark, p1, p2, 4)
+    ShardStore.compact(spark, p1, p2, 4)
     assert(fp(ShardStore.read(spark, p2)) == want, "compaction changed content")
     assert(parquetFiles(p2) < parquetFiles(p1),
       s"no coalescing: ${parquetFiles(p1)} -> ${parquetFiles(p2)}")
     // live in-place form through the marker-committed swap, memory intact
     val root = tmpDir("bkt_compact_live")
-    val st = new TieredStore(spark, root, seriesBuckets = Some(4))
+    val st = new TieredStore(spark, root)
     (0L until 8L).foreach(w => st.appendDisk(wave(w).toDF()))
     st.appendMemory( // a buffered tail that must survive compaction
       Seq(Datapoint("s0", T0 + 900000L, Some(Seq(TagEntry("k", "1"))), 1.0, 99999L)).toDF())

@@ -37,12 +37,13 @@ class ShardStoreSpec extends SparkSuite {
     assert(row.getString(0) == "beta" && row.getString(2) == "6")
   }
 
-  test("partition layout is series=/day= (the interval-index analog)") {
+  test("partition layout is bucket=/day= (the interval-index analog)") {
     val dirs = new java.io.File(store).listFiles().filter(_.isDirectory).map(_.getName).sorted
-    assert(dirs.toSeq == Seq("series=alpha", "series=beta"))
-    val days = new java.io.File(s"$store/series=alpha").listFiles()
-      .filter(_.isDirectory).map(_.getName)
-    assert(days.length >= 10 && days.forall(_.startsWith("day=")))
+    assert(dirs.toSeq == ShardStore.partitionNames(Seq("alpha", "beta"), ShardStore.Buckets).sorted)
+    dirs.foreach { d =>
+      val days = new java.io.File(s"$store/$d").listFiles().filter(_.isDirectory).map(_.getName)
+      assert(days.length >= 10 && days.forall(_.startsWith("day=")), d)
+    }
   }
 
   test("range read prunes partitions and pushes ts filter to the scan") {
@@ -66,51 +67,43 @@ class ShardStoreSpec extends SparkSuite {
     assert(ShardStore.read(spark, p).count() == 20)
   }
 
-  test("partition names round-trip on both layouts: encoded = written dirs, decode selects them") {
-    // ids Spark must escape in a partition path, plus a non-ASCII one
+  test("partition names round-trip: encoded = written dirs, decode selects them") {
+    // ids a path would have to escape, plus a non-ASCII one: none of them
+    // reaches the file system, a partition dir is named by its bucket
     val odd = Seq("a/b", "a=b", "100%", "{x}", "a:b", "\u00e9t\u00e9")
-    // the flat layout names a dir after the raw id: an id the JVM's
-    // file-name charset cannot encode (a non-UTF-8 locale) never reaches
-    // disk intact, so it joins the flat case only where it can
-    val fsCharset = java.nio.charset.Charset.forName(System.getProperty("sun.jnu.encoding"))
-    val neighbours = Seq("a", "b", "x", "100")
-    def rows(ids: Seq[String]) = ids.zipWithIndex.flatMap { case (s, i) =>
+    val all = odd ++ Seq("a", "b", "x", "100")
+    val rows = all.zipWithIndex.flatMap { case (s, i) =>
       (0L until 3L).map(j =>
         Datapoint(s, 1704067200000000L + j * DAY_US, None, j.toDouble, i * 10L + j))
     }
-    Seq(None, Some(4)).foreach { layout =>
-      val ids = odd.filter(id => layout.nonEmpty || fsCharset.newEncoder().canEncode(id))
-      val all = ids ++ neighbours
-      val p = tmpDir("shardstore_names")
-      val df = rows(all).toDF()
-      layout.fold(ShardStore.append(df, p))(ShardStore.appendBucketed(df, p, _))
-      val dirs = new java.io.File(p).listFiles().filter(_.isDirectory).map(_.getName).toSet
-      assert(ShardStore.partitionNames(all, layout).toSet == dirs, s"$layout: $dirs")
-      val raw = spark.read
-        .schema(StructType(Canon.schema.fields ++ ShardStore.partitionFields(layout)))
-        .parquet(p)
-      def seriesOf(df: org.apache.spark.sql.DataFrame) =
-        df.select("series").distinct().as[String].collect().toSet
-      def decoded(xs: Seq[String]) = seriesOf(raw.filter(
-        ShardStore.partitionsNamed(ShardStore.partitionNames(xs, layout), layout)))
-      (ids.map(Seq(_)) :+ ids).foreach { xs =>
-        // decode(encode(xs)) is the forward filter's selection: flat —
-        // exactly the xs; bucketed — their buckets, co-resident ids too
-        val sel = decoded(xs)
-        assert(sel == seriesOf(raw.filter(ShardStore.partitionsOf(xs, layout))), s"$layout $xs")
-        assert(if (layout.isEmpty) sel == xs.toSet else xs.toSet.subsetOf(sel), s"$layout $xs")
-      }
-      // a live delete of each such id in turn spares its neighbours,
-      // co-resident series of a bucketed partition included
-      val st = new TieredStore(spark, tmpDir("shardstore_names_live"), seriesBuckets = layout)
-      st.appendDisk(df)
-      ids.indices.foreach { k =>
-        assert(st.delete(Seq(ids(k)), Long.MinValue, Long.MaxValue) == 3L, s"$layout ${ids(k)}")
-        val left = st.snapshot.select("series", "rid").as[(String, Long)].collect().toSet
-        val want = rows(all).filterNot(d => ids.take(k + 1).contains(d.series))
-          .map(d => (d.series, d.rid)).toSet
-        assert(left == want, s"$layout ${ids(k)}")
-      }
+    val df = rows.toDF()
+    val buckets = 4 // few buckets, so some ids share one
+    val p = tmpDir("shardstore_names")
+    ShardStore.append(df, p, buckets)
+    val dirs = new java.io.File(p).listFiles().filter(_.isDirectory).map(_.getName).toSet
+    assert(ShardStore.partitionNames(all, buckets).toSet == dirs, dirs)
+    val raw = spark.read
+      .schema(StructType(Canon.schema.fields ++ ShardStore.partitionFields))
+      .parquet(p)
+    def seriesOf(df: org.apache.spark.sql.DataFrame) =
+      df.select("series").distinct().as[String].collect().toSet
+    (odd.map(Seq(_)) :+ odd).foreach { xs =>
+      // decode(encode(xs)) is the forward filter's selection: the xs'
+      // buckets, co-resident ids too
+      val sel = seriesOf(raw.filter(
+        ShardStore.partitionsNamed(ShardStore.partitionNames(xs, buckets))))
+      assert(sel == seriesOf(raw.filter(ShardStore.partitionsOf(xs, buckets))), xs)
+      assert(xs.toSet.subsetOf(sel), xs)
+    }
+    // a live delete of each such id in turn spares every other id
+    val st = new TieredStore(spark, tmpDir("shardstore_names_live"))
+    st.appendDisk(df)
+    odd.indices.foreach { k =>
+      assert(st.delete(Seq(odd(k)), Long.MinValue, Long.MaxValue) == 3L, odd(k))
+      val left = st.snapshot.select("series", "rid").as[(String, Long)].collect().toSet
+      val want = rows.filterNot(d => odd.take(k + 1).contains(d.series))
+        .map(d => (d.series, d.rid)).toSet
+      assert(left == want, odd(k))
     }
   }
 

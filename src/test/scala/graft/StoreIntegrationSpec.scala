@@ -26,7 +26,8 @@ class StoreIntegrationSpec extends SparkSuite {
 
   test("full corpus round-trips (100k rows, 5 series, 30 day partitions)") {
     assert(viaStore.count() == direct.count())
-    val days = new java.io.File(s"$store/series=click").listFiles()
+    val days = new java.io.File(
+      s"$store/${ShardStore.partitionNames(Seq("click"), ShardStore.Buckets).head}").listFiles()
       .count(f => f.isDirectory && f.getName.startsWith("day="))
     assert(days >= 29, s"$days day partitions")
   }

@@ -48,6 +48,62 @@ class TableProfileSpec extends SparkSuite {
     assert(dj == Map("s" -> -3L, "w" -> 1L))
   }
 
+  /** (job group, description) of every job `f` starts, in start order. */
+  private def jobsOf[T](f: => T): (scala.util.Try[T], Seq[(String, String)]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val sentinel = s"sentinel-${java.util.UUID.randomUUID()}"
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).map(_.getProperty(k)).orNull
+        if (prop("spark.job.description") == sentinel) done.countDown()
+        else seen.add((prop("spark.jobGroup.id"), prop("spark.job.description")))
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      val r = scala.util.Try(f)
+      sc.setJobDescription(sentinel)
+      sc.parallelize(Seq(1), 1).count()
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      import scala.jdk.CollectionConverters._
+      (r, seen.asScala.toSeq)
+    } finally { sc.removeSparkListener(l); sc.clearJobGroup() }
+  }
+
+  test("profileDrift: side b's jobs carry the caller's group; a failing side a stops side b") {
+    val sc = spark.sparkContext
+    val a = Seq((1L, "x"), (2L, "y")).toDF("id", "s")
+    val b = Seq((3L, "z")).toDF("id", "s")
+    // two calls with different groups: a worker thread that outlives one
+    // call must not carry its group into the next
+    Seq(1, 2).foreach { k =>
+      val (r, jobs) = jobsOf {
+        sc.setJobGroup(s"drift-$k", s"drift report $k")
+        TableProfile.profileDrift(a, b).collect()
+      }
+      assert(r.isSuccess, r)
+      // two jobs per side plus the result's own
+      assert(jobs.size >= 5 && jobs.forall(_ == ((s"drift-$k", s"drift report $k"))), jobs)
+    }
+    // side a throws while side b is still running: the call fails, and
+    // side b's job is cancelled, not left to run on
+    val boom = udf { (x: Long) => if (x >= 0) throw new IllegalStateException("side a"); x }
+    val slow = udf { (x: Long) => Thread.sleep(60000); x }
+    val failA = spark.range(0, 4, 1, 4).select(boom(col("id")).as("id"))
+    // one slow task: the other slots stay free for side a's tasks
+    val slowB = spark.range(0, 1, 1, 1).select(slow(col("id")).as("id"))
+    val (r, _) = jobsOf(TableProfile.profileDrift(failA, slowB))
+    assert(r.isFailure)
+    def running = sc.statusTracker.getActiveJobIds().length +
+      sc.statusTracker.getExecutorInfos.map(_.numRunningTasks).sum
+    val deadline = System.nanoTime() + 10L * 1000000000L
+    while (running > 0 && System.nanoTime() < deadline) Thread.sleep(100)
+    assert(running == 0, "side b's job or its tasks outlived the failed call")
+  }
+
   test("profile: non-atomic columns excluded by default, override validated") {
     val df = Seq((1L, Seq(1, 2))).toDF("id", "arr")
     assert(TableProfile.profile(df).select("column").as[String].collect().toSeq == Seq("id"))

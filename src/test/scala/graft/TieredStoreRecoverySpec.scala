@@ -31,9 +31,9 @@ class TieredStoreRecoverySpec extends SparkSuite {
 
   private def fp(df: DataFrame): (Long, Long) = StoreTestUtil.fp(df)
 
-  private def crashScenario(buckets: Option[Int]): Unit = {
+  test("crashed (uncommitted) delete leaves the pre-delete version; orphan GC honors grace (bucketed)") {
     val root = tmpDir("tier_crash")
-    val st = new TieredStore(spark, root, seriesBuckets = buckets)
+    val st = new TieredStore(spark, root)
     st.appendDisk(seedRows.toDF())
     // a delete whose writer died AFTER staging the survivors dir but
     // BEFORE the manifest CAS: the commit never happened, so the store
@@ -42,13 +42,10 @@ class TieredStoreRecoverySpec extends SparkSuite {
     val survivors = seedRows.toDF()
       .filter(!col("ts_us").between(T0 + 25000L, T0 + 74000L))
     val orphan = s"$root/data/d00000099-delete-deadbeef"
-    buckets match {
-      case Some(b) => graft.sources.ShardStore.appendBucketed(survivors, orphan, b)
-      case None    => graft.sources.ShardStore.append(survivors, orphan)
-    }
-    val reopened = new TieredStore(spark, root, seriesBuckets = buckets)
+    graft.sources.ShardStore.append(survivors, orphan)
+    val reopened = new TieredStore(spark, root)
     assert(fp(reopened.snapshot) == fp(seedRows.toDF()),
-      s"an uncommitted staging dir changed store content (buckets=$buckets)")
+      "an uncommitted staging dir changed store content")
     // the orphan is inert and INSIDE the grace window: the open must not
     // sweep a dir a concurrent writer may be about to commit
     assert(new java.io.File(orphan).exists(), "in-grace orphan swept at open")
@@ -61,16 +58,7 @@ class TieredStoreRecoverySpec extends SparkSuite {
     assert(fp(reopened.snapshot) == fp(expected))
     // committed data dirs are never swept, however old they look
     VersionedStore.sweepOrphanData(spark, root, graceMs = 0L)
-    assert(fp(new TieredStore(spark, root, seriesBuckets = buckets).snapshot)
-      == fp(expected))
-  }
-
-  test("crashed (uncommitted) delete leaves the pre-delete version; orphan GC honors grace (flat)") {
-    crashScenario(None)
-  }
-
-  test("crashed (uncommitted) delete leaves the pre-delete version; orphan GC honors grace (bucketed)") {
-    crashScenario(Some(4))
+    assert(fp(new TieredStore(spark, root).snapshot) == fp(expected))
   }
 
   test("live-store time travel + CDC across a delete; compactDisk expires history") {
@@ -105,13 +93,13 @@ class TieredStoreRecoverySpec extends SparkSuite {
   test("delete skips survive later appends and reopens; escaped series names round-trip") {
     val root = tmpDir("tier_skips")
     val st = new TieredStore(spark, root)
-    val odd = "a b:c%7" // space, colon, percent — all escaped in partition paths
+    val odd = "a b:c%7" // space, colon, percent: never part of a path
     val oddRows = (0L until 20L).map(i => dp(odd, T0 + i * 1000L, i))
     val bRows = (0L until 20L).map(i => dp("b", T0 + i * 1000L, 100 + i))
     st.appendDisk((oddRows ++ bRows).toDF())
     assert(st.delete(Seq(odd), T0, T0 + 100000L) == 20L)
     val tip = st.diskVersions.last
-    assert(tip.skips.nonEmpty && tip.skips.forall(_._2.startsWith("series=")),
+    assert(tip.skips.nonEmpty && tip.skips.forall(_._2.startsWith("bucket=")),
       s"partition-scoped delete must commit skip exclusions, got ${tip.skips}")
     // the ADVICE r12 resurrection bug: an append after a delete must carry
     // the parent's skips — without that the deleted partition reappears

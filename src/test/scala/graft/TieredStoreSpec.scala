@@ -1,7 +1,7 @@
 package graft
 
 import graft.model.Canon.{Datapoint, TagEntry}
-import graft.sources.TieredStore
+import graft.sources.{ShardStore, TieredStore}
 import org.apache.spark.sql.functions._
 
 /** M1-M3/I2: the dual-tier read semantics (reference
@@ -248,67 +248,80 @@ class TieredStoreSpec extends SparkSuite {
     assert(frames.map(_.count()) == Seq(10L, 30L, 5L))
   }
 
-  test("automatic bucketed-layout election: crossing the threshold migrates live, content identical") {
-    val root = tmpDir("tier_elect")
-    val st = new TieredStore(spark, root, electBucketsAt = 8)
-    def rows(lo: Int, hi: Int) = (lo until hi).flatMap(s =>
-      (0L until 5L).map(i => dp(f"e$s%02d", T0 + i * 1000L, s * 100L + i)))
-    val tail = dp("e00", T0 + 9000000L, 99999L) // buffered tail the
-    // migration must leave untouched (it rewrites the DISK tier only)
-    st.appendDisk(rows(0, 5).toDF()) // 5 series: under the threshold
-    st.appendMemory(Seq(tail).toDF())
-    assert(st.layout.isEmpty && st.diskVersions.last.buckets.isEmpty)
-    // crossing the threshold elects the bucketed layout INSIDE the same
-    // mutation — no operator call changes, no reopen needed
-    st.appendDisk(rows(5, 10).toDF()) // 10 tracked series >= 8
-    assert(st.layout.contains(TieredStore.ElectedBuckets))
-    val tip = st.diskVersions.last
-    assert(tip.op == "compact" && tip.buckets.contains(TieredStore.ElectedBuckets),
-      s"expected an electing compact at the tip, got $tip")
-    assert(st.diskVersions.size == 1, "election must expire the flat history")
-    assert(StoreTestUtil.fp(st.snapshot) ==
-      StoreTestUtil.fp((rows(0, 10) :+ tail).toDF()),
-      "election changed the store content")
-    // the elected layout prunes reads on the bucket partition column
-    val p = st.readLast(Seq("e03"), 100).queryExecution.executedPlan.toString
-    assert(p.contains("PartitionFilters") && p.contains("bucket"), p)
-    // reopen with DEFAULT args adopts the persisted layout (the ctor
-    // argument only seeds new stores), and mutations keep working
-    val re = new TieredStore(spark, root)
-    assert(re.layout.contains(TieredStore.ElectedBuckets))
-    assert(re.delete(Seq("e03"), T0, T0 + 100000L) == 5L)
-    assert(re.lengthSplit(Seq("e03")).isEmpty) // fully deleted: no row
-    assert(re.lengthSplit(Seq("e04")).select("len").as[Long].head() == 5L)
-  }
+  /** A parquet scan in `plan` lists files by a `bucket` partition filter. */
+  private def prunesBuckets(plan: String): Boolean =
+    "PartitionFilters: \\[[^\\]]*bucket#".r.findFirstIn(plan).nonEmpty
 
   test("bucketed layout is read-invisible; deletes spare co-resident series") {
-    val rows = (0L until 200L).map(i => dp(s"s${i % 10}", T0 + i * 1000L, i))
-    val flat = new TieredStore(spark, tmpDir("tier_flat"))
-    val buck = new TieredStore(spark, tmpDir("tier_buck"), seriesBuckets = Some(8))
-    flat.appendDisk(rows.toDF())
-    buck.appendDisk(rows.toDF())
-    val tail = (0L until 10L).map(i => dp("s3", T0 + 10000000L + i * 1000L, 1000 + i))
-    flat.appendMemory(tail.toDF())
-    buck.appendMemory(tail.toDF())
-    val allIds = (0 until 10).map(i => s"s$i")
-    def dump(st: TieredStore, ids: Seq[String], n: Int) =
-      st.readLast(ids, n).select("series", "ts_us", "rid")
-        .as[(String, Long, Long)].collect().toSeq
-    def split(st: TieredStore) = st.lengthSplit(allIds)
-      .as[(String, Long, Long, Long)].collect().toSeq
-    val ids = Seq("s1", "s3", "s7")
-    assert(dump(buck, ids, 25) == dump(flat, ids, 25))
-    assert(split(buck) == split(flat))
-    // the bucketed disk read PRUNES on the bucket partition column —
-    // the queried ids' buckets reach the scan as a partition filter
-    val p = buck.readLast(Seq("s1"), 1000).queryExecution.executedPlan.toString
-    assert(p.contains("PartitionFilters") && p.contains("bucket"), p)
-    // live delete behaves identically; s3's bucket-mates survive intact
-    val want = flat.delete(Seq("s3"), T0, T0 + 50000L)
-    assert(want == 5L)
-    assert(buck.delete(Seq("s3"), T0, T0 + 50000L) == want)
-    assert(dump(buck, allIds, 50) == dump(flat, allIds, 50))
-    assert(split(buck) == split(flat))
+    // ten series, two of them sharing a bucket: a bucket-scoped delete of
+    // one must carry the other through its survivors dir
+    val pool = (0 until 1000).map(i => s"s$i")
+    val mates = pool.groupBy(ShardStore.bucketOf(_, ShardStore.Buckets)).values
+      .find(_.size >= 2).get.take(2)
+    val allIds = mates ++ pool.filterNot(mates.contains).take(8)
+    val rows = (0L until 200L).map(i => dp(allIds((i % 10).toInt), T0 + i * 1000L, i))
+    val st = new TieredStore(spark, tmpDir("tier_buck"))
+    st.appendDisk(rows.toDF())
+    val tail = (0L until 10L).map(i => dp(mates(0), T0 + 10000000L + i * 1000L, 1000 + i))
+    st.appendMemory(tail.toDF())
+    var live = rows ++ tail
+    def got(ids: Seq[String], n: Int) = st.readLast(ids, n).select("series", "ts_us", "rid")
+      .as[(String, Long, Long)].collect().toSeq
+    def want(ids: Seq[String], n: Int) = graft.operators.TimeSeries.readLast(live.toDF(), ids, n)
+      .select("series", "ts_us", "rid").as[(String, Long, Long)].collect().toSeq
+    def split = st.lengthSplit(allIds).as[(String, Long, Long, Long)].collect().toSeq
+    def wantSplit = allIds.sorted.map { s =>
+      val (m, d) = (tail.count(_.series == s).toLong, live.count(_.series == s).toLong)
+      (s, m, d - m, d)
+    }
+    val ids = Seq(mates(0), allIds(2), allIds(6))
+    assert(got(ids, 25) == want(ids, 25))
+    assert(split == wantSplit)
+    // the disk read PRUNES on the bucket partition column — the queried
+    // ids' buckets reach the scan as a partition filter
+    val p = st.readLast(Seq(allIds(2)), 1000).queryExecution.executedPlan.toString
+    assert(prunesBuckets(p), p)
+    // live delete of one mate (its buffer flushes first); the other survives intact
+    val hit = (d: Datapoint) => d.series == mates(0) && d.ts_us <= T0 + 50000L
+    assert(st.delete(Seq(mates(0)), T0, T0 + 50000L) == live.count(hit))
+    live = live.filterNot(hit)
+    assert(got(allIds, 50) == want(allIds, 50))
+    assert(split.map { case (s, _, d, _) => (s, d) } ==
+      allIds.sorted.map(s => (s, live.count(_.series == s).toLong)))
+    assert(st.lengthSplit(Seq(mates(1))).select("len").as[Long].head() == 20L)
+  }
+
+  test("non-ASCII series ids of the same length keep their own points on disk") {
+    val st = new TieredStore(spark, tmpDir("tier_nonascii"))
+    val ids = Seq("\u00e9t\u00e9", "\u00ff\u00ff\u00ff")
+    def values(k: Int) = (0 until 3).map(i => (k * 10 + i).toDouble)
+    ids.zipWithIndex.foreach { case (id, k) =>
+      val body = values(k).zipWithIndex
+        .map { case (v, i) => s"""{"timestamp": ${1704067200000000L + i}, "value": $v}""" }
+        .mkString("[", ",", "]")
+      assert(graft.api.Router.runPost(st, s"ts/$id", body).as[(Long, Long)].head() == ((3L, 0L)))
+    }
+    st.sync()
+    ids.zipWithIndex.foreach { case (id, k) =>
+      val back = graft.api.Router.run(st, s"$id/last/10").select("series", "value")
+        .as[(String, Double)].collect().toSet
+      assert(back == values(k).map((id, _)).toSet, s"$id read back $back")
+    }
+    assert(graft.api.Router.run(st, "names").as[String].collect().toSet == ids.toSet)
+  }
+
+  test("series-scoped routes read the ids' buckets, not the whole disk tier") {
+    val st = freshSorted() // series a: 100 on disk, 20 buffered
+    st.appendDisk((0L until 50L).map(i => dp("other", T0 + i * 1000L, 5000 + i)).toDF())
+    assert(ShardStore.bucketOf("a", ShardStore.Buckets) !=
+      ShardStore.bucketOf("other", ShardStore.Buckets))
+    val q = graft.api.Router.run(st, "a/since/0")
+    val plan = q.queryExecution.executedPlan.toString
+    assert(prunesBuckets(plan), plan)
+    assert(q.count() == 120L)
+    assert(q.select("series").distinct().as[String].collect().toSeq == Seq("a"))
+    assert(graft.api.Router.run(st, "a,other/length").as[Long].head() == 170L)
+    assert(graft.api.Router.run(st, "names").count() == 2L)
   }
 
   test("router routes run against the live store; tier routes answer the split") {

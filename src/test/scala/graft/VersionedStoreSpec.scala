@@ -1,7 +1,7 @@
 package graft
 
 import graft.model.Canon
-import graft.sources.VersionedStore
+import graft.sources.{ShardStore, VersionedStore}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -92,7 +92,8 @@ class VersionedStoreSpec extends SparkSuite {
     val winner = VersionedStore.append(src.filter(col("rid") % 2 =!= 0), root)
     assert(winner == staged)
     val e = intercept[VersionedStore.ConcurrentCommitException] {
-      VersionedStore.commitAt(spark, root, staged, "append", Seq("orphan-dir"))
+      VersionedStore.commitAt(spark, root, staged, "append", Seq("orphan-dir"), Nil,
+        ShardStore.Buckets)
     }
     assert(e.getMessage.contains("concurrent writer"))
     // the chain is linear and the winner's manifest was not overwritten
@@ -216,9 +217,10 @@ class VersionedStoreSpec extends SparkSuite {
     VersionedStore.append(rows("a", 0, 10).unionByName(rows("b", 100, 10)), root) // v1
     VersionedStore.append(rows("b", 200, 10), root)                               // v2
     val tip = VersionedStore.versions(spark, root).last
-    // partition-scoped wipe of series a: skips only, no survivors dir
-    VersionedStore.deletePartitions(rows("a", 0, 0), root, Seq("series=a"),
-      tip.version)                                                                // v3
+    val Seq(pa, pb) = Seq("a", "b").map(s => ShardStore.partitionNames(Seq(s), tip.buckets).head)
+    assert(pa != pb, "a and b must sit in different buckets")
+    // partition-scoped wipe of series a's bucket: skips only, no survivors dir
+    VersionedStore.deletePartitions(rows("a", 0, 0), root, Seq(pa), tip.version) // v3
     val v1Dir = VersionedStore.versions(spark, root).head.dirs.head
     // semantics: deletes = the wiped a rows, inserts = v2's appended b rows
     val ch = VersionedStore.readChanges(spark, root, 1, 3)
@@ -227,11 +229,11 @@ class VersionedStoreSpec extends SparkSuite {
     assert(fp(ch.filter(col(VersionedStore.CHANGE_TYPE) === "insert")
       .drop(VersionedStore.CHANGE_TYPE)) == fp(rows("b", 200, 10)))
     // scan narrowing: the delete-straddling diff must NOT read v1's
-    // UNTOUCHED series=b partition — only the newly-skipped series=a
-    // partition of v1 and v2's added dir (the manifest-narrowed diff)
+    // UNTOUCHED partition of series b — only the newly-skipped partition
+    // of series a in v1 and v2's added dir (the manifest-narrowed diff)
     val chScan = scannedFiles(ch)
-    assert(chScan.exists(_.contains(s"$v1Dir/series=a")), chScan.mkString("\n"))
-    assert(!chScan.exists(_.contains(s"$v1Dir/series=b")),
+    assert(chScan.exists(_.contains(s"$v1Dir/$pa/")), chScan.mkString("\n"))
+    assert(!chScan.exists(_.contains(s"$v1Dir/$pb/")),
       s"mixed diff re-read an unchanged partition of fromV:\n${chScan.mkString("\n")}")
     // the r12 double-scan, pinned closed: dedupChangesSince reads each
     // UNTOUCHED fromV file exactly once (the seen side) — the change
@@ -240,11 +242,11 @@ class VersionedStoreSpec extends SparkSuite {
     // hashes, once as the newly-skipped delete candidate of the diff.
     val ddScan = scannedFiles(
       VersionedStore.dedupChangesSince(spark, root, 1, 3, col(Canon.SERIES)))
-    val untouched = ddScan.filter(_.contains(s"$v1Dir/series=b"))
+    val untouched = ddScan.filter(_.contains(s"$v1Dir/$pb/"))
       .groupBy(identity).map(_._2.size)
     assert(untouched.nonEmpty && untouched.max == 1,
       s"an unchanged fromV file is scanned more than once:\n${ddScan.mkString("\n")}")
-    assert(ddScan.filter(_.contains(s"$v1Dir/series=a"))
+    assert(ddScan.filter(_.contains(s"$v1Dir/$pa/"))
       .groupBy(identity).map(_._2.size).forall(_ <= 2), ddScan.mkString("\n"))
     // and the reconstruction contract holds across the narrowed diff
     assert(fp(VersionedStore.applyChanges(VersionedStore.readAt(spark, root, 1), ch))
@@ -252,10 +254,9 @@ class VersionedStoreSpec extends SparkSuite {
   }
 
   test("bucketed skips round-trip the manifest and survive appends") {
-    import graft.sources.ShardStore
     import spark.implicits._
     val root = tmpDir("vstore_bucketskips")
-    val b = 4
+    val b = ShardStore.Buckets
     def rows(series: String, ridLo: Long, n: Int): DataFrame =
       (ridLo until ridLo + n).map(r => (series, r)).toDF("series", "rid")
         .withColumn(Canon.TS_US, col("rid") * 1000L)
@@ -269,33 +270,28 @@ class VersionedStoreSpec extends SparkSuite {
       }
     val (ba, bb) = (ShardStore.bucketOf(sa, b), ShardStore.bucketOf(sb, b))
     assert(ba != bb)
-    VersionedStore.append(rows(sa, 0, 10).unionByName(rows(sb, 100, 10)),
-      root, layout = Some(b))                                              // v1
+    VersionedStore.append(rows(sa, 0, 10).unionByName(rows(sb, 100, 10)), root) // v1
     // bucket-scoped wipe of sa's bucket: skips only, no survivors
     VersionedStore.deletePartitions(rows(sa, 0, 0), root,
-      Seq(s"${ShardStore.BUCKET}=$ba"), 1, layout = Some(b))               // v2
-    // the manifest round-trips the layout marker and the bucket skip
+      Seq(s"${ShardStore.BUCKET}=$ba"), 1)                                 // v2
+    // the manifest round-trips the bucket count and the bucket skip
     val v2 = VersionedStore.versions(spark, root).last
-    assert(v2.buckets == Some(b))
+    assert(v2.buckets == b)
     assert(v2.skips.nonEmpty &&
       v2.skips.forall(_._2 == s"${ShardStore.BUCKET}=$ba"), v2.skips.toString)
     assert(fp(VersionedStore.readAt(spark, root, 2)) == fp(rows(sb, 100, 10)))
-    // append after the delete: skips and layout carry forward — the wiped
-    // bucket must NOT resurrect (the ADVICE append-propagation round-trip)
-    VersionedStore.append(rows(sb, 200, 10), root, layout = Some(b))       // v3
+    // append after the delete: skips and bucket count carry forward — the
+    // wiped bucket must NOT resurrect (the ADVICE append-propagation round-trip)
+    VersionedStore.append(rows(sb, 200, 10), root)                         // v3
     val v3 = VersionedStore.versions(spark, root).last
-    assert(v3.buckets == Some(b) && v3.skips == v2.skips,
-      s"append dropped the tip's skips/layout: $v3")
+    assert(v3.buckets == b && v3.skips == v2.skips,
+      s"append dropped the tip's skips/bucket count: $v3")
     assert(fp(VersionedStore.readAt(spark, root, 3)) ==
       fp(rows(sb, 100, 10).unionByName(rows(sb, 200, 10))),
       "append after a bucket delete resurrected the skipped bucket")
     // and the pre-delete history still reads both buckets
     assert(fp(VersionedStore.readAt(spark, root, 1)) ==
       fp(rows(sa, 0, 10).unionByName(rows(sb, 100, 10))))
-    // a mixed layout request fails loudly — layout is fixed at creation
-    intercept[IllegalArgumentException] {
-      VersionedStore.append(rows(sb, 300, 1), root, layout = None)
-    }
   }
 
   test("corrupt skip and layout manifest lines fail with the corrupt-manifest signal") {
@@ -310,7 +306,9 @@ class VersionedStoreSpec extends SparkSuite {
       java.nio.file.Files.delete(bad)
     }
     // a skip line with no '/' separator — same loud signal as a torn 'op'
-    expectCorrupt("op delete", "dir d1", "skip nopartition")
+    expectCorrupt("op delete", "layout bucketed 64", "dir d1", "skip nopartition")
+    // no layout line: the bucket count a read prunes with is unknown
+    expectCorrupt("op append", "dir d1")
     // a non-integer and a non-positive bucket count on the layout line
     expectCorrupt("op append", "layout bucketed x", "dir d1")
     expectCorrupt("op append", "layout bucketed 0", "dir d1")
