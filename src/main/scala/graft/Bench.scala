@@ -73,7 +73,8 @@ object Bench {
     * Keys are the full `q_*` query names under `"queries"`; "partial" and
     * "failed" stay always-present (r6 ADVICE: omitted keys NPE a
     * presence-asserting parser). Strings that can come from outside the
-    * roster (the sf dir, the sidecar path) are JSON-escaped.
+    * roster (the sf dir, the sidecar path) are JSON-escaped. `scale`: the
+    * [[scaleLine]] object, sidecar-only like the medians.
     */
   private[graft] def formatLine(ts: Seq[(String, Double)], failed: Seq[String],
                                 sfDir: String, partial: Boolean,
@@ -82,7 +83,8 @@ object Bench {
                                 overflow: Int = 0,
                                 totalOverride: Option[Double] = None,
                                 calibration: Option[(Double, Double, Int)] = None,
-                                sidecar: Option[String] = None): String = {
+                                sidecar: Option[String] = None,
+                                scale: Option[String] = None): String = {
     val qs = ts.map { case (k, v) => "\"" + k + "\":" + fmt(v, dp) }
       .mkString("{", ",", "}")
     val med = medians.fold("") { m =>
@@ -105,7 +107,8 @@ object Bench {
     // the sidecar path on the line (VERDICT r16 item 1 fix-note): any
     // reader of the stdout line can find the full-roster 2dp + medians
     // artifact without knowing the SPARK_GRAFT_BENCH_OUT convention
-    val side = sidecar.fold("")(p => s""","sidecar":${jsonStr(p)}""")
+    val side = sidecar.fold("")(p => s""","sidecar":${jsonStr(p)}""") +
+      scale.fold("")(l => s""","scale":$l""")
     val pf = s""","partial":$partial""" +
       failed.map("\"" + _ + "\"").mkString(""","failed":[""", ",", "]")
     s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$ovf$med$cal$side,"sf":${jsonStr(sfDir)}$pf}"""
@@ -192,7 +195,7 @@ object Bench {
             else (s(s.size / 2 - 1) + s(s.size / 2)) / 2)
     }.toMap
     val sidecar = formatLine(snap, failed, sfDir, partial, dp = 2,
-      medians = Some(medians), calibration = cal)
+      medians = Some(medians), calibration = cal, scale = scaleResult)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     // FULL-ROSTER full-name map as a second stdout line, ahead of the
     // contract line (VERDICT r16 item 1): a full-log reader gets every
@@ -250,10 +253,12 @@ object Bench {
     * invisible in the contract number. This tier re-times the heaviest
     * pure-compute kernels on a ×MULT self-multiplied copy of their
     * inputs (ids offset, the ScaleProbe recipe; documents/events only —
-    * every listed query reads nothing else) and prints ONE extra
-    * same-format JSON line ({"metric":"scale", "mult":M, ...}) BEFORE
-    * the contract line, so the driver's 32-core and 8-core runs yield
-    * per-query 8c/32c ratios at a volume where compute dominates.
+    * every listed query reads nothing else) and records ONE extra
+    * same-format JSON object ([[scaleLine]]) under the sidecar's
+    * `"scale"` key (also printed to stdout ahead of the contract line,
+    * for full-log readers; the driver's tail window never holds it), so
+    * 32-core and 8-core runs yield per-query 8c/32c ratios at a volume
+    * where compute dominates.
     *
     * Honesty properties: the ×MULT corpus is INPUT staging into a
     * per-process temp dir, rebuilt from the parquet sources every run
@@ -277,6 +282,20 @@ object Bench {
     "q_text_langid_ngram", "q_dedup_keepers", "q_text_tfidf",
     "q_dedup_clusters", "q_text_bm25", "q_dedup_minhash",
     "q_sessionize_hotkey")
+
+  /** The scale tier's result, once it ran: the sidecar carries it. */
+  @volatile private var scaleResult: Option[String] = None
+
+  /** The scale tier's JSON object: per-query seconds at 2dp, sorted. */
+  private[graft] def scaleLine(ts: Seq[(String, Double)], failed: Seq[String],
+                               skipped: Int, mult: Int, sfName: String): String = {
+    val qs = ts.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + fmt(v, 2) }
+      .mkString("{", ",", "}")
+    val fl = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    s"""{"metric":"scale","value":${fmt(ts.map(_._2).sum, 2)},"unit":"sec",""" +
+      s""""queries":$qs,"mult":$mult,"skipped":$skipped,"failed":$fl,""" +
+      s""""sf":${jsonStr(s"${sfName}x$mult")}}"""
+  }
 
   private def runScaleTier(spark: SparkSession, sfDir: String,
                            noopSink: Boolean): Unit = {
@@ -325,14 +344,11 @@ object Bench {
             }
           }
         if (out.nonEmpty) {
-          val qs = out.sortBy(_._1)
-            .map { case (k, v) => "\"" + k + "\":" + fmt(v, 2) }
-            .mkString("{", ",", "}")
-          val fl = failedScale.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-          println(s"""{"metric":"scale","value":${fmt(out.map(_._2).sum, 2)},""" +
-            s""""unit":"sec","queries":$qs,"mult":$mult,""" +
-            s""""skipped":${scaleQueries.size - out.size - failedScale.size},""" +
-            s""""failed":$fl,"sf":"${new java.io.File(sfDir).getName}x$mult"}""")
+          val line = scaleLine(out.toSeq, failedScale.toSeq,
+            scaleQueries.size - out.size - failedScale.size, mult,
+            new java.io.File(sfDir).getName)
+          scaleResult = Some(line)
+          println(line)
           System.out.flush()
         }
       } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
@@ -489,8 +505,8 @@ object Bench {
     (1 to 3).foreach(_ => calSamples.add(calSample(spark)))
     rosterComplete = true
 
-    // compute tier at ×MULT volume (prints its own "scale" line) runs
-    // BEFORE emit so the contract line stays the LAST JSON line in the
+    // compute tier at ×MULT volume runs BEFORE emit, so its result rides
+    // in the sidecar and the contract line stays the LAST JSON line in the
     // driver's tail window
     runScaleTier(spark, sfDir, noopSink)
 

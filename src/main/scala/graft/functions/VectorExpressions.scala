@@ -252,8 +252,8 @@ object VectorExpressions {
     * norm aggregate sat INSIDE the transform lambda — O(dim²) when the
     * higher-order context evaluates interpreted) into every per-code
     * residual tree with no CSE across the m·levels codes — measured
-    * 4 ms/row at the defaults, 8 s to encode a 2000-row corpus
-    * (PqTimeProbe). This node does the inherent
+    * 4 ms/row at the defaults, 8 s to encode a 2000-row corpus (sf0.1,
+    * local[32]). This node does the inherent
     * O(dim + levels·m·ksub·dsub) flops in one tight JVM pass (~µs/row),
     * carries the codebooks as ONE reference object (O(1) plan size),
     * and stays inside whole-stage codegen.

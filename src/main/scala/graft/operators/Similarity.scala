@@ -575,7 +575,7 @@ object Similarity {
     * pass, codebooks as one reference object — the Column composition
     * this replaced re-derived the unit vector (with its norm aggregate
     * trapped inside an interpreted lambda, O(dim²)) for every one of
-    * the m·levels codes, measured 4 ms/row (PqTimeProbe r13). Map-only.
+    * the m·levels codes, measured 4 ms/row at sf0.1. Map-only.
     */
   def pqEncodeResidual(df: DataFrame, books: Seq[Array[Array[Array[Double]]]],
                        idCol: String = "vec_id",
@@ -607,8 +607,9 @@ object Similarity {
     * depth: the ADC score sums one LUT per level, so the scan stays
     * m·levels byte lookups per vector. Two levels lifted the
     * near-uniform-corpus mean recall@10 from 0.505 to 0.695 at the
-    * defaults (three: 0.815 — PqLevelsProbe r13; the uniform regime is
-    * where single-level subspace codebooks are structurally blind).
+    * defaults (three: 0.815; sf0.001 embeddings, 20 queries; the uniform
+    * regime is where single-level subspace codebooks are structurally
+    * blind).
     * `levels = 1` is the r12 single-level behavior, kept as the recall
     * gate's starved control.
     */
@@ -625,7 +626,7 @@ object Similarity {
     // higher-order zip_with/aggregate context is INTERPRETED, so every
     // (vector × query) row would re-derive its codes through the full
     // nested quantizer expressions: measured 8.6s vs 0.3s for the whole
-    // ADC stage at sf0.1 (PqTimeProbe, r13). Production persists this
+    // ADC stage at sf0.1 (local[32]). Production persists this
     // frame once at index build; here it lives for the call.
     val codes = pqEncodeResidual(df, books, idCol, vecCol).trackedCache
     // bounded query-vector fetch (the bruteForceTopK precedent), then the

@@ -1,9 +1,15 @@
 package graft.sources
 
 import graft.model.Canon._
+import java.util.concurrent.{Callable, Executors}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.column.statistics.LongStatistics
+import org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField}
+import scala.jdk.CollectionConverters._
 
 /** S3-S5: the storage layer — partitioned Parquet replacing the reference's
   * Irmin/Git shard store + interval index (SURVEY.md §1.3-1.4, §4).
@@ -37,7 +43,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField}
   * This object is the ONE owner of the on-disk layout: the partitioning,
   * the partition columns and their types, and the partition dir names.
   * Every other module ([[TieredStore]]'s pruned reads and deletes,
-  * [[VersionedStore]]'s skip lines and read schema) asks these functions,
+  * [[VersionedStore]]'s skip and `max` lines and read schema) asks these functions,
   * passing the bucket count the data was written with (a
   * [[VersionedStore]] manifest records it per commit).
   */
@@ -102,14 +108,20 @@ object ShardStore {
                 fromUs: Long, toUs: Long): DataFrame = {
     val raw = spark.read.parquet(path)
     val pruned = raw
-      .filter(col(DAY) >= date_format(timestamp_micros(lit(fromUs)), "yyyy-MM-dd"))
-      .filter(col(DAY) <= date_format(timestamp_micros(lit(toUs)), "yyyy-MM-dd"))
+      .filter(daysFrom(fromUs))
+      .filter(col(DAY) <= dayOf(toUs))
       .filter(col(TS_US).between(fromUs, toUs))
     val bySeries =
       if (ids.isEmpty) pruned
       else pruned.filter(partitionsOf(ids, Buckets)).filter(col(SERIES).isin(ids: _*))
     bySeries.select(col(SERIES), col(TS_US), col(TAG), col(VALUE), col(RID))
   }
+
+  private def dayOf(us: Long): Column = date_format(timestamp_micros(lit(us)), "yyyy-MM-dd")
+
+  /** Filter on the `day` partition column keeping the days that can hold a
+    * timestamp at or past `fromUs`. */
+  def daysFrom(fromUs: Long): Column = col(DAY) >= dayOf(fromUs)
 
   /** Filter on the top-level partition column selecting every partition
     * that holds `ids`: their buckets whole, co-resident series included. */
@@ -127,6 +139,44 @@ object ShardStore {
     * no IO. */
   def partitionsNamed(names: Seq[String]): Column =
     col(BUCKET).isin(names.map(_.stripPrefix(BUCKET + "=").toLong): _*)
+
+  /** The newest `ts_us` in each top-level partition of the files under
+    * `path`, keyed by [[partitionNames]]' encoding: the max of the
+    * footers' column statistics, so no Spark job runs. It walks
+    * `bucket=<b>/day=<d>` with `listStatus`; empty when no file was
+    * written. A footer without `ts_us` statistics gives `Long.MaxValue`,
+    * a bound no buffered point can pass. The buckets are walked on up to
+    * [[FooterThreads]] threads: a bulk write or a compaction leaves one
+    * file per (bucket, day). */
+  private[sources] def partitionMaxTs(spark: SparkSession, path: String): Seq[(String, Long)] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def children(p: Path, key: String) =
+      fs.listStatus(p).toSeq.filter(st => st.isDirectory && st.getPath.getName.startsWith(key + "="))
+    def fileMax(st: org.apache.hadoop.fs.FileStatus): Long =
+      ParquetFileReader.readFooter(conf, st, NO_FILTER).getBlocks.asScala.iterator
+        .map(_.getColumns.asScala.find(_.getPath.toDotString == TS_US).map(_.getStatistics) match {
+          case Some(s: LongStatistics) if s.hasNonNullValue => s.getMax
+          case _ => Long.MaxValue
+        }).foldLeft(Long.MinValue)(math.max)
+    def bucketMax(b: Path): Option[Long] = {
+      val files = children(b, DAY).flatMap(d => fs.listStatus(d.getPath))
+        .filter(_.getPath.getName.endsWith(".parquet"))
+      if (files.isEmpty) None else Some(files.map(fileMax).max)
+    }
+    if (!fs.exists(root)) Nil
+    else {
+      val buckets = children(root, BUCKET).map(_.getPath)
+      val pool = Executors.newFixedThreadPool(math.max(1, math.min(FooterThreads, buckets.size)))
+      try buckets.map(b => b.getName -> pool.submit(new Callable[Option[Long]] {
+          def call() = bucketMax(b)
+        })).flatMap { case (name, m) => m.get.map(name -> _) }.sortBy(_._1)
+      finally pool.shutdown()
+    }
+  }
+
+  private val FooterThreads = 8
 
   /** The partition columns beyond the canonical schema, with their types. */
   val partitionFields: Seq[StructField] =

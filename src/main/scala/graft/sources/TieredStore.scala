@@ -4,7 +4,7 @@ import graft.functions.Tags
 import graft.model.Canon
 import graft.model.Canon._
 import graft.operators.{TimeSeries => TS}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CheckpointBridge
 
@@ -32,8 +32,8 @@ import org.apache.spark.sql.graft.CheckpointBridge
   * and (b) truncates the plan to one `LogicalRDD` leaf — plan depth and
   * block count stay CONSTANT over an unbounded micro-batch stream instead
   * of growing one union/filter layer per batch. Qualification reads the
-  * driver-side buffer stats (below) and runs no Spark job: a series whose
-  * buffered min ts lies beyond its disk upper bound qualifies. The M2
+  * driver-side buffer stats (below): a series whose buffered min ts lies
+  * beyond its disk upper bound qualifies with no Spark job. The M2
   * merge is `union` + the same `WindowGroupLimit` top-n every flat read
   * uses — Catalyst, not hand-merging.
   *
@@ -64,19 +64,28 @@ import org.apache.spark.sql.graft.CheckpointBridge
   * contract.
   *
   * Driver-side state is the metadata the reference's membuf holds: per
-  * series, the disk tier's (min ts, max ts) — membufq's cached
-  * `disk_range` (`src/membufq.re:45-47`) — and the buffer's (count, min
-  * ts, max ts) — its cached queue length and range. ONE aggregate over
-  * each new buffer checkpoint refreshes the buffer stats; a flush or sync
-  * trims them exactly with no job. So the spill check, the `last n` tier
-  * decision, the flush bounds and [[bufferedCount]] read maps instead of
-  * running Spark jobs. The buffer stats are exact for every buffered
-  * series: the buffer is bounded by the spill threshold, and the refresh
-  * collects one row per buffered series anyway. Only the disk bounds are
-  * CAPPED, at `maxTrackedSeries` entries, because the disk tier has no
-  * size limit: past the cap a series' bounds are untracked, and its reads
-  * degrade to the always-correct merge/flush paths (reads stay flat,
-  * memory stays bounded, answers stay right).
+  * series, the buffer's (count, min ts, max ts) — its cached queue length
+  * and range — and the cached tip manifest of the disk tier. ONE
+  * aggregate over each new buffer checkpoint refreshes the buffer stats;
+  * a flush or sync trims them exactly with no job. The buffer stats are
+  * exact for every buffered series: the buffer is bounded by the spill
+  * threshold, and the refresh collects one row per buffered series
+  * anyway. The disk side of membufq's cached `disk_range`
+  * (`src/membufq.re:45-47`) is the tip's `max` lines: the newest
+  * timestamp of each (data dir, bucket), written beside the data as the
+  * reference's interval index is (`src/index.re`). A series' disk bound
+  * is its bucket's max over the live dirs
+  * ([[VersionedStore.Commit.maxTsOf]]), never below the series' own, so
+  * a buffer past it is past the series' disk rows. A buffer that fails
+  * it may only share its bucket with a series whose clock runs ahead:
+  * one job over the recent days of those buckets finds each failing
+  * series' own newest disk row, and only a true overlap is flushed. So
+  * the decisions are the reference's per-series ones; a bucket mate's
+  * newer clock costs that job, never a flush. The spill check, the
+  * `last n` tier decision for a buffer past its bucket's bound, the
+  * flush bounds and [[bufferedCount]] read driver state instead of
+  * running Spark jobs, reopen reads the manifest and no data, and the
+  * driver holds nothing per disk series.
   *
   * Scale notes (100 TB): the memory tier is an ingest BUFFER — bounded by
   * the spill threshold (reference `--shard-size`), not by corpus size; every
@@ -107,8 +116,7 @@ import org.apache.spark.sql.graft.CheckpointBridge
   * lands at cached-tip + 1, so the manifest CAS additionally rejects any
   * out-of-band writer racing the same root.
   */
-final class TieredStore(spark: SparkSession, val root: String,
-                        val maxTrackedSeries: Int = TieredStore.DefaultMaxTrackedSeries) {
+final class TieredStore(spark: SparkSession, val root: String) {
   import TieredStore._
 
   @volatile private var mem: DataFrame = emptyCanon(spark)
@@ -119,64 +127,29 @@ final class TieredStore(spark: SparkSession, val root: String,
   /** Superseded buffer checkpoints, oldest first; see the snapshot
     * contract in the class doc. */
   private val retiredFrames = scala.collection.mutable.Queue.empty[DataFrame]
-  /** Per-series (min ts, max ts) of everything flushed to disk; the analog
-    * of the membuf's cached `disk_range` (`src/membufq.re:45-47`).
-    */
-  private val diskBounds = scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
-  /** True once any series' bounds were dropped on the cap: an ABSENT
-    * bounds entry then means "unknown", not "no disk data". */
-  @volatile private var boundsOverflow = false
   /** Cached tip of the disk tier's manifest chain — refreshed after every
-    * committed mutation, so reads plan without re-listing manifests. */
+    * committed mutation, so reads plan without re-listing manifests. Its
+    * `max` lines are the disk bounds. */
   @volatile private var tip: Option[VersionedStore.Commit] = None
 
-  // ---- open/reopen: collect any crashed writer's orphan data dirs, then
-  // rebuild the reference's startup membuf metadata for a pre-existing
-  // root: disk presence plus per-series bounds, via ONE column-pruned
-  // (series, ts_us) aggregate whose output is series-cardinality-bounded
-  // (and capped) — without it a reopened store would treat its disk tier
-  // as empty and mis-qualify buffers for the M1 memory-only path. A fresh
-  // scratch root (every streaming/test store) skips all of this on a
-  // single manifest listing. No roll-forward exists to run: the manifest
-  // CAS left every prior mutation either fully committed or fully absent.
+  // ---- open/reopen: read the tip manifest, which carries the disk
+  // bounds, and collect any crashed writer's orphan data dirs. No Spark
+  // job runs and no data is read. No roll-forward exists to run: the
+  // manifest CAS left every prior mutation either fully committed or
+  // fully absent.
   locally {
     refreshTip()
-    tip.foreach { t =>
-      VersionedStore.sweepOrphanData(spark, root)
-      if (t.dirs.nonEmpty) hydrateBounds()
-    }
+    if (tip.nonEmpty) VersionedStore.sweepOrphanData(spark, root)
   }
 
   private def refreshTip(): Unit =
     tip = VersionedStore.versions(spark, root).lastOption
 
-  /** Cap-bounded reopen hydration: per-series bounds via one aggregate,
-    * but the COLLECT is limited to maxTrackedSeries+1 rows — a store
-    * holding millions of series must not pull one row per series to the
-    * driver just to discard the overflow (every other bounds call
-    * site is buffer- or ids-bounded). On overflow the untracked series
-    * degrade to the conservative merge/flush paths via boundsOverflow,
-    * exactly like cap eviction during normal operation. */
-  private def hydrateBounds(): Unit = {
-    // clamp before the +1 (Int.MaxValue would overflow to a negative
-    // limit); the orderBy makes WHICH series get tracked bounds under a
-    // partial cap deterministic (series order), not plan-order luck
-    val cap = math.min(maxTrackedSeries, Int.MaxValue - 1)
-    val rows = readStore.groupBy(SERIES)
-      .agg(min(TS_US).as("lo"), max(TS_US).as("hi"))
-      .orderBy(SERIES)
-      .limit(cap + 1)
-      .collect()
-    rows.take(cap).foreach { r =>
-      diskBounds.put(r.getString(0), (r.getLong(1), r.getLong(2)))
-    }
-    if (rows.length > cap) boundsOverflow = true
-  }
-
   private def canonSel(df: DataFrame): DataFrame =
     df.select(col(SERIES), col(TS_US), col(TAG), col(VALUE), col(RID))
 
-  /** Disk append as a manifest version. */
+  /** Disk append as a manifest version; a frame that writes no file
+    * commits none. */
   private def appendStore(df: DataFrame): Unit = {
     VersionedStore.append(df, root)
     refreshTip()
@@ -229,11 +202,7 @@ final class TieredStore(spark: SparkSession, val root: String,
 
   /** Direct-to-disk append (the batch ingest path). An empty frame is a
     * no-op — no empty version bloating the chain. */
-  def appendDisk(df: DataFrame): Unit = this.synchronized {
-    val slice = canonSel(df)
-    val bounds = collectBounds(slice)
-    if (bounds.nonEmpty) { appendStore(slice); applyBounds(bounds) }
-  }
+  def appendDisk(df: DataFrame): Unit = this.synchronized { appendStore(canonSel(df)) }
 
   /** Buffer points in the memory tier (the reference's membuf,
     * `src/membufq.re:9`). */
@@ -257,47 +226,22 @@ final class TieredStore(spark: SparkSession, val root: String,
     * literals>)` filters is exactly the Catalyst plan-size pathology the
     * many-series probe exists to rule out (1M series → a
     * hundreds-of-MB expression tree pinning the driver). The whole
-    * buffer moves as one unfiltered write; the bounds come from the
-    * buffer stats.
+    * buffer moves as one unfiltered write.
     */
   def sync(): Unit = this.synchronized {
     if (!memEmpty) {
-      appendStore(mem); applyBounds(memBounds(memStats.keys))
+      appendStore(mem)
       clearMem()
     }
   }
 
   /** Move the named series' buffered points to disk. Series with nothing
     * buffered cost nothing: no commit, no checkpoint. */
-  private def flushLocked(ids: Seq[String]): Unit = {
-    val bounds = memBounds(ids)
-    if (bounds.nonEmpty) {
+  private def flushLocked(ids: Seq[String]): Unit =
+    if (ids.exists(memStats.contains)) {
       appendStore(mem.filter(col(SERIES).isin(ids: _*)))
-      applyBounds(bounds)
       memStats = memStats -- ids
       if (memEmpty) clearMem() else swapMem(mem.filter(!col(SERIES).isin(ids: _*)))
-    }
-  }
-
-  /** Buffered (series, min ts, max ts) of the buffered `ids`. */
-  private def memBounds(ids: Iterable[String]): Seq[(String, Long, Long)] =
-    ids.toSeq.distinct.flatMap(s => memStats.get(s).map(st => (s, st.minTs, st.maxTs)))
-
-  /** Per-series (min, max) ts of a slice — bounded by series cardinality,
-    * capped at maxTrackedSeries by [[applyBounds]]. Computed BEFORE the
-    * disk commit so an all-empty slice commits nothing. */
-  private def collectBounds(slice: DataFrame): Seq[(String, Long, Long)] =
-    slice.groupBy(SERIES).agg(min(TS_US), max(TS_US)).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-
-  private def applyBounds(rows: Seq[(String, Long, Long)]): Unit =
-    rows.foreach { case (s, lo, hi) =>
-      if (diskBounds.contains(s) || diskBounds.size < maxTrackedSeries)
-        diskBounds.updateWith(s) {
-          case Some((l, h)) => Some((math.min(l, lo), math.max(h, hi)))
-          case None         => Some((lo, hi))
-        }
-      else boundsOverflow = true // untracked: this series degrades to M2/M3
     }
 
   /** Pruned disk read: the prune runs on each RAW relation (partition
@@ -315,17 +259,35 @@ final class TieredStore(spark: SparkSession, val root: String,
     tip.fold(emptyCanon(spark))(c => prunedCanon(c, raw =>
       raw.filter(ShardStore.partitionsOf(ids, c.buckets)).filter(col(SERIES).isin(ids: _*))))
 
-  /** Buffer lies STRICTLY beyond everything on disk for this series. A tie
-    * (buffer min ts == disk max ts) must NOT qualify: under (ts desc,
+  /** Buffer lies STRICTLY beyond the disk bound of this series' bucket. A
+    * tie (buffer min ts == disk max ts) must NOT qualify: under (ts desc,
     * rid desc) a disk row at the shared timestamp can outrank a buffered
-    * one, so ties take the always-correct merge/flush paths. A series with
-    * cap-evicted (unknown) bounds is conservatively not-beyond.
+    * one. A bucket no live dir holds has no disk bound. A buffer that
+    * fails goes to [[overlapping]], which decides for the series itself.
     */
   private def beyondDisk(s: String, st: MemStat): Boolean =
-    diskBounds.get(s) match {
-      case Some((_, hi)) => st.minTs > hi
-      case None          => !boundsOverflow
-    }
+    tip.flatMap(_.maxTsOf(s)).forall(st.minTs > _)
+
+  /** Of `ids`, whose buffers fail their bucket's bound, the ones with a
+    * disk row at or past their own buffered min ts: the buffers that
+    * truly overlap their series' disk range (the same tie rule as
+    * [[beyondDisk]]). The rest fail only because a bucket mate's clock
+    * runs ahead. One job with no shuffle: a scan of the ids' buckets in
+    * the dirs whose `max` figures reach the earliest buffered min, from
+    * that min's day on, whose per-series time bounds reach the row-group
+    * statistics, deduplicated per task.
+    */
+  private def overlapping(ids: Seq[String], stats: Map[String, MemStat]): Seq[String] = {
+    val lo = ids.map(stats(_).minTs).min
+    val t = tip.get
+    val c = t.copy(dirs = t.dirsReaching(ShardStore.partitionNames(ids, t.buckets), lo))
+    val hit = ids.map(s => col(SERIES) === s && col(TS_US) >= stats(s).minTs).reduce(_ || _)
+    val found = prunedCanon(c, raw => raw.filter(ShardStore.partitionsOf(ids, c.buckets))
+        .filter(ShardStore.daysFrom(lo)))
+      .filter(hit).select(SERIES).as(Encoders.STRING)
+      .mapPartitions(_.toSet.iterator)(Encoders.STRING).collect().toSet
+    ids.filter(found)
+  }
 
   /** Q1 `last n` through the tier decision (`timeseries.re:357-382`):
     * per queried series — M1 memory-only when the beyond-disk buffer
@@ -333,18 +295,21 @@ final class TieredStore(spark: SparkSession, val root: String,
     * M3 flush-then-disk when it overlaps the disk range. The three branches
     * union into one declarative plan; a query whose every series takes M1
     * plans NO disk scan at all (asserted by `TieredStoreSpec`). The
-    * decision reads the driver-side stats, so a read that flushes nothing
-    * runs no job until the frame is evaluated. A series with no stats
-    * has nothing buffered: it takes the M2 merge, which finds no buffered
-    * rows and reads disk alone.
+    * decision reads the driver-side stats and the tip's bucket bounds, so
+    * a read whose buffers all lie past their buckets' bounds runs no job
+    * until the frame is evaluated; the buffers that do not cost one
+    * [[overlapping]] job, which sends only true overlaps to M3. A series
+    * with no stats has nothing buffered: it takes the M2 merge, which
+    * finds no buffered rows and reads disk alone.
     */
   def readLast(ids: Seq[String], n: Int): DataFrame = this.synchronized {
     require(ids.nonEmpty, "tiered readLast needs explicit series ids")
     val stats = memStats
-    val qualified = ids.filter(s => stats.get(s).forall(beyondDisk(s, _)))
+    val unsure = ids.filter(s => stats.get(s).exists(!beyondDisk(s, _)))
+    val toFlush = if (unsure.isEmpty) Nil else overlapping(unsure.distinct, stats)
+    val qualified = ids.filterNot(toFlush.contains)
     val fast = qualified.filter(s => stats.get(s).exists(_.count >= n))
     val merge = qualified.diff(fast)
-    val toFlush = ids.diff(qualified)
     if (toFlush.nonEmpty) flushLocked(toFlush)
     val branches = Seq(
       if (fast.isEmpty) None else Some(TS.readLast(mem, fast, n)),
@@ -385,9 +350,9 @@ final class TieredStore(spark: SparkSession, val root: String,
     * the store is carried by manifest reference, so the cost scales with
     * the affected partitions' data, not store size. The deleted rows
     * stay readable at earlier versions until [[compactDisk]] expires
-    * them. Per-series disk bounds are recomputed from the rewritten
-    * partitions (a shrunken range can re-qualify future buffers for the
-    * M1 fast path).
+    * them. The survivors dir's `max` lines replace the skipped
+    * partitions' (a shrunken range can re-qualify future buffers for the
+    * M1 fast path) with no extra job.
     */
   def delete(ids: Seq[String], fromUs: Long, toUs: Long,
              pipe: Seq[Tags.Group] = Nil): Long = this.synchronized {
@@ -406,9 +371,6 @@ final class TieredStore(spark: SparkSession, val root: String,
     VersionedStore.deletePartitions(affected.filter(!matched), root,
       ShardStore.partitionNames(ids, c.buckets), c.version)
     refreshTip()
-    ids.foreach(diskBounds.remove)
-    // an all-partitions-skipped tip still plans a (cheap, empty) scan
-    if (tip.exists(_.dirs.nonEmpty)) applyBounds(collectBounds(disk(ids)))
     deleted
   }
 
@@ -478,9 +440,6 @@ final class TieredStore(spark: SparkSession, val root: String,
     * buffer stats, no job. */
   def bufferedCount(): Long = memStats.valuesIterator.map(_.count).sum
 
-  /** Whether any series' bounds were dropped on the cap (tests). */
-  private[graft] def boundsOverflowed: Boolean = boundsOverflow
-
   /** The current buffer checkpoint (tests). */
   private[graft] def buffer: DataFrame = mem
 
@@ -488,9 +447,8 @@ final class TieredStore(spark: SparkSession, val root: String,
   private[graft] def memStatsView: Map[String, (Long, Long, Long)] =
     memStats.map { case (s, st) => s -> (st.count, st.minTs, st.maxTs) }
 
-  /** Buffer plan depth + tracked-bounds size, for lifecycle tests. */
-  private[graft] def lifecycleStats: (Int, Int) =
-    (memPlanDepth(mem.queryExecution.analyzed), diskBounds.size)
+  /** Buffer plan depth, for lifecycle tests. */
+  private[graft] def lifecycleStats: Int = memPlanDepth(mem.queryExecution.analyzed)
 
   private def memPlanDepth(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int =
     1 + (if (p.children.isEmpty) 0 else p.children.map(memPlanDepth).max)
@@ -534,12 +492,6 @@ object TieredStore {
     * many subsequent mutations, then fails loudly if still unevaluated.
     */
   val RetireDepth = 8
-
-  /** Cap on driver-tracked per-series disk bounds (the membuf metadata).
-    * ~48 bytes/entry → a few tens of MB at the cap; beyond it new series
-    * degrade to the merge/flush read paths instead of growing the map.
-    */
-  val DefaultMaxTrackedSeries: Int = 1 << 20
 
   /** One series' buffered length and time range. */
   private final case class MemStat(count: Long, minTs: Long, maxTs: Long)

@@ -49,7 +49,10 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * The manifest format is deliberately line-oriented text (`op <op>`,
   * `layout bucketed <n>` — mandatory: the bucket count the version's dirs
   * were written with —, one `dir <name>` per live directory, one
-  * `skip <dir>/<partition>` per excluded partition) — no JSON parser
+  * `skip <dir>/<partition>` per excluded partition, and one
+  * `max <dir>/<partition> <ts_us>` per partition a dir holds — the
+  * newest timestamp written there, read from the Parquet footers at
+  * write time; every dir has at least one) — no JSON parser
   * in the commit path, trivially diffable, and versioned by file name
   * (`v%08d.txt`). Each manifest is SELF-CONTAINED (it names the full live
   * dir set, not a delta), so expiring old manifests never breaks newer
@@ -75,11 +78,36 @@ object VersionedStore {
     * staying KB-sized). `buckets` is the bucket count of the dirs'
     * [[ShardStore]] `bucket=/day=` layout: a new chain takes
     * [[ShardStore.Buckets]], and every later commit carries its parent's.
+    * `maxes` (dir, partition, newest `ts_us`) are the `max` lines: every
+    * dir keeps its own figures for as long as it is live, skipped
+    * partitions included.
     */
   case class Commit(version: Int, op: String, dirs: Seq[String],
-                    skips: Seq[(String, String)], buckets: Int) {
+                    skips: Seq[(String, String)], buckets: Int,
+                    maxes: Seq[(String, String, Long)]) {
     def skipsFor(dir: String): Seq[String] =
       skips.collect { case (d, p) if d == dir => p }
+
+    /** The newest `ts_us` this version can hold for `series`: the max of
+      * the `max` figures of the series' bucket over the unskipped dirs,
+      * None when no live dir holds that bucket. Never below the series'
+      * own newest point, which shares the bucket with other series. */
+    def maxTsOf(series: String): Option[Long] =
+      liveMax.get(ShardStore.partitionNames(Seq(series), buckets).head)
+
+    /** The dirs whose `max` figure for one of `partitions`, unskipped,
+      * is at or past `ts`: the only dirs that can hold a row there from
+      * `ts` on. */
+    def dirsReaching(partitions: Seq[String], ts: Long): Seq[String] = {
+      val (ps, skipped) = (partitions.toSet, skips.toSet)
+      maxes.collect { case (d, p, m) if ps(p) && m >= ts && !skipped((d, p)) => d }.distinct
+    }
+
+    private lazy val liveMax: Map[String, Long] = {
+      val skipped = skips.toSet
+      maxes.collect { case (d, p, ts) if !skipped((d, p)) => (p, ts) }
+        .groupMapReduce(_._1)(_._2)(math.max)
+    }
   }
 
   private val MANIFESTS = "_manifests"
@@ -127,50 +155,60 @@ object VersionedStore {
         val lines =
           try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
           finally in.close()
-        Commit(n.stripPrefix("v").stripSuffix(".txt").toInt,
+        // `<dir>/<partition>`: dir names carry no '/', partition names may
+        // carry '=' — split on the FIRST separator only
+        def dirPart(l: String, s: String): (String, String) = {
+          val i = s.indexOf('/')
+          if (i <= 0) corrupt(s"bad ${l.takeWhile(_ != ' ')} line: $l")
+          (s.substring(0, i), s.substring(i + 1))
+        }
+        val c = Commit(n.stripPrefix("v").stripSuffix(".txt").toInt,
           lines.find(_.startsWith("op ")).map(_.stripPrefix("op "))
             .getOrElse(corrupt("no 'op' line — a torn commit?")),
           lines.filter(_.startsWith("dir ")).map(_.stripPrefix("dir ")),
-          lines.filter(_.startsWith("skip ")).map { l =>
-            val s = l.stripPrefix("skip ")
-            val i = s.indexOf('/') // dir names carry no '/', partition
-            // names may carry '=' — split on the FIRST separator only
-            if (i <= 0) corrupt(s"bad skip line: $l")
-            (s.substring(0, i), s.substring(i + 1))
-          },
+          lines.filter(_.startsWith("skip ")).map(l => dirPart(l, l.stripPrefix("skip "))),
           lines.collectFirst { case l if l.startsWith("layout bucketed ") =>
             l.stripPrefix("layout bucketed ").trim }
             .map(s => s.toIntOption.filter(_ > 0)
               .getOrElse(corrupt(s"bad layout line: 'layout bucketed $s'")))
-            .getOrElse(corrupt("no 'layout bucketed' line")))
+            .getOrElse(corrupt("no 'layout bucketed' line")),
+          lines.filter(_.startsWith("max ")).map { l =>
+            val s = l.stripPrefix("max ")
+            val j = s.lastIndexOf(' ')
+            val (d, p) = dirPart(l, if (j < 0) "" else s.substring(0, j))
+            (d, p, s.substring(j + 1).toLongOption.getOrElse(corrupt(s"bad max line: $l")))
+          })
+        val withMax = c.maxes.map(_._1).toSet
+        c.dirs.find(!withMax(_)).foreach(d => corrupt(s"dir $d has no 'max' line"))
+        c
       }
   }
 
-  private[graft] def commitAt(spark: SparkSession, root: String, v: Int,
-                              op: String, dirs: Seq[String],
-                              skips: Seq[(String, String)], buckets: Int): Int = {
+  /** Publish `c` as the manifest of version `c.version`. */
+  private[graft] def commitAt(spark: SparkSession, root: String, c: Commit): Int = {
     val fs = fsOf(spark, root)
     val mdir = new Path(root, MANIFESTS)
     fs.mkdirs(mdir)
     val txn = java.util.UUID.randomUUID().toString
-    val tmp = new Path(mdir, f".v$v%08d-$txn.tmp")
-    val dest = manifestPath(root, v)
+    val tmp = new Path(mdir, f".v${c.version}%08d-$txn.tmp")
+    val dest = manifestPath(root, c.version)
     // durable manifest bytes before the CAS publish: the link/rename can
     // be journaled ahead of the data blocks, and a zero-length manifest
     // would read as an empty version — silent history corruption
     // (see DurableWrite)
     DurableWrite.write(fs, tmp,
-      (Seq(s"op $op", s"layout bucketed $buckets") ++
-        dirs.map("dir " + _) ++
-        skips.map { case (d, p) => s"skip $d/$p" } :+ s"txn $txn")
+      (Seq(s"op ${c.op}", s"layout bucketed ${c.buckets}") ++
+        c.dirs.map("dir " + _) ++
+        c.skips.map { case (d, p) => s"skip $d/$p" } ++
+        c.maxes.map { case (d, p, ts) => s"max $d/$p $ts" } :+ s"txn $txn")
         .mkString("\n").getBytes("UTF-8"))
     if (!publishExclusive(spark, fs, tmp, dest)) {
       fs.delete(tmp, false)
       throw new ConcurrentCommitException(
-        s"version $v was committed by a concurrent writer while this " +
-        s"$op was in flight; the chain is intact — reload and retry")
+        s"version ${c.version} was committed by a concurrent writer while this " +
+        s"${c.op} was in flight; the chain is intact — reload and retry")
     }
-    v
+    c.version
   }
 
   /** Atomically publish `tmp` as `dest`, failing (false) when `dest`
@@ -203,25 +241,23 @@ object VersionedStore {
 
   /** Write `df` as a fresh immutable data dir for version `v` over
     * `buckets` buckets ([[ShardStore]] does the actual write — one write
-    * path for versioned and tiered stores); returns the dir name,
-    * or None when the frame was empty (an empty partitioned parquet write
-    * emits no schema-bearing files, so an empty mutation commits a
-    * manifest without a data dir — still a real version).
+    * path for versioned and tiered stores); returns the version's commit
+    * holding only that dir and its `max` figures, or no dir when the
+    * frame was empty (an empty partitioned parquet write emits no
+    * schema-bearing files; its staging dir is removed).
     */
   private def writeData(df: DataFrame, root: String, v: Int, op: String,
-                        buckets: Int): Option[String] = {
+                        buckets: Int): Commit = {
     // the attempt-unique suffix keeps two writers staging the same version
     // from overwriting each other's data dir before the manifest CAS runs;
     // a losing attempt's dir is simply never referenced (orphaned)
     val name = f"d$v%08d-$op-${java.util.UUID.randomUUID().toString.take(8)}"
     val path = dataPath(root, name)
     ShardStore.append(df, path, buckets)
-    val fs = fsOf(df.sparkSession, root)
-    val it = fs.listFiles(new Path(path), true)
-    var hasData = false
-    while (!hasData && it.hasNext)
-      hasData = it.next().getPath.getName.endsWith(".parquet")
-    if (hasData) Some(name) else None
+    val maxes = ShardStore.partitionMaxTs(df.sparkSession, path)
+    if (maxes.isEmpty) fsOf(df.sparkSession, root).delete(new Path(path), true)
+    Commit(v, op, if (maxes.isEmpty) Nil else Seq(name), Nil, buckets,
+      maxes.map { case (p, ts) => (name, p, ts) })
   }
 
   /** The bucket count of a commit on `tip`: the tip's, or a new chain's. */
@@ -230,20 +266,22 @@ object VersionedStore {
 
   /** Append canonical datapoints as a new version (delta write: only the
     * new rows touch disk). The manifest carries the parent's FULL
-    * visibility state forward — dirs, their skip exclusions and the
-    * bucket count: dropping the skips here would silently resurrect
-    * partitions a prior delete excluded (ADVICE r12).
+    * visibility state forward — dirs, their skip exclusions, their `max`
+    * figures and the bucket count: dropping the skips here would silently
+    * resurrect partitions a prior delete excluded (ADVICE r12). A frame
+    * that writes no file commits nothing and returns the tip's version
+    * (0 on a new root): an empty append adds no version to the chain.
     */
   def append(df: DataFrame, root: String): Int = {
     val spark = df.sparkSession
     // one chain snapshot feeds both the version number and the parent dir
     // set, so the manifest can never pair v with a different writer's tip
     val tip = versions(spark, root).lastOption
-    val buckets = bucketsAfter(tip)
-    val v = tip.map(_.version).getOrElse(0) + 1
-    val d = writeData(df, root, v, "append", buckets)
-    commitAt(spark, root, v, "append", tip.map(_.dirs).getOrElse(Seq.empty) ++ d,
-      tip.map(_.skips).getOrElse(Nil), buckets)
+    val parent = tip.fold(0)(_.version)
+    val w = writeData(df, root, parent + 1, "append", bucketsAfter(tip))
+    if (w.dirs.isEmpty) parent
+    else commitAt(spark, root, tip.fold(w)(t => w.copy(dirs = t.dirs ++ w.dirs,
+      skips = t.skips, maxes = t.maxes ++ w.maxes)))
   }
 
   /** D1 delete as a version: rewrite survivors into one fresh dir; the
@@ -265,10 +303,8 @@ object VersionedStore {
                     expectedVersion: Option[Int] = None): Int = {
     val spark = survivors.sparkSession
     val tip = versions(spark, root).lastOption
-    val buckets = bucketsAfter(tip)
     val v = expectedVersion.getOrElse(tip.map(_.version).getOrElse(0)) + 1
-    val d = writeData(survivors, root, v, "delete", buckets)
-    commitAt(spark, root, v, "delete", d.toSeq, Nil, buckets)
+    commitAt(spark, root, writeData(survivors, root, v, "delete", bucketsAfter(tip)))
   }
 
   /** PARTITION-SCOPED delete commit (the Iceberg partition-overwrite idea,
@@ -277,7 +313,8 @@ object VersionedStore {
     * delete — land in one fresh dir; every parent dir gets `skip` lines
     * excluding the `affected` top-level partition names (`bucket=<n>`,
     * [[ShardStore.partitionNames]] over the tip's bucket count); untouched
-    * partitions are carried by reference. Cost
+    * partitions are carried by reference. The survivors dir brings its own
+    * `max` figures, so a bucket's bound shrinks with the delete. Cost
     * tracks the affected partitions' data, never store size, and the
     * manifest CAS at `expectedVersion + 1` makes the whole mutation
     * all-or-nothing (see [[deleteRewrite]] for the snapshot discipline).
@@ -288,14 +325,14 @@ object VersionedStore {
     val tip = versions(spark, root).find(_.version == expectedVersion)
       .getOrElse(throw new IllegalArgumentException(
         s"expected version $expectedVersion is not committed under $root"))
-    val v = expectedVersion + 1
-    val d = writeData(survivors, root, v, "delete", tip.buckets)
+    val w = writeData(survivors, root, expectedVersion + 1, "delete", tip.buckets)
     // new skips: the affected partitions, excluded from every PARENT dir
     // (a skip on a dir that never held the partition filters nothing);
     // the survivors dir itself carries none, and the parent's own skips
     // ride along so earlier deletes stay deleted
     val skips = (tip.skips ++ tip.dirs.flatMap(dir => affected.map((dir, _)))).distinct
-    commitAt(spark, root, v, "delete", tip.dirs ++ d, skips, tip.buckets)
+    commitAt(spark, root, w.copy(dirs = tip.dirs ++ w.dirs, skips = skips,
+      maxes = tip.maxes ++ w.maxes))
   }
 
   /** File-hygiene compaction as a version: collapse the live dir set to
@@ -308,9 +345,8 @@ object VersionedStore {
   def compact(spark: SparkSession, root: String): Int = {
     val tip = versions(spark, root).lastOption
       .getOrElse(throw new IllegalArgumentException(s"no committed versions under $root"))
-    val v = tip.version + 1
-    val d = writeData(contentOf(spark, root, tip), root, v, "compact", tip.buckets)
-    commitAt(spark, root, v, "compact", d.toSeq, Nil, tip.buckets)
+    commitAt(spark, root,
+      writeData(contentOf(spark, root, tip), root, tip.version + 1, "compact", tip.buckets))
   }
 
   /** Expire history (the public VACUUM / expire-snapshots idea): drop

@@ -12,10 +12,9 @@ import org.apache.spark.sql.SparkSession
   * exchange — so the bench contract's batch default (= core count)
   * costs core-count state-store instances (open/commit per trigger) and
   * core-count sink files PER TRIGGER no matter how small the input.
-  * Measured in r16 (`R16StreamProbe`): state partitions 32→4 was −1.0s
-  * and the complete-mode snapshot rewrite −0.75s on the q_stream_crawl
-  * shape alone, all of it fixed per-trigger machinery over a few MB of
-  * input.
+  * Measured on the q_stream_crawl shape at sf0.1 (local[32]): state
+  * partitions 32→4 saved 1.0 s and the complete-mode snapshot rewrite
+  * 0.75 s, all of it fixed per-trigger machinery over a few MB of input.
   *
   * The derivation is volume-proportional — `ceil(inputBytes / target)`,
   * at least 1 — so it is 1-2 partitions at bench scale and 3,276,800 at

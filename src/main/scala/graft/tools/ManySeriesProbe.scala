@@ -5,11 +5,12 @@ import graft.sources.TieredStore
 import org.apache.spark.sql.functions._
 
 /** Many-series evidence for the tiered store (r7 VERDICT item 5): the
-  * driver-tracked metadata (per-series disk bounds, qualification
-  * verdicts) is bounded by SERIES CARDINALITY, which is fine for the
-  * reference's model (handfuls of series) but needs proof it neither
-  * grows without bound nor slows reads when someone points the store at
-  * millions of series.
+  * driver-side buffer stats are bounded by the BUFFERED series'
+  * cardinality and the disk bounds by buckets × data dirs (the
+  * manifest's `max` lines), which is fine for the reference's model
+  * (handfuls of series) but needs proof it neither grows without bound
+  * nor slows reads, nor flushes on a bucket mate's newer clock, when
+  * someone points the store at millions of series.
   *
   * Three measurements:
   *  1. **read flatness**: a fixed 1M-row memory buffer spread over 1k /
@@ -24,10 +25,16 @@ import org.apache.spark.sql.functions._
   *  2. **write cost at cardinality**: a 1k-series sync, then a 5k-series
   *     sync, delete and compaction — the `bucket=/day=` layout creates at
   *     most buckets × days dirs per write, whatever the series count.
-  *  3. **cap engagement**: a disk tier of 5k series under a 1k-entry
-  *     cap — the bounds map must stop at the cap, and a capped-out
-  *     (untracked) series must still read CORRECTLY via the conservative
-  *     merge path (the class contract: degrade, never be wrong).
+  *  3. **bucket-grain bounds under ingest**: 5k series on one clock,
+  *     posting 1-4 points a round through `ingest` with a spill threshold,
+  *     so bucket mates spill in different rounds and a spilled mate's
+  *     newer disk tail sits above a buffered mate's points. Random
+  *     `last 1` reads count how often the bucket's bound fails (a read
+  *     that runs the per-series overlap probe), how many reads flushed
+  *     (none may: every buffer lies past its own series' disk rows), how
+  *     many read memory only, and the p50s of the tier decision and of
+  *     the whole read; each answer must equal the flat read of the same
+  *     store.
   *
   * Run: sbt "runMain graft.tools.ManySeriesProbe"
   */
@@ -61,7 +68,7 @@ object ManySeriesProbe {
       val cnt = st.readLast(ids, 50).count()
       val wall = (System.nanoTime() - t0) / 1e9
       println(f"[mseries] series=$n%8d append_wall=$appendWall%6.2fs read_wall=$wall%6.2fs " +
-        s"rows=$cnt buffered=${st.bufferedCount()} tracked_bounds=${st.lifecycleStats._2}")
+        s"rows=$cnt buffered=${st.bufferedCount()}")
       if (st.bufferedCount() != rows) {
         println(s"[mseries] FAIL: buffer stats sum to ${st.bufferedCount()}, not $rows")
         failed = true
@@ -81,7 +88,7 @@ object ManySeriesProbe {
         val split = st.lengthSplit(Seq("s0")).select("disk_len")
           .collect()(0).getLong(0)
         println(f"[mseries] series=$n%8d sync_wall=$syncWall%6.1fs " +
-          s"(s0 disk_len=$split, bounds=${st.lifecycleStats._2} capped at ${st.maxTrackedSeries})")
+          s"(s0 disk_len=$split)")
         if (split != rows / n) { println(s"[mseries] FAIL: sync lost rows"); failed = true }
       }
       wall
@@ -162,31 +169,58 @@ object ManySeriesProbe {
       }
     }
 
-    // cap engagement on the disk tier
-    val capped = new TieredStore(spark,
-      java.nio.file.Files.createTempDirectory("mseries_cap").toString,
-      maxTrackedSeries = 1000)
-    val diskRows = spark.range(5000).select(
-      concat(lit("d"), col("id")).as(SERIES),
-      (lit(1700000000000000L) + col("id")).as(TS_US),
-      lit(null).cast(tagType).as(TAG),
-      col("id").cast("double").as(VALUE),
-      col("id").as(RID))
-    val t1 = System.nanoTime()
-    capped.appendDisk(diskRows)
-    println(f"[mseries] 5k-series disk append wall=${(System.nanoTime() - t1) / 1e9}%.1fs " +
-      s"tracked_bounds=${capped.lifecycleStats._2} (cap 1000)")
-    if (capped.lifecycleStats._2 > 1000) {
-      println("[mseries] FAIL: bounds map exceeded the cap"); failed = true
-    }
-    // an untracked series (id >= 1000 was cap-evicted) must still read right
-    val got = capped.readLast(Seq("d4321"), 5).collect()
-    if (got.length != 1 || got(0).getAs[Long](TS_US) != 1700000000004321L) {
-      println(s"[mseries] FAIL: capped-out series read wrong: ${got.mkString}"); failed = true
+    // bucket-grain bounds under spill-driven ingest
+    {
+      import spark.implicits._
+      val (ns, rounds, spill, t0us) = (5000, 24, 24L, 1700000000000000L)
+      val ist = new TieredStore(spark,
+        java.nio.file.Files.createTempDirectory("mseries_mates").toString)
+      val rnd = new scala.util.Random(11)
+      var (reads, unsure, flushes, memOnly) = (0, 0, 0, 0)
+      val (decides, walls) = (scala.collection.mutable.ArrayBuffer.empty[Double],
+        scala.collection.mutable.ArrayBuffer.empty[Double])
+      val t1 = System.nanoTime()
+      (0 until rounds).foreach { r =>
+        // series m<i> posts 1 + i % 4 points a round, all on one clock, so
+        // bucket mates reach the spill threshold in different rounds
+        val batch = (0 until ns).flatMap(i => (0 until 1 + i % 4).map(j =>
+          (s"m$i", t0us + r * 1000L + j, r * 100000L + i * 4L + j)))
+        ist.ingest(batch.toDF(SERIES, TS_US, RID).select(col(SERIES), col(TS_US),
+          lit(null).cast(tagType).as(TAG), lit(0.0).as(VALUE), col(RID)), spill)
+        Seq.fill(4)(s"m${rnd.nextInt(ns)}").foreach { s =>
+          val tip = ist.diskVersions.lastOption
+          if (ist.memStatsView.get(s).exists(st => tip.flatMap(_.maxTsOf(s)).exists(_ >= st._2)))
+            unsure += 1
+          val t = System.nanoTime()
+          val q = ist.readLast(Seq(s), 1)
+          decides += (System.nanoTime() - t) / 1e6
+          val got = q.collect().toSeq
+          walls += (System.nanoTime() - t) / 1e6
+          reads += 1
+          if (!q.queryExecution.executedPlan.toString.contains("FileScan")) memOnly += 1
+          if (ist.diskVersions.lastOption.map(_.version) != tip.map(_.version)) flushes += 1
+          val want = graft.operators.TimeSeries.readLast(ist.snapshot(Seq(s)), Seq(s), 1)
+            .collect().toSeq
+          if (got != want) {
+            println(s"[mseries] FAIL: $s read $got, flat read $want"); failed = true
+          }
+        }
+      }
+      def p50(xs: scala.collection.Seq[Double]) = xs.sorted.apply(xs.size / 2)
+      println(f"[mseries] $ns-series ingest, $rounds rounds, spill $spill: " +
+        f"${(System.nanoTime() - t1) / 1e9}%.1fs; $reads reads: bucket bound failed " +
+        f"$unsure, forced flushes $flushes, memory-only $memOnly, decide p50 ${p50(decides)}%.0f ms, " +
+        f"read p50 ${p50(walls)}%.0f ms " +
+        s"(${ist.diskVersions.last.maxes.size} max lines)")
+      // every buffered point lies past its own series' disk rows: no read
+      // may flush, whatever its bucket mates hold
+      if (flushes > 0) {
+        println("[mseries] FAIL: a bucket mate's newer clock forced a flush"); failed = true
+      }
     }
 
     println(if (failed) "[mseries] RESULT: FAIL"
-      else "[mseries] RESULT: OK — metadata capped, reads flat in series count")
+      else "[mseries] RESULT: OK — metadata bounded, reads flat in series count")
     spark.stop()
     if (failed) sys.exit(1)
   }

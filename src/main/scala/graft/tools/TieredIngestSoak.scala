@@ -19,7 +19,6 @@ import org.apache.spark.sql.streaming.Trigger
   *    lineage growth);
   *  - **block count bounded**: live cached RDDs ≤ RetireDepth + live
   *    frames (the retire queue drains; no checkpoint leak);
-  *  - **tracked bounds bounded** by true series cardinality;
   *  - **reads stay right**: every 10 waves, `readLast` over all series
   *    must return exactly n·series rows and `lengthSplit`'s total must
   *    equal the points fed so far (minus live deletes);
@@ -73,12 +72,10 @@ object TieredIngestSoak {
       fed += pointsPerWave
       q.processAllAvailable()
 
-      val (depth, bounds) = store.lifecycleStats
+      val depth = store.lifecycleStats
       if (baselineDepth < 0) baselineDepth = depth
       if (depth != baselineDepth)
         fail(s"wave $wave: plan depth $depth != baseline $baselineDepth (lineage growth)")
-      if (bounds > series.size)
-        fail(s"wave $wave: tracked bounds $bounds > ${series.size} series")
       val rdds = liveCachedRdds()
       // one live buffer + RetireDepth retired + transient stream-internal
       if (rdds > TieredStore.RetireDepth + 4)
@@ -111,7 +108,7 @@ object TieredIngestSoak {
           fail(s"wave $wave: lengthSplit total $total != ${fed - deletedTotal}")
         val heap = (Runtime.getRuntime.totalMemory() - Runtime.getRuntime.freeMemory()) >> 20
         println(f"[soak] wave ${wave + 1}%4d fed=$fed%8d depth=$depth rdds=$rdds " +
-          f"bounds=$bounds heapMB=$heap wall=${(System.nanoTime() - t0) / 1e9}%7.1fs")
+          f"heapMB=$heap wall=${(System.nanoTime() - t0) / 1e9}%7.1fs")
       }
       wave += 1
     }

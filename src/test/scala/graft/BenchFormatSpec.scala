@@ -53,6 +53,22 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(mapper.readTree(stdout).get("sidecar").asText == path)
   }
 
+  test("the scale tier's object rides in the sidecar and parses") {
+    val scale = Bench.scaleLine(Seq("q_b" -> 2.346, "q_a" -> 1.0), Seq("q_c"),
+      skipped = 1, mult = 8, sfName = "sf\"0.1")
+    val line = Bench.formatLine(Seq("q_a" -> 1.0), Nil, "sf", partial = false, dp = 2,
+      scale = Some(scale))
+    val n = mapper.readTree(line).get("scale")
+    assert(n.get("metric").asText == "scale" && n.get("mult").asInt == 8)
+    assert(math.abs(n.get("value").asDouble - 3.35) < 1e-9)
+    assert(math.abs(n.get("queries").get("q_b").asDouble - 2.35) < 1e-12)
+    assert(n.get("skipped").asInt == 1 && n.get("failed").get(0).asText == "q_c")
+    assert(n.get("sf").asText == "sf\"0.1x8")
+    // the stdout contract line never carries it
+    assert(mapper.readTree(Bench.stdoutLine(Seq("q_a" -> 1.0), Nil, "sf",
+      partial = false)).get("scale") == null)
+  }
+
   test("partial flag and failure list are always present (parser-safe)") {
     val line = Bench.formatLine(Seq("q" -> 1.5), Nil, "sf", partial = true)
     val n = mapper.readTree(line)

@@ -137,7 +137,7 @@ class RecallGateSpec extends SparkSuite {
     // cannot help (the distribution is rotation-invariant). The
     // two-level residual quantization (r13, VERDICT item 3) is what
     // holds this floor: measured mean 0.695 / min 0.400 at this seed
-    // and query spread (PqLevelsProbe), floors one noise-step under.
+    // and query spread (20 queries), floors one noise-step under.
     // The starved control is the r12 single-level encoding (measured
     // mean 0.505) — the gate flips red if the residual level stops
     // contributing.

@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * the live store's time-travel/CDC dividend, skip persistence across
   * appends (the ADVICE r12 resurrection bug), torn-manifest loud
   * failure, and plain reopen: a fresh instance over an existing root
-  * must see the disk tier (presence + per-series bounds) instead of
-  * treating it as empty.
+  * must see the disk tier (presence + the manifest's bounds) instead of
+  * treating it as empty, and runs no Spark job to do so.
   */
 class TieredStoreRecoverySpec extends SparkSuite {
   import spark.implicits._
@@ -124,33 +124,18 @@ class TieredStoreRecoverySpec extends SparkSuite {
     assert(fp(new TieredStore(spark, root).snapshot) == fp(seedRows.toDF()))
   }
 
-  test("reopen hydration respects the bounds cap: untracked series degrade, stay correct") {
-    val root = tmpDir("tier_cap_reopen")
-    new TieredStore(spark, root).appendDisk(seedRows.toDF()) // 2 series
-    // cap 0 -> NO series tracked after hydration (deterministic: with a
-    // nonzero cap, WHICH series lands in rows.take(cap) depends on
-    // aggregate output order), overflow set -> every series must read
-    // right via the conservative merge path even with an overlapping
-    // buffer
-    val reopened = new TieredStore(spark, root, maxTrackedSeries = 0)
-    assert(reopened.lifecycleStats._2 == 0 && reopened.boundsOverflowed)
-    reopened.appendMemory(Seq(dp("b", T0 + 50500L, 7777L)).toDF())
-    val last = reopened.readLast(Seq("b"), 1).select("rid").as[Long].collect()
-    assert(last.toSeq == Seq(1099L), s"capped reopen mis-read: ${last.toSeq}")
-    // the MIXED state (0 < cap < series count): exactly one series
-    // tracked (whichever the aggregate emitted first — unspecified),
-    // overflow set, and BOTH series must read right with overlapping
-    // buffers — covering the tracked and the conservative untracked
-    // path regardless of which series drew which
-    val mixed = new TieredStore(spark, root, maxTrackedSeries = 1)
-    assert(mixed.lifecycleStats._2 == 1 && mixed.boundsOverflowed,
-      s"mixed hydration state: ${mixed.lifecycleStats}")
-    mixed.appendMemory(
-      Seq(dp("a", T0 + 50500L, 8888L), dp("b", T0 + 50500L, 9999L)).toDF())
-    val lastA = mixed.readLast(Seq("a"), 1).select("rid").as[Long].collect()
-    val lastB = mixed.readLast(Seq("b"), 1).select("rid").as[Long].collect()
-    assert(lastA.toSeq == Seq(99L) && lastB.toSeq == Seq(1099L),
-      s"mixed-cap reopen mis-read: a=${lastA.toSeq} b=${lastB.toSeq}")
+  test("a reopened store runs no Spark job before its first read") {
+    val root = tmpDir("tier_reopen_jobs")
+    new TieredStore(spark, root).appendDisk(seedRows.toDF())
+    val (reopened, sites) = JobProbe.sites(spark) { new TieredStore(spark, root) }
+    assert(sites.isEmpty, sites)
+    // the bounds came from the manifest: a buffer beyond them reads
+    // memory only, one inside them reads the disk tail
+    reopened.appendMemory(Seq(dp("b", T0 + 200000L, 7777L), dp("a", T0 + 50500L, 8888L)).toDF())
+    val q = reopened.readLast(Seq("b"), 1)
+    assert(!q.queryExecution.executedPlan.toString.contains("FileScan"))
+    assert(q.select("rid").as[Long].collect().toSeq == Seq(7777L))
+    assert(reopened.readLast(Seq("a"), 1).select("rid").as[Long].collect().toSeq == Seq(99L))
   }
 
   test("plain reopen hydrates disk presence and per-series bounds") {

@@ -145,7 +145,7 @@ class TieredStoreSpec extends SparkSuite {
     (0L until 25L).foreach { i =>
       st.ingest(Seq(dp("a", T0 + i * 1000L, i)).toDF(), spillThreshold = 7L)
     }
-    val (depth, _) = st.lifecycleStats
+    val depth = st.lifecycleStats
     assert(depth <= 3, s"buffer lineage grew with batch count: depth $depth")
     val after = spark.sparkContext.getPersistentRDDs.size
     assert(after - before <= TieredStore.RetireDepth + 2,
@@ -154,45 +154,68 @@ class TieredStoreSpec extends SparkSuite {
     assert(st.readLast(Seq("a"), 25).count() == 25L)
   }
 
-  test("series-cardinality cap: untracked series degrade to correct merge/flush reads") {
-    val st = new TieredStore(spark, tmpDir("tier"), maxTrackedSeries = 4)
-    val many = (0 until 10).flatMap(s =>
-      (0L until 5L).map(i => dp(f"s$s%02d", T0 + i * 1000L, s * 100L + i)))
-    st.appendDisk(many.toDF())
-    assert(st.lifecycleStats._2 == 4) // map capped, not grown
-    // s09 is untracked; a beyond-bound buffer must NOT shortcut to M1
-    st.appendMemory((5L until 8L).map(i => dp("s09", T0 + i * 1000L, 900L + i)).toDF())
-    val rids = st.readLast(Seq("s09"), 5).select("rid").as[Long].collect().toSeq
-    assert(rids == Seq(907L, 906L, 905L, 904L, 903L))
-    // a TRACKED series still rides the fast path with no disk scan
-    st.appendMemory((5L until 10L).map(i => dp("s00", T0 + i * 1000L, i)).toDF())
-    val q = st.readLast(Seq("s00"), 3)
-    assert(!q.queryExecution.executedPlan.toString.contains("FileScan"))
-    assert(q.select("rid").as[Long].collect().toSeq == Seq(9L, 8L, 7L))
-    // the cap bounds the disk bounds only: all seven buffered series
-    // have exact buffer stats
-    st.appendMemory((1 until 7).flatMap(s =>
-      (5L until 9L).map(i => dp(f"s$s%02d", T0 + i * 1000L, s * 100L + i))).toDF())
-    val ids = (0 until 7).map(s => f"s$s%02d")
-    assert(st.memStatsView == sparkStats(st) && st.memStatsView.keySet == ids.toSet,
-      st.memStatsView)
-    assert(st.bufferedCount() == st.buffer.count() && st.bufferedCount() == 5L + 6 * 4)
-    // past the disk-bounds cap a series takes the merge/flush paths:
-    // answers stay right
-    val flat = graft.operators.TimeSeries.readLast(st.snapshot, ids, 6)
-      .select("series", "rid").as[(String, Long)].collect().toSet
-    assert(st.readLast(ids, 6).select("series", "rid").as[(String, Long)].collect().toSet == flat)
-    // the read flushed the series with untracked disk bounds; s00 (read
-    // through M1 above) is tracked and still buffered
-    assert(st.memStatsView == sparkStats(st) && st.memStatsView.contains("s00"))
-    val buffered = st.bufferedCount()
-    st.flush(Seq("s00"))
-    assert(st.memStatsView == sparkStats(st) && !st.memStatsView.contains("s00"))
-    assert(st.bufferedCount() == st.buffer.count() && st.bufferedCount() == buffered - 5L)
+  test("a bucket mate's newer disk tail costs a probe job, never a flush; true overlaps still flush") {
+    // a and x share bucket 3 of 64, b sits apart: a series' disk bound is
+    // its bucket's newest timestamp over the live dirs
+    def bucket(s: String) = ShardStore.bucketOf(s, ShardStore.Buckets)
+    assert(bucket("a") == 3L && bucket("x") == 3L && bucket("b") != 3L)
+    val st = new TieredStore(spark, tmpDir("tier_mates"))
+    val disk = (0L until 100L).flatMap(i => Seq(dp("a", T0 + i * 1000L, i),
+      dp("b", T0 + i * 1000L, 1000 + i))) ++
+      (0L until 500L).map(i => dp("x", T0 + i * 1000L, 10000 + i))
+    st.appendDisk(disk.toDF())
+    // both buffers lie beyond their own series' disk max (T0 + 99 ms);
+    // a's lies below x's (T0 + 499 ms)
+    val mem = (200L until 210L).flatMap(i => Seq(dp("a", T0 + i * 1000L, i),
+      dp("b", T0 + i * 1000L, 1000 + i)))
+    st.appendMemory(mem.toDF())
+    var live = disk ++ mem
+    def rids(q: org.apache.spark.sql.DataFrame) =
+      q.select("series", "rid").as[(String, Long)].collect().toSeq
+    def flat(ids: Seq[String], n: Int) =
+      rids(graft.operators.TimeSeries.readLast(live.toDF(), ids, n))
+    def scans(q: org.apache.spark.sql.DataFrame) =
+      q.queryExecution.executedPlan.toString.contains("FileScan")
+    assert(st.diskVersions.last.maxTsOf("a") == Some(T0 + 499000L))
+    val v0 = st.diskVersions.last.version
+    // b passes its bucket's bound: M1, decided with no job
+    val (qb, bJobs) = JobProbe.sites(spark)(st.readLast(Seq("b"), 5))
+    assert(bJobs.isEmpty, bJobs)
+    assert(!scans(qb) && rids(qb) == flat(Seq("b"), 5))
+    // a fails its bucket's bound, but its own disk rows end below its
+    // buffer: the probe job says so, and a keeps M1 and M2, unflushed
+    val (qa, aJobs) = JobProbe.sites(spark)(st.readLast(Seq("a"), 5))
+    assert(aJobs.nonEmpty && !scans(qa), aJobs)
+    assert(rids(qa) == flat(Seq("a"), 5))
+    val merged = st.readLast(Seq("a"), 15) // 10 buffered: M2
+    assert(scans(merged) && rids(merged) == flat(Seq("a"), 15))
+    val both = st.readLast(Seq("a", "b"), 12)
+    assert(rids(both).toSet == flat(Seq("a", "b"), 12).toSet)
+    assert(st.diskVersions.last.version == v0)
+    assert(st.memStatsView == sparkStats(st) && st.memStatsView.keySet == Set("a", "b"))
+    // a late point of x lies inside x's own disk range: a true overlap,
+    // flushed (M3) beside a's unflushed read
+    val late = Seq(dp("x", T0 + 250500L, 20000L))
+    st.appendMemory(late.toDF())
+    live ++= late
+    assert(rids(st.readLast(Seq("x", "a"), 3)).toSet == flat(Seq("x", "a"), 3).toSet)
+    assert(st.diskVersions.last.version == v0 + 1)
+    assert(st.memStatsView == sparkStats(st) && st.memStatsView.keySet == Set("a", "b"))
+    assert(st.bufferedCount() == st.buffer.count() && st.bufferedCount() == 20L)
+    // deleting x's newer tail shrinks the bucket's bound below a's buffer:
+    // a's read is decided with no job again
+    val hit = (d: Datapoint) => d.series == "x" && d.ts_us >= T0 + 100000L
+    assert(st.delete(Seq("x"), T0 + 100000L, T0 + 600000L) == live.count(hit))
+    live = live.filterNot(hit)
+    assert(st.diskVersions.last.maxTsOf("a") == Some(T0 + 99000L))
+    val (again, jobs) = JobProbe.sites(spark)(st.readLast(Seq("a"), 5))
+    assert(jobs.isEmpty, jobs)
+    assert(!scans(again) && rids(again) == flat(Seq("a"), 5))
+    st.flush(Seq("a"))
+    assert(st.memStatsView == sparkStats(st) && st.memStatsView.keySet == Set("b"))
     st.sync()
     assert(st.memStatsView.isEmpty && st.bufferedCount() == 0L)
-    assert(graft.operators.TimeSeries.readLast(st.snapshot, ids, 6)
-      .select("series", "rid").as[(String, Long)].collect().toSet == flat)
+    assert(rids(st.readLast(Seq("a", "b", "x"), 8)).toSet == flat(Seq("a", "b", "x"), 8).toSet)
   }
 
   /** The buffer stats as a Spark aggregate over the buffer itself. */

@@ -92,8 +92,8 @@ class VersionedStoreSpec extends SparkSuite {
     val winner = VersionedStore.append(src.filter(col("rid") % 2 =!= 0), root)
     assert(winner == staged)
     val e = intercept[VersionedStore.ConcurrentCommitException] {
-      VersionedStore.commitAt(spark, root, staged, "append", Seq("orphan-dir"), Nil,
-        ShardStore.Buckets)
+      VersionedStore.commitAt(spark, root, VersionedStore.Commit(staged, "append",
+        Seq("orphan-dir"), Nil, ShardStore.Buckets, Seq(("orphan-dir", "bucket=0", 0L))))
     }
     assert(e.getMessage.contains("concurrent writer"))
     // the chain is linear and the winner's manifest was not overwritten
@@ -305,15 +305,71 @@ class VersionedStoreSpec extends SparkSuite {
       assert(e.getMessage.contains("corrupt manifest"), e.getMessage)
       java.nio.file.Files.delete(bad)
     }
+    val max = "max d1/bucket=3 5"
     // a skip line with no '/' separator — same loud signal as a torn 'op'
-    expectCorrupt("op delete", "layout bucketed 64", "dir d1", "skip nopartition")
+    expectCorrupt("op delete", "layout bucketed 64", "dir d1", "skip nopartition", max)
     // no layout line: the bucket count a read prunes with is unknown
-    expectCorrupt("op append", "dir d1")
+    expectCorrupt("op append", "dir d1", max)
     // a non-integer and a non-positive bucket count on the layout line
-    expectCorrupt("op append", "layout bucketed x", "dir d1")
-    expectCorrupt("op append", "layout bucketed 0", "dir d1")
+    expectCorrupt("op append", "layout bucketed x", "dir d1", max)
+    expectCorrupt("op append", "layout bucketed 0", "dir d1", max)
+    // malformed max lines: no '/', no timestamp, a non-integer timestamp
+    expectCorrupt("op append", "layout bucketed 64", "dir d1", "max d1 5")
+    expectCorrupt("op append", "layout bucketed 64", "dir d1", "max d1/bucket=3")
+    expectCorrupt("op append", "layout bucketed 64", "dir d1", "max d1/bucket=3 x")
+    // a dir with no max line: its disk bound is unknown
+    expectCorrupt("op append", "layout bucketed 64", "dir d1", "dir d2", max)
     // the chain is intact once the corrupt manifest is removed
     assert(VersionedStore.versions(spark, root).map(_.version) == Seq(1))
+  }
+
+  test("max lines survive append, delete, compact and expire") {
+    import spark.implicits._
+    val root = tmpDir("vstore_max")
+    def rows(series: String, ridLo: Long, n: Int): DataFrame =
+      (ridLo until ridLo + n).map(r => (series, r)).toDF("series", "rid")
+        .withColumn(Canon.TS_US, col("rid") * 1000L)
+        .withColumn(Canon.TAG, array(struct(lit("k").as("name"), lit("v").as("value"))))
+        .withColumn(Canon.VALUE, lit(1.0))
+        .select(Canon.SERIES, Canon.TS_US, Canon.TAG, Canon.VALUE, Canon.RID)
+    // a and x share bucket 3 of 64; b sits apart
+    val b = ShardStore.Buckets
+    assert(ShardStore.bucketOf("a", b) == 3L && ShardStore.bucketOf("x", b) == 3L &&
+      ShardStore.bucketOf("b", b) != 3L)
+    def tip = VersionedStore.versions(spark, root).last
+    def bounds = Seq("a", "x", "b").map(tip.maxTsOf)
+    def everyDirHasMax(c: VersionedStore.Commit) =
+      c.dirs.forall(d => c.maxes.exists(_._1 == d)) && c.maxes.forall(m => c.dirs.contains(m._1))
+    VersionedStore.append(rows("a", 0, 10).unionByName(rows("x", 100, 10)), root) // v1
+    assert(bounds == Seq(Some(109000L), Some(109000L), None))
+    VersionedStore.append(rows("b", 200, 5), root)                                 // v2
+    assert(bounds == Seq(Some(109000L), Some(109000L), Some(204000L)))
+    assert(tip.maxes.size == 2 && everyDirHasMax(tip))
+    // an empty append commits nothing
+    assert(VersionedStore.append(rows("b", 0, 0), root) == 2 && tip.version == 2)
+    // partition delete: x wiped, a survives; the skipped line stays, unread
+    VersionedStore.deletePartitions(rows("a", 0, 10), root,
+      ShardStore.partitionNames(Seq("x"), b), 2)                                  // v3
+    assert(bounds == Seq(Some(9000L), Some(9000L), Some(204000L)))
+    assert(tip.maxes.size == 3 && everyDirHasMax(tip))
+    // the dirs a read from a time on needs: v1's bucket 3 is skipped, so
+    // only the survivors dir reaches 9 ms there; b's dir reaches 204 ms
+    val (p3, pb) = (ShardStore.partitionNames(Seq("a"), b), ShardStore.partitionNames(Seq("b"), b))
+    val survivors = tip.dirs.filter(_.contains("-delete-"))
+    assert(survivors.size == 1 && tip.dirsReaching(p3, 0L) == survivors)
+    assert(tip.dirsReaching(p3, 9001L).isEmpty && tip.dirsReaching(pb, 204000L).size == 1)
+    assert(tip.dirsReaching(p3 ++ pb, 0L).size == 2)
+    VersionedStore.compact(spark, root)                                            // v4
+    assert(tip.op == "compact" && tip.dirs.size == 1 && everyDirHasMax(tip))
+    assert(bounds == Seq(Some(9000L), Some(9000L), Some(204000L)))
+    VersionedStore.expire(spark, root, keepLast = 1)
+    assert(VersionedStore.versions(spark, root).map(_.version) == Seq(4))
+    assert(bounds == Seq(Some(9000L), Some(9000L), Some(204000L)))
+    // the figures are the data's own per-bucket maxima
+    val want = VersionedStore.read(spark, root)
+      .groupBy(ShardStore.bucketCol(col(Canon.SERIES), b)).agg(max(Canon.TS_US))
+      .as[(Long, Long)].collect().map { case (k, v) => s"${ShardStore.BUCKET}=$k" -> v }.toSet
+    assert(tip.maxes.map(m => m._2 -> m._3).toSet == want)
   }
 
   test("dedupChangesSince: seen-at-fromV dropped, first-in-delta wins, deletes ignored") {
