@@ -110,11 +110,12 @@ object Router {
     import session.implicits._
     import org.apache.spark.sql.Observation
     import org.apache.spark.sql.functions.{count, lit}
-    // the ack counts ride on the buffer checkpoint's own execution, which
-    // reads both observed frames; no job of this method's own computes
-    // them. One body is one partition: coalescing to it keeps the ingest's
-    // rid window free of a shuffle, which AQE would otherwise drop from
-    // the final plan when it comes out empty — observations and all.
+    // the ack counts ride on the store's collect of the good rows into its
+    // buffer, which reads both observed frames; no job of this method's
+    // own computes them. One body is one partition: coalescing to it
+    // keeps the ingest's rid window free of a shuffle, which AQE would
+    // otherwise drop from the final plan when it comes out empty —
+    // observations and all.
     val (seen, kept) = (Observation(), Observation())
     val wire = JsonIngest.explodeBatches(Seq((id, body)).toDF("series", "json"))
       .coalesce(1).observe(seen, count(lit(1)).as("n"))

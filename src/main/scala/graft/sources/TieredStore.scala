@@ -6,7 +6,7 @@ import graft.model.Canon._
 import graft.operators.{TimeSeries => TS}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointBridge
+import org.apache.spark.sql.graft.PackedRows
 
 /** M1-M3 + I2: the dual-tier store — an in-memory arrival buffer layered
   * over a [[VersionedStore]] manifest-chain disk tier, replicating the
@@ -25,15 +25,15 @@ import org.apache.spark.sql.graft.CheckpointBridge
   *    arrivals) — flush it to disk first, then read disk only
   *    (`timeseries.re:357-361`).
   *
-  * Spark-first mapping: the memory tier is an eagerly LOCAL-CHECKPOINTED
-  * DataFrame in the canonical schema. Every buffer mutation
-  * swaps in a fresh checkpoint, which (a) materializes the new content
-  * immediately (decoupling it from non-replayable foreachBatch sources),
-  * and (b) truncates the plan to one `LogicalRDD` leaf — plan depth and
-  * block count stay CONSTANT over an unbounded micro-batch stream instead
-  * of growing one union/filter layer per batch. Qualification reads the
-  * driver-side buffer stats (below): a series whose buffered min ts lies
-  * beyond its disk upper bound qualifies with no Spark job. The M2
+  * Spark-first mapping: the memory tier is the reference's membuf, a
+  * driver-side map from series to its queue: the series' buffered rows
+  * in arrival order ([[org.apache.spark.sql.graft.PackedRows]]) plus
+  * their cached (count, min ts, max ts), membufq's cached length and
+  * range. An append collects the batch once (on a POST, the job that
+  * fills the ack counts); the rest is driver arithmetic. A read or a
+  * flush frames only the named series' queues, so it plans no series
+  * filter of its own and no cached block. A series whose buffered min ts
+  * lies beyond its disk upper bound qualifies with no Spark job. The M2
   * merge is `union` + the same `WindowGroupLimit` top-n every flat read
   * uses — Catalyst, not hand-merging.
   *
@@ -53,28 +53,19 @@ import org.apache.spark.sql.graft.CheckpointBridge
   * (the OPTIMIZE + VACUUM pairing), which is where space is reclaimed.
   *
   * **Snapshot contract**: every frame this class returns (readLast,
-  * snapshot, lengthSplit) is built under the store lock from the
-  * checkpointed buffer plus parquet relations whose file listing Spark
-  * pins at construction — an immutable snapshot of the store at call time.
-  * Committed data dirs are immutable, so a snapshot stays valid across
-  * later mutations; only [[compactDisk]]'s history expiry removes files,
-  * after which a stale reader fails LOUDLY (file-not-found) — never a
-  * silently doubled or stale answer. Superseded buffer checkpoints are
-  * kept alive for [[TieredStore.RetireDepth]] further mutations, same
-  * contract.
+  * snapshot, lengthSplit) is built under the store lock from the buffer's
+  * immutable rows plus parquet relations whose file listing Spark pins at
+  * construction — an immutable snapshot of the store at call time. It
+  * stays valid across any later mutation; only [[compactDisk]]'s history
+  * expiry removes files, after which a stale reader fails LOUDLY
+  * (file-not-found) — never a silently doubled or stale answer.
   *
-  * Driver-side state is the metadata the reference's membuf holds: per
-  * series, the buffer's (count, min ts, max ts) — its cached queue length
-  * and range — and the cached tip manifest of the disk tier. ONE
-  * aggregate over each new buffer checkpoint refreshes the buffer stats;
-  * a flush or sync trims them exactly with no job. The buffer stats are
-  * exact for every buffered series: the buffer is bounded by the spill
-  * threshold, and the refresh collects one row per buffered series
-  * anyway. The disk side of membufq's cached `disk_range`
-  * (`src/membufq.re:45-47`) is the tip's `max` lines: the newest
-  * timestamp of each (data dir, bucket), written beside the data as the
-  * reference's interval index is (`src/index.re`). A series' disk bound
-  * is its bucket's max over the live dirs
+  * Driver-side state is the buffer and the cached tip manifest of the
+  * disk tier. The disk side of membufq's
+  * cached `disk_range` (`src/membufq.re:45-47`) is the tip's `max` lines:
+  * the newest timestamp of each (data dir, bucket), written beside the
+  * data as the reference's interval index is (`src/index.re`). A series'
+  * disk bound is its bucket's max over the live dirs
   * ([[VersionedStore.Commit.maxTsOf]]), never below the series' own, so
   * a buffer past it is past the series' disk rows. A buffer that fails
   * it may only share its bucket with a series whose clock runs ahead:
@@ -87,9 +78,10 @@ import org.apache.spark.sql.graft.CheckpointBridge
   * running Spark jobs, reopen reads the manifest and no data, and the
   * driver holds nothing per disk series.
   *
-  * Scale notes (100 TB): the memory tier is an ingest BUFFER — bounded by
-  * the spill threshold (reference `--shard-size`), not by corpus size; every
-  * read-path aggregate runs over that bounded frame. The disk tier is the
+  * Scale notes (100 TB): the memory tier is an ingest BUFFER — a series'
+  * queue holds fewer than the spill threshold (reference `--shard-size`)
+  * + one batch of rows, whatever the corpus size; `tools/ManySeriesProbe`
+  * reports the driver heap with 1M rows buffered. The disk tier is the
   * [[ShardStore]] `bucket=/day=` layout under manifest versioning, whose
   * bucket/day pruning does the heavy lifting — every series-scoped read
   * ([[readLast]], [[lengthSplit]], `snapshot(ids)`) and [[delete]] prunes
@@ -119,14 +111,10 @@ import org.apache.spark.sql.graft.CheckpointBridge
 final class TieredStore(spark: SparkSession, val root: String) {
   import TieredStore._
 
-  @volatile private var mem: DataFrame = emptyCanon(spark)
-  /** Per-series (count, min ts, max ts) of the buffer: the membufq's
-    * cached queue length and range. One exact entry per buffered series;
-    * an absent series has nothing buffered. */
-  @volatile private var memStats = Map.empty[String, MemStat]
-  /** Superseded buffer checkpoints, oldest first; see the snapshot
-    * contract in the class doc. */
-  private val retiredFrames = scala.collection.mutable.Queue.empty[DataFrame]
+  /** The buffer: each buffered series' queue (the membuf). An absent
+    * series has nothing buffered. Replaced whole on every mutation, so a
+    * frame built from it never changes. */
+  @volatile private var mem = Map.empty[String, Queue]
   /** Cached tip of the disk tier's manifest chain — refreshed after every
     * committed mutation, so reads plan without re-listing manifests. Its
     * `max` lines are the disk bounds. */
@@ -159,46 +147,12 @@ final class TieredStore(spark: SparkSession, val root: String) {
   private def readStore: DataFrame =
     tip.fold(emptyCanon(spark))(c => VersionedStore.contentOf(spark, root, c))
 
-  /** Swap the buffer to new content: eagerly local-checkpoint the plan
-    * (materialized blocks, depth-1 `LogicalRDD` plan), then retire the
-    * superseded frame. Checkpoints older than [[RetireDepth]] swaps have
-    * their blocks dropped deterministically via [[CheckpointBridge]].
-    */
-  private def swapMem(plan: DataFrame): Unit = {
-    val old = mem
-    mem = plan.localCheckpoint(eager = true)
-    retire(old)
+  /** The `ids`' buffered rows as one frame over their queues, or the
+    * empty literal when none of them is buffered. */
+  private def memOf(ids: Iterable[String]): DataFrame = {
+    val packs = ids.toSeq.distinct.flatMap(mem.get).map(_.rows)
+    if (packs.isEmpty) emptyCanon(spark) else PackedRows.frame(spark, Canon.schema, packs)
   }
-
-  /** Drop the whole buffer: no checkpoint job, the empty frame is a
-    * literal. */
-  private def clearMem(): Unit = {
-    val old = mem
-    mem = emptyCanon(spark)
-    memStats = Map.empty
-    retire(old)
-  }
-
-  /** ALWAYS retire a superseded frame: a drained buffer's last checkpoint
-    * is still a checkpoint (skipping it leaked one persisted-RDD
-    * registration per drain cycle); releasing an emptyCanon literal is a
-    * harmless no-op (its RDD was never persisted). */
-  private def retire(old: DataFrame): Unit = {
-    retiredFrames.enqueue(old)
-    while (retiredFrames.size > RetireDepth)
-      CheckpointBridge.releaseCheckpoint(retiredFrames.dequeue())
-  }
-
-  private def memEmpty: Boolean = memStats.isEmpty
-
-  /** Refresh [[memStats]] from the current checkpoint: one aggregate over
-    * the bounded buffer, one row per buffered series. */
-  private def refreshMemStats(): Unit =
-    memStats = mem.groupBy(SERIES)
-      .agg(count(lit(1)), min(TS_US), max(TS_US))
-      .collect()
-      .map(r => r.getString(0) -> MemStat(r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toMap
 
   /** Direct-to-disk append (the batch ingest path). An empty frame is a
     * no-op — no empty version bloating the chain. */
@@ -208,10 +162,20 @@ final class TieredStore(spark: SparkSession, val root: String) {
     * `src/membufq.re:9`). */
   def appendMemory(df: DataFrame): Unit = this.synchronized { appendLocked(df) }
 
+  /** One job collects the batch; each series' rows join the tail of its
+    * queue, and its cached range moves with no further job. The columns
+    * are cast to the canonical types, the layout the rows are read back
+    * with. */
   private def appendLocked(df: DataFrame): Unit = {
-    val slice = canonSel(df)
-    swapMem(if (memEmpty) slice else mem.unionByName(slice))
-    refreshMemStats()
+    val rows = PackedRows.collect(
+      df.select(Canon.schema.fields.toSeq.map(f => col(f.name).cast(f.dataType)): _*))
+    // a streamed row may carry no series: it queues under the null key
+    mem ++= rows.groupBy(r => Option(r.getUTF8String(0)).map(_.toString).orNull).map {
+      case (s, rs) =>
+        val ts = rs.map(_.getLong(1))
+        val q = Queue(PackedRows.pack(rs.toSeq), rs.length, ts.min, ts.max)
+        s -> mem.get(s).fold(q)(_ ++ q)
+    }
   }
 
   /** M3 / S6: flush the named series' buffered points to the disk tier. */
@@ -220,28 +184,16 @@ final class TieredStore(spark: SparkSession, val root: String) {
   /** S6 `ctl/ts/sync` (reference `src/main.re:188`, `timeseries_sync` →
     * `Timeseries.flush`): flush EVERY buffered series to disk. Idempotent —
     * a second sync on an empty buffer is a no-op.
-    *
-    * Flush-all is its OWN path, not `flush(allIds)`: collecting every
-    * buffered series name to the driver and planning two `isin(<N
-    * literals>)` filters is exactly the Catalyst plan-size pathology the
-    * many-series probe exists to rule out (1M series → a
-    * hundreds-of-MB expression tree pinning the driver). The whole
-    * buffer moves as one unfiltered write.
     */
-  def sync(): Unit = this.synchronized {
-    if (!memEmpty) {
-      appendStore(mem)
-      clearMem()
-    }
-  }
+  def sync(): Unit = this.synchronized { flushLocked(mem.keys.toSeq) }
 
-  /** Move the named series' buffered points to disk. Series with nothing
-    * buffered cost nothing: no commit, no checkpoint. */
+  /** Move the named series' buffered points to disk: one write of their
+    * queues, then the queues go. Series with nothing buffered cost
+    * nothing: no commit, no job. */
   private def flushLocked(ids: Seq[String]): Unit =
-    if (ids.exists(memStats.contains)) {
-      appendStore(mem.filter(col(SERIES).isin(ids: _*)))
-      memStats = memStats -- ids
-      if (memEmpty) clearMem() else swapMem(mem.filter(!col(SERIES).isin(ids: _*)))
+    if (ids.exists(mem.contains)) {
+      appendStore(memOf(ids))
+      mem = mem -- ids
     }
 
   /** Pruned disk read: the prune runs on each RAW relation (partition
@@ -265,8 +217,8 @@ final class TieredStore(spark: SparkSession, val root: String) {
     * one. A bucket no live dir holds has no disk bound. A buffer that
     * fails goes to [[overlapping]], which decides for the series itself.
     */
-  private def beyondDisk(s: String, st: MemStat): Boolean =
-    tip.flatMap(_.maxTsOf(s)).forall(st.minTs > _)
+  private def beyondDisk(s: String, q: Queue): Boolean =
+    tip.flatMap(_.maxTsOf(s)).forall(q.minTs > _)
 
   /** Of `ids`, whose buffers fail their bucket's bound, the ones with a
     * disk row at or past their own buffered min ts: the buffers that
@@ -277,11 +229,11 @@ final class TieredStore(spark: SparkSession, val root: String) {
     * that min's day on, whose per-series time bounds reach the row-group
     * statistics, deduplicated per task.
     */
-  private def overlapping(ids: Seq[String], stats: Map[String, MemStat]): Seq[String] = {
-    val lo = ids.map(stats(_).minTs).min
+  private def overlapping(ids: Seq[String], queues: Map[String, Queue]): Seq[String] = {
+    val lo = ids.map(queues(_).minTs).min
     val t = tip.get
     val c = t.copy(dirs = t.dirsReaching(ShardStore.partitionNames(ids, t.buckets), lo))
-    val hit = ids.map(s => col(SERIES) === s && col(TS_US) >= stats(s).minTs).reduce(_ || _)
+    val hit = ids.map(s => col(SERIES) === s && col(TS_US) >= queues(s).minTs).reduce(_ || _)
     val found = prunedCanon(c, raw => raw.filter(ShardStore.partitionsOf(ids, c.buckets))
         .filter(ShardStore.daysFrom(lo)))
       .filter(hit).select(SERIES).as(Encoders.STRING)
@@ -295,29 +247,26 @@ final class TieredStore(spark: SparkSession, val root: String) {
     * M3 flush-then-disk when it overlaps the disk range. The three branches
     * union into one declarative plan; a query whose every series takes M1
     * plans NO disk scan at all (asserted by `TieredStoreSpec`). The
-    * decision reads the driver-side stats and the tip's bucket bounds, so
+    * decision reads the queues' cached ranges and the tip's bucket bounds, so
     * a read whose buffers all lie past their buckets' bounds runs no job
     * until the frame is evaluated; the buffers that do not cost one
     * [[overlapping]] job, which sends only true overlaps to M3. A series
-    * with no stats has nothing buffered: it takes the M2 merge, which
+    * with no queue has nothing buffered: it takes the M2 merge, which
     * finds no buffered rows and reads disk alone.
     */
   def readLast(ids: Seq[String], n: Int): DataFrame = this.synchronized {
     require(ids.nonEmpty, "tiered readLast needs explicit series ids")
-    val stats = memStats
-    val unsure = ids.filter(s => stats.get(s).exists(!beyondDisk(s, _)))
-    val toFlush = if (unsure.isEmpty) Nil else overlapping(unsure.distinct, stats)
+    val queues = mem
+    val unsure = ids.filter(s => queues.get(s).exists(!beyondDisk(s, _)))
+    val toFlush = if (unsure.isEmpty) Nil else overlapping(unsure.distinct, queues)
     val qualified = ids.filterNot(toFlush.contains)
-    val fast = qualified.filter(s => stats.get(s).exists(_.count >= n))
+    val fast = qualified.filter(s => queues.get(s).exists(_.count >= n))
     val merge = qualified.diff(fast)
     if (toFlush.nonEmpty) flushLocked(toFlush)
     val branches = Seq(
-      if (fast.isEmpty) None else Some(TS.readLast(mem, fast, n)),
+      if (fast.isEmpty) None else Some(TS.readLast(memOf(fast), fast, n)),
       if (merge.isEmpty) None
-      else {
-        val memSide = if (memEmpty) emptyCanon(spark) else TS.selectSeries(mem, merge)
-        Some(TS.readLast(memSide.unionByName(disk(merge)), merge, n))
-      },
+      else Some(TS.readLast(memOf(merge).unionByName(disk(merge)), merge, n)),
       if (toFlush.isEmpty) None else Some(TS.readLast(disk(toFlush), toFlush, n))
     ).flatten
     branches.reduce(_ unionByName _).orderBy(col(TS_US).desc, col(RID).desc)
@@ -409,12 +358,12 @@ final class TieredStore(spark: SparkSession, val root: String) {
 
   /** The whole store as one canonical frame (memory ∪ disk) — the input
     * for the routes that span every series (names, info). Built under the
-    * lock: the memory side is the current checkpoint, the disk side the
+    * lock: the memory side is every queue's rows, the disk side the
     * cached tip's relations — an immutable snapshot per the class
     * contract.
     */
   def snapshot: DataFrame = this.synchronized {
-    val m = if (memEmpty) emptyCanon(spark) else mem
+    val m = memOf(mem.keys)
     if (!tip.exists(_.dirs.nonEmpty)) m
     else m.unionByName(readStore)
   }
@@ -431,27 +380,21 @@ final class TieredStore(spark: SparkSession, val root: String) {
   def snapshot(ids: Seq[String]): DataFrame = this.synchronized {
     if (ids.isEmpty) snapshot
     else {
-      val m = if (memEmpty) emptyCanon(spark) else TS.selectSeries(mem, ids)
+      val m = memOf(ids)
       if (!tip.exists(_.dirs.nonEmpty)) m else m.unionByName(disk(ids))
     }
   }
 
   /** Number of buffered points (the membuf length): a sum over the
-    * buffer stats, no job. */
-  def bufferedCount(): Long = memStats.valuesIterator.map(_.count).sum
+    * queues' cached counts, no job. */
+  def bufferedCount(): Long = mem.valuesIterator.map(_.count).sum
 
-  /** The current buffer checkpoint (tests). */
-  private[graft] def buffer: DataFrame = mem
+  /** The whole buffer as a frame (tests). */
+  private[graft] def buffer: DataFrame = memOf(mem.keys)
 
-  /** The buffer stats as `series -> (count, min ts, max ts)` (tests). */
+  /** The queues' cached `series -> (count, min ts, max ts)` (tests). */
   private[graft] def memStatsView: Map[String, (Long, Long, Long)] =
-    memStats.map { case (s, st) => s -> (st.count, st.minTs, st.maxTs) }
-
-  /** Buffer plan depth, for lifecycle tests. */
-  private[graft] def lifecycleStats: Int = memPlanDepth(mem.queryExecution.analyzed)
-
-  private def memPlanDepth(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int =
-    1 + (if (p.children.isEmpty) 0 else p.children.map(memPlanDepth).max)
+    mem.map { case (s, q) => s -> (q.count, q.minTs, q.maxTs) }
 
   /** S3 ingest-side spill policy (reference `--shard-size`,
     * `src/main.re:10`; spill at `timeseries.re:158-168`): buffer the
@@ -463,7 +406,7 @@ final class TieredStore(spark: SparkSession, val root: String) {
   def ingest(batch: DataFrame, spillThreshold: Long): Unit =
     this.synchronized {
       appendLocked(batch)
-      val full = memStats.collect { case (s, st) if st.count >= spillThreshold => s }
+      val full = mem.collect { case (s, q) if q.count >= spillThreshold => s }
       if (full.nonEmpty) flushLocked(full.toSeq)
     }
 
@@ -473,8 +416,7 @@ final class TieredStore(spark: SparkSession, val root: String) {
     * Snapshot semantics as [[snapshot]].
     */
   def lengthSplit(ids: Seq[String]): DataFrame = this.synchronized {
-    val m = (if (memEmpty) emptyCanon(spark) else TS.selectSeries(mem, ids))
-      .groupBy(SERIES).agg(count(lit(1)).as("mem_len"))
+    val m = memOf(ids).groupBy(SERIES).agg(count(lit(1)).as("mem_len"))
     val d = disk(ids).groupBy(SERIES).agg(count(lit(1)).as("disk_len"))
     // full-outer of two series-cardinality aggregates — never a data join
     m.join(d, Seq(SERIES), "full_outer")
@@ -487,14 +429,14 @@ final class TieredStore(spark: SparkSession, val root: String) {
 }
 
 object TieredStore {
-  /** How many superseded buffer checkpoints stay alive after a mutation:
-    * a returned frame remains a valid immutable snapshot for at least this
-    * many subsequent mutations, then fails loudly if still unevaluated.
-    */
-  val RetireDepth = 8
-
-  /** One series' buffered length and time range. */
-  private final case class MemStat(count: Long, minTs: Long, maxTs: Long)
+  /** One series' queue (`src/membufq.re:9-47`): its buffered rows in
+    * arrival order, packed ([[PackedRows]]), with their cached length and
+    * time range. An append copies the series' rows into a new array, so
+    * the arrays a frame reads never change. */
+  private final case class Queue(rows: Array[Byte], count: Long, minTs: Long, maxTs: Long) {
+    def ++(more: Queue): Queue = Queue(Array.concat(rows, more.rows), count + more.count,
+      minTs min more.minTs, maxTs max more.maxTs)
+  }
 
   private def emptyCanon(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],

@@ -5,8 +5,8 @@ import graft.sources.TieredStore
 import org.apache.spark.sql.functions._
 
 /** Many-series evidence for the tiered store (r7 VERDICT item 5): the
-  * driver-side buffer stats are bounded by the BUFFERED series'
-  * cardinality and the disk bounds by buckets × data dirs (the
+  * driver-side buffer queues are bounded by the BUFFERED rows and series
+  * and the disk bounds by buckets × data dirs (the
   * manifest's `max` lines), which is fine for the reference's model
   * (handfuls of series) but needs proof it neither grows without bound
   * nor slows reads, nor flushes on a bucket mate's newer clock, when
@@ -16,12 +16,13 @@ import org.apache.spark.sql.functions._
   *  1. **read flatness**: a fixed 1M-row memory buffer spread over 1k /
   *     100k / 1M distinct series — `readLast` wall must track BUFFER
   *     volume (constant here), not series cardinality. The tier decision
-  *     reads the driver-side buffer stats for the queried ids and the
-  *     WindowGroupLimit top-n keys on them, so series count should be
-  *     invisible. The stats move the per-series cost to the write:
-  *     `appendMemory` collects one exact stats row per buffered series
-  *     (1M rows at 1M series; the buffer stats have no cap), reported as
-  *     `append_wall`, and `bufferedCount()` must sum them to the buffer.
+  *     reads the queried ids' queues and the read plans only their rows,
+  *     so series count should be invisible. The per-series cost moves to
+  *     the write: `appendMemory` collects the 1M rows into one queue per
+  *     series (1M queues at 1M series; nothing caps them), reported as
+  *     `append_wall`, and `bufferedCount()` must sum the queues to the
+  *     buffer. `heap_mb` is the driver heap in use after `System.gc()`
+  *     with that buffer live.
   *  2. **write cost at cardinality**: a 1k-series sync, then a 5k-series
   *     sync, delete and compaction — the `bucket=/day=` layout creates at
   *     most buckets × days dirs per write, whatever the series count.
@@ -67,20 +68,21 @@ object ManySeriesProbe {
       val t0 = System.nanoTime()
       val cnt = st.readLast(ids, 50).count()
       val wall = (System.nanoTime() - t0) / 1e9
+      System.gc()
+      val heapMb = (Runtime.getRuntime.totalMemory() - Runtime.getRuntime.freeMemory()) >> 20
       println(f"[mseries] series=$n%8d append_wall=$appendWall%6.2fs read_wall=$wall%6.2fs " +
-        s"rows=$cnt buffered=${st.bufferedCount()}")
+        s"rows=$cnt buffered=${st.bufferedCount()} heap_mb=$heapMb")
       if (st.bufferedCount() != rows) {
         println(s"[mseries] FAIL: buffer stats sum to ${st.bufferedCount()}, not $rows")
         failed = true
       }
       val want = 4 * math.min(rows / n, 50L) // per-series rows shrink as n grows
       if (cnt != want) { println(s"[mseries] FAIL: expected $want rows, got $cnt"); failed = true }
-      // sync() — the r8 flush-all path plans NO per-series isin (the old
-      // path collected every series name and built isin(<n literals>),
-      // the Catalyst plan-size pathology at high cardinality). Measured
-      // at 1k series here; the 5k-series section below measures the
-      // write cost at a higher cardinality, and the 100k/1M rows above
-      // keep proving READS stay flat.
+      // sync() writes every queue's rows as one local frame: no filter
+      // is planned, whatever the series count. Measured at 1k series
+      // here; the 5k-series section below measures the write cost at a
+      // higher cardinality, and the 100k/1M rows above keep proving
+      // READS stay flat.
       if (n == 1000L) {
         val t1 = System.nanoTime()
         st.sync()

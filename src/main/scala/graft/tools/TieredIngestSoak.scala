@@ -7,18 +7,16 @@ import org.apache.spark.sql.streaming.Trigger
 
 /** Long-session soak of the STREAMING tiered-ingest path (r7 VERDICT
   * item 8): a production `startTieredFileStream` runs for weeks, so the
-  * per-micro-batch buffer lifecycle — eager localCheckpoint swap,
-  * bounded retire queue, per-series spill — must hold *beyond* the few
-  * batches the unit specs drive. This probe feeds `waves` waves of wire
-  * JSON through a real file stream (each wave = ≥1 micro-batch via
+  * per-micro-batch buffer lifecycle — one collect into the driver-side
+  * queues, per-series spill — must hold *beyond* the few batches the
+  * unit specs drive. This probe feeds `waves` waves of wire JSON through
+  * a real file stream (each wave = ≥1 micro-batch via
   * `processAllAvailable`), with the spill threshold sized so every few
   * waves cycle buffer→disk, and asserts after EVERY wave:
   *
-  *  - **plan depth flat**: the buffer's analyzed plan stays the depth-1
-  *    `LogicalRDD` the checkpoint swap promises (no per-batch union
-  *    lineage growth);
-  *  - **block count bounded**: live cached RDDs ≤ RetireDepth + live
-  *    frames (the retire queue drains; no checkpoint leak);
+  *  - **no cached blocks**: the stream adds no cached RDD beyond the
+  *    count before it started (the buffer lives in driver queues, not in
+  *    cached blocks);
   *  - **reads stay right**: every 10 waves, `readLast` over all series
   *    must return exactly n·series rows and `lengthSplit`'s total must
   *    equal the points fed so far (minus live deletes);
@@ -45,17 +43,17 @@ object TieredIngestSoak {
     new java.io.File(inDir).mkdirs()
     val store = new TieredStore(spark, storeDir)
 
+    def liveCachedRdds(): Int = spark.sparkContext.getRDDStorageInfo.length
+    val baselineRdds = liveCachedRdds()
+
     val series = (0 until 5).map(i => s"s$i")
     val pointsPerWave = 200 // 40/series/wave; threshold 130 → spill ~ every 4 waves
     val q = Ingest.startTieredFileStream(spark, inDir, store, ckpt,
       spillThreshold = 130L, Trigger.ProcessingTime("50 milliseconds"),
       maxFilesPerTrigger = Some(1))
 
-    def liveCachedRdds(): Int = spark.sparkContext.getRDDStorageInfo.length
-
     var fed = 0L
     var deletedTotal = 0L
-    var baselineDepth = -1
     var failed = false
     def fail(msg: String): Unit = { println(s"[soak] FAIL $msg"); failed = true }
 
@@ -72,14 +70,9 @@ object TieredIngestSoak {
       fed += pointsPerWave
       q.processAllAvailable()
 
-      val depth = store.lifecycleStats
-      if (baselineDepth < 0) baselineDepth = depth
-      if (depth != baselineDepth)
-        fail(s"wave $wave: plan depth $depth != baseline $baselineDepth (lineage growth)")
       val rdds = liveCachedRdds()
-      // one live buffer + RetireDepth retired + transient stream-internal
-      if (rdds > TieredStore.RetireDepth + 4)
-        fail(s"wave $wave: $rdds cached RDDs (checkpoint leak)")
+      if (rdds > baselineRdds)
+        fail(s"wave $wave: $rdds cached RDDs, $baselineRdds before the stream (block leak)")
 
       // live mutations against the actively-ingesting store: a DELETE of
       // the disjoint past window [fed-2000, fed-1001] (offsets mod 5 == 0
@@ -107,7 +100,7 @@ object TieredIngestSoak {
         if (total != fed - deletedTotal)
           fail(s"wave $wave: lengthSplit total $total != ${fed - deletedTotal}")
         val heap = (Runtime.getRuntime.totalMemory() - Runtime.getRuntime.freeMemory()) >> 20
-        println(f"[soak] wave ${wave + 1}%4d fed=$fed%8d depth=$depth rdds=$rdds " +
+        println(f"[soak] wave ${wave + 1}%4d fed=$fed%8d rdds=$rdds " +
           f"heapMB=$heap wall=${(System.nanoTime() - t0) / 1e9}%7.1fs")
       }
       wave += 1
@@ -121,7 +114,7 @@ object TieredIngestSoak {
       fail(s"post-sync snapshot $diskTotal != ${fed - deletedTotal} " +
         s"(fed $fed - deleted $deletedTotal)")
     val finalRdds = liveCachedRdds()
-    if (finalRdds > TieredStore.RetireDepth + 4) fail(s"final cached RDDs $finalRdds")
+    if (finalRdds > baselineRdds) fail(s"final cached RDDs $finalRdds > $baselineRdds")
     println(f"[soak] done: $wave waves, $fed points, final rdds=$finalRdds, " +
       f"wall=${(System.nanoTime() - t0) / 1e9}%.1fs " +
       (if (failed) "RESULT: FAIL" else "RESULT: OK"))

@@ -166,10 +166,20 @@ class RouterSpec extends SparkSuite {
     assert(spilled == ((8L, 0L)))
     assert(Router.run(st, "ts/p/disk/length").as[Long].head() == 8L)
     assert(Router.run(st, "ts/p/memory/length").as[Long].head() == 0L)
-    // the counts ride on the store's checkpoint: none of the jobs the
+    // the counts ride on the store's buffer collect: none of the jobs the
     // route started (the ack frame's own `head` aside) is Router's
     val routeSites = Seq(s1, s2, s3).flatten.filterNot(_.contains("RouterSpec.scala"))
     assert(routeSites.nonEmpty && !routeSites.exists(_.contains("Router.scala")), routeSites)
+  }
+
+  test("a POST that spills nothing runs one job: the buffer's collect fills its ack") {
+    import graft.sources.TieredStore
+    val st = new TieredStore(spark, tmpDir("router_post_one_job"))
+    val body = """[{"timestamp": 100, "value": 1}, {"nope": 1}, {"timestamp": 101, "value": 2}]"""
+    val (ack, sites) = JobProbe.sites(spark)(Router.runPost(st, "ts/j", body))
+    assert(sites.size == 1, sites)
+    assert(ack.as[(Long, Long)].head() == ((2L, 1L)))
+    assert(st.bufferedCount() == 2L)
   }
 
   test("POST: a timestamp outside the 64-bit range quarantines its element, not the batch") {

@@ -139,19 +139,31 @@ class TieredStoreSpec extends SparkSuite {
     assert(r2.getLong(1) == 0L && r2.getLong(2) == 120L)
   }
 
-  test("buffer plan depth and checkpoint block count stay bounded over many batches") {
+  test("the buffer holds no cached RDD over many batches") {
     val before = spark.sparkContext.getPersistentRDDs.size
     val st = new TieredStore(spark, tmpDir("tier"))
     (0L until 25L).foreach { i =>
       st.ingest(Seq(dp("a", T0 + i * 1000L, i)).toDF(), spillThreshold = 7L)
     }
-    val depth = st.lifecycleStats
-    assert(depth <= 3, s"buffer lineage grew with batch count: depth $depth")
     val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after - before <= TieredStore.RetireDepth + 2,
-      s"superseded buffer checkpoints accumulate: $before -> $after")
-    // nothing lost across 25 swaps + spills
-    assert(st.readLast(Seq("a"), 25).count() == 25L)
+    assert(after == before, s"buffer batches left cached RDDs: $before -> $after")
+    // nothing lost across 25 appends + spills
+    assert(st.readLast(Seq("a"), 25).select("rid").as[Long].collect().toSeq == (24L to 0L by -1L))
+  }
+
+  test("a readLast or snapshot(ids) frame keeps its answer across later ingests") {
+    val st = freshSorted() // 100 on disk, 20 buffered beyond the disk bound
+    val last = st.readLast(Seq("a"), 10) // M1: the buffer alone
+    val scoped = st.snapshot(Seq("a"))
+    // ten later batches, spilling (threshold 25) and replacing the buffer
+    (0L until 10L).foreach { i =>
+      st.ingest((0L until 3L).map(j => dp("a", T0 + 2000000L + (i * 3 + j) * 1000L,
+        1000 + i * 3 + j)).toDF(), spillThreshold = 25L)
+    }
+    assert(st.diskVersions.size >= 2) // at least one spill committed
+    assert(last.select("rid").as[Long].collect().toSeq == (119L to 110L by -1L))
+    assert(scoped.count() == 120L)
+    assert(scoped.agg(max("rid")).as[Long].head() == 119L)
   }
 
   test("a bucket mate's newer disk tail costs a probe job, never a flush; true overlaps still flush") {
