@@ -190,19 +190,6 @@ object Router {
     }
   }
 
-  /** Delete routes over a flat frame (snapshot-functional form): the
-    * SURVIVING rows, for callers composing their own storage rewrite. */
-  def runDelete(df: DataFrame, route: String): DataFrame = {
-    val parts = route.stripPrefix("/").split('/').toList
-    parts match {
-      case ids :: "since" :: t :: xargs =>
-        TS.deleteSince(df, ids.split(',').toSeq, t.toLong, pipeGroups(xargs))
-      case ids :: "range" :: t1 :: t2 :: xargs =>
-        TS.deleteRange(df, ids.split(',').toSeq, t1.toLong, t2.toLong, pipeGroups(xargs))
-      case _ => throw new UnknownRouteException(route)
-    }
-  }
-
   /** xargs dispatch mirroring `process_data` (`src/timeseries.re:502-511`). */
   private def pipe(df: DataFrame, xargs: List[String]): DataFrame = xargs match {
     case Nil => df

@@ -134,24 +134,25 @@ object TimeSeries {
 
   // ------------------------------------------------------------------- D1
 
-  /** D1 `delete since/range`: returns the SURVIVING rows. We implement the
-    * intent (delete the matched rows) rather than the reference's
-    * delete-by-timestamp-membership quirk (`src/timeseries.re:264-272`,
-    * documented divergence SURVEY §7.5 #6). With a tag pipe, only rows
-    * matching the pipe are deleted (anti-join semantics expressed as a
-    * pure predicate — no shuffle at all).
+  /** D1's matched rows: series in `ids` (every series when empty), ts in
+    * [fromUs, toUs], and with a tag pipe only the rows that pass it; a null
+    * counts as unmatched. We implement the intent (delete the matched
+    * rows) rather than the reference's delete-by-timestamp-membership
+    * quirk (`src/timeseries.re:264-272`, documented divergence SURVEY
+    * §7.5 #6) — the one definition the flat [[deleteRange]] and the live
+    * `TieredStore.delete` share. A pure predicate: no shuffle at all.
     */
-  def deleteRange(df: DataFrame, ids: Seq[String], fromUs: Long, toUs: Long,
-                  pipe: Seq[Tags.Group] = Nil): DataFrame = {
+  def deleteMatch(ids: Seq[String], fromUs: Long, toUs: Long,
+                  pipe: Seq[Tags.Group] = Nil): Column = {
     val inSeries = if (ids.isEmpty) lit(true) else col(SERIES).isin(ids: _*)
-    val matched = inSeries && col(TS_US).between(fromUs, toUs) &&
-      (if (pipe.isEmpty) lit(true) else Tags.predicate(col(TAG), pipe))
-    df.filter(!coalesce(matched, lit(false)))
+    coalesce(inSeries && col(TS_US).between(fromUs, toUs) &&
+      (if (pipe.isEmpty) lit(true) else Tags.predicate(col(TAG), pipe)), lit(false))
   }
 
-  def deleteSince(df: DataFrame, ids: Seq[String], fromUs: Long,
+  /** D1 `delete range`: returns the SURVIVING rows ([[deleteMatch]]). */
+  def deleteRange(df: DataFrame, ids: Seq[String], fromUs: Long, toUs: Long,
                   pipe: Seq[Tags.Group] = Nil): DataFrame =
-    deleteRange(df, ids, fromUs, Long.MaxValue, pipe)
+    df.filter(!deleteMatch(ids, fromUs, toUs, pipe))
 
   // ------------------------------------------------------------ I1-I6, U2
 

@@ -23,18 +23,21 @@ import scala.jdk.CollectionConverters._
   * Spark-first replacement: `bucket=<b>/day=<yyyy-MM-dd>/part-*.parquet`,
   * where `b` is the series id hashed into a fixed bucket count and
   * `series` is an ordinary column.
-  *  - partition pruning on `bucket` and `day` IS the interval index — the
-  *    driver never lists files outside the queried series' buckets and
-  *    time range; inside a bucket, rows are sorted by (series, ts_us), so
+  *  - partition pruning on `bucket` is half the interval index — a
+  *    series-scoped read never lists files outside the queried series'
+  *    buckets; inside a bucket, rows are sorted by (series, ts_us), so
   *    parquet row-group min/max stats skip a bucket's foreign series and
-  *    prune inside a day — the Complete/Partial shard classification
-  *    (`src/timeseries.re:569-588`) for free;
+  *    prune by time — the Complete/Partial shard classification
+  *    (`src/timeseries.re:569-588`) for free. The other half is the
+  *    manifest's per-(dir, bucket) `max` lines ([[VersionedStore]]);
+  *    `day` prunes only the overlap probe ([[daysFrom]]);
   *  - a write creates at most buckets × days dirs, independent of series
   *    cardinality, and a partition dir name is a number: no series id,
   *    whatever its characters or the file system's charset, ever becomes
   *    a path;
   *  - overlap-merge compaction is unnecessary for correctness (overlapping
-  *    files are fine); `compact()` exists for file hygiene only;
+  *    files are fine); [[VersionedStore.compact]] (live:
+  *    `TieredStore.compactDisk`) exists for file hygiene only;
   *  - at 100 TB: writes scale out per (bucket, day); no global
   *    coordination, no driver-side index, append-only — late data just
   *    lands in its own (old-day) partition, giving the reference's
@@ -42,10 +45,12 @@ import scala.jdk.CollectionConverters._
   *
   * This object is the ONE owner of the on-disk layout: the partitioning,
   * the partition columns and their types, and the partition dir names.
-  * Every other module ([[TieredStore]]'s pruned reads and deletes,
-  * [[VersionedStore]]'s skip and `max` lines and read schema) asks these functions,
-  * passing the bucket count the data was written with (a
-  * [[VersionedStore]] manifest records it per commit).
+  * It has no read, delete or compaction of its own: a series persists
+  * only through the [[VersionedStore]] manifest chain, whose data dirs
+  * this writer fills. Every other module ([[TieredStore]]'s pruned reads
+  * and deletes, [[VersionedStore]]'s skip and `max` lines and read
+  * schema) asks these functions, passing the bucket count the data was
+  * written with (a [[VersionedStore]] manifest records it per commit).
   */
 object ShardStore {
 
@@ -58,7 +63,7 @@ object ShardStore {
   /** Shard-size analog (`--shard-size`, reference `src/main.re:10`): caps
     * file size so single-partition hotspots still parallelize on read.
     */
-  val maxRecordsPerFile = 5000000L
+  private val maxRecordsPerFile = 5000000L
 
   /** Bucket id of a series as a Column (write path / plan side): CRC32 mod
     * buckets — public, bit-identical to [[bucketOf]]. */
@@ -75,11 +80,14 @@ object ShardStore {
     java.lang.Math.floorMod(c.getValue, buckets.toLong)
   }
 
-  /** The pre-write repartition on (bucket, day) makes each output dir
-    * receive files from few tasks — file count tracks data volume, not
-    * series count; sorting by (series, ts_us) inside each makes parquet
-    * row-group stats tight → row-group pruning on series and time. */
-  private def write(df: DataFrame, path: String, buckets: Int, mode: SaveMode): Unit =
+  /** Append canonical datapoints under `path`. The pre-write repartition
+    * on (bucket, day) makes each output dir receive files from few tasks —
+    * file count tracks data volume, not series count; sorting by (series,
+    * ts_us) inside each makes parquet row-group stats tight → row-group
+    * pruning on series and time. Only [[VersionedStore]] writes here, one
+    * fresh data dir per commit: a bare path has no manifest, so nothing
+    * else can read it as a store. */
+  private[graft] def append(df: DataFrame, path: String, buckets: Int): Unit =
     df.withColumn(BUCKET, bucketCol(col(SERIES), buckets))
       .withColumn(DAY, date_format(timestamp_micros(col(TS_US)), "yyyy-MM-dd"))
       .repartition(col(BUCKET), col(DAY))
@@ -87,41 +95,13 @@ object ShardStore {
       .write
       .partitionBy(BUCKET, DAY)
       .option("maxRecordsPerFile", maxRecordsPerFile)
-      .mode(mode)
+      .mode(SaveMode.Append)
       .parquet(path)
-
-  /** Append canonical datapoints. */
-  def append(df: DataFrame, path: String, buckets: Int = Buckets): Unit =
-    write(df, path, buckets, SaveMode.Append)
-
-  /** Read the store back in canonical form (partition columns dropped). */
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-      .select(col(SERIES), col(TS_US), col(TAG), col(VALUE), col(RID))
-
-  /** Range read that lets Catalyst prune partitions: the ids' buckets and
-    * the `day` bounds derived from the µs bounds land on the partition
-    * columns, the exact bounds on `series`/`ts_us` (pushed to row-group
-    * stats). The store must have been written with [[Buckets]] buckets.
-    */
-  def readRange(spark: SparkSession, path: String, ids: Seq[String],
-                fromUs: Long, toUs: Long): DataFrame = {
-    val raw = spark.read.parquet(path)
-    val pruned = raw
-      .filter(daysFrom(fromUs))
-      .filter(col(DAY) <= dayOf(toUs))
-      .filter(col(TS_US).between(fromUs, toUs))
-    val bySeries =
-      if (ids.isEmpty) pruned
-      else pruned.filter(partitionsOf(ids, Buckets)).filter(col(SERIES).isin(ids: _*))
-    bySeries.select(col(SERIES), col(TS_US), col(TAG), col(VALUE), col(RID))
-  }
-
-  private def dayOf(us: Long): Column = date_format(timestamp_micros(lit(us)), "yyyy-MM-dd")
 
   /** Filter on the `day` partition column keeping the days that can hold a
     * timestamp at or past `fromUs`. */
-  def daysFrom(fromUs: Long): Column = col(DAY) >= dayOf(fromUs)
+  def daysFrom(fromUs: Long): Column =
+    col(DAY) >= date_format(timestamp_micros(lit(fromUs)), "yyyy-MM-dd")
 
   /** Filter on the top-level partition column selecting every partition
     * that holds `ids`: their buckets whole, co-resident series included. */
@@ -181,50 +161,4 @@ object ShardStore {
   /** The partition columns beyond the canonical schema, with their types. */
   val partitionFields: Seq[StructField] =
     Seq(StructField(BUCKET, LongType), StructField(DAY, StringType))
-
-  /** File-hygiene compaction (the overlap-merge analog, S4): every append
-    * drops ≥1 file into each touched `bucket=/day=` dir, so a long-lived
-    * store accretes O(appends × dirs) small files. One rewrite through
-    * the writer's (bucket, day) repartition coalesces each dir to
-    * task-count files (typically 1) with the same within-file (series,
-    * ts_us) sort — content identical, row-group stats as tight as a
-    * fresh write; correctness never depends on it. Out-of-place; the live
-    * in-place form is `TieredStore.compactDisk` (manifest-chain commit +
-    * expiry).
-    */
-  def compact(spark: SparkSession, path: String, outPath: String,
-              buckets: Int = Buckets): Unit =
-    append(read(spark, path), outPath, buckets)
-
-  /** Production bucketed layout for id-keyed corpus tables (documents,
-    * embeddings): hash-bucketed AND sorted on the join id, so every
-    * id-equi join / semi-join between co-bucketed tables plans with ZERO
-    * exchange on either side (proven by `BucketedLayoutSpec` against the
-    * final AQE plan). At 100 TB this converts the per-query id shuffle
-    * of joins like filtered vector search, decontamination and funnel
-    * stages into a pure scan-side merge. Bucket metadata lives in the
-    * session catalog (Spark bucketing is table-scoped, not path-scoped);
-    * pass `path` to pin the parquet files to an external location.
-    */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-                    buckets: Int, path: Option[String] = None): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, bucketCol)
-      .sortBy(bucketCol)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-    path.fold(w)(p => w.option("path", p)).saveAsTable(table)
-  }
-
-  /** Read a bucketed table back with its bucket metadata attached (a
-    * plain `spark.read.parquet` of the same files would lose it).
-    */
-  def readBucketed(spark: SparkSession, table: String): DataFrame =
-    spark.table(table)
-
-  /** D1 physical delete: rewrite the store without rows matching the
-    * predicate-bearing `survivors` frame (callers build it via
-    * TimeSeries.deleteRange/deleteSince), overwriting `outPath`.
-    */
-  def rewrite(survivors: DataFrame, outPath: String): Unit =
-    write(survivors, outPath, Buckets, SaveMode.Overwrite)
 }

@@ -104,9 +104,16 @@ import org.apache.spark.sql.graft.PackedRows
   * alone picks the path.
   *
   * Mutations are serialized on the store instance — the concurrency model
-  * the reference enforces globally (`src/main.re:225-227`) — and each
-  * lands at cached-tip + 1, so the manifest CAS additionally rejects any
-  * out-of-band writer racing the same root.
+  * the reference enforces globally (`src/main.re:225-227`). The store
+  * owns its chain tip: a spill, sync, direct append, delete or compaction
+  * commits on the cached tip at tip + 1 and takes the commit it just
+  * published as the new tip, so none of them re-reads the manifest chain
+  * (a compaction's history expiry lists it once; reopen reads it once).
+  * A writer that committed on the same root since (another store, a bare
+  * [[VersionedStore]] call) makes the manifest CAS fail the mutation with
+  * [[VersionedStore.ConcurrentCommitException]]: the buffer and the
+  * cached tip stay as they were, and only a reopen adopts the foreign
+  * commit.
   */
 final class TieredStore(spark: SparkSession, val root: String) {
   import TieredStore._
@@ -115,9 +122,9 @@ final class TieredStore(spark: SparkSession, val root: String) {
     * series has nothing buffered. Replaced whole on every mutation, so a
     * frame built from it never changes. */
   @volatile private var mem = Map.empty[String, Queue]
-  /** Cached tip of the disk tier's manifest chain — refreshed after every
-    * committed mutation, so reads plan without re-listing manifests. Its
-    * `max` lines are the disk bounds. */
+  /** Tip of the disk tier's manifest chain: read at open, then the commit
+    * each mutation published, so reads and mutations plan without
+    * re-listing manifests. Its `max` lines are the disk bounds. */
   @volatile private var tip: Option[VersionedStore.Commit] = None
 
   // ---- open/reopen: read the tip manifest, which carries the disk
@@ -126,22 +133,17 @@ final class TieredStore(spark: SparkSession, val root: String) {
   // manifest CAS left every prior mutation either fully committed or
   // fully absent.
   locally {
-    refreshTip()
+    tip = VersionedStore.versions(spark, root).lastOption
     if (tip.nonEmpty) VersionedStore.sweepOrphanData(spark, root)
   }
-
-  private def refreshTip(): Unit =
-    tip = VersionedStore.versions(spark, root).lastOption
 
   private def canonSel(df: DataFrame): DataFrame =
     df.select(col(SERIES), col(TS_US), col(TAG), col(VALUE), col(RID))
 
-  /** Disk append as a manifest version; a frame that writes no file
-    * commits none. */
-  private def appendStore(df: DataFrame): Unit = {
-    VersionedStore.append(df, root)
-    refreshTip()
-  }
+  /** Disk append as a manifest version on the cached tip; a frame that
+    * writes no file commits none. */
+  private def appendStore(df: DataFrame): Unit =
+    tip = VersionedStore.appendOn(tip, df, root)
 
   /** Whole disk tier at the cached tip, canonical form. */
   private def readStore: DataFrame =
@@ -287,7 +289,8 @@ final class TieredStore(spark: SparkSession, val root: String) {
     * Matched-row semantics, not the reference's delete-by-timestamp-
     * membership quirk (`timeseries.re:264-272` removes ANY point sharing
     * a timestamp with a matched one) — the documented divergence
-    * SURVEY §7.5 #6, shared with [[graft.operators.TimeSeries.deleteRange]].
+    * SURVEY §7.5 #6, defined once in
+    * [[graft.operators.TimeSeries.deleteMatch]].
     *
     * Physical shape ([[VersionedStore.deletePartitions]]): the rewrite
     * unit is the PARTITION — the touched series' `bucket=` partitions
@@ -308,18 +311,14 @@ final class TieredStore(spark: SparkSession, val root: String) {
     require(ids.nonEmpty, "tiered delete needs explicit series ids")
     flushLocked(ids)
     val c = tip.filter(_.dirs.nonEmpty).getOrElse(return 0L)
-    val matched = coalesce(
-      col(SERIES).isin(ids: _*) && col(TS_US).between(fromUs, toUs) &&
-        (if (pipe.isEmpty) lit(true) else Tags.predicate(col(TAG), pipe)),
-      lit(false))
+    val matched = TS.deleteMatch(ids, fromUs, toUs, pipe)
     // rows of every partition the delete touches (see scaladoc): the ids'
     // buckets whole, so co-resident series ride into the survivors dir
     val affected = prunedCanon(c, _.filter(ShardStore.partitionsOf(ids, c.buckets)))
     val deleted = affected.filter(matched).count()
     if (deleted == 0L) return 0L
-    VersionedStore.deletePartitions(affected.filter(!matched), root,
-      ShardStore.partitionNames(ids, c.buckets), c.version)
-    refreshTip()
+    tip = Some(VersionedStore.deletePartitions(affected.filter(!matched), root,
+      ShardStore.partitionNames(ids, c.buckets), c))
     deleted
   }
 
@@ -350,10 +349,9 @@ final class TieredStore(spark: SparkSession, val root: String) {
     * the ingest path.
     */
   def compactDisk(retainHistory: Boolean = false): Unit = this.synchronized {
-    if (!tip.exists(_.dirs.nonEmpty)) return
-    VersionedStore.compact(spark, root)
+    val c = tip.filter(_.dirs.nonEmpty).getOrElse(return)
+    tip = Some(VersionedStore.compactOn(spark, root, c))
     if (!retainHistory) VersionedStore.expire(spark, root, keepLast = 1)
-    refreshTip()
   }
 
   /** The whole store as one canonical frame (memory ∪ disk) — the input

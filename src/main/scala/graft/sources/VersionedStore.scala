@@ -184,8 +184,9 @@ object VersionedStore {
       }
   }
 
-  /** Publish `c` as the manifest of version `c.version`. */
-  private[graft] def commitAt(spark: SparkSession, root: String, c: Commit): Int = {
+  /** Publish `c` as the manifest of version `c.version`; returns `c`,
+    * the new tip. */
+  private[graft] def commitAt(spark: SparkSession, root: String, c: Commit): Commit = {
     val fs = fsOf(spark, root)
     val mdir = new Path(root, MANIFESTS)
     fs.mkdirs(mdir)
@@ -208,7 +209,7 @@ object VersionedStore {
         s"version ${c.version} was committed by a concurrent writer while this " +
         s"${c.op} was in flight; the chain is intact — reload and retry")
     }
-    c.version
+    c
   }
 
   /** Atomically publish `tmp` as `dest`, failing (false) when `dest`
@@ -272,16 +273,21 @@ object VersionedStore {
     * that writes no file commits nothing and returns the tip's version
     * (0 on a new root): an empty append adds no version to the chain.
     */
-  def append(df: DataFrame, root: String): Int = {
-    val spark = df.sparkSession
-    // one chain snapshot feeds both the version number and the parent dir
-    // set, so the manifest can never pair v with a different writer's tip
-    val tip = versions(spark, root).lastOption
-    val parent = tip.fold(0)(_.version)
-    val w = writeData(df, root, parent + 1, "append", bucketsAfter(tip))
-    if (w.dirs.isEmpty) parent
-    else commitAt(spark, root, tip.fold(w)(t => w.copy(dirs = t.dirs ++ w.dirs,
-      skips = t.skips, maxes = t.maxes ++ w.maxes)))
+  def append(df: DataFrame, root: String): Int =
+    appendOn(versions(df.sparkSession, root).lastOption, df, root).fold(0)(_.version)
+
+  /** [[append]] on the parent commit `tip` (None: a new root), which
+    * feeds both the version number and the parent dir set, so the
+    * manifest can never pair a version with a different writer's tip: the
+    * commit lands at `tip + 1`, and the manifest CAS fails it when any
+    * writer committed since. Returns the new tip — `tip` itself when the
+    * frame wrote no file. */
+  private[graft] def appendOn(tip: Option[Commit], df: DataFrame,
+                              root: String): Option[Commit] = {
+    val w = writeData(df, root, tip.fold(0)(_.version) + 1, "append", bucketsAfter(tip))
+    if (w.dirs.isEmpty) tip
+    else Some(commitAt(df.sparkSession, root, tip.fold(w)(t =>
+      w.copy(dirs = t.dirs ++ w.dirs, skips = t.skips, maxes = t.maxes ++ w.maxes))))
   }
 
   /** D1 delete as a version: rewrite survivors into one fresh dir; the
@@ -304,7 +310,7 @@ object VersionedStore {
     val spark = survivors.sparkSession
     val tip = versions(spark, root).lastOption
     val v = expectedVersion.getOrElse(tip.map(_.version).getOrElse(0)) + 1
-    commitAt(spark, root, writeData(survivors, root, v, "delete", bucketsAfter(tip)))
+    commitAt(spark, root, writeData(survivors, root, v, "delete", bucketsAfter(tip))).version
   }
 
   /** PARTITION-SCOPED delete commit (the Iceberg partition-overwrite idea,
@@ -316,23 +322,20 @@ object VersionedStore {
     * partitions are carried by reference. The survivors dir brings its own
     * `max` figures, so a bucket's bound shrinks with the delete. Cost
     * tracks the affected partitions' data, never store size, and the
-    * manifest CAS at `expectedVersion + 1` makes the whole mutation
-    * all-or-nothing (see [[deleteRewrite]] for the snapshot discipline).
+    * manifest CAS at `tip.version + 1` makes the whole mutation
+    * all-or-nothing: `tip` is the commit the survivors were read from (see
+    * [[deleteRewrite]] for the snapshot discipline). Returns the new tip.
     */
   def deletePartitions(survivors: DataFrame, root: String,
-                       affected: Seq[String], expectedVersion: Int): Int = {
-    val spark = survivors.sparkSession
-    val tip = versions(spark, root).find(_.version == expectedVersion)
-      .getOrElse(throw new IllegalArgumentException(
-        s"expected version $expectedVersion is not committed under $root"))
-    val w = writeData(survivors, root, expectedVersion + 1, "delete", tip.buckets)
+                       affected: Seq[String], tip: Commit): Commit = {
+    val w = writeData(survivors, root, tip.version + 1, "delete", tip.buckets)
     // new skips: the affected partitions, excluded from every PARENT dir
     // (a skip on a dir that never held the partition filters nothing);
     // the survivors dir itself carries none, and the parent's own skips
     // ride along so earlier deletes stay deleted
     val skips = (tip.skips ++ tip.dirs.flatMap(dir => affected.map((dir, _)))).distinct
-    commitAt(spark, root, w.copy(dirs = tip.dirs ++ w.dirs, skips = skips,
-      maxes = tip.maxes ++ w.maxes))
+    commitAt(survivors.sparkSession, root,
+      w.copy(dirs = tip.dirs ++ w.dirs, skips = skips, maxes = tip.maxes ++ w.maxes))
   }
 
   /** File-hygiene compaction as a version: collapse the live dir set to
@@ -342,12 +345,15 @@ object VersionedStore {
     * [[append]] discipline), so the committed content can never be a
     * different writer's tip than the version claims.
     */
-  def compact(spark: SparkSession, root: String): Int = {
-    val tip = versions(spark, root).lastOption
-      .getOrElse(throw new IllegalArgumentException(s"no committed versions under $root"))
+  def compact(spark: SparkSession, root: String): Int =
+    compactOn(spark, root, versions(spark, root).lastOption
+      .getOrElse(throw new IllegalArgumentException(s"no committed versions under $root"))).version
+
+  /** [[compact]] of the parent commit `tip`, at `tip + 1`; returns the new
+    * tip. */
+  private[graft] def compactOn(spark: SparkSession, root: String, tip: Commit): Commit =
     commitAt(spark, root,
       writeData(contentOf(spark, root, tip), root, tip.version + 1, "compact", tip.buckets))
-  }
 
   /** Expire history (the public VACUUM / expire-snapshots idea): drop
     * every version but the newest `keepLast`, then every data dir no

@@ -9,11 +9,16 @@ import org.apache.spark.sql.functions._
   * sides — at 100 TB that is the difference between an id-only shuffle
   * per query and none at all. Auto-broadcast is disabled inside the test:
   * at 100 TB neither side broadcasts, and with broadcast available the
-  * planner (correctly) ignores bucketing at toy scale. Bucketing is the
-  * production layout story; the parquet-path tests elsewhere cover the
-  * unbucketed case.
+  * planner (correctly) ignores bucketing at toy scale. The tables are
+  * Spark bucketed tables (`bucketBy(...).saveAsTable`, hash-bucketed AND
+  * sorted on the join id; bucket metadata lives in the session catalog,
+  * not the path); the parquet-path tests elsewhere cover the unbucketed
+  * case.
   */
 class BucketedLayoutSpec extends SparkSuite {
+
+  private def saveBucketed(df: org.apache.spark.sql.DataFrame, table: String): Unit =
+    df.write.mode("overwrite").bucketBy(8, "doc_id").sortBy("doc_id").saveAsTable(table)
 
   private def finalPlan(df: org.apache.spark.sql.DataFrame): String = {
     df.queryExecution.toRdd.count()
@@ -25,14 +30,14 @@ class BucketedLayoutSpec extends SparkSuite {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .withColumnRenamed("vec_id", "doc_id")
-    // the PRODUCTION writer/reader, not a test-local saveAsTable
-    graft.sources.ShardStore.writeBucketed(docs, "graft_docs_b", "doc_id", 8)
-    graft.sources.ShardStore.writeBucketed(embs, "graft_embs_b", "doc_id", 8)
+    saveBucketed(docs, "graft_docs_b")
+    saveBucketed(embs, "graft_embs_b")
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val d = graft.sources.ShardStore.readBucketed(spark, "graft_docs_b")
-      val e = graft.sources.ShardStore.readBucketed(spark, "graft_embs_b")
+      // spark.table keeps the bucket metadata a parquet-path read would lose
+      val d = spark.table("graft_docs_b")
+      val e = spark.table("graft_embs_b")
       // inner join on the bucket key: both sides scan their buckets
       // directly — no exchange before the join (the groupBy downstream
       // still aggregates, which is its own business)
@@ -62,22 +67,14 @@ class BucketedLayoutSpec extends SparkSuite {
   test("bucketed bucket=/day= compaction: fewer files, identical content, live-swap safe") {
     import spark.implicits._
     import graft.model.Canon.{Datapoint, TagEntry}
-    import graft.sources.{ShardStore, TieredStore}
+    import graft.sources.TieredStore
     val T0 = 1704067200000000L
     def wave(w: Long) = (0L until 50L).flatMap(i =>
-      Seq(Datapoint(s"s${i % 25}", T0 + (w * 50 + i) * 1000L, // 25 series, 4 buckets
+      Seq(Datapoint(s"s${i % 25}", T0 + (w * 50 + i) * 1000L, // 25 series
         Some(Seq(TagEntry("k", "1"))), i.toDouble, w * 1000 + i)))
     import StoreTestUtil.{fp, parquetFiles}
-    // out-of-place: 8 append waves -> one compacted rewrite
-    val p1 = tmpDir("bkt_compact_src")
-    (0L until 8L).foreach(w => ShardStore.append(wave(w).toDF(), p1, 4))
-    val want = fp(ShardStore.read(spark, p1))
-    val p2 = tmpDir("bkt_compact_out")
-    ShardStore.compact(spark, p1, p2, 4)
-    assert(fp(ShardStore.read(spark, p2)) == want, "compaction changed content")
-    assert(parquetFiles(p2) < parquetFiles(p1),
-      s"no coalescing: ${parquetFiles(p1)} -> ${parquetFiles(p2)}")
-    // live in-place form through the marker-committed swap, memory intact
+    // 8 append waves -> one compaction committed on the manifest chain,
+    // memory intact
     val root = tmpDir("bkt_compact_live")
     val st = new TieredStore(spark, root)
     (0L until 8L).foreach(w => st.appendDisk(wave(w).toDF()))

@@ -10,10 +10,10 @@ import org.apache.spark.sql.functions._
   * floors in SimilaritySpec are deliberately loose because near-uniform
   * directions are the structural worst case for every ANN family. This
   * suite asserts the floors in the regime the operators exist for — a
-  * CLUSTERED corpus (the RecallProbe construction: 50 unit centers,
-  * per-dim gaussian noise sigma=0.05 -> noise norm ~0.4, renormalized),
-  * where tools/RecallProbe measured mean recall@10 = 1.000 for all four
-  * tiers at sf0.1. A banding/probing regression (wrong plane count, a
+  * CLUSTERED corpus (50 unit centers, per-dim gaussian noise sigma=0.05
+  * -> noise norm ~0.4, renormalized), on which all four tiers measured
+  * mean recall@10 = 1.000 at sf0.1 scale (2k vectors, 50 queries,
+  * local[32]). A banding/probing regression (wrong plane count, a
   * broken nprobe, an ADC shortlist that stops refining) is exactly the
   * class of bug no other test can flip red.
   *
@@ -35,8 +35,8 @@ class RecallGateSpec extends SparkSuite {
   private val k = 10
 
   /** Deterministic 50-center mixture on the unit sphere, label = center
-    * id — same construction (and seed) as RecallProbe's clustered
-    * regime, sized for the suite. */
+    * id — the clustered regime of the sf0.1 measurement above, same
+    * seed, sized for the suite. */
   private lazy val corpus: DataFrame = {
     val rnd = new scala.util.Random(7)
     def unit(): Array[Double] = {

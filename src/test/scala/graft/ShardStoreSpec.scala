@@ -3,12 +3,14 @@ package graft
 import graft.model.Canon.{Datapoint, TagEntry}
 import graft.model.Canon
 import graft.operators.{TimeSeries => TS}
-import graft.sources.{ShardStore, TieredStore}
+import graft.sources.{ShardStore, TieredStore, VersionedStore}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
-/** Storage layout: roundtrip fidelity + pruning actually reaching the scan.
-  * The pruning assertions are the scale contract: at 100 TB the query must
-  * read only the partitions/row-groups its predicate names (SURVEY §4).
+/** Storage layout: roundtrip fidelity + pruning actually reaching the scan,
+  * through the manifest chain that is the only way to disk. The pruning
+  * assertions are the scale contract: at 100 TB the query must read only
+  * the partitions/row-groups its predicate names (SURVEY §4).
   */
 class ShardStoreSpec extends SparkSuite {
   import spark.implicits._
@@ -24,12 +26,12 @@ class ShardStoreSpec extends SparkSuite {
 
   lazy val store: String = {
     val p = tmpDir("shardstore")
-    ShardStore.append(data.toDF(), p)
+    VersionedStore.append(data.toDF(), p)
     p
   }
 
   test("roundtrip preserves every row and the canonical schema") {
-    val back = ShardStore.read(spark, store)
+    val back = VersionedStore.read(spark, store)
     assert(back.count() == 1000)
     assert(back.columns.toSeq == Seq("series", "ts_us", "tag", "value", "rid"))
     val row = back.filter($"rid" === 13L)
@@ -38,20 +40,26 @@ class ShardStoreSpec extends SparkSuite {
   }
 
   test("partition layout is bucket=/day= (the interval-index analog)") {
-    val dirs = new java.io.File(store).listFiles().filter(_.isDirectory).map(_.getName).sorted
+    // one commit, one data dir: data/v=<dir>/bucket=<b>/day=<yyyy-MM-dd>
+    val Seq(dir) = VersionedStore.versions(spark, store).last.dirs
+    assert(new java.io.File(s"$store/data").list().toSeq == Seq(s"v=$dir"))
+    val dirs = new java.io.File(s"$store/data/v=$dir").listFiles().filter(_.isDirectory)
+      .map(_.getName).sorted
     assert(dirs.toSeq == ShardStore.partitionNames(Seq("alpha", "beta"), ShardStore.Buckets).sorted)
     dirs.foreach { d =>
-      val days = new java.io.File(s"$store/$d").listFiles().filter(_.isDirectory).map(_.getName)
+      val days = new java.io.File(s"$store/data/v=$dir/$d").listFiles().filter(_.isDirectory).map(_.getName)
       assert(days.length >= 10 && days.forall(_.startsWith("day=")), d)
     }
   }
 
   test("range read prunes partitions and pushes ts filter to the scan") {
-    val q = ShardStore.readRange(spark, store, Seq("alpha"),
+    // the served range read: the ids' snapshot, then the range filter
+    val st = new TieredStore(spark, store)
+    val q = TS.readRange(st.snapshot(Seq("alpha")), Seq("alpha"),
       1704067200000000L + 2 * DAY_US, 1704067200000000L + 3 * DAY_US)
     val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"), plan)
-    assert(plan.contains("PushedFilters") && plan.contains("ts_us"), plan)
+    assert("PartitionFilters: \\[[^\\]]*bucket".r.findFirstIn(plan).nonEmpty, plan)
+    assert("PushedFilters: \\[[^\\]]*ts_us".r.findFirstIn(plan).nonEmpty, plan)
     // correctness of the pruned read
     val viaStore = q.select("rid").as[Long].collect().toSet
     val viaMemory = TS.readRange(data.toDF(), Seq("alpha"),
@@ -62,9 +70,12 @@ class ShardStoreSpec extends SparkSuite {
 
   test("append twice = bag union (late data lands without rewrites)") {
     val p = tmpDir("shardstore2")
-    ShardStore.append(data.take(10).toDF(), p)
-    ShardStore.append(data.take(10).toDF(), p)
-    assert(ShardStore.read(spark, p).count() == 20)
+    VersionedStore.append(data.take(10).toDF(), p)
+    VersionedStore.append(data.take(10).toDF(), p)
+    assert(VersionedStore.read(spark, p).count() == 20)
+    // the second commit carries the first's dir by reference
+    val Seq(v1, v2) = VersionedStore.versions(spark, p)
+    assert(v2.dirs.size == 2 && v2.dirs.contains(v1.dirs.head))
   }
 
   test("partition names round-trip: encoded = written dirs, decode selects them") {
@@ -107,13 +118,19 @@ class ShardStoreSpec extends SparkSuite {
     }
   }
 
-  test("rewrite (delete path) drops matched rows from the store") {
+  test("deletePartitions (delete path) drops matched rows from the store") {
     val p = tmpDir("shardstore3")
-    ShardStore.append(data.take(100).toDF(), p)
-    val survivors = TS.deleteRange(ShardStore.read(spark, p), Seq("alpha"),
-      1704067200000000L, 1704067200000000L + DAY_US)
-    ShardStore.rewrite(survivors, p + "_v2")
-    val back = ShardStore.read(spark, p + "_v2")
+    VersionedStore.append(data.take(100).toDF(), p)
+    val tip = VersionedStore.versions(spark, p).last
+    // the rewrite unit is alpha's bucket: its rows whole, minus the matched
+    val affected = VersionedStore.read(spark, p).filter(
+      ShardStore.bucketCol(col("series"), tip.buckets) === ShardStore.bucketOf("alpha", tip.buckets))
+    val matched = TS.deleteMatch(Seq("alpha"), 1704067200000000L, 1704067200000000L + DAY_US)
+    val deleted = affected.filter(matched).count()
+    VersionedStore.deletePartitions(affected.filter(!matched), p,
+      ShardStore.partitionNames(Seq("alpha"), tip.buckets), tip)
+    val back = VersionedStore.read(spark, p)
+    assert(deleted > 0 && back.count() == 100 - deleted)
     assert(back.filter($"series" === "alpha").count() < 50)
     assert(back.filter($"series" === "beta").count() == 50)
   }

@@ -1,13 +1,16 @@
 package graft
 
+import graft.api.Router
 import graft.functions.Tags
 import graft.model.Canon
 import graft.operators.{TimeSeries => TS}
-import graft.sources.ShardStore
+import graft.sources.{ShardStore, TieredStore}
+import org.apache.spark.sql.functions.col
 
 /** End-to-end storage integration at sf0.1: the full events corpus through
-  * the partitioned store must answer every core query identically to the
-  * direct parquet read — and do it through pruned scans.
+  * the served store (the [[TieredStore]] that answers HTTP) must answer
+  * every core query identically to the direct parquet read — and do it
+  * through pruned scans.
   */
 class StoreIntegrationSpec extends SparkSuite {
   import spark.implicits._
@@ -16,18 +19,17 @@ class StoreIntegrationSpec extends SparkSuite {
   private val R2 = 1705708800000000L
 
   lazy val direct = Canon.events(spark, "/root/testdata/sf0.1")
-  lazy val store: String = {
-    val p = tmpDir("store_sf01")
-    ShardStore.append(direct, p)
-    p
+  lazy val store: TieredStore = {
+    val st = new TieredStore(spark, tmpDir("store_sf01"))
+    st.appendDisk(direct)
+    st
   }
 
-  private def viaStore = ShardStore.read(spark, store)
-
   test("full corpus round-trips (100k rows, 5 series, 30 day partitions)") {
-    assert(viaStore.count() == direct.count())
-    val days = new java.io.File(
-      s"$store/${ShardStore.partitionNames(Seq("click"), ShardStore.Buckets).head}").listFiles()
+    assert(store.snapshot.count() == direct.count())
+    val Seq(dir) = store.diskVersions.last.dirs
+    val bucket = ShardStore.partitionNames(Seq("click"), ShardStore.Buckets).head
+    val days = new java.io.File(s"${store.root}/data/v=$dir/$bucket").listFiles()
       .count(f => f.isDirectory && f.getName.startsWith("day="))
     assert(days >= 29, s"$days day partitions")
   }
@@ -36,27 +38,25 @@ class StoreIntegrationSpec extends SparkSuite {
     def run(df: org.apache.spark.sql.DataFrame) =
       TS.aggregate(TS.tagFilter(TS.readRange(df, Seq("click", "error"), R1, R2),
         Seq(Tags.Group("u", Seq("3"), Tags.Eq))), TS.Sum).as[Double].head()
-    assert(run(viaStore) == run(direct))
+    assert(run(store.snapshot(Seq("click", "error"))) == run(direct))
   }
 
-  test("pruned store range read touches only the partitions in range") {
-    val q = ShardStore.readRange(spark, store, Seq("click"), R1, R2)
-    val files = q.queryExecution.executedPlan.collectLeaves()
-      .flatMap(_.toString.split('\n')).mkString("\n")
-    assert(q.count() == TS.readRange(direct, Seq("click"), R1, R2).count())
-    val scanned = q.rdd.partitions.length // post-pruning input partitions
-    assert(scanned > 0)
+  test("served range read prunes the ids' buckets and pushes ts_us to the scan") {
+    val q = Router.run(store, s"ts/click/range/$R1/$R2")
     val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("day"), plan)
+    assert("PartitionFilters: \\[[^\\]]*bucket".r.findFirstIn(plan).nonEmpty, plan)
+    assert("PushedFilters: \\[[^\\]]*ts_us".r.findFirstIn(plan).nonEmpty, plan)
+    assert(q.count() == TS.readRange(direct, Seq("click"), R1, R2).count())
   }
 
   test("per-series top-n identical via store") {
-    val a = TS.readLast(viaStore, Seq("click", "view"), 20).select("rid").as[Long].collect().toSeq
-    val b = TS.readLast(direct, Seq("click", "view"), 20).select("rid").as[Long].collect().toSeq
-    assert(a == b)
+    def rids(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(col("ts_us").desc, col("rid").desc).select("rid").as[Long].collect().toSeq
+    assert(rids(store.readLast(Seq("click", "view"), 20)) ==
+      rids(TS.readLast(direct, Seq("click", "view"), 20)))
   }
 
-  test("mutation lifecycle: split append → compact ×2 → delete-rewrite → bucketed, " +
+  test("mutation lifecycle: split append → compact ×2 → delete → reopen, " +
       "results identical at every step") {
     // The reference's S4 overlap-merge invariant (timeseries.re:119-156):
     // storage mutations never change query results. Expressed here as one
@@ -72,44 +72,34 @@ class StoreIntegrationSpec extends SparkSuite {
           col("rid")).cast("long"))).head()
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
-    def parquetFiles(p: String): Int = {
-      def walk(f: java.io.File): Int =
-        if (f.isDirectory) f.listFiles().map(walk).sum
-        else if (f.getName.endsWith(".parquet")) 1 else 0
-      walk(new java.io.File(p))
-    }
+    import StoreTestUtil.parquetFiles
     val want = fp(src)
     // two appends split mid-range: the second is "late" data landing in
     // day partitions interleaved with the first (append-only, no rewrite)
-    val p1 = tmpDir("store_lc")
-    ShardStore.append(src.filter($"ts_us" < R1), p1)
-    ShardStore.append(src.filter($"ts_us" >= R1), p1)
-    assert(fp(ShardStore.read(spark, p1)) == want, "after split append")
+    val root = tmpDir("store_lc")
+    val st = new TieredStore(spark, root)
+    st.appendDisk(src.filter($"ts_us" < R1))
+    st.appendDisk(src.filter($"ts_us" >= R1))
+    assert(fp(st.snapshot) == want, "after split append")
     // compaction is file hygiene only — results identical, never more files
-    val p2 = tmpDir("store_lc_c1")
-    ShardStore.compact(spark, p1, p2)
-    assert(fp(ShardStore.read(spark, p2)) == want, "after compact")
-    assert(parquetFiles(p2) <= parquetFiles(p1),
-      s"compaction grew the store: ${parquetFiles(p1)} -> ${parquetFiles(p2)}")
+    val filesBefore = parquetFiles(root)
+    st.compactDisk()
+    assert(fp(st.snapshot) == want, "after compact")
+    assert(parquetFiles(root) <= filesBefore,
+      s"compaction grew the store: $filesBefore -> ${parquetFiles(root)}")
     // idempotence: compacting the compacted store changes nothing
-    val p3 = tmpDir("store_lc_c2")
-    ShardStore.compact(spark, p2, p3)
-    assert(fp(ShardStore.read(spark, p3)) == want, "after re-compact")
-    // D1 delete-rewrite: survivors of a range delete, rewritten physically,
-    // must equal the logical delete over the pristine source
-    val survivors = TS.deleteRange(ShardStore.read(spark, p3), Seq("click"), R1, R2)
-    val p4 = tmpDir("store_lc_d")
-    ShardStore.rewrite(survivors, p4)
+    st.compactDisk()
+    assert(fp(st.snapshot) == want, "after re-compact")
+    // D1 live delete: the store's survivors must equal the logical delete
+    // over the pristine source
     val wantDel = fp(TS.deleteRange(src, Seq("click"), R1, R2))
     assert(wantDel._1 < want._1, "the delete must remove rows")
-    assert(fp(ShardStore.read(spark, p4)) == wantDel, "after delete-rewrite")
-    // bucketed production rewrite of the mutated store: same content again
-    try {
-      ShardStore.writeBucketed(ShardStore.read(spark, p4),
-        "store_lc_bucketed", "series", 4)
-      assert(fp(ShardStore.readBucketed(spark, "store_lc_bucketed")
-        .select("series", "ts_us", "tag", "value", "rid")) == wantDel,
-        "after bucketed rewrite")
-    } finally spark.sql("DROP TABLE IF EXISTS store_lc_bucketed")
+    assert(st.delete(Seq("click"), R1, R2) == want._1 - wantDel._1)
+    assert(fp(st.snapshot) == wantDel, "after delete")
+    assert(fp(st.snapshot(Seq("click"))) ==
+      fp(TS.deleteRange(src, Seq("click"), R1, R2).filter($"series" === "click")),
+      "after delete, series-scoped")
+    // the manifest chain alone carries the content across a reopen
+    assert(fp(new TieredStore(spark, root).snapshot) == wantDel, "after reopen")
   }
 }

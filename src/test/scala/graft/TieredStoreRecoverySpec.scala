@@ -42,7 +42,7 @@ class TieredStoreRecoverySpec extends SparkSuite {
     val survivors = seedRows.toDF()
       .filter(!col("ts_us").between(T0 + 25000L, T0 + 74000L))
     val orphan = s"$root/data/d00000099-delete-deadbeef"
-    graft.sources.ShardStore.append(survivors, orphan)
+    graft.sources.ShardStore.append(survivors, orphan, graft.sources.ShardStore.Buckets)
     val reopened = new TieredStore(spark, root)
     assert(fp(reopened.snapshot) == fp(seedRows.toDF()),
       "an uncommitted staging dir changed store content")
@@ -153,4 +153,60 @@ class TieredStoreRecoverySpec extends SparkSuite {
     assert(last.toSeq == Seq(99L),
       s"reopened store mis-qualified an overlapping buffer: got ${last.toSeq}")
   }
+
+  test("a foreign commit between two spills fails the second spill; the buffer stays") {
+    val root = tmpDir("tier_foreign")
+    val st = new TieredStore(spark, root)
+    val a = (0L until 3L).map(i => dp("a", T0 + i * 1000L, i))
+    st.ingest(a.toDF(), spillThreshold = 3L) // spill 1: v1
+    // an out-of-band writer commits v2 on the same root
+    VersionedStore.append(Seq(dp("b", T0, 1000L)).toDF(), root)
+    val more = (3L until 6L).map(i => dp("a", T0 + i * 1000L, i))
+    // spill 2 commits on the store's own tip, v1, at v2: the CAS refuses
+    intercept[VersionedStore.ConcurrentCommitException] {
+      st.ingest(more.toDF(), spillThreshold = 3L)
+    }
+    assert(st.bufferedCount() == 3L)
+    assert(st.buffer.select("rid").as[Long].collect().sorted.toSeq == Seq(3L, 4L, 5L))
+    // the foreign commit is the tip, not overwritten; a reopen adopts it
+    val vs = VersionedStore.versions(spark, root)
+    assert(vs.map(_.version) == Seq(1, 2) && vs.last.op == "append")
+    assert(fp(new TieredStore(spark, root).snapshot) ==
+      fp((a :+ dp("b", T0, 1000L)).toDF()))
+  }
+
+  test("a spill, a delete and a compaction list the manifest dir at most once each") {
+    val root = tmpDir("tier_listings")
+    val st = new TieredStore(spark, root)
+    def listings(op: => Unit): Int = {
+      ManifestListingFs.count.set(0)
+      spark.conf.set("fs.file.impl", classOf[ManifestListingFs].getName)
+      spark.conf.set("fs.file.impl.disable.cache", "true")
+      try op finally {
+        spark.conf.unset("fs.file.impl")
+        spark.conf.unset("fs.file.impl.disable.cache")
+      }
+      ManifestListingFs.count.get
+    }
+    st.appendDisk(seedRows.toDF())
+    st.appendMemory(Seq(dp("a", T0 + 500000L, 7777L)).toDF())
+    // the probe counts: a reopen reads the chain
+    assert(listings(new TieredStore(spark, root)) >= 1)
+    assert(listings(st.ingest(Seq(dp("a", T0 + 600000L, 7778L)).toDF(), 2L)) <= 1, "spill")
+    assert(listings(st.delete(Seq("a"), T0, T0 + 1000L)) <= 1, "delete")
+    assert(listings(st.compactDisk()) <= 1, "compaction")
+    assert(fp(st.snapshot) == fp(new TieredStore(spark, root).snapshot))
+  }
+}
+
+/** A local file system that counts listings of a manifest dir. */
+class ManifestListingFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def listStatus(f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    if (f.getName == "_manifests") ManifestListingFs.count.incrementAndGet()
+    super.listStatus(f)
+  }
+}
+
+object ManifestListingFs {
+  val count = new java.util.concurrent.atomic.AtomicInteger()
 }

@@ -220,7 +220,7 @@ class VersionedStoreSpec extends SparkSuite {
     val Seq(pa, pb) = Seq("a", "b").map(s => ShardStore.partitionNames(Seq(s), tip.buckets).head)
     assert(pa != pb, "a and b must sit in different buckets")
     // partition-scoped wipe of series a's bucket: skips only, no survivors dir
-    VersionedStore.deletePartitions(rows("a", 0, 0), root, Seq(pa), tip.version) // v3
+    VersionedStore.deletePartitions(rows("a", 0, 0), root, Seq(pa), tip)         // v3
     val v1Dir = VersionedStore.versions(spark, root).head.dirs.head
     // semantics: deletes = the wiped a rows, inserts = v2's appended b rows
     val ch = VersionedStore.readChanges(spark, root, 1, 3)
@@ -273,7 +273,7 @@ class VersionedStoreSpec extends SparkSuite {
     VersionedStore.append(rows(sa, 0, 10).unionByName(rows(sb, 100, 10)), root) // v1
     // bucket-scoped wipe of sa's bucket: skips only, no survivors
     VersionedStore.deletePartitions(rows(sa, 0, 0), root,
-      Seq(s"${ShardStore.BUCKET}=$ba"), 1)                                 // v2
+      Seq(s"${ShardStore.BUCKET}=$ba"), VersionedStore.versions(spark, root).last) // v2
     // the manifest round-trips the bucket count and the bucket skip
     val v2 = VersionedStore.versions(spark, root).last
     assert(v2.buckets == b)
@@ -349,7 +349,7 @@ class VersionedStoreSpec extends SparkSuite {
     assert(VersionedStore.append(rows("b", 0, 0), root) == 2 && tip.version == 2)
     // partition delete: x wiped, a survives; the skipped line stays, unread
     VersionedStore.deletePartitions(rows("a", 0, 10), root,
-      ShardStore.partitionNames(Seq("x"), b), 2)                                  // v3
+      ShardStore.partitionNames(Seq("x"), b), tip)                                // v3
     assert(bounds == Seq(Some(9000L), Some(9000L), Some(204000L)))
     assert(tip.maxes.size == 3 && everyDirHasMax(tip))
     // the dirs a read from a time on needs: v1's bucket 3 is skipped, so
