@@ -33,6 +33,14 @@ import org.apache.spark.sql.DataFrame
   * reference's optional `--tls-mode` (`main.re:13,233`): pass an
   * [[javax.net.ssl.SSLContext]] and the same routes serve HTTPS.
   *
+  * Replies go out with `TCP_NODELAY`: the JDK server writes a reply's
+  * headers and body as two sends, and with Nagle's algorithm on the body
+  * waits for the client's delayed ACK of the headers (40+ ms per
+  * request on Linux). The JDK reads its `sun.net.httpserver.nodelay`
+  * property once, when its server classes load, so the companion sets it
+  * before the first server is created, unless the JVM's user already set
+  * it.
+  *
   * Scale note: the HTTP surface is the reference's INTERACTIVE protocol —
   * replies are built in memory like the reference's Ezjsonm bodies, so it
   * is for bounded, human-scale queries. The 100 TB path is the library
@@ -42,6 +50,7 @@ final class HttpBinding(store: TieredStore, port: Int = 0,
                         ssl: Option[javax.net.ssl.SSLContext] = None,
                         spillThreshold: Long = 20000L,
                         clock: () => Long = () => System.currentTimeMillis() * 1000L) {
+  HttpBinding.noDelay
 
   private val server: HttpServer = ssl match {
     case Some(ctx) =>
@@ -131,4 +140,10 @@ final class HttpBinding(store: TieredStore, port: Int = 0,
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+}
+
+object HttpBinding {
+  private lazy val noDelay: Unit =
+    if (System.getProperty("sun.net.httpserver.nodelay") == null)
+      System.setProperty("sun.net.httpserver.nodelay", "true")
 }

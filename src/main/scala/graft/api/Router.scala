@@ -89,7 +89,7 @@ object Router {
   /** POST `ts/<id>` (reference `src/main.re:60-74`): the body is ONE
     * point object or an ARRAY of them ([[graft.sources.JsonIngest]]'s
     * 4-shape grammar per element; the array branch mirrors the
-    * reference's `A(lis)` iteration through `explodeBatches`). Good
+    * reference's `A(lis)` iteration, as `explodeBatches` does). Good
     * elements buffer into the tiered store exactly like the streaming
     * path — per-series spill at `spillThreshold` (the reference's
     * `--shard-size` discipline); invalid elements are the 400 path,
@@ -108,22 +108,13 @@ object Router {
     }
     val session = store.session
     import session.implicits._
-    import org.apache.spark.sql.Observation
-    import org.apache.spark.sql.functions.{count, lit}
-    // the ack counts ride on the store's collect of the good rows into its
-    // buffer, which reads both observed frames; no job of this method's
-    // own computes them. One body is one partition: coalescing to it
-    // keeps the ingest's rid window free of a shuffle, which AQE would
-    // otherwise drop from the final plan when it comes out empty —
-    // observations and all.
-    val (seen, kept) = (Observation(), Observation())
-    val wire = JsonIngest.explodeBatches(Seq((id, body)).toDF("series", "json"))
-      .coalesce(1).observe(seen, count(lit(1)).as("n"))
-    val good = JsonIngest.ingest(wire, ingestTimeUs).good
-      .observe(kept, count(lit(1)).as("n"))
-    store.ingest(good, spillThreshold)
-    def n(o: Observation): Long = o.get("n").asInstanceOf[Long]
-    Seq((n(kept), n(seen) - n(kept))).toDF("ingested", "quarantined")
+    // the body's elements are evaluated on the driver by the grammar's own
+    // compiled expressions and buffered as rows, so no Spark job runs
+    // unless a series spills; the ack counts come with the rows
+    val b = JsonIngest.ingestBody(session, id, body, ingestTimeUs)
+    store.ingestRows(b.good.toSeq, spillThreshold)
+    Seq((b.good.length.toLong, (b.elements - b.good.length).toLong))
+      .toDF("ingested", "quarantined")
   }
 
   def run(df: DataFrame, route: String): DataFrame = {

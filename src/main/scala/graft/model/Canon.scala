@@ -47,6 +47,9 @@ object Canon {
     StructField(VALUE, DoubleType),
     StructField(RID, LongType)))
 
+  /** The canonical columns of a frame, cast to their canonical types. */
+  def typed: Seq[Column] = schema.fields.toSeq.map(f => col(f.name).cast(f.dataType).as(f.name))
+
   /** A datapoint in typed form (reference `src/shard.re:3-6`). */
   case class TagEntry(name: String, value: String)
   case class Datapoint(series: String, ts_us: Long,

@@ -1,9 +1,14 @@
 package graft.sources
 
 import graft.model.Canon
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.LocalPlan
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.mutable
 
 /** S1/S2: JSON wire-format ingest (SURVEY.md §1.2, §2.1).
   *
@@ -24,8 +29,13 @@ import org.apache.spark.sql.types._
   *  - wire tag = array of single-key objects → ordered ARRAY<STRUCT> keeping
   *    duplicate names (`src/shard.re:39-49`).
   *
-  * Everything is built-in expressions — validation is a predicate, so
-  * ingest is one codegen'd pass with no UDFs and no driver-side loops.
+  * The grammar is one set of built-in `Column`s (the batch split, the
+  * shape predicate, the canonical projection and the content-hash rid), no
+  * UDFs, evaluated in two contexts. [[explodeBatches]] and [[ingest]] run
+  * them as a Spark plan over wire frames and streams. [[ingestBody]] runs the
+  * same `Column`s, resolved and compiled once per session
+  * ([[org.apache.spark.sql.graft.LocalPlan]]), on the driver over one
+  * request body, so a POST runs no Spark job of its own.
   */
 object JsonIngest {
 
@@ -113,16 +123,45 @@ object JsonIngest {
     * saner batch semantics.
     */
   def explodeBatches(wire: DataFrame): DataFrame = {
-    val isArr = json_array_length(col("json")).isNotNull
-    val singles = wire.filter(!isArr).select("series", "json")
-    val elems = wire.filter(isArr)
-      .select(col("series"),
-        explode(from_json(col("json"), ArrayType(StringType))).as("json"))
-      // a JSON `null` element parses to SQL NULL; the JSONPath form emitted
-      // its text, which the quarantine keeps
-      .select(col("series"), coalesce(col("json"), lit("null")).as("json"))
+    val singles = wire.filter(!isBatch(col("json"))).select("series", "json")
+    val elems = wire.filter(isBatch(col("json")))
+      .select(col("series"), explode(batchElements(col("json"))).as("json"))
+      .select(col("series"), elementText(col("json")).as("json"))
     singles.unionByName(elems)
   }
+
+  /** A body is a batch when it is a JSON array. */
+  private def isBatch(json: Column): Column = json_array_length(json).isNotNull
+
+  /** A batch's elements, each re-serialized as its JSON text. */
+  private def batchElements(json: Column): Column = from_json(json, ArrayType(StringType))
+
+  /** A JSON `null` element parses to SQL NULL; the JSONPath form emitted
+    * its text, which the quarantine keeps. */
+  private def elementText(element: Column): Column = coalesce(element, lit("null"))
+
+  /** The canonical `ts_us`, `tag` and `value` of a parsed good element
+    * `p`, stamped `now` when it has no timestamp. */
+  private def canonFields(p: Column, now: Column): Seq[Column] = Seq(
+    coalesce(p.getField("timestamp").cast(LongType), now).as(Canon.TS_US),
+    // array of single-key objects → ordered (name,value) structs;
+    // a multi-key object contributes its first entry, like the
+    // reference's head-of-assoc-list parse.
+    transform(p.getField("tag"), m => {
+      val e = get(map_entries(m), lit(0))
+      struct(e.getField("key").as("name"), e.getField("value").as("value"))
+    }).as(Canon.TAG),
+    p.getField("value").as(Canon.VALUE))
+
+  /** rid is CONTENT-DERIVED: a hash of (series, element text, `seq`),
+    * where `seq` numbers the byte-identical good elements of a batch
+    * 1..k. monotonically_increasing_id() would depend on the partition
+    * layout, so re-ingesting the same batch yielded different rids. Which
+    * of k identical elements takes which seq is arbitrary, but they are
+    * identical, so the emitted row SET is deterministic; rid stays a
+    * unique (ts, rid) sort tiebreak. */
+  private def rid(series: Column, json: Column, seq: Column): Column =
+    xxhash64(series, json, seq)
 
   final case class Result(good: DataFrame, bad: DataFrame)
 
@@ -135,28 +174,10 @@ object JsonIngest {
     */
   def ingest(wire: DataFrame, ingestTimeUs: Long): Result = {
     val valid = isValidShape(col("json"))
-    val parsed = from_json(col("json"), wireSchema).as("p")
     val good = wire.filter(valid)
-      .select(col("series"), col("json"), parsed)
-      .select(
-        col("series"),
-        coalesce(col("p.timestamp").cast(LongType), lit(ingestTimeUs)).as(Canon.TS_US),
-        // array of single-key objects → ordered (name,value) structs;
-        // a multi-key object contributes its first entry, like the
-        // reference's head-of-assoc-list parse.
-        transform(col("p.tag"), m => {
-          val e = get(map_entries(m), lit(0))
-          struct(e.getField("key").as("name"), e.getField("value").as("value"))
-        }).as(Canon.TAG),
-        col("p.value").as(Canon.VALUE),
-        col("json"))
-      // rid is CONTENT-DERIVED: hash of (series, payload, intra-batch seq
-      // among byte-identical rows). monotonically_increasing_id() would
-      // depend on the partition layout, so re-ingesting the same batch
-      // yielded different rids. The seq window's order among identical
-      // rows is arbitrary but the rows are identical, so the emitted row
-      // SET is deterministic; rid stays a unique (ts, rid) sort tiebreak.
-      .withColumn(Canon.RID, xxhash64(col("series"), col("json"),
+      .select(col("series"), col("json"), from_json(col("json"), wireSchema).as("p"))
+      .select(col("series") +: canonFields(col("p"), lit(ingestTimeUs)) :+ col("json"): _*)
+      .withColumn(Canon.RID, rid(col("series"), col("json"),
         row_number().over(org.apache.spark.sql.expressions.Window
           .partitionBy(col("series"), col("json"))
           .orderBy(col("series")))))
@@ -164,4 +185,62 @@ object JsonIngest {
     val bad = wire.filter(!coalesce(valid, lit(false)))
     Result(good, bad)
   }
+
+  /** One request body's good points, canonical rows in [[Canon.schema]]'s
+    * layout, and its element count (good + quarantined). */
+  final case class Body(good: Array[UnsafeRow], elements: Int)
+
+  /** [[ingest]] of [[explodeBatches]] over the one wire row
+    * `(series, body)`, evaluated on the driver with no Spark job: the same
+    * rows, rids included, and the same quarantine count (`JsonIngestParitySpec`).
+    * The server clock `nowUs` and each element's `seq` are input columns,
+    * so the compiled plans serve every request. A seq counts the element's
+    * byte-identical predecessors among all elements; identical elements
+    * are all good or all bad, so this numbers the identical good ones 1..k,
+    * as [[ingest]]'s `row_number` window does.
+    */
+  def ingestBody(spark: SparkSession, series: String, body: String, nowUs: Long): Body = {
+    val plans = bodyPlans(spark)
+    val elements = plans.split(Iterator(InternalRow(UTF8String.fromString(body))))
+      .headOption.fold(Seq(UTF8String.fromString(body))) { r =>
+        if (r.isNullAt(0)) Nil
+        else { val a = r.getArray(0); (0 until a.numElements()).map(a.getUTF8String) }
+      }
+    val seen = mutable.HashMap.empty[UTF8String, Int]
+    val s = UTF8String.fromString(series)
+    val good = plans.canon(elements.iterator.map { e =>
+      val seq = seen.getOrElse(e, 0) + 1
+      seen(e) = seq
+      InternalRow(s, e, seq, nowUs)
+    })
+    Body(good.map(_.asInstanceOf[UnsafeRow]), elements.size)
+  }
+
+  /** The body path's compiled plans: `split`, over `(json)`, keeps a
+    * batch and yields its element texts; `canon`, over
+    * `(series, json, seq, now)`, keeps the good elements and yields their
+    * canonical rows. */
+  private final class BodyPlans(val split: LocalPlan, val canon: LocalPlan)
+
+  private val plansBySession =
+    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[SparkSession, BodyPlans])
+
+  private def bodyPlans(spark: SparkSession): BodyPlans =
+    plansBySession.computeIfAbsent(spark, { _ =>
+      val split = LocalPlan(spark, StructType(Seq(StructField("json", StringType)))) {
+        _.filter(isBatch(col("json")))
+          .select(transform(batchElements(col("json")), elementText(_)))
+      }
+      val canon = LocalPlan(spark, StructType(Seq(
+        StructField("series", StringType), StructField("json", StringType),
+        StructField("seq", IntegerType), StructField("now", LongType)))) {
+        _.filter(isValidShape(col("json")))
+          .select(col("series"), col("json"), from_json(col("json"), wireSchema).as("p"),
+            col("seq"), col("now"))
+          .select(col("series") +: canonFields(col("p"), col("now")) :+
+            rid(col("series"), col("json"), col("seq")).as(Canon.RID): _*)
+          .select(Canon.typed: _*)
+      }
+      new BodyPlans(split, canon)
+    })
 }

@@ -5,6 +5,7 @@ import graft.model.Canon
 import graft.model.Canon._
 import graft.operators.{TimeSeries => TS}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PackedRows
 
@@ -29,8 +30,9 @@ import org.apache.spark.sql.graft.PackedRows
   * driver-side map from series to its queue: the series' buffered rows
   * in arrival order ([[org.apache.spark.sql.graft.PackedRows]]) plus
   * their cached (count, min ts, max ts), membufq's cached length and
-  * range. An append collects the batch once (on a POST, the job that
-  * fills the ack counts); the rest is driver arithmetic. A read or a
+  * range. A frame append collects the batch once; a POST's rows arrive
+  * evaluated on the driver ([[ingestRows]]) and run no job. The rest is
+  * driver arithmetic. A read or a
   * flush frames only the named series' queues, so it plans no series
   * filter of its own and no cached block. A series whose buffered min ts
   * lies beyond its disk upper bound qualifies with no Spark job. The M2
@@ -164,13 +166,14 @@ final class TieredStore(spark: SparkSession, val root: String) {
     * `src/membufq.re:9`). */
   def appendMemory(df: DataFrame): Unit = this.synchronized { appendLocked(df) }
 
-  /** One job collects the batch; each series' rows join the tail of its
-    * queue, and its cached range moves with no further job. The columns
-    * are cast to the canonical types, the layout the rows are read back
-    * with. */
-  private def appendLocked(df: DataFrame): Unit = {
-    val rows = PackedRows.collect(
-      df.select(Canon.schema.fields.toSeq.map(f => col(f.name).cast(f.dataType)): _*))
+  /** One job collects the batch, its columns cast to the canonical
+    * types, the layout the rows are read back with. */
+  private def appendLocked(df: DataFrame): Unit =
+    appendRowsLocked(PackedRows.collect(df.select(Canon.typed: _*)))
+
+  /** Each series' rows join the tail of its queue, and its cached range
+    * moves, with no job. */
+  private def appendRowsLocked(rows: Seq[UnsafeRow]): Unit = {
     // a streamed row may carry no series: it queues under the null key
     mem ++= rows.groupBy(r => Option(r.getUTF8String(0)).map(_.toString).orNull).map {
       case (s, rs) =>
@@ -402,11 +405,25 @@ final class TieredStore(spark: SparkSession, val root: String) {
     * unit), so a series' buffer holds < threshold + one batch.
     */
   def ingest(batch: DataFrame, spillThreshold: Long): Unit =
-    this.synchronized {
-      appendLocked(batch)
+    this.synchronized { ingestLocked(appendLocked(batch), spillThreshold) }
+
+  /** [[ingest]] of rows already in [[Canon.schema]]'s layout, each over
+    * its own bytes (a POST's body, [[JsonIngest.ingestBody]]): no job
+    * runs unless a series spills. */
+  private[graft] def ingestRows(rows: Seq[UnsafeRow], spillThreshold: Long): Unit =
+    this.synchronized { ingestLocked(appendRowsLocked(rows), spillThreshold) }
+
+  /** A batch whose spill fails is not kept: the buffer goes back to the
+    * map it was before `append`, so the caller's error means nothing was
+    * ingested and a retry ingests the batch once. */
+  private def ingestLocked(append: => Unit, spillThreshold: Long): Unit = {
+    val before = mem
+    try {
+      append
       val full = mem.collect { case (s, q) if q.count >= spillThreshold => s }
       if (full.nonEmpty) flushLocked(full.toSeq)
-    }
+    } catch { case e: Throwable => mem = before; throw e }
+  }
 
   /** I2: per-series memory/disk length split
     * (`/root/reference/src/timeseries.re:187-213`, routes

@@ -92,6 +92,64 @@ object PackedRows {
   }
 }
 
+/** A plan built from `Column`s over a leaf of input columns, run on the
+  * driver over rows the caller supplies in the leaf's place. The plan goes
+  * through the session's analyzer and optimizer once, so runtime-replaceable
+  * functions are replaced as in any query; what the optimizer leaves must
+  * be projections and filters over the leaf. Each node's expressions are
+  * compiled once, as `ProjectExec` and `FilterExec` compile theirs, so a
+  * call runs no Spark job and plans and compiles nothing. A call reads
+  * the session's conf, not the session, so a plan does not keep its
+  * session alive. The compiled projections reuse their output rows, so
+  * calls are serialized.
+  */
+final class LocalPlan private (conf: org.apache.spark.sql.internal.SQLConf,
+                               run: Iterator[org.apache.spark.sql.catalyst.InternalRow] =>
+                                 Iterator[org.apache.spark.sql.catalyst.InternalRow]) {
+  import org.apache.spark.sql.catalyst.InternalRow
+
+  /** The plan's output rows for `input` (rows in the leaf's layout), each
+    * copied out of the projection that produced it. */
+  def apply(input: Iterator[InternalRow]): Array[InternalRow] = synchronized {
+    org.apache.spark.sql.internal.SQLConf.withExistingConf(conf)(run(input).map(_.copy()).toArray)
+  }
+}
+
+object LocalPlan {
+  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.{Predicate, UnsafeProjection}
+  import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+  import org.apache.spark.sql.execution.LogicalRDD
+  import org.apache.spark.sql.types.StructType
+
+  /** Compiles `build` applied to a leaf with the columns of `input`. The
+    * leaf is a relation over an empty RDD, which the optimizer cannot
+    * evaluate or fold away. */
+  def apply(spark: SparkSession, input: StructType)(build: DataFrame => DataFrame): LocalPlan = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val leaf = session.internalCreateDataFrame(session.sparkContext.emptyRDD[InternalRow], input)
+    val leafRdd = leaf.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }.get
+    def compile(p: LogicalPlan): Iterator[InternalRow] => Iterator[InternalRow] = p match {
+      case Project(list, child) =>
+        val in = compile(child)
+        val proj = UnsafeProjection.create(list, child.output)
+        proj.initialize(0)
+        rows => in(rows).map(proj)
+      case Filter(cond, child) =>
+        val in = compile(child)
+        val pred = Predicate.create(cond, child.output)
+        pred.initialize(0)
+        rows => in(rows).filter(pred.eval)
+      case l: LogicalRDD if l.rdd eq leafRdd => identity
+      case other => throw new IllegalArgumentException(
+        s"not a projection/filter plan over the input leaf: ${other.nodeName}\n$p")
+    }
+    session.withActive(
+      new LocalPlan(session.sessionState.conf, compile(build(leaf).queryExecution.optimizedPlan)))
+  }
+}
+
 /** The file set a plan would ACTUALLY scan, post-partition-pruning (one
   * entry per scan that selects the file, so a file read by two scans
   * appears twice). `Dataset.inputFiles` ignores partition filters, and a

@@ -85,6 +85,12 @@ class HttpBindingSpec extends SparkSuite {
     } finally http.stop()
   }
 
+  test("a binding turns the JDK server's TCP_NODELAY on before creating its server") {
+    val http = new HttpBinding(new TieredStore(spark, tmpDir("http_nodelay")))
+    try assert(System.getProperty("sun.net.httpserver.nodelay") == "true")
+    finally http.stop()
+  }
+
   test("the method triangle replays over a REAL TLS socket (reference --enable-tls, main.re:13,230-235)") {
     import javax.net.ssl.{KeyManagerFactory, SSLContext, TrustManagerFactory}
     // self-signed keystore generated test-locally with the JDK's keytool

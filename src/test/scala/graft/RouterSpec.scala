@@ -142,8 +142,7 @@ class RouterSpec extends SparkSuite {
     import org.scalatest.concurrent.{Signaler, ThreadSignaler}
     import org.scalatest.concurrent.TimeLimits.failAfter
     import org.scalatest.time.SpanSugar._
-    // the ack counts are observed metrics: were no action to run the
-    // observed plan, reading them would block, so each case is bounded
+    // each case is bounded, so a POST that blocks fails the test
     implicit val signaler: Signaler = ThreadSignaler
     val st = new TieredStore(spark, tmpDir("router_post_ack"))
     def post(body: String, spill: Long = 20000L): ((Long, Long), Seq[String]) =
@@ -164,20 +163,33 @@ class RouterSpec extends SparkSuite {
     assert(spilled == ((8L, 0L)))
     assert(Router.run(st, "ts/p/disk/length").as[Long].head() == 8L)
     assert(Router.run(st, "ts/p/memory/length").as[Long].head() == 0L)
-    // the counts ride on the store's buffer collect: none of the jobs the
-    // route started (the ack frame's own `head` aside) is Router's
+    // none of the jobs the route started (the ack frame's own `head`
+    // aside) is Router's
     val routeSites = Seq(s1, s2, s3).flatten.filterNot(_.contains("RouterSpec.scala"))
     assert(routeSites.nonEmpty && !routeSites.exists(_.contains("Router.scala")), routeSites)
   }
 
-  test("a POST that spills nothing runs one job: the buffer's collect fills its ack") {
+  test("a POST that spills nothing runs no job") {
     import graft.sources.TieredStore
-    val st = new TieredStore(spark, tmpDir("router_post_one_job"))
+    val st = new TieredStore(spark, tmpDir("router_post_no_job"))
     val body = """[{"timestamp": 100, "value": 1}, {"nope": 1}, {"timestamp": 101, "value": 2}]"""
     val (ack, sites) = JobProbe.sites(spark)(Router.runPost(st, "ts/j", body))
-    assert(sites.size == 1, sites)
+    assert(sites.isEmpty, sites)
     assert(ack.as[(Long, Long)].head() == ((2L, 1L)))
     assert(st.bufferedCount() == 2L)
+  }
+
+  test("a spilling POST runs only its write's jobs") {
+    import graft.sources.TieredStore
+    val st = new TieredStore(spark, tmpDir("router_post_spill_jobs"))
+    val body = (0 until 4).map(i => s"""{"timestamp": ${100 + i}, "value": $i}""")
+      .mkString("[", ",", "]")
+    val (ack, sites) = JobProbe.sites(spark)(Router.runPost(st, "ts/w", body, spillThreshold = 3L))
+    assert(sites.nonEmpty && sites.forall(s =>
+      s.contains("ShardStore.scala") || s.contains("VersionedStore.scala")), sites)
+    assert(ack.as[(Long, Long)].head() == ((4L, 0L)))
+    assert(st.bufferedCount() == 0L)
+    assert(Router.run(st, "ts/w/disk/length").as[Long].head() == 4L)
   }
 
   test("POST: a timestamp outside the 64-bit range quarantines its element, not the batch") {

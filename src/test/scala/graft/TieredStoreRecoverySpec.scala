@@ -166,13 +166,30 @@ class TieredStoreRecoverySpec extends SparkSuite {
     intercept[VersionedStore.ConcurrentCommitException] {
       st.ingest(more.toDF(), spillThreshold = 3L)
     }
-    assert(st.bufferedCount() == 3L)
-    assert(st.buffer.select("rid").as[Long].collect().sorted.toSeq == Seq(3L, 4L, 5L))
+    // the failed batch is not kept, so a retry cannot ingest it twice
+    assert(st.bufferedCount() == 0L)
     // the foreign commit is the tip, not overwritten; a reopen adopts it
     val vs = VersionedStore.versions(spark, root)
     assert(vs.map(_.version) == Seq(1, 2) && vs.last.op == "append")
-    assert(fp(new TieredStore(spark, root).snapshot) ==
-      fp((a :+ dp("b", T0, 1000L)).toDF()))
+    val reopened = new TieredStore(spark, root)
+    assert(fp(reopened.snapshot) == fp((a :+ dp("b", T0, 1000L)).toDF()))
+    // the retry after reopen ingests the batch exactly once
+    reopened.ingest(more.toDF(), spillThreshold = 3L)
+    assert(reopened.bufferedCount() == 0L)
+    assert(fp(reopened.snapshot) == fp((a ++ more :+ dp("b", T0, 1000L)).toDF()))
+  }
+
+  test("a POST whose spill fails keeps nothing of its body") {
+    val root = tmpDir("tier_post_foreign")
+    val st = new TieredStore(spark, root)
+    def body(ts: Seq[Long]) = ts.map(t => s"""{"timestamp": $t, "value": 1}""").mkString("[", ",", "]")
+    graft.api.Router.runPost(st, "ts/a", body(Seq(T0)), spillThreshold = 3L)
+    VersionedStore.append(Seq(dp("b", T0, 1000L)).toDF(), root)
+    intercept[VersionedStore.ConcurrentCommitException] {
+      graft.api.Router.runPost(st, "ts/a", body(Seq(T0 + 1, T0 + 2)), spillThreshold = 3L)
+    }
+    // the buffer is what it was before the failed POST
+    assert(st.memStatsView == Map("a" -> ((1L, T0, T0))))
   }
 
   test("a spill, a delete and a compaction list the manifest dir at most once each") {
