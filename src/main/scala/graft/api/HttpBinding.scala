@@ -7,6 +7,7 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.Executors
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.OnePartition
 
 /** The reference's HTTP listener as a thin JDK binding over [[Router]] —
   * the last surface delta between "same query grammar" and "drop-in": a
@@ -45,6 +46,18 @@ import org.apache.spark.sql.DataFrame
   * replies are built in memory like the reference's Ezjsonm bodies, so it
   * is for bounded, human-scale queries. The 100 TB path is the library
   * surface (DataFrames from [[Router]]/operators), not this socket.
+  *
+  * One partition per reply: the reference answers a read inside one
+  * process from a few shards, and a reply here is bounded the same way,
+  * so this surface evaluates every frame it renders as one partition
+  * ([[org.apache.spark.sql.graft.OnePartition]]). A GET then plans no
+  * exchange and runs one stage, one task and one job. Planned as
+  * [[Router]] builds it, a `last n` runs 5 jobs: a shuffle-map job and an
+  * adaptive re-plan for each exchange of its window, its global sort (and
+  * that sort's range-sampling job) and its aggregates, over a few KB — a
+  * fixed per-stage cost that bounds the latency, not the data. Only the
+  * socket's frames are rewritten; [[Router]] and [[TieredStore]] frames
+  * keep their distributed plans for library callers.
   */
 final class HttpBinding(store: TieredStore, port: Int = 0,
                         ssl: Option[javax.net.ssl.SSLContext] = None,
@@ -111,13 +124,23 @@ final class HttpBinding(store: TieredStore, port: Int = 0,
     }
   }
 
+  /** A route's frame as its reply body, evaluated as one partition. */
+  private def render(df: DataFrame): String = HttpBinding.reply(OnePartition(df))
+}
+
+object HttpBinding {
+  private lazy val noDelay: Unit =
+    if (System.getProperty("sun.net.httpserver.nodelay") == null)
+      System.setProperty("sun.net.httpserver.nodelay", "true")
+
   /** Reference reply shapes, decided by the frame's column set: canonical
     * rows → wire point array; the names route's single `series` column →
     * array of bare strings; otherwise one object per row (0 rows → `{}`,
     * the reference's empty-aggregate shape; >1 → an array of objects for
     * the tabular info routes, this engine's stats/index generalizations).
+    * `df` is evaluated as it is planned.
     */
-  private def render(df: DataFrame): String = {
+  private[graft] def reply(df: DataFrame): String = {
     val cols = df.columns.toSeq
     if (cols == Canon.schema.fieldNames.toSeq)
       Wire.toJsonRows(df).collect().map(_.getString(0)).mkString("[", ",", "]")
@@ -140,10 +163,4 @@ final class HttpBinding(store: TieredStore, port: Int = 0,
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-}
-
-object HttpBinding {
-  private lazy val noDelay: Unit =
-    if (System.getProperty("sun.net.httpserver.nodelay") == null)
-      System.setProperty("sun.net.httpserver.nodelay", "true")
 }

@@ -3,7 +3,7 @@ package graft.api
 import graft.functions.Tags
 import graft.operators.{TimeSeries => TS}
 import graft.sources.JsonIngest
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The reference's query surface IS its URL path (SURVEY.md: "the query
   * plan is the URL path"). This interpreter maps a nibbledb route string to
@@ -51,17 +51,19 @@ object Router {
 
   /** I7 `GET /info/status` (reference `src/main.re:169-173,190`): the
     * health probe, `{"status":"ok"}` as a one-row frame. Pure — reaching
-    * the route IS the health signal, as in the reference.
+    * the route IS the health signal, as in the reference — so it reads
+    * no store.
     */
-  def health(df: DataFrame): DataFrame = {
-    import df.sparkSession.implicits._
+  def health(spark: SparkSession): DataFrame = {
+    import spark.implicits._
     Seq("ok").toDF("status")
   }
 
   /** Route interpretation against a LIVE dual-tier store: the bare
     * last/latest routes take the tier-aware read (M1 can skip the disk
     * scan entirely); the I2 `memory/length` / `disk/length` routes
-    * (`src/main.re:184-185`) read the split; every other series-scoped
+    * (`src/main.re:184-185`) read the split; the health probe and the
+    * sync ack read no store; every other series-scoped
     * route runs over the ids' memory∪disk snapshot (disk pruned to their
     * buckets), and names/info over the whole store's — the tier seam is
     * invisible either way (property-tested), so only the hot-tail paths
@@ -75,7 +77,8 @@ object Router {
         .agg(coalesce(sum(col), lit(0L)).as("length"))
     parts match {
       case "ts" :: rest if rest.nonEmpty => run(store, rest.mkString("/"))
-      case "ctl" :: "ts" :: "sync" :: Nil => store.sync(); health(store.snapshot)
+      case "ctl" :: "ts" :: "sync" :: Nil => store.sync(); health(store.session)
+      case "info" :: "status" :: Nil => health(store.session)
       case ids :: "last" :: n :: Nil => store.readLast(ids.split(',').toSeq, n.toInt)
       case ids :: "latest" :: Nil => store.readLast(ids.split(',').toSeq, 1)
       case ids :: "memory" :: "length" :: Nil => tierLength("mem_len", ids)
@@ -124,10 +127,10 @@ object Router {
       case "names" :: Nil => TS.names(df)
       case "info" :: "ts" :: "names" :: Nil => TS.names(df)
       case "info" :: "ts" :: "stats" :: Nil => TS.stats(df)
-      case "info" :: "status" :: Nil => health(df)
+      case "info" :: "status" :: Nil => health(df.sparkSession)
       // sync against a flat frame: nothing is buffered, ack like the
       // reference's empty-membuf flush (`src/timeseries.re:166-168`)
-      case "ctl" :: "ts" :: "sync" :: Nil => health(df)
+      case "ctl" :: "ts" :: "sync" :: Nil => health(df.sparkSession)
       case ids :: rest =>
         val series = ids.split(',').toSeq
         rest match {

@@ -57,7 +57,10 @@ import org.apache.spark.sql.graft.PackedRows
   * **Snapshot contract**: every frame this class returns (readLast,
   * snapshot, lengthSplit) is built under the store lock from the buffer's
   * immutable rows plus parquet relations whose file listing Spark pins at
-  * construction — an immutable snapshot of the store at call time. It
+  * construction — an immutable snapshot of the store at call time. The
+  * relations of the tip are built once, at its first read, and shared by
+  * every read of that tip: a tip's data dirs never change, so neither
+  * does their listing, and a mutation's new tip builds its own. It
   * stays valid across any later mutation; only [[compactDisk]]'s history
   * expiry removes files, after which a stale reader fails LOUDLY
   * (file-not-found) — never a silently doubled or stale answer.
@@ -128,6 +131,9 @@ final class TieredStore(spark: SparkSession, val root: String) {
     * each mutation published, so reads and mutations plan without
     * re-listing manifests. Its `max` lines are the disk bounds. */
   @volatile private var tip: Option[VersionedStore.Commit] = None
+  /** The tip's raw relations ([[VersionedStore.rawGroups]]) and the tip
+    * they were built for, on its first read (see the snapshot contract). */
+  @volatile private var tipGroups: Option[(VersionedStore.Commit, Seq[DataFrame])] = None
 
   // ---- open/reopen: read the tip manifest, which carries the disk
   // bounds, and collect any crashed writer's orphan data dirs. No Spark
@@ -147,16 +153,10 @@ final class TieredStore(spark: SparkSession, val root: String) {
   private def appendStore(df: DataFrame): Unit =
     tip = VersionedStore.appendOn(tip, df, root)
 
-  /** Whole disk tier at the cached tip, canonical form. */
-  private def readStore: DataFrame =
-    tip.fold(emptyCanon(spark))(c => VersionedStore.contentOf(spark, root, c))
-
-  /** The `ids`' buffered rows as one frame over their queues, or the
-    * empty literal when none of them is buffered. */
-  private def memOf(ids: Iterable[String]): DataFrame = {
-    val packs = ids.toSeq.distinct.flatMap(mem.get).map(_.rows)
-    if (packs.isEmpty) emptyCanon(spark) else PackedRows.frame(spark, Canon.schema, packs)
-  }
+  /** The `ids`' buffered rows as one frame over their queues (an empty
+    * one when none of them is buffered). */
+  private def memOf(ids: Iterable[String]): DataFrame =
+    PackedRows.frame(spark, Canon.schema, ids.toSeq.distinct.flatMap(mem.get).map(_.rows))
 
   /** Direct-to-disk append (the batch ingest path). An empty frame is a
     * no-op — no empty version bloating the chain. */
@@ -207,8 +207,17 @@ final class TieredStore(spark: SparkSession, val root: String) {
   private def prunedCanon(c: VersionedStore.Commit,
                           prune: DataFrame => DataFrame): DataFrame =
     if (c.dirs.isEmpty) emptyCanon(spark)
-    else VersionedStore.rawGroups(spark, root, c)
-      .map(r => canonSel(prune(r))).reduce(_ unionByName _)
+    else groupsOf(c).map(r => canonSel(prune(r))).reduce(_ unionByName _)
+
+  /** `c`'s raw relations: the tip's from [[tipGroups]], any other
+    * commit's (the overlap probe's narrowed one) built for this read. */
+  private def groupsOf(c: VersionedStore.Commit): Seq[DataFrame] = tipGroups match {
+    case Some((t, g)) if t eq c => g
+    case _ =>
+      val g = VersionedStore.rawGroups(spark, root, c)
+      if (tip.exists(_ eq c)) tipGroups = Some(c -> g)
+      g
+  }
 
   /** The ids' disk rows: their buckets (at the tip's bucket count), then
     * their series. */
@@ -365,8 +374,7 @@ final class TieredStore(spark: SparkSession, val root: String) {
     */
   def snapshot: DataFrame = this.synchronized {
     val m = memOf(mem.keys)
-    if (!tip.exists(_.dirs.nonEmpty)) m
-    else m.unionByName(readStore)
+    tip.filter(_.dirs.nonEmpty).fold(m)(c => m.unionByName(prunedCanon(c, identity)))
   }
 
   /** The `ids`' rows as one canonical frame (memory ∪ disk) — the input
@@ -454,6 +462,5 @@ object TieredStore {
   }
 
   private def emptyCanon(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      Canon.schema)
+    PackedRows.frame(spark, Canon.schema, Nil)
 }

@@ -50,6 +50,9 @@ object PackedRows {
   import org.apache.spark.sql.{DataFrame, SparkSession}
   import org.apache.spark.sql.catalyst.InternalRow
   import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+  import org.apache.spark.sql.catalyst.plans.logical.Statistics
+  import org.apache.spark.sql.catalyst.types.DataTypeUtils
+  import org.apache.spark.sql.execution.LogicalRDD
   import org.apache.spark.sql.types.StructType
   import org.apache.spark.unsafe.Platform.{BYTE_ARRAY_OFFSET => Base, getInt, putInt}
 
@@ -76,19 +79,26 @@ object PackedRows {
   }
 
   /** A frame in `schema` over packed arrays that are never mutated: at
-    * most one task per core, each unpacking its share of the arrays. */
+    * most one task per core, each unpacking its share of the arrays, and
+    * none over no arrays. The frame's size statistic is the arrays' bytes;
+    * without one Catalyst assumes the default (`Long.MaxValue`), and a
+    * join over a one-partition read of the frame is shuffled again. */
   def frame(spark: SparkSession, schema: StructType, packs: Seq[Array[Byte]]): DataFrame = {
     val sc = spark.sparkContext
     val per = (packs.size + sc.defaultParallelism - 1) / sc.defaultParallelism
     val slices = packs.grouped(per max 1).map(g => Array.concat(g: _*)).toSeq
     val fields = schema.length
-    val rows = sc.parallelize(slices, slices.size).flatMap[InternalRow] { bytes =>
-      Iterator.iterate(Base.toLong)(at => at + 4 + getInt(bytes, at))
-        .takeWhile(_ < Base + bytes.length)
-        .map { at => val r = new UnsafeRow(fields); r.pointTo(bytes, at + 4, getInt(bytes, at)); r }
-    }
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(rows, schema)
+    val rows =
+      if (slices.isEmpty) sc.emptyRDD[InternalRow]
+      else sc.parallelize(slices, slices.size).flatMap[InternalRow] { bytes =>
+        Iterator.iterate(Base.toLong)(at => at + 4 + getInt(bytes, at))
+          .takeWhile(_ < Base + bytes.length)
+          .map { at => val r = new UnsafeRow(fields); r.pointTo(bytes, at + 4, getInt(bytes, at)); r }
+      }
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val stats = Statistics(sizeInBytes = packs.map(_.length.toLong).sum)
+    org.apache.spark.sql.classic.Dataset.ofRows(session,
+      LogicalRDD(DataTypeUtils.toAttributes(schema), rows)(session, Some(stats)))
   }
 }
 
@@ -147,6 +157,53 @@ object LocalPlan {
     }
     session.withActive(
       new LocalPlan(session.sessionState.conf, compile(build(leaf).queryExecution.optimizedPlan)))
+  }
+}
+
+/** A frame evaluated as one partition: every operator of its optimized
+  * plan that needs its input clustered, ordered or gathered (a window, a
+  * window group limit, a global sort, an aggregate, a join) reads a
+  * `Repartition(1, shuffle = false)` of that input. `CoalesceExec(1)`
+  * reports `SinglePartition`, which satisfies every distribution these
+  * operators require, so `EnsureRequirements` plans no exchange and the
+  * frame runs as one stage, one task and one job. Filters and pushed
+  * predicates stay where the optimizer put them. A plan with none of these
+  * operators is returned unchanged, so it is planned once. For bounded
+  * frames only: one task reads all of the frame's input. A join keeps
+  * one-partition inputs only while their size statistics are within
+  * `spark.sql.maxSinglePartitionBytes`; past it, Spark shuffles them for
+  * parallelism.
+  */
+object OnePartition {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.catalyst.plans.logical._
+
+  def apply(df: DataFrame): DataFrame = {
+    val plan = df.queryExecution.optimizedPlan
+    if (!plan.exists(gathers)) df
+    else org.apache.spark.sql.classic.Dataset.ofRows(
+      df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      plan.transformUp { case g if gathers(g) => g.withNewChildren(g.children.map(one)) })
+  }
+
+  private def gathers(p: LogicalPlan): Boolean = p match {
+    case _: Window | _: WindowGroupLimit | _: Aggregate | _: Join => true
+    case s: Sort => s.global
+    case _ => false
+  }
+
+  /** `p`, or a coalesce of it to one partition when its output may have
+    * more: a rewritten gathering operator, and projections and filters
+    * over one, already have one. */
+  private def one(p: LogicalPlan): LogicalPlan = {
+    def single(q: LogicalPlan): Boolean = q match {
+      case Repartition(1, _, _) => true
+      case g if gathers(g) => true
+      case Project(_, c) => single(c)
+      case Filter(_, c) => single(c)
+      case _ => false
+    }
+    if (single(p)) p else Repartition(1, shuffle = false, p)
   }
 }
 

@@ -6,6 +6,7 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.net.http.HttpRequest.BodyPublishers
 import java.net.http.HttpResponse.BodyHandlers
+import org.apache.spark.sql.DataFrame
 
 /** Real HTTP requests through a bound port — the reference's client
   * workload (`test/client.re:24-36`) and curl grammar replayed against
@@ -83,6 +84,97 @@ class HttpBindingSpec extends SparkSuite {
       assert(get(base, "/ts/foo/since/0/variance").statusCode() == 400)
       assert(delete(base, "/ts/foo/since/0/filter/u/equals").statusCode() == 400)
     } finally http.stop()
+  }
+
+  /** The binding's `render(DataFrame): String`, found and called the way
+    * perfbench's in-process replays find and call it. */
+  private def renderOf(http: HttpBinding): Option[DataFrame => String] =
+    classOf[HttpBinding].getDeclaredMethods.find(m =>
+      (m.getName == "render" || m.getName.endsWith("$$render")) &&
+        m.getParameterTypes.toSeq == Seq(classOf[DataFrame]) &&
+        m.getReturnType == classOf[String]).map { m =>
+      m.setAccessible(true)
+      df => try m.invoke(http, df).asInstanceOf[String]
+        catch { case e: java.lang.reflect.InvocationTargetException => throw e.getCause }
+    }
+
+  test("HttpBinding declares render(DataFrame): String, the benchmark's replay hook") {
+    // without it perfbench's replays fall back to a copy of the old
+    // render, and their traced counts stop measuring this binding
+    val http = new HttpBinding(new TieredStore(spark, tmpDir("http_hook")))
+    try assert(renderOf(http).nonEmpty) finally http.stop()
+  }
+
+  test("every GET route renders as one job with no exchange, byte-equal to the plain frame's reply") {
+    import graft.model.Canon.{Datapoint, TagEntry}
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import spark.implicits._
+    val T0 = 1704067200000000L
+    // integer values, so an aggregate's sum does not depend on the order
+    // its partial sums merge in
+    def dp(s: String, ts: Long, rid: Long) =
+      Datapoint(s, ts, Some(Seq(TagEntry("k", (rid % 2).toString))), rid.toDouble, rid)
+    val st = new TieredStore(spark, tmpDir("http_grammar"))
+    st.appendDisk(Seq("a", "b", "c").flatMap(s =>
+      (0L until 60L).map(i => dp(s, T0 + i * 3600000000L, s.head.toLong * 1000L + i))).toDF())
+    // a: buffered past its disk range (M1, and M2 for last/30); b: one
+    // buffered point inside its disk range (M3 flushes it)
+    st.appendMemory((0L until 20L).map(i => dp("a", T0 + 400000000000L + i, 900000L + i)).toDF())
+    st.appendMemory(Seq(dp("b", T0 + 1000L, 800000L)).toDF())
+    val http = new HttpBinding(st)
+    val render = renderOf(http).get
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
+    }
+    var marker = 700000L
+    /** The plans the block executed: a marker query runs after it, and its
+      * listener event arrives after theirs. */
+    def executed(f: => Unit): Seq[SparkPlan] = {
+      plans.clear()
+      f
+      marker += 1
+      spark.range(marker).count()
+      def isMarker(qe: QueryExecution) = qe.executedPlan.toString.contains(s"Range (0, $marker")
+      val deadline = System.nanoTime() + 60000000000L
+      while (!plans.toArray.exists(q => isMarker(q.asInstanceOf[QueryExecution])) &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+      plans.toArray.toSeq.map(_.asInstanceOf[QueryExecution]).filterNot(isMarker).map(_.executedPlan)
+    }
+    val reads = Seq("last/5", "latest", "first/3", "earliest", s"since/${T0 + 50 * 3600000000L}",
+      s"range/$T0/${T0 + 10 * 3600000000L}")
+    val xargs = Seq("", "/filter/k/equals/1", "/sum", "/filter/k/contains/0/mean",
+      "/count", "/max", "/min", "/median")
+    val routes = Seq("a/last/30", "b/last/5") ++
+      (for (r <- reads; x <- xargs) yield s"a,c/$r$x") ++
+      Seq("a,b/length", "a,b/memory/length", "a,b/disk/length", "a,b/index/length", "a/index",
+        "names", "info/ts/names", "info/ts/stats")
+    spark.listenerManager.register(listener)
+    try routes.foreach { route =>
+      val frame = graft.api.Router.run(st, route)
+      val plain = HttpBinding.reply(frame)
+      var (got, sites) = ("", Seq.empty[String])
+      val ran = executed { JobProbe.sites(spark)(render(frame)) match { case (r, s) => got = r; sites = s } }
+      assert(got == plain, route)
+      assert(sites.size == 1 && ran.nonEmpty, s"$route ran ${sites.size} jobs:\n${ran.mkString("\n")}")
+      ran.foreach(p => assert(!nodes(p).exists(_.isInstanceOf[ShuffleExchangeExec]), s"$route:\n$p"))
+      if (route == "a/last/30") // M2: the buffer's 20 points and 10 from disk
+        assert(frame.queryExecution.executedPlan.toString.contains("FileScan") &&
+          got.split("\"timestamp\"").length - 1 == 30 && st.memStatsView.contains("a"))
+      if (route == "b/last/5") // M3: the overlapping point was flushed
+        assert(!st.memStatsView.contains("b"))
+    } finally {
+      spark.listenerManager.unregister(listener)
+      http.stop()
+    }
   }
 
   test("a binding turns the JDK server's TCP_NODELAY on before creating its server") {

@@ -91,6 +91,32 @@ class RouterSpec extends SparkSuite {
     assert(Router.run(st, "ctl/ts/sync").head().getString(0) == "ok")
   }
 
+  test("info/status and a no-op sync touch nothing under the store's data dir") {
+    import graft.sources.TieredStore
+    val root = tmpDir("routerhealth")
+    new TieredStore(spark, root).appendDisk((0L until 50L).map(i =>
+      Datapoint(s"s${i % 5}", 100L + i, None, i.toDouble, i)).toDF())
+    val st = new TieredStore(spark, root) // reopened: no relation built yet
+    def dataCalls(op: => Unit): Int = {
+      DataCallFs.count.set(0)
+      DataCallFs.under = new java.io.File(root, "data").getCanonicalPath
+      spark.conf.set("fs.file.impl", classOf[DataCallFs].getName)
+      spark.conf.set("fs.file.impl.disable.cache", "true")
+      try op finally {
+        spark.conf.unset("fs.file.impl")
+        spark.conf.unset("fs.file.impl.disable.cache")
+      }
+      DataCallFs.count.get
+    }
+    // the counter sees a whole-store read
+    assert(dataCalls(Router.run(st, "names").collect()) > 0)
+    val fresh = new TieredStore(spark, root)
+    assert(dataCalls(assert(Router.run(fresh, "info/status").head().getString(0) == "ok")) == 0,
+      "info/status")
+    assert(dataCalls(assert(Router.run(fresh, "ctl/ts/sync").head().getString(0) == "ok")) == 0,
+      "no-op sync")
+  }
+
   test("POST ts/<id>: single point, batch array, quarantine — read back through GET") {
     import graft.sources.TieredStore
     val st = new TieredStore(spark, tmpDir("router_post"))
@@ -251,4 +277,20 @@ class RouterSpec extends SparkSuite {
     val agg = Wire.aggToJson(Router.run(df, "s1/last/10/sum")).as[String].head()
     assert(agg == """{"sum":7.0}""")
   }
+}
+
+/** A local file system that counts the status, listing and open calls on
+  * paths under one directory. */
+class DataCallFs extends org.apache.hadoop.fs.LocalFileSystem {
+  import org.apache.hadoop.fs.{FileStatus, FSDataInputStream, Path}
+  private def seen(f: Path): Unit =
+    if (Option(DataCallFs.under).exists(u => f.toUri.getPath.startsWith(u))) DataCallFs.count.incrementAndGet()
+  override def listStatus(f: Path): Array[FileStatus] = { seen(f); super.listStatus(f) }
+  override def getFileStatus(f: Path): FileStatus = { seen(f); super.getFileStatus(f) }
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = { seen(f); super.open(f, bufferSize) }
+}
+
+object DataCallFs {
+  val count = new java.util.concurrent.atomic.AtomicInteger()
+  @volatile var under: String = _
 }

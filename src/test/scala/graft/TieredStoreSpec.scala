@@ -372,6 +372,38 @@ class TieredStoreSpec extends SparkSuite {
     assert(mean.count() == 1L)
   }
 
+  test("reads of one tip share its parquet relations; a spill builds new ones") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation}
+    def locations(df: DataFrame): Seq[FileIndex] = df.queryExecution.analyzed.collect {
+      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
+        l.relation.asInstanceOf[HadoopFsRelation].location
+    }
+    val root = tmpDir("tier_groups")
+    val st = new TieredStore(spark, root)
+    st.appendDisk((0L until 100L).map(i => dp("a", T0 + i * 1000L, i)).toDF())
+    st.appendMemory((0L until 5L).map(i => dp("a", T0 + 1000000L + i * 1000L, 100 + i)).toDF())
+    val before = st.snapshot(Seq("a"))
+    val merged = st.readLast(Seq("a"), 10) // M2: memory plus the disk tail
+    val whole = st.snapshot
+    // the same index object: an `InMemoryFileIndex` equals any other
+    // over the same root paths
+    val Seq(loc) = locations(before)
+    assert((locations(merged) ++ locations(whole)).forall(_ eq loc))
+    // a spill publishes a new tip, read through new relations
+    st.ingest((5L until 10L).map(i => dp("a", T0 + 1000000L + i * 1000L, 100 + i)).toDF(), 10L)
+    val after = st.snapshot(Seq("a"))
+    assert(locations(after).nonEmpty && locations(after).forall(_ ne loc))
+    // answers: the frame taken before the spill keeps its snapshot, the
+    // new tip's read equals a reopened store's
+    assert(StoreTestUtil.fp(before) == StoreTestUtil.fp(
+      (0L until 100L).map(i => dp("a", T0 + i * 1000L, i)).toDF()
+        .union((0L until 5L).map(i => dp("a", T0 + 1000000L + i * 1000L, 100 + i)).toDF())))
+    assert(merged.select("rid").as[Long].collect().toSeq == (104L to 95L by -1L))
+    assert(StoreTestUtil.fp(after) == StoreTestUtil.fp(new TieredStore(spark, root).snapshot(Seq("a"))))
+    assert(StoreTestUtil.fp(after)._1 == 110L)
+  }
+
   test("I7 health route answers through the router grammar") {
     val df = (0L until 3L).map(i => dp("a", T0 + i, i)).toDF()
     val rows = graft.api.Router.run(df, "info/status").collect()
