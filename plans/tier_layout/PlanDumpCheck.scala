@@ -6,7 +6,8 @@ import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Dumps the executed plans of `TieredStore`'s tier paths on the
-  * `bucket=/day=` disk layout — `readLast` on the M1, M2 and M3 paths,
+  * `bucket=/day=` disk layout — `readLast` on the M1 and M2 paths and
+  * over an overlapping buffer (every execution its evaluation runs),
   * `lengthSplit`, the series-scoped `snapshot(ids)` a router GET reads
   * through, every execution a `delete` runs (its affected-partition read
   * included), and the reads and CDC after the delete's skip lines —
@@ -60,9 +61,7 @@ class PlanDumpCheck extends SparkSuite {
       plan("lengthSplit(a,b,c/d)", st.lengthSplit(Seq("a", "b", "c/d")))
       plan("GET a,e/since/0 (snapshot(a,e))", graft.api.Router.run(st, "a,e/since/0"))
       plan("GET e/range/T0/T0+50000/count (snapshot(e))", graft.api.Router.run(st, s"e/range/$T0/${T0 + 50000L}/count"))
-      var m3: org.apache.spark.sql.DataFrame = null
-      during("M3 readLast(b,5) executions") { m3 = st.readLast(Seq("b"), 5) }
-      plan("M3 readLast(b,5)", m3)
+      during("overlapping readLast(b,5)") { st.readLast(Seq("b"), 5).collect() }
       val v0 = st.diskVersions.last.version
       during("delete(c/d, a)") { st.delete(Seq("c/d", "a"), T0 + 10000L, T0 + 2000000L) }
       val v1 = st.diskVersions.last.version

@@ -474,14 +474,13 @@ object SparkEntry {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** Build-once-per-process dual-tier stores (M1-M3/I2, TieredStore).
+  /** Build-once-per-process dual-tier stores (M1-M2/I2, TieredStore).
     * Scenario "sorted": disk = everything at-or-before SINCE, memory = the
     * newer tail — the buffer lies beyond the disk bound, so reads qualify
-    * for the M1/M2 paths and nothing mutates. Scenario "overlap": a 1-in-7
-    * rid sample buffered — its timestamps straddle the whole disk range,
-    * so the first read takes the M3 forced-flush path; later reads see the
-    * post-flush disk-only store (same rows either way). Store builds and
-    * the one-time flush are warmup cost, like ttStores.
+    * for the M1/M2 paths. Scenario "overlap": a 1-in-7 rid sample
+    * buffered — its timestamps straddle the whole disk range, so every
+    * read merges the buffer with its series' disk rows. No read mutates
+    * either store. Store builds are warmup cost, like ttStores.
     */
   private val tierStores = scala.collection.concurrent.TrieMap.empty[String, TieredStore]
   private def tierStore(s: SparkSession, d: String, scenario: String): TieredStore =
@@ -681,14 +680,15 @@ object SparkEntry {
     "q_delete_tagged" -> ((s, d) => // delete with tag pipe (xargs-piped delete)
       raw(TS.deleteRange(ev(s, d), IDS2, R1, R2,
         Seq(Tags.Group("u", Seq("3"), Tags.Eq)))).orderBy(col("rid"))),
-    // ----- M1-M3/I2: dual-tier memory+disk reads over real store
+    // ----- M1-M2/I2: dual-tier memory+disk reads over real store
     // instances (TieredStore, reference timeseries.re:357-434).
     // q_tier_read: the buffer qualifies (sorted, beyond disk) but holds
     // fewer than n points per series at sf0.01 — the M2 memory-then-disk
     // merge engages; the tier split must be invisible in the result.
     "q_tier_read" -> ((s, d) =>
       raw(tierStore(s, d, "sorted").readLast(IDS5, 500))),
-    // q_tier_flush: out-of-order buffer → M3 forced flush, disk-only read
+    // q_tier_flush: a buffer overlapping the disk range (the reference's
+    // M3 forced flush) — merged with the disk rows, never flushed
     "q_tier_flush" -> ((s, d) =>
       raw(tierStore(s, d, "overlap").readLast(IDS5, 25))),
     // q_tier_split: I2 memory/disk length split (timeseries.re:187-213)

@@ -30,7 +30,7 @@ import scala.jdk.CollectionConverters._
   *    prune by time — the Complete/Partial shard classification
   *    (`src/timeseries.re:569-588`) for free. The other half is the
   *    manifest's per-(dir, bucket) `max` lines ([[VersionedStore]]);
-  *    `day` prunes only the overlap probe ([[daysFrom]]);
+  *    no read filters on `day`: the partition is written, never pruned;
   *  - a write creates at most buckets × days dirs, independent of series
   *    cardinality, and a partition dir name is a number: no series id,
   *    whatever its characters or the file system's charset, ever becomes
@@ -97,11 +97,6 @@ object ShardStore {
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .mode(SaveMode.Append)
       .parquet(path)
-
-  /** Filter on the `day` partition column keeping the days that can hold a
-    * timestamp at or past `fromUs`. */
-  def daysFrom(fromUs: Long): Column =
-    col(DAY) >= date_format(timestamp_micros(lit(fromUs)), "yyyy-MM-dd")
 
   /** Filter on the top-level partition column selecting every partition
     * that holds `ids`: their buckets whole, co-resident series included. */

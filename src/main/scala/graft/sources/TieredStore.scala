@@ -4,12 +4,12 @@ import graft.functions.Tags
 import graft.model.Canon
 import graft.model.Canon._
 import graft.operators.{TimeSeries => TS}
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PackedRows
 
-/** M1-M3 + I2: the dual-tier store — an in-memory arrival buffer layered
+/** M1-M2 + I2: the dual-tier store — an in-memory arrival buffer layered
   * over a [[VersionedStore]] manifest-chain disk tier, replicating the
   * reference's membuf-plus-shards read semantics
   * (`/root/reference/src/timeseries.re:357-434`, `src/membufq.re:17-41`).
@@ -24,7 +24,8 @@ import org.apache.spark.sql.graft.PackedRows
   *    (`timeseries.re:384-434`);
   *  - **M3 forced flush**: the buffer overlaps the disk range (late
   *    arrivals) — flush it to disk first, then read disk only
-  *    (`timeseries.re:357-361`).
+  *    (`timeseries.re:357-361`). Not taken here: an overlapping buffer is
+  *    merged like M2 (divergence (4)).
   *
   * Spark-first mapping: the memory tier is the reference's membuf, a
   * driver-side map from series to its queue: the series' buffered rows
@@ -34,10 +35,10 @@ import org.apache.spark.sql.graft.PackedRows
   * evaluated on the driver ([[ingestRows]]) and run no job. The rest is
   * driver arithmetic. A read or a
   * flush frames only the named series' queues, so it plans no series
-  * filter of its own and no cached block. A series whose buffered min ts
-  * lies beyond its disk upper bound qualifies with no Spark job. The M2
-  * merge is `union` + the same `WindowGroupLimit` top-n every flat read
-  * uses — Catalyst, not hand-merging.
+  * filter of its own and no cached block. Every read decides its tier
+  * path with no Spark job. The merge is `union` + the same
+  * `WindowGroupLimit` top-n every flat read uses — Catalyst, not
+  * hand-merging.
   *
   * **Durability protocol (unified, r13)**: every disk-tier mutation —
   * spill, sync, direct append, delete, compaction — commits a version on
@@ -72,16 +73,14 @@ import org.apache.spark.sql.graft.PackedRows
   * data as the reference's interval index is (`src/index.re`). A series'
   * disk bound is its bucket's max over the live dirs
   * ([[VersionedStore.Commit.maxTsOf]]), never below the series' own, so
-  * a buffer past it is past the series' disk rows. A buffer that fails
-  * it may only share its bucket with a series whose clock runs ahead:
-  * one job over the recent days of those buckets finds each failing
-  * series' own newest disk row, and only a true overlap is flushed. So
-  * the decisions are the reference's per-series ones; a bucket mate's
-  * newer clock costs that job, never a flush. The spill check, the
-  * `last n` tier decision for a buffer past its bucket's bound, the
-  * flush bounds and [[bufferedCount]] read driver state instead of
-  * running Spark jobs, reopen reads the manifest and no data, and the
-  * driver holds nothing per disk series.
+  * a buffer past it is past the series' disk rows. A buffer of n points
+  * that fails it (an overlap, or only a bucket mate whose clock runs
+  * ahead) reads its series' disk rows from its own min ts on, so a bucket
+  * mate's newer clock costs a disk scan, never a job before the read. The
+  * spill check, the `last n` tier decision, the flush bounds and
+  * [[bufferedCount]] read driver state instead of running Spark jobs,
+  * reopen reads the manifest and no data, and the driver holds nothing
+  * per disk series.
   *
   * Scale notes (100 TB): the memory tier is an ingest BUFFER — a series'
   * queue holds fewer than the spill threshold (reference `--shard-size`)
@@ -102,11 +101,16 @@ import org.apache.spark.sql.graft.PackedRows
   * (`min(buffer ts) > disk max ts`): at a shared timestamp the
   * (ts desc, rid desc) order can rank a disk row above a buffered one, so a
   * tie must not qualify for the memory-only path — it degrades to the
-  * merge/flush paths, never to a wrong answer. (3) No arrival-order check:
+  * merge, never to a wrong answer. (3) No arrival-order check:
   * the reference takes the FIFO tail unsorted, so it needs the buffer
   * ascending in arrival order; every read here sorts by (ts desc, rid
   * desc), so arrival order cannot change an answer and the time bound
-  * alone picks the path.
+  * alone picks the path. (4) A read never flushes (no M3): the reference
+  * flushes a buffer that overlaps its disk range because its read cannot
+  * merge an unsorted tail; the sorted merge here answers it exactly, so a
+  * GET publishes no version. After a GET over an overlapping buffer,
+  * `memory/length` still counts the buffered points, where the reference
+  * would report them on disk.
   *
   * Mutations are serialized on the store instance — the concurrency model
   * the reference enforces globally (`src/main.re:225-227`). The store
@@ -183,9 +187,6 @@ final class TieredStore(spark: SparkSession, val root: String) {
     }
   }
 
-  /** M3 / S6: flush the named series' buffered points to the disk tier. */
-  def flush(ids: Seq[String]): Unit = this.synchronized { flushLocked(ids) }
-
   /** S6 `ctl/ts/sync` (reference `src/main.re:188`, `timeseries_sync` →
     * `Timeseries.flush`): flush EVERY buffered series to disk. Idempotent —
     * a second sync on an empty buffer is a no-op.
@@ -209,81 +210,58 @@ final class TieredStore(spark: SparkSession, val root: String) {
     if (c.dirs.isEmpty) emptyCanon(spark)
     else groupsOf(c).map(r => canonSel(prune(r))).reduce(_ unionByName _)
 
-  /** `c`'s raw relations: the tip's from [[tipGroups]], any other
-    * commit's (the overlap probe's narrowed one) built for this read. */
+  /** The tip's raw relations, built at its first read and kept in
+    * [[tipGroups]] until a mutation publishes a new tip. */
   private def groupsOf(c: VersionedStore.Commit): Seq[DataFrame] = tipGroups match {
     case Some((t, g)) if t eq c => g
     case _ =>
       val g = VersionedStore.rawGroups(spark, root, c)
-      if (tip.exists(_ eq c)) tipGroups = Some(c -> g)
+      tipGroups = Some(c -> g)
       g
   }
 
-  /** The ids' disk rows: their buckets (at the tip's bucket count), then
-    * their series. */
-  private def disk(ids: Seq[String]): DataFrame =
+  /** The ids' disk rows matching `rows`: their buckets (at the tip's
+    * bucket count), then `rows`. */
+  private def disk(ids: Seq[String], rows: Column): DataFrame =
     tip.fold(emptyCanon(spark))(c => prunedCanon(c, raw =>
-      raw.filter(ShardStore.partitionsOf(ids, c.buckets)).filter(col(SERIES).isin(ids: _*))))
+      raw.filter(ShardStore.partitionsOf(ids, c.buckets)).filter(rows)))
+
+  /** The ids' disk rows. */
+  private def disk(ids: Seq[String]): DataFrame = disk(ids, col(SERIES).isin(ids: _*))
 
   /** Buffer lies STRICTLY beyond the disk bound of this series' bucket. A
     * tie (buffer min ts == disk max ts) must NOT qualify: under (ts desc,
     * rid desc) a disk row at the shared timestamp can outrank a buffered
-    * one. A bucket no live dir holds has no disk bound. A buffer that
-    * fails goes to [[overlapping]], which decides for the series itself.
+    * one. A bucket no live dir holds has no disk bound.
     */
   private def beyondDisk(s: String, q: Queue): Boolean =
     tip.flatMap(_.maxTsOf(s)).forall(q.minTs > _)
 
-  /** Of `ids`, whose buffers fail their bucket's bound, the ones with a
-    * disk row at or past their own buffered min ts: the buffers that
-    * truly overlap their series' disk range (the same tie rule as
-    * [[beyondDisk]]). The rest fail only because a bucket mate's clock
-    * runs ahead. One job with no shuffle: a scan of the ids' buckets in
-    * the dirs whose `max` figures reach the earliest buffered min, from
-    * that min's day on, whose per-series time bounds reach the row-group
-    * statistics, deduplicated per task.
-    */
-  private def overlapping(ids: Seq[String], queues: Map[String, Queue]): Seq[String] = {
-    val lo = ids.map(queues(_).minTs).min
-    val t = tip.get
-    val c = t.copy(dirs = t.dirsReaching(ShardStore.partitionNames(ids, t.buckets), lo))
-    val hit = ids.map(s => col(SERIES) === s && col(TS_US) >= queues(s).minTs).reduce(_ || _)
-    val found = prunedCanon(c, raw => raw.filter(ShardStore.partitionsOf(ids, c.buckets))
-        .filter(ShardStore.daysFrom(lo)))
-      .filter(hit).select(SERIES).as(Encoders.STRING)
-      .mapPartitions(_.toSet.iterator)(Encoders.STRING).collect().toSet
-    ids.filter(found)
-  }
-
-  /** Q1 `last n` through the tier decision (`timeseries.re:357-382`):
-    * per queried series — M1 memory-only when the beyond-disk buffer
-    * holds ≥ n points, M2 memory∪disk top-n when it qualifies but is short,
-    * M3 flush-then-disk when it overlaps the disk range. The three branches
-    * union into one declarative plan; a query whose every series takes M1
-    * plans NO disk scan at all (asserted by `TieredStoreSpec`). The
-    * decision reads the queues' cached ranges and the tip's bucket bounds, so
-    * a read whose buffers all lie past their buckets' bounds runs no job
-    * until the frame is evaluated; the buffers that do not cost one
-    * [[overlapping]] job, which sends only true overlaps to M3. A series
-    * with no queue has nothing buffered: it takes the M2 merge, which
-    * finds no buffered rows and reads disk alone.
+  /** Q1 `last n` through the tier decision (`timeseries.re:357-434`): one
+    * top-n over the ids' buffered rows and a disk side chosen per series
+    * `s` with queue `q`:
+    *  - M1, `q` holds ≥ n points past its bucket's bound: no disk side;
+    *  - `q` holds ≥ n points but fails the bound: `s`'s disk rows from
+    *    `q`'s min ts on. The buffer alone holds n points there, so no
+    *    older disk row reaches the top n; the bound is inclusive, since a
+    *    disk row at the min can outrank a buffered one by rid;
+    *  - M2, fewer than n buffered (or no queue): all of `s`'s disk rows.
+    *
+    * A read whose every series takes M1 plans NO disk scan (asserted by
+    * `TieredStoreSpec`). The decision reads the queues' cached counts and
+    * ranges and the tip's bucket bounds, so no job runs before the frame
+    * is evaluated, and the read never writes: an overlapping buffer is
+    * merged, not flushed (divergence (4)).
     */
   def readLast(ids: Seq[String], n: Int): DataFrame = this.synchronized {
     require(ids.nonEmpty, "tiered readLast needs explicit series ids")
-    val queues = mem
-    val unsure = ids.filter(s => queues.get(s).exists(!beyondDisk(s, _)))
-    val toFlush = if (unsure.isEmpty) Nil else overlapping(unsure.distinct, queues)
-    val qualified = ids.filterNot(toFlush.contains)
-    val fast = qualified.filter(s => queues.get(s).exists(_.count >= n))
-    val merge = qualified.diff(fast)
-    if (toFlush.nonEmpty) flushLocked(toFlush)
-    val branches = Seq(
-      if (fast.isEmpty) None else Some(TS.readLast(memOf(fast), fast, n)),
-      if (merge.isEmpty) None
-      else Some(TS.readLast(memOf(merge).unionByName(disk(merge)), merge, n)),
-      if (toFlush.isEmpty) None else Some(TS.readLast(disk(toFlush), toFlush, n))
-    ).flatten
-    branches.reduce(_ unionByName _).orderBy(col(TS_US).desc, col(RID).desc)
+    val (full, whole) = ids.distinct.partition(s => mem.get(s).exists(_.count >= n))
+    val bounded = full.filterNot(s => beyondDisk(s, mem(s)))
+    val rows = (if (whole.isEmpty) Nil else Seq(col(SERIES).isin(whole: _*))) ++
+      bounded.map(s => col(SERIES) === s && col(TS_US) >= mem(s).minTs)
+    val m = memOf(ids)
+    TS.readLast(if (rows.isEmpty) m else m.unionByName(disk(whole ++ bounded, rows.reduce(_ || _))),
+      ids, n)
   }
 
   /** The session this store plans against (for router ack frames). */

@@ -95,14 +95,6 @@ object VersionedStore {
     def maxTsOf(series: String): Option[Long] =
       liveMax.get(ShardStore.partitionNames(Seq(series), buckets).head)
 
-    /** The dirs whose `max` figure for one of `partitions`, unskipped,
-      * is at or past `ts`: the only dirs that can hold a row there from
-      * `ts` on. */
-    def dirsReaching(partitions: Seq[String], ts: Long): Seq[String] = {
-      val (ps, skipped) = (partitions.toSet, skips.toSet)
-      maxes.collect { case (d, p, m) if ps(p) && m >= ts && !skipped((d, p)) => d }.distinct
-    }
-
     private lazy val liveMax: Map[String, Long] = {
       val skipped = skips.toSet
       maxes.collect { case (d, p, ts) if !skipped((d, p)) => (p, ts) }

@@ -1,7 +1,8 @@
 package graft
 
 import graft.api.HttpBinding
-import graft.sources.TieredStore
+import graft.model.Canon.{Datapoint, TagEntry}
+import graft.sources.{ShardStore, TieredStore}
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.net.http.HttpRequest.BodyPublishers
@@ -105,25 +106,44 @@ class HttpBindingSpec extends SparkSuite {
     try assert(renderOf(http).nonEmpty) finally http.stop()
   }
 
+  private val T0 = 1704067200000000L
+  // integer values, so an aggregate's sum does not depend on the order
+  // its partial sums merge in
+  private def dp(s: String, ts: Long, rid: Long) =
+    Datapoint(s, ts, Some(Seq(TagEntry("k", (rid % 2).toString))), rid.toDouble, rid)
+
+  /** Series a, b and c with 60 hourly points each on disk; a buffers 20
+    * points past its disk range, b one point inside it. */
+  private def grammarStore(name: String): TieredStore = {
+    import spark.implicits._
+    val st = new TieredStore(spark, tmpDir(name))
+    st.appendDisk(Seq("a", "b", "c").flatMap(s =>
+      (0L until 60L).map(i => dp(s, T0 + i * 3600000000L, s.head.toLong * 1000L + i))).toDF())
+    st.appendMemory((0L until 20L).map(i => dp("a", T0 + 400000000000L + i, 900000L + i)).toDF())
+    st.appendMemory(Seq(dp("b", T0 + 1000L, 800000L)).toDF())
+    st
+  }
+
+  /** Every GET route of the reference's grammar, over [[grammarStore]]'s series. */
+  private val grammar: Seq[String] = {
+    val reads = Seq("last/5", "latest", "first/3", "earliest", s"since/${T0 + 50 * 3600000000L}",
+      s"range/$T0/${T0 + 10 * 3600000000L}")
+    val xargs = Seq("", "/filter/k/equals/1", "/sum", "/filter/k/contains/0/mean",
+      "/count", "/max", "/min", "/median")
+    Seq("a/last/30", "b/last/5") ++
+      (for (r <- reads; x <- xargs) yield s"a,c/$r$x") ++
+      Seq("a,b/length", "a,b/memory/length", "a,b/disk/length", "a,b/index/length", "a/index",
+        "names", "info/ts/names", "info/ts/stats")
+  }
+
   test("every GET route renders as one job with no exchange, byte-equal to the plain frame's reply") {
-    import graft.model.Canon.{Datapoint, TagEntry}
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.util.QueryExecutionListener
-    import spark.implicits._
-    val T0 = 1704067200000000L
-    // integer values, so an aggregate's sum does not depend on the order
-    // its partial sums merge in
-    def dp(s: String, ts: Long, rid: Long) =
-      Datapoint(s, ts, Some(Seq(TagEntry("k", (rid % 2).toString))), rid.toDouble, rid)
-    val st = new TieredStore(spark, tmpDir("http_grammar"))
-    st.appendDisk(Seq("a", "b", "c").flatMap(s =>
-      (0L until 60L).map(i => dp(s, T0 + i * 3600000000L, s.head.toLong * 1000L + i))).toDF())
     // a: buffered past its disk range (M1, and M2 for last/30); b: one
-    // buffered point inside its disk range (M3 flushes it)
-    st.appendMemory((0L until 20L).map(i => dp("a", T0 + 400000000000L + i, 900000L + i)).toDF())
-    st.appendMemory(Seq(dp("b", T0 + 1000L, 800000L)).toDF())
+    // buffered point inside its disk range, merged with b's disk rows
+    val st = grammarStore("http_grammar")
     val http = new HttpBinding(st)
     val render = renderOf(http).get
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
@@ -149,16 +169,8 @@ class HttpBindingSpec extends SparkSuite {
         System.nanoTime() < deadline) Thread.sleep(20)
       plans.toArray.toSeq.map(_.asInstanceOf[QueryExecution]).filterNot(isMarker).map(_.executedPlan)
     }
-    val reads = Seq("last/5", "latest", "first/3", "earliest", s"since/${T0 + 50 * 3600000000L}",
-      s"range/$T0/${T0 + 10 * 3600000000L}")
-    val xargs = Seq("", "/filter/k/equals/1", "/sum", "/filter/k/contains/0/mean",
-      "/count", "/max", "/min", "/median")
-    val routes = Seq("a/last/30", "b/last/5") ++
-      (for (r <- reads; x <- xargs) yield s"a,c/$r$x") ++
-      Seq("a,b/length", "a,b/memory/length", "a,b/disk/length", "a,b/index/length", "a/index",
-        "names", "info/ts/names", "info/ts/stats")
     spark.listenerManager.register(listener)
-    try routes.foreach { route =>
+    try grammar.foreach { route =>
       val frame = graft.api.Router.run(st, route)
       val plain = HttpBinding.reply(frame)
       var (got, sites) = ("", Seq.empty[String])
@@ -169,12 +181,32 @@ class HttpBindingSpec extends SparkSuite {
       if (route == "a/last/30") // M2: the buffer's 20 points and 10 from disk
         assert(frame.queryExecution.executedPlan.toString.contains("FileScan") &&
           got.split("\"timestamp\"").length - 1 == 30 && st.memStatsView.contains("a"))
-      if (route == "b/last/5") // M3: the overlapping point was flushed
-        assert(!st.memStatsView.contains("b"))
+      if (route == "b/last/5") // the overlapping point was merged, not flushed
+        assert(frame.queryExecution.executedPlan.toString.contains("FileScan") &&
+          st.memStatsView.contains("b"))
     } finally {
       spark.listenerManager.unregister(listener)
       http.stop()
     }
+  }
+
+  test("no GET route publishes a version or moves the buffer") {
+    import spark.implicits._
+    // x shares a's bucket and its disk tail is newer than a's buffer, so
+    // a's buffer fails its bucket's bound; b's buffer overlaps its own
+    // disk range
+    assert(Seq("a", "x").map(ShardStore.bucketOf(_, ShardStore.Buckets)) == Seq(3L, 3L))
+    val st = grammarStore("http_no_write")
+    st.appendDisk(Seq(dp("x", T0 + 500000000000L, 700000L)).toDF())
+    val (version, buffer) = (st.diskVersions.last.version, st.memStatsView)
+    assert(buffer.keySet == Set("a", "b"))
+    val http = new HttpBinding(st).start()
+    try grammar.foreach { route =>
+      val r = get(s"http://127.0.0.1:${http.boundPort}", "/" + route)
+      assert(r.statusCode() == 200, s"$route: ${r.body()}")
+      assert(st.diskVersions.last.version == version, route)
+      assert(st.memStatsView == buffer, route)
+    } finally http.stop()
   }
 
   test("a binding turns the JDK server's TCP_NODELAY on before creating its server") {

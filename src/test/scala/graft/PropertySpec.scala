@@ -59,7 +59,7 @@ class PropertySpec extends SparkSuite {
         val (disk, mem) = d.partition(_.rid % 2 == 0)
         if (disk.nonEmpty) st.appendDisk(disk.toDF())
         if (mem.nonEmpty) // buffer vs disk timestamps vary by seed, so the
-          // qualify/merge/flush paths all get exercised across seeds
+          // memory-only, from-min and whole-disk merges all get exercised
           st.appendMemory(mem.toDF())
         assert(key(st.readLast(ids, n)) == expect)
       }

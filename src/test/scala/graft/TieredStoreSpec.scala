@@ -4,10 +4,10 @@ import graft.model.Canon.{Datapoint, TagEntry}
 import graft.sources.{ShardStore, TieredStore}
 import org.apache.spark.sql.functions._
 
-/** M1-M3/I2: the dual-tier read semantics (reference
+/** M1-M2/I2: the dual-tier read semantics (reference
   * `src/timeseries.re:357-434`, `src/membufq.re:17-41`) — tier decisions,
-  * the forced-flush mutation lifecycle, and the plan-level proof that the
-  * M1 fast path never touches the disk tier.
+  * reads that never write (no M3 forced flush), and the plan-level proof
+  * that the M1 fast path never touches the disk tier.
   */
 class TieredStoreSpec extends SparkSuite {
   import spark.implicits._
@@ -45,17 +45,21 @@ class TieredStoreSpec extends SparkSuite {
     assert(split.getLong(1) == 20L && split.getLong(2) == 100L)
   }
 
-  test("M3 forced flush: an overlapping buffer is flushed, then read from disk") {
+  test("an overlapping buffer is merged, never flushed") {
     val st = new TieredStore(spark, tmpDir("tier"))
     st.appendDisk((0L until 100L by 2L).map(i => dp("a", T0 + i * 1000L, i)).toDF())
     // odd timestamps interleave INSIDE the disk range -> never qualifies
     st.appendMemory((1L until 100L by 2L).map(i => dp("a", T0 + i * 1000L, i)).toDF())
     val before = st.lengthSplit(Seq("a")).head()
     assert(before.getLong(1) == 50L && before.getLong(2) == 50L)
+    val versions = st.diskVersions
     val rids = st.readLast(Seq("a"), 10).select("rid").as[Long].collect().toSeq
     assert(rids == (99L to 90L by -1L)) // correct merged answer
+    assert(rids == graft.operators.TimeSeries.readLast(st.snapshot, Seq("a"), 10)
+      .select("rid").as[Long].collect().toSeq) // the flat read's
     val after = st.lengthSplit(Seq("a")).head()
-    assert(after.getLong(1) == 0L && after.getLong(2) == 100L) // buffer moved to disk
+    assert(after.getLong(1) == 50L && after.getLong(2) == 50L) // the buffer stays
+    assert(st.diskVersions == versions) // no version published
   }
 
   test("an out-of-arrival-order buffer stays buffered, never a wrong answer") {
@@ -76,17 +80,17 @@ class TieredStoreSpec extends SparkSuite {
     val st = new TieredStore(spark, tmpDir("tier"))
     st.appendDisk(((0L until 40L).map(i => dp("a", T0 + i * 1000L, i)) ++
       (0L until 40L).map(i => dp("b", T0 + i * 1000L, 1000 + i))).toDF())
-    // "a" buffers a beyond-bound tail (fast), "b" buffers overlap (flush)
+    // "a" buffers a beyond-bound tail (M1), "b" buffers overlap (merged)
     st.appendMemory(((0L until 10L).map(i => dp("a", T0 + 100000L + i * 1000L, 100 + i)) ++
       (0L until 10L).map(i => dp("b", T0 + 5000L + i * 100L, 2000 + i))).toDF())
     val got = st.readLast(Seq("a", "b"), 5)
       .select("series", "rid").as[(String, Long)].collect().toSeq
     assert(got.filter(_._1 == "a").map(_._2) == (109L to 105L by -1L))
     assert(got.filter(_._1 == "b").map(_._2) == Seq(1039L, 1038L, 1037L, 1036L, 1035L))
-    // only b flushed; a's buffer intact
+    // nothing flushed: both buffers intact
     val split = st.lengthSplit(Seq("a", "b")).collect()
     assert(split.map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq ==
-      Seq(("a", 10L, 40L), ("b", 0L, 50L)))
+      Seq(("a", 10L, 40L), ("b", 10L, 40L)))
   }
 
   test("S3 ingest spill policy: a series spills at the threshold, others stay buffered") {
@@ -129,12 +133,12 @@ class TieredStoreSpec extends SparkSuite {
     val st = freshSorted() // 100 on disk, 20 buffered
     val snap = st.snapshot
     val split = st.lengthSplit(Seq("a"))
-    st.flush(Seq("a")) // moves the 20 buffered rows to disk
-    // evaluated AFTER the flush, the pre-flush snapshot must not double-count
+    st.sync() // moves the 20 buffered rows to disk
+    // evaluated AFTER the sync, the pre-sync snapshot must not double-count
     assert(snap.count() == 120L)
     val r = split.head()
     assert(r.getLong(1) == 20L && r.getLong(2) == 100L)
-    // while a fresh read sees the post-flush state
+    // while a fresh read sees the post-sync state
     val r2 = st.lengthSplit(Seq("a")).head()
     assert(r2.getLong(1) == 0L && r2.getLong(2) == 120L)
   }
@@ -166,7 +170,7 @@ class TieredStoreSpec extends SparkSuite {
     assert(scoped.agg(max("rid")).as[Long].head() == 119L)
   }
 
-  test("a bucket mate's newer disk tail costs a probe job, never a flush; true overlaps still flush") {
+  test("a bucket mate's newer disk tail narrows the disk scan; no read flushes") {
     // a and x share bucket 3 of 64, b sits apart: a series' disk bound is
     // its bucket's newest timestamp over the live dirs
     def bucket(s: String) = ShardStore.bucketOf(s, ShardStore.Buckets)
@@ -186,18 +190,19 @@ class TieredStoreSpec extends SparkSuite {
       q.select("series", "rid").as[(String, Long)].collect().toSeq
     def flat(ids: Seq[String], n: Int) =
       rids(graft.operators.TimeSeries.readLast(live.toDF(), ids, n))
-    def scans(q: org.apache.spark.sql.DataFrame) =
-      q.queryExecution.executedPlan.toString.contains("FileScan")
+    def plan(q: org.apache.spark.sql.DataFrame) = q.queryExecution.executedPlan.toString
+    def scans(q: org.apache.spark.sql.DataFrame) = plan(q).contains("FileScan")
     assert(st.diskVersions.last.maxTsOf("a") == Some(T0 + 499000L))
     val v0 = st.diskVersions.last.version
     // b passes its bucket's bound: M1, decided with no job
     val (qb, bJobs) = JobProbe.sites(spark)(st.readLast(Seq("b"), 5))
     assert(bJobs.isEmpty, bJobs)
     assert(!scans(qb) && rids(qb) == flat(Seq("b"), 5))
-    // a fails its bucket's bound, but its own disk rows end below its
-    // buffer: the probe job says so, and a keeps M1 and M2, unflushed
+    // a fails its bucket's bound: decided with no job, its disk side read
+    // from its buffered min on, pushed to the scan
     val (qa, aJobs) = JobProbe.sites(spark)(st.readLast(Seq("a"), 5))
-    assert(aJobs.nonEmpty && !scans(qa), aJobs)
+    assert(aJobs.isEmpty, aJobs)
+    assert(scans(qa) && plan(qa).contains("GreaterThanOrEqual(ts_us,"), plan(qa))
     assert(rids(qa) == flat(Seq("a"), 5))
     val merged = st.readLast(Seq("a"), 15) // 10 buffered: M2
     assert(scans(merged) && rids(merged) == flat(Seq("a"), 15))
@@ -205,17 +210,18 @@ class TieredStoreSpec extends SparkSuite {
     assert(rids(both).toSet == flat(Seq("a", "b"), 12).toSet)
     assert(st.diskVersions.last.version == v0)
     assert(st.memStatsView == sparkStats(st) && st.memStatsView.keySet == Set("a", "b"))
-    // a late point of x lies inside x's own disk range: a true overlap,
-    // flushed (M3) beside a's unflushed read
+    // a late point of x lies inside x's own disk range: merged, unflushed
     val late = Seq(dp("x", T0 + 250500L, 20000L))
     st.appendMemory(late.toDF())
     live ++= late
     assert(rids(st.readLast(Seq("x", "a"), 3)).toSet == flat(Seq("x", "a"), 3).toSet)
-    assert(st.diskVersions.last.version == v0 + 1)
-    assert(st.memStatsView == sparkStats(st) && st.memStatsView.keySet == Set("a", "b"))
-    assert(st.bufferedCount() == st.buffer.count() && st.bufferedCount() == 20L)
-    // deleting x's newer tail shrinks the bucket's bound below a's buffer:
-    // a's read is decided with no job again
+    assert(rids(st.readLast(Seq("x"), 1)) == flat(Seq("x"), 1))
+    assert(rids(st.readLast(Seq("x"), 300)) == flat(Seq("x"), 300))
+    assert(st.diskVersions.last.version == v0)
+    assert(st.memStatsView == sparkStats(st) && st.memStatsView.keySet == Set("a", "b", "x"))
+    assert(st.bufferedCount() == st.buffer.count() && st.bufferedCount() == 21L)
+    // deleting x's newer tail (its buffer flushes first) shrinks the
+    // bucket's bound below a's buffer: a's read is M1 again
     val hit = (d: Datapoint) => d.series == "x" && d.ts_us >= T0 + 100000L
     assert(st.delete(Seq("x"), T0 + 100000L, T0 + 600000L) == live.count(hit))
     live = live.filterNot(hit)
@@ -223,11 +229,25 @@ class TieredStoreSpec extends SparkSuite {
     val (again, jobs) = JobProbe.sites(spark)(st.readLast(Seq("a"), 5))
     assert(jobs.isEmpty, jobs)
     assert(!scans(again) && rids(again) == flat(Seq("a"), 5))
-    st.flush(Seq("a"))
+    // a spill moves a alone to disk
+    val spilled = Seq(dp("a", T0 + 300000L, 300L))
+    st.ingest(spilled.toDF(), spillThreshold = 11L)
+    live ++= spilled
     assert(st.memStatsView == sparkStats(st) && st.memStatsView.keySet == Set("b"))
     st.sync()
     assert(st.memStatsView.isEmpty && st.bufferedCount() == 0L)
     assert(rids(st.readLast(Seq("a", "b", "x"), 8)).toSet == flat(Seq("a", "b", "x"), 8).toSet)
+    // a disk row tied at a queue's min outranks the buffered row by rid
+    // under the lower bound: a's disk max (T0 + 300 ms) ties the buffer's
+    // min, so the strict bound fails and the disk side starts at the min
+    val tied = Seq(dp("a", T0 + 300000L, 7L), dp("a", T0 + 700000L, 8L), dp("a", T0 + 701000L, 9L))
+    st.appendMemory(tied.toDF())
+    live ++= tied
+    val v1 = st.diskVersions.last.version
+    val qt = st.readLast(Seq("a"), 3)
+    assert(plan(qt).contains("GreaterThanOrEqual(ts_us,"), plan(qt))
+    assert(rids(qt) == Seq(("a", 9L), ("a", 8L), ("a", 300L)) && rids(qt) == flat(Seq("a"), 3))
+    assert(st.diskVersions.last.version == v1 && st.bufferedCount() == 3L)
   }
 
   /** The buffer stats as a Spark aggregate over the buffer itself. */
@@ -243,7 +263,8 @@ class TieredStoreSpec extends SparkSuite {
     var live = Vector.empty[Datapoint]
     var rid = 0L
     // mostly newer than what came before, sometimes late (inside the disk
-    // range), so the mix takes the M1, M2 and M3 paths
+    // range), so the mix reads memory only, memory with the disk rows from
+    // the buffered min on, and memory with every disk row
     def points(step: Int): Seq[Datapoint] = Seq.fill(1 + rnd.nextInt(6)) {
       rid += 1
       dp(ids(rnd.nextInt(ids.size)), T0 + (step * 4L + rnd.nextInt(12) - 6) * 1000L, rid)
@@ -251,12 +272,19 @@ class TieredStoreSpec extends SparkSuite {
     def pick(): Seq[String] = rnd.shuffle(ids).take(1 + rnd.nextInt(ids.size))
     def answer(df: org.apache.spark.sql.DataFrame) =
       df.select("series", "ts_us", "rid").as[(String, Long, Long)].collect().toSeq.sorted
+    // the disk side a read planned: none, from a buffered min on, or whole
+    def side(df: org.apache.spark.sql.DataFrame) = {
+      val p = df.queryExecution.executedPlan.toString
+      if (!p.contains("FileScan")) (if (st.diskVersions.isEmpty) "no disk" else "none")
+      else if ("ts_us#\\d+L? >= ".r.findFirstIn(p).nonEmpty) "from min"
+      else "whole"
+    }
+    val sides = scala.collection.mutable.Set.empty[String]
     (0 until 24).foreach { step =>
       val op = rnd.nextInt(5)
       op match {
-        case 0 => val p = points(step); st.appendMemory(p.toDF()); live ++= p
+        case 0 | 2 => val p = points(step); st.appendMemory(p.toDF()); live ++= p
         case 1 => val p = points(step); st.ingest(p.toDF(), spillThreshold = 5L); live ++= p
-        case 2 => st.flush(pick())
         case 3 => st.sync()
         case 4 =>
           val (ss, lo) = (pick(), T0 + (step * 4L - 8) * 1000L)
@@ -266,12 +294,15 @@ class TieredStoreSpec extends SparkSuite {
       }
       assert(st.memStatsView == sparkStats(st), s"step $step op $op")
       val (ss, n) = (pick(), 1 + rnd.nextInt(8))
-      assert(answer(st.readLast(ss, n)) ==
+      val got = st.readLast(ss, n)
+      sides += side(got)
+      assert(answer(got) ==
         answer(graft.operators.TimeSeries.readLast(live.toDF(), ss, n)), s"step $step op $op")
       assert(st.memStatsView == sparkStats(st), s"step $step after readLast")
       assert(st.bufferedCount() == st.buffer.count(), s"step $step")
     }
     assert(answer(st.snapshot) == answer(live.toDF()))
+    assert(Set("none", "from min", "whole").subsetOf(sides), sides)
   }
 
   test("a read that needs no flush decides its tier path without a Spark job") {

@@ -352,13 +352,6 @@ class VersionedStoreSpec extends SparkSuite {
       ShardStore.partitionNames(Seq("x"), b), tip)                                // v3
     assert(bounds == Seq(Some(9000L), Some(9000L), Some(204000L)))
     assert(tip.maxes.size == 3 && everyDirHasMax(tip))
-    // the dirs a read from a time on needs: v1's bucket 3 is skipped, so
-    // only the survivors dir reaches 9 ms there; b's dir reaches 204 ms
-    val (p3, pb) = (ShardStore.partitionNames(Seq("a"), b), ShardStore.partitionNames(Seq("b"), b))
-    val survivors = tip.dirs.filter(_.contains("-delete-"))
-    assert(survivors.size == 1 && tip.dirsReaching(p3, 0L) == survivors)
-    assert(tip.dirsReaching(p3, 9001L).isEmpty && tip.dirsReaching(pb, 204000L).size == 1)
-    assert(tip.dirsReaching(p3 ++ pb, 0L).size == 2)
     VersionedStore.compact(spark, root)                                            // v4
     assert(tip.op == "compact" && tip.dirs.size == 1 && everyDirHasMax(tip))
     assert(bounds == Seq(Some(9000L), Some(9000L), Some(204000L)))
